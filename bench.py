@@ -11,11 +11,8 @@ final line carries as many per-query timings as fit the tail budget
 (slowest first — ~55-60 of 122; the 122 names alone are ~2 KB so the
 full map cannot fit), with the omission count disclosed
 ("queries_omitted") and the full map unchanged in the detail emits.
-r14 also adds the control-spread self-gate: a default-mode run whose
-interleaved control spread exceeds 1.5x re-measures once in the same
-warm process and keeps the flatter attempt (both control series are
-kept in the detail output).  Timing semantics per query (noop sink,
-min-of-N, warm single JVM) are UNCHANGED from r13.
+Timing semantics per query (noop sink, min-of-N, warm single JVM) are
+UNCHANGED from r13.
 
 Execution is measured with a noop-format write (full plan execution, no
 driver-side collect).
@@ -319,7 +316,6 @@ def bench_pq_state(spark, sf_dir: str, iters: int) -> dict:
 
 CONTROL_QUERY = "dedup_exact"   # same control as the sf1 sweep instrument
 CONTROL_EVERY = 25              # interleave a timed control run this often
-MAX_CONTROL_SPREAD = 1.5        # above this the run re-measures once (r14)
 
 
 def _time_query(spark, fn, sf_dir: str, iters: int) -> float:
@@ -336,15 +332,11 @@ def _time_query(spark, fn, sf_dir: str, iters: int) -> float:
 
 
 def run_band(names: list, sf_dir: str, iters: int,
-             with_state: bool, warmup: bool = True) -> dict:
+             with_state: bool) -> dict:
     """One measurement band in THIS process: warm-up, control query,
     the band's queries, control again.  The control pair brackets the
     band so cross-band machine drift is measurable (the sf1 sweep's
-    instrument, ported after two rounds of unfalsifiable sf0.1 creep).
-
-    ``warmup=False`` skips the untimed warm-up pass — used only by the
-    control-spread retry (r14), which runs in the same already-warm
-    process, so re-warming would just burn wall-clock."""
+    instrument, ported after two rounds of unfalsifiable sf0.1 creep)."""
     from kstream_spark import get_spark
     from kstream_spark.inventory import INVENTORY
 
@@ -369,7 +361,7 @@ def run_band(names: list, sf_dir: str, iters: int,
     # steady state — the regime a long-running production job lives in,
     # and the same regime the old single-JVM instrument measured for
     # every query except the first few.
-    for name in (names if warmup else []):
+    for name in names:
         if name in INVENTORY:
             INVENTORY[name][0](spark, sf_dir) \
                 .write.format("noop").mode("overwrite").save()
@@ -429,8 +421,6 @@ def main():
 
     band_env = os.environ.get("SPARK_GRAFT_BENCH_BAND")
     timings, control_runs = {}, []
-    retried = False
-    control_attempts = []
     if band_env is None or os.environ.get("SPARK_GRAFT_BENCH_INPROC"):
         # DEFAULT: one JVM, untimed warm-up pass, control query
         # interleaved every CONTROL_EVERY queries.  The r13 fresh-JVM
@@ -443,30 +433,10 @@ def main():
         # single JVM keeps r11/r12 comparability, and the aging creep
         # those rounds could not falsify is now measured directly: an
         # upward trend in the interleaved control series attributes it.
-        #
-        # Control-spread self-gate (r14, VERDICT r13 #1/#2): a run whose
-        # interleaved control spread exceeds MAX_CONTROL_SPREAD was
-        # demonstrably drift-contaminated (the r13 driver run: spread
-        # 2.87x, and its "regressions" landed on untouched byte-identical
-        # -plan queries) — such a run is re-measured ONCE in the same
-        # warm process (warm-up pass skipped) and the attempt with the
-        # flatter control series is kept.  Per-query timing semantics
-        # (noop sink, min-of-N) are unchanged; both control series are
-        # disclosed in the detail sidecar.
-        def _spread(cr):
-            xs = [c["sec"] for c in cr]
-            return (round(max(xs) / max(min(xs), 1e-9), 3) if xs else None)
-
+        # A drifting control is reported (control_spread), never
+        # re-measured: keeping the flatter of two attempts could only
+        # bias the totals towards faster.
         res = run_band(HEADLINE, sf_dir, iters, with_state=True)
-        control_attempts.append(res["control_runs"])
-        if (_spread(res["control_runs"]) or 0) > MAX_CONTROL_SPREAD:
-            retried = True
-            res2 = run_band(HEADLINE, sf_dir, iters, with_state=True,
-                            warmup=False)
-            control_attempts.append(res2["control_runs"])
-            if (_spread(res2["control_runs"]) or 9e9) \
-                    <= (_spread(res["control_runs"]) or 9e9):
-                res = res2
         timings = res["timings"]
         control_runs = [dict(band=0, **c) for c in res["control_runs"]]
     else:
@@ -515,8 +485,6 @@ def main():
         "control_runs": control_runs,
         "control_spread": (round(max(ctrl) / max(min(ctrl), 1e-9), 3)
                           if ctrl else None),
-        "control_retried": retried,
-        "control_attempts": control_attempts,
     }
     # The driver records only a 2000-char TAIL of stdout; a single line with
     # ALL ~122 per-query timings is ~3.5 KB (the query names alone are ~2 KB),
@@ -549,7 +517,6 @@ def main():
         "control": [[c.get("band", 0), c["at"], c["sec"]]
                     for c in control_runs],
         "control_spread": full["control_spread"],
-        "control_retried": retried,
         "detail": "BENCH_DETAIL.json",
     }
     # fill "queries" slowest-first until the serialized line would exceed

@@ -1388,6 +1388,18 @@ PIPELINE_INVENTORY["corpus_manifest"] = (q_corpus_manifest,
                                          SQL_CORPUS_MANIFEST)
 
 
+def _audit_queries(spark: SparkSession, emb: DataFrame, qids: list):
+    """The recall audits' shared query side: one collect of the query
+    vectors, plus the same rows as a local (vec_id, embedding) relation
+    whose id type is the corpus's own."""
+    qrows = S.collect_query_rows(emb, "vec_id", "embedding", qids)
+    id_dt = emb.schema["vec_id"].dataType.simpleString()
+    qdf = local_df(
+        spark, [(r["query_id"], list(r["qv"])) for r in qrows],
+        f"vec_id {id_dt}, embedding array<double>")
+    return qrows, qdf
+
+
 def q_sim_ivf_recall(spark: SparkSession, sf: str) -> DataFrame:
     """ANN quality as a DRIVER-PROVABLE fact: recall@10 of the learned-
     centroid IVF (3 of 8 cells probed) against brute-force cosine, per
@@ -1400,11 +1412,7 @@ def q_sim_ivf_recall(spark: SparkSession, sf: str) -> DataFrame:
                                id_col="vec_id")
     # r14: ONE query-side collect shared by the approximate and exact
     # arms (each used to filter-and-fetch the same 5 vectors itself)
-    qrows = S.collect_query_rows(emb, "vec_id", "embedding",
-                                 list(range(5)))
-    qdf = local_df(
-        spark, [(r["query_id"], list(r["qv"])) for r in qrows],
-        "vec_id long, embedding array<double>")
+    qrows, qdf = _audit_queries(spark, emb, list(range(5)))
     approx = S.ivf_topk(emb, "vec_id", "embedding",
                         query_ids=list(range(5)), k=10, n_probe=3,
                         centroids=cents, query_rows=qrows) \
@@ -1725,11 +1733,7 @@ def q_sim_ivfpq_recall(spark: SparkSession, sf: str) -> DataFrame:
                            id_col="vec_id")
     # r14: ONE query-side collect shared by the approximate and exact
     # arms (each used to filter-and-fetch the same 5 vectors itself)
-    qrows = S.collect_query_rows(emb, "vec_id", "embedding",
-                                 [0, 1, 2, 3, 4])
-    qdf = local_df(
-        spark, [(r["query_id"], list(r["qv"])) for r in qrows],
-        "vec_id long, embedding array<double>")
+    qrows, qdf = _audit_queries(spark, emb, [0, 1, 2, 3, 4])
     approx = S.ivfpq_topk(emb, "vec_id", "embedding",
                           query_ids=[0, 1, 2, 3, 4], centroids=cents,
                           codebooks=books, k=10, n_probe=3,
@@ -1851,10 +1855,7 @@ def q_sim_ann_retrain(spark: SparkSession, sf: str) -> DataFrame:
     qids = [0, 1, 2, 3, 4]
     # r14: ONE query-side collect feeds the exact arm and BOTH ADC
     # audits (before/after each collected the same 5 vectors themselves)
-    qrows = S.collect_query_rows(emb, "vec_id", "embedding", qids)
-    qdf = local_df(
-        spark, [(r["query_id"], list(r["qv"])) for r in qrows],
-        "vec_id long, embedding array<double>")
+    qrows, qdf = _audit_queries(spark, emb, qids)
     # the brute-force ground truth feeds both recall audits (and the
     # decision action) — persist the 50-row relation so the exact scorer
     # scans the corpus once
@@ -2222,11 +2223,7 @@ def q_sim_sq8_recall(spark: SparkSession, sf: str) -> DataFrame:
     emb = _embs(StreamBuilder(spark), sf)
     # r14: ONE query-side collect shared by the approximate and exact
     # arms (each used to filter-and-fetch the same 5 vectors itself)
-    qrows = S.collect_query_rows(emb, "vec_id", "embedding",
-                                 list(range(5)))
-    qdf = local_df(
-        spark, [(r["query_id"], list(r["qv"])) for r in qrows],
-        "vec_id long, embedding array<double>")
+    qrows, qdf = _audit_queries(spark, emb, list(range(5)))
     approx = S.sq8_topk(emb, "vec_id", "embedding",
                         query_ids=list(range(5)), k=10, queries=qdf) \
         .select("query_id", "neighbor_id")

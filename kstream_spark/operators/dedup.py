@@ -796,8 +796,7 @@ def cross_source_matrix(df: DataFrame, id_col: str, text_col: str,
 
 
 def cdc_chunks(df: DataFrame, id_col: str, text_col: str,
-               window: int = 16, mask_bits: int = 6,
-               impl: str = "arrow") -> DataFrame:
+               window: int = 16, mask_bits: int = 6) -> DataFrame:
     """Content-defined chunking (the rolling-hash boundary scheme of
     LBFS/FastCDC): a chunk boundary falls wherever the WINDOW-byte
     rolling hash of the payload is 0 mod 2^mask_bits (expected chunk
@@ -810,63 +809,18 @@ def cdc_chunks(df: DataFrame, id_col: str, text_col: str,
 
     Returns one row per (id, chunk_idx) with (chunk_start, chunk_len,
     chunk_md5).  All arithmetic is exact integer (char codes * fixed
-    power table mod 2^31-1, window sums < 2^36), so every engine derives
-    identical boundaries.  [[oracle-parity]]
+    power table mod 2^31-1: products < 2^39, window sums < 2^43 —
+    int64-safe), so every engine derives identical boundaries.
+    [[oracle-parity]]
 
     Plan shape: pure per-row projection — zero shuffle; downstream
-    chunk-hash dedup is one count aggregation keyed by the hash.  Two
-    equivalent implementations (bit-identical by test):
-    ``impl="arrow"`` (default) computes the rolling hash as a numpy
-    sliding-window dot in one mapInPandas pass — higher-order-function
-    lambdas are interpreted per element in Spark, and the expression
-    form's n*window folds measured ~2x slower per core at sf1 (the one
-    place in this repo where the Arrow batch beats the built-in
-    expression); ``impl="expr"`` keeps the pure-expression form the SQL
-    oracle mirrors.
+    chunk-hash dedup is one count aggregation keyed by the hash.  The
+    rolling hash is a numpy sliding-window dot in one mapInPandas pass:
+    higher-order-function lambdas are interpreted per element in Spark,
+    and the expression form's n*window folds measured ~2x slower per
+    core at sf1 (the one place in this repo where the Arrow batch beats
+    the built-in expression).
     """
-    if impl == "arrow":
-        return _cdc_chunks_arrow(df, id_col, text_col, window, mask_bits)
-    B, M = 257, (1 << 31) - 1
-    pows = [pow(B, j, M) for j in range(window)]
-    pows_sql = ",".join(str(p) for p in pows)
-    w = window
-    mask = 1 << mask_bits
-    # codes MUST be a materialized column: referenced inline inside the
-    # boundary filter's lambda it would re-evaluate per position —
-    # O(n^2) char transforms per row (the l2_normalize hazard; measured
-    # 350s -> seconds at sf0.01)
-    src = df.select(F.col(id_col), F.col(text_col).alias("_t"),
-                    F.length(text_col).alias("_n"),
-                    F.expr("transform(split(_t, ''), "
-                           "ch -> cast(ascii(ch) as bigint))")
-                    .alias("_codes"))
-    bounds = (
-        f"filter(sequence({w}, greatest(_n, {w})), i -> "
-        f"i <= _n AND "
-        f"aggregate(sequence(0, {w - 1}), cast(0 as bigint), (a, j) -> "
-        f"a + element_at(_codes, i - j) * "
-        f"element_at(array({pows_sql}), j + 1) % {M}) % {M} % {mask} == 0)")
-    starts = f"concat(array(0), {bounds})"
-    ends = f"concat({bounds}, array(_n))"
-    chunks = (f"filter(zip_with({starts}, {ends}, "
-              f"(s, e) -> struct(s as cs, e - s as cl)), "
-              f"c -> c.cl > 0)")
-    return (src.select(
-        F.col(id_col),
-        F.posexplode(F.expr(chunks)).alias("chunk_idx", "_c"), "_t")
-        .select(F.col(id_col), F.col("chunk_idx").cast("long"),
-                F.col("_c.cs").cast("long").alias("chunk_start"),
-                F.col("_c.cl").cast("long").alias("chunk_len"),
-                F.md5(F.encode(F.expr(
-                    "substring(_t, _c.cs + 1, _c.cl)"), "UTF-8"))
-                .alias("chunk_md5")))
-
-
-def _cdc_chunks_arrow(df: DataFrame, id_col: str, text_col: str,
-                      window: int, mask_bits: int) -> DataFrame:
-    """cdc_chunks' Arrow path: identical exact-integer arithmetic
-    (products < 2^39, window sums < 2^43 — int64-safe), vectorized as a
-    numpy sliding dot per document."""
     import hashlib
 
     import numpy as np
@@ -881,14 +835,14 @@ def _cdc_chunks_arrow(df: DataFrame, id_col: str, text_col: str,
         for pdf in batches:
             ids, idxs, starts, lens, hashes = [], [], [], [], []
             for rid, t in zip(pdf["_id"], pdf["_t"]):
-                if t is None:  # null text: no chunks (== expr path's
-                    continue   # null propagation)
+                if t is None:  # null text: no chunks
+                    continue
                 n = len(t)
                 bounds = []
                 if n >= w:
-                    # ord() == Spark ascii() == DuckDB ord() per UTF-8
-                    # char (frombuffer over encoded bytes would diverge
-                    # on any non-ASCII codepoint)
+                    # ord() == the SQL oracle's ord() per UTF-8 char
+                    # (frombuffer over encoded bytes would diverge on
+                    # any non-ASCII codepoint)
                     c = np.fromiter(map(ord, t), dtype=np.int64, count=n)
                     # h(i) = sum_j (c[i-1-j] * pows[j] % M) for i = w..n
                     terms = (np.lib.stride_tricks.sliding_window_view(

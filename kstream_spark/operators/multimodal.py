@@ -159,44 +159,21 @@ def attach_audio(df: DataFrame, source_col: str, sample_rate: int = 16000,
 
 
 def _fake_decode_segments(df: DataFrame, id_col: str, text_col: str,
-                          n_seg: int, out_col: str, mean: bool,
-                          impl: str) -> DataFrame:
+                          n_seg: int, out_col: str,
+                          mean: bool) -> DataFrame:
     """Shared body of the two decode stubs: ``n_seg`` integer segment
     sums (or means) of a payload's char codes.
 
-    ``impl="pandas"`` (default at both call sites) is one numpy cumsum
-    per row inside mapInPandas — exactly the shape a REAL decoder takes
-    (PIL/librosa are Pandas-UDF territory), and it sidesteps the
-    codegen arm's plan-cost wall: 72 interpreted ``aggregate`` folds per
-    row re-entered by the hash layer's reads made mm_phash/mm_afp
-    ~6s at EVERY SF — flat across data sizes, i.e. driver-side
-    expression-tree analysis, not execution (r12 profile).
-    ``impl="codegen"`` keeps the pure-expression arm (no Python
-    dependency; the pre-r12 default).  Both are integer-exact and
-    bit-identical (pytest-pinned by test_fake_decode_impls_bit_identical
-    across null/empty/non-ASCII/astral rows): bounds ``(k*n) div
-    n_seg``, sums over codepoints (Spark ``ascii`` returns full
-    codepoints, == Python ``ord`` even beyond the BMP — probed, and the
-    parity test pins it), NULL text folds every segment to NULL in both
-    arms, floor division by ``greatest(len, 1)`` for the mean arm."""
-    if impl == "codegen":
-        src = df.select(F.col(id_col),
-                        F.transform(F.split(F.col(text_col), ""),
-                                    lambda ch: F.ascii(ch)).alias("_pc"),
-                        F.length(F.col(text_col)).alias("_n"))
-        segs = []
-        for k in range(n_seg):
-            st = f"cast(({k} * _n) div {n_seg} as int) + 1"
-            ln = (f"cast((({k + 1}) * _n) div {n_seg} "
-                  f"- ({k} * _n) div {n_seg} as int)")
-            body = (f"aggregate(slice(_pc, {st}, {ln}), 0, "
-                    f"(a, x) -> a + x)")
-            if mean:
-                body = f"{body} div greatest({ln}, 1)"
-            segs.append(F.expr(f"cast({body} as int)"))
-        return src.select(F.col(id_col), F.array(*segs).alias(out_col))
-    if impl != "pandas":
-        raise ValueError(f"impl must be pandas|codegen, got {impl!r}")
+    One numpy cumsum per row inside mapInPandas — exactly the shape a
+    REAL decoder takes (PIL/librosa are Pandas-UDF territory), and it
+    sidesteps the expression form's plan-cost wall: 72 interpreted
+    ``aggregate`` folds per row re-entered by the hash layer's reads
+    made mm_phash/mm_afp ~6s at EVERY SF — flat across data sizes, i.e.
+    driver-side expression-tree analysis, not execution (r12 profile).
+    Integer-exact: bounds ``(k*n) div n_seg``, sums over full
+    codepoints (Python ``ord``, == the SQL oracle's char codes even
+    beyond the BMP), NULL text folds every segment to NULL, floor
+    division by ``greatest(len, 1)`` for the mean."""
     import numpy as np
     import pandas as pd
 
@@ -206,9 +183,7 @@ def _fake_decode_segments(df: DataFrame, id_col: str, text_col: str,
             ids, arrs = [], []
             for did, t in zip(pdf[id_col], pdf[text_col]):
                 if t is None:
-                    # codegen's aggregate-over-NULL-slice folds each
-                    # segment to NULL — emit the same n_seg NULLs, not
-                    # zeros (parity-pinned; callers filter length >= n)
+                    # n_seg NULLs, not zeros (callers filter length >= n)
                     ids.append(did)
                     arrs.append([None] * n_seg)
                     continue
@@ -234,7 +209,7 @@ def _fake_decode_segments(df: DataFrame, id_col: str, text_col: str,
 
 
 def fake_decode_image(df: DataFrame, id_col: str, text_col: str,
-                      n_px: int = 72, impl: str = "pandas") -> DataFrame:
+                      n_px: int = 72) -> DataFrame:
     """STUB image decode: derive a deterministic grayscale "thumbnail"
     (``n_px`` integer pixels) from a text payload — segment MEANS of the
     char codes (sum // len, integer-exact), standing in for the
@@ -243,9 +218,9 @@ def fake_decode_image(df: DataFrame, id_col: str, text_col: str,
     thumbnailing does and is what ``dhash_bands`` consumes.  Rows
     shorter than one char per segment are the caller's business (filter
     ``length >= n_px`` for stable thumbnails).  See
-    ``_fake_decode_segments`` for the impl arms."""
+    ``_fake_decode_segments``."""
     return _fake_decode_segments(df, id_col, text_col, n_px,
-                                 "pixels", mean=True, impl=impl)
+                                 "pixels", mean=True)
 
 
 def dhash_bands(df: DataFrame, id_col: str, pixel_col: str,
@@ -360,15 +335,14 @@ def banded_hamming_pairs(hb: DataFrame, id_col: str, n_bands: int,
 
 
 def fake_decode_audio(df: DataFrame, id_col: str, text_col: str,
-                      n_seg: int = 80, impl: str = "pandas") -> DataFrame:
+                      n_seg: int = 80) -> DataFrame:
     """STUB audio decode: deterministic integer "band energies" from a
     text payload — ``n_seg`` segment SUMS of the char codes, standing in
     for the framed filterbank energies a real decoder (absent from this
     container) would produce.  Integer-exact.  Callers should filter
-    ``length >= n_seg``.  See ``_fake_decode_segments`` for the impl
-    arms."""
+    ``length >= n_seg``.  See ``_fake_decode_segments``."""
     return _fake_decode_segments(df, id_col, text_col, n_seg,
-                                 "energies", mean=False, impl=impl)
+                                 "energies", mean=False)
 
 
 def afp_bands(df: DataFrame, id_col: str, energy_col: str,

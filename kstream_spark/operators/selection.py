@@ -30,44 +30,32 @@ from kstream_spark.functions.vectors import as_double, dot, norm
 
 # -- DSIR-style hashed importance resampling --------------------------------
 def _dsir_tokens(df: DataFrame, id_col: str, text_col: str,
-                 n_buckets: int, extra=None,
-                 impl: str = "pandas") -> DataFrame:
+                 n_buckets: int, extra=None) -> DataFrame:
     """(id, bucket) token stream: whitespace tokens hashed into
     ``n_buckets`` portable md5 feature buckets (seed 'dsir').
 
-    ``impl="pandas"`` (default) buckets through a per-task word->bucket
-    MEMO: a word's bucket is a pure function of the word and natural-
-    language token streams are maximally repetitive (Zipf), so the md5
-    cost collapses to O(distinct words) per task — the same workload
-    lesson as ``dedup._doc_local_minhash`` (sf1 A/B: 1.32s -> 0.78s warm
-    for the bucket-count pass).  ``impl="codegen"`` is the stateless
-    explode + md5-per-occurrence Catalyst arm — no Python, no Arrow; the
-    arm for vocabulary-explosive payloads (URLs, ids) where a memo never
-    hits.  Both split on ASCII whitespace exactly (the pandas regex
-    spells out Java's ``\\s`` class — Python's ``\\s`` is Unicode-wide
-    and would diverge on NBSP), lowercase JVM-side, and drop empties;
-    bit-identical output, either replays the DuckDB oracle.
+    Buckets go through a per-task word->bucket MEMO: a word's bucket is
+    a pure function of the word and natural-language token streams are
+    maximally repetitive (Zipf), so the md5 cost collapses to O(distinct
+    words) per task — the same workload lesson as
+    ``dedup._doc_local_minhash`` (sf1 A/B: 1.32s -> 0.78s warm for the
+    bucket-count pass, against a stateless explode + md5-per-occurrence
+    expression).  Splits on ASCII whitespace exactly (the regex spells
+    out Java's ``\\s`` class — Python's ``\\s`` is Unicode-wide and
+    would diverge on NBSP), lowercases JVM-side, and drops empties, so
+    it replays the DuckDB oracle.
 
     md5-per-token is CPU-heavy per input byte — spread a few-split scan
     across cores first (the shingle_sets floor; without it a small-file
     corpus serializes the whole hash fan-out onto one or two tasks)."""
-    from kstream_spark.operators.corpus import _clean_words, _hash_mod
-    from kstream_spark.util import ensure_parallelism
-    df = ensure_parallelism(df, min_bytes=256 << 10)
-    cols = [F.col(id_col)] + ([] if extra is None else [extra])
-    if impl == "codegen":
-        tok = df.select(
-            *cols,
-            F.explode(_clean_words(F.lower(F.col(text_col)))).alias("tok"))
-        return tok.withColumn("_b",
-                              _hash_mod(F.col("tok"), n_buckets, "dsir"))
-    if impl != "pandas":
-        raise ValueError(f"impl must be pandas|codegen, got {impl!r}")
     import hashlib
     import re
 
     import pandas as pd
 
+    from kstream_spark.util import ensure_parallelism
+    df = ensure_parallelism(df, min_bytes=256 << 10)
+    cols = [F.col(id_col)] + ([] if extra is None else [extra])
     proj = df.select(*cols, F.lower(F.col(text_col)).alias("__txt"))
     keys = [f.name for f in proj.schema.fields[:-1]]
     key_types = ", ".join(f"{f.name} {f.dataType.simpleString()}"

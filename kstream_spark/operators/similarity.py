@@ -57,74 +57,40 @@ def cosine_topk(emb: DataFrame, id_col: str, vec_col: str,
 
 
 def cosine_pairs(emb: DataFrame, id_col: str, vec_col: str,
-                 threshold: float = 0.9, impl: str = "numpy",
+                 threshold: float = 0.9,
                  n_blocks: int | None = None) -> DataFrame:
     """All pairs with cosine >= threshold (brute force; use lsh_cosine_pairs
     at corpus scale).  Returns (id_a, id_b, cos).
 
-    Two hash-identical implementations (pytest-pinned parity):
-
-    * ``impl="numpy"`` (default): blocked upper-triangle tiles — each
-      vector hashes into one of B blocks, replicates to its B tiles
-      (tile (i, j), i<=j, holds blocks i and j), and each tile scores as
-      ONE ``(rows x dim) @ (dim x rows)`` numpy matmul inside
-      applyInPandas.  An unordered pair meets in exactly one tile (the
-      sorted block-id pair), so no trailing distinct.  This is the same
-      impl-split that fixed the decode stubs and minhash: the per-pair
-      ``F.aggregate(F.zip_with(...))`` scorer is an INTERPRETED
-      higher-order function (no codegen), so millions of pairs pay
-      per-element lambda dispatch — the matmul arm replaces ~n²·dim
-      interpreted lambdas with BLAS (sf1 standalone: 37.7s -> well under
-      the oracle).  Shuffle volume is B x corpus (the standard blocked
-      all-pairs shape); task memory is one tile's sim matrix.
-    * ``impl="codegen"``: the JVM expression join — no Python, no Arrow;
-      fine for small inputs and the arm the SQL oracle mirrors
-      expression-for-expression.
-
-    Rounding parity: norms come from the SAME JVM ``norm()`` doubles in
-    both arms, and the numpy arm rounds HALF_UP to 6 dp exactly as the
-    lsh_cosine_pairs bucket verify does (oracle-proven discipline).
-    """
-    from kstream_spark.functions.vectors import dot, norm
-    from kstream_spark.util import ensure_parallelism
-    emb = ensure_parallelism(emb)
-    if impl == "numpy":
-        return _cosine_pairs_numpy(emb, id_col, vec_col, threshold, n_blocks)
-    if impl != "codegen":
-        raise ValueError(f"impl must be numpy|codegen, got {impl!r}")
-    # per-vector norms: n folds instead of n^2 (identical doubles per pair)
-    a = emb.select(F.col(id_col).alias("id_a"),
-                   as_double(F.col(vec_col)).alias("va")) \
-        .withColumn("na", norm(F.col("va")))
-    b = emb.select(F.col(id_col).alias("id_b"),
-                   as_double(F.col(vec_col)).alias("vb")) \
-        .withColumn("nb", norm(F.col("vb")))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b",
-                # try_divide: zero-norm vectors NULL out (then filter-drop)
-                # instead of erroring under ANSI — the numpy arm drops too
-                F.round(F.try_divide(dot(F.col("va"), F.col("vb")),
-                                     F.col("na") * F.col("nb")), 6)
-                .alias("cos"))
-        .filter(F.col("cos") >= threshold)
-    )
-
-
-def _cosine_pairs_numpy(emb: DataFrame, id_col: str, vec_col: str,
-                        threshold: float, n_blocks: int | None) -> DataFrame:
-    """The blocked-matmul arm of ``cosine_pairs`` (see its docstring).
+    Blocked upper-triangle tiles: each vector hashes into one of B blocks,
+    replicates to its B tiles (tile (i, j), i<=j, holds blocks i and j),
+    and each tile scores as ONE ``(rows x dim) @ (dim x rows)`` numpy
+    matmul inside applyInPandas.  An unordered pair meets in exactly one
+    tile (the sorted block-id pair), so no trailing distinct.  A per-pair
+    ``F.aggregate(F.zip_with(...))`` scorer would be an INTERPRETED
+    higher-order function (no codegen), so millions of pairs would pay
+    per-element lambda dispatch — the matmul replaces ~n²·dim interpreted
+    lambdas with BLAS (sf1 standalone: 37.7s -> well under the oracle).
+    Shuffle volume is B x corpus (the standard blocked all-pairs shape);
+    task memory is one tile's sim matrix.
 
     Block count: tiles should be big enough to amortize Arrow/task
     overhead but bounded in memory — target ~4k rows per block (a tile's
     sim matrix is then <=(8k)² doubles ~ 0.5 GB peak per task worst-case,
     typically (4k)² ~ 128 MB).  Estimated from Catalyst size stats when
-    not given; the estimate only affects performance, never results."""
+    not given; the estimate only affects performance, never results.
+
+    Rounding parity: norms come from the JVM ``norm()`` doubles, and
+    similarities round HALF_UP to 6 dp exactly as the lsh_cosine_pairs
+    bucket verify does (oracle-proven discipline).  Zero-norm vectors
+    pair with nothing, as in the SQL oracle.
+    """
     import numpy as np
 
     from kstream_spark.functions.vectors import norm
-    from kstream_spark.util import input_size_bytes
+    from kstream_spark.util import ensure_parallelism, input_size_bytes
 
+    emb = ensure_parallelism(emb)
     if n_blocks is None:
         size = input_size_bytes(emb)
         dim_probe = (emb.select(F.size(vec_col).alias("d")).first()
@@ -170,8 +136,7 @@ def _cosine_pairs_numpy(emb: DataFrame, id_col: str, vec_col: str,
             with np.errstate(divide="ignore", invalid="ignore"):
                 raw = (mat @ mat.T) / np.outer(nr, nr)
             # HALF_UP to 6 dp, inlined (see np_round6_half_up); zero-norm
-            # vectors divide to inf/nan — the codegen arm's JVM division
-            # NULLs there and the filter drops them, so mask to -inf
+            # vectors divide to inf/nan — mask to -inf so they never pass
             raw[~np.isfinite(raw)] = -np.inf
             sims = np.copysign(np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6, raw)
             iu, ju = np.triu_indices(len(ids), k=1)
@@ -1382,8 +1347,7 @@ def sq8_stats(emb: DataFrame, vec_col: str) -> tuple[list, list]:
 
 
 def sq8_topk(emb: DataFrame, id_col: str, vec_col: str, query_ids: list,
-             k: int = 10, local: bool | None = None,
-             queries: DataFrame | None = None) -> DataFrame:
+             k: int = 10, queries: DataFrame | None = None) -> DataFrame:
     """Scalar-quantized (SQ8) asymmetric top-k: corpus vectors compress to
     one uint8 code per dimension (4x smaller than float32 — the standard
     memory/IO tier between raw vectors and PQ), queries stay full
@@ -1408,40 +1372,21 @@ def sq8_topk(emb: DataFrame, id_col: str, vec_col: str, query_ids: list,
     from kstream_spark.util import ensure_parallelism
     from kstream_spark.functions.vectors import dot
     emb = ensure_parallelism(emb)
-    # r13 added a local-setup arm (one collect derives min/max + query
-    # rows); r14 REVERTED its auto-selection after two independent r13
-    # runs (driver 8c, builder 32c) and a controlled r14 alternating A/B
-    # (distributed faster in 4/5 rounds, e.g. 1.13 vs 1.46 s warm) all
-    # showed the local arm 15-30% SLOWER here: unlike ivfsq_topk (which
-    # collapses three setup jobs incl. a window and keeps its arm), sq8
-    # setup was only two cheap jobs — a 64-row aggregated collect and a
-    # broadcast filter — while the local arm pays a full row-based
-    # collect of every vector.  ``local=True`` still pins the arm (the
-    # parity test drives both); ``auto`` now always resolves distributed.
-    id_dt = emb.schema[id_col].dataType.simpleString()
-    spark = emb.sparkSession
-    if local is True:
-        import numpy as np
-        rows = emb.select(F.col(id_col).alias("_id"),
-                          as_double(F.col(vec_col)).alias("v")).collect()
-        mat = np.array([r["v"] for r in rows], dtype=np.float64)
-        mn = [float(x) for x in mat.min(axis=0)]
-        mx = [float(x) for x in mat.max(axis=0)]
-        want = set(query_ids)
-        q_rows = [(r["_id"], [float(x) for x in r["v"]])
-                  for r in rows if r["_id"] in want]
-        q = F.broadcast(local_df(
-            spark, q_rows, f"query_id {id_dt}, qv array<double>"))
-    else:
-        mn, mx = sq8_stats(emb, vec_col)
-        # `queries` (r14): a caller that already holds the query vectors
-        # (the recall audits' shared collect) passes them as a local
-        # relation instead of paying another corpus filter scan
-        q_src = queries if queries is not None else \
-            emb.filter(F.col(id_col).isin(query_ids))
-        q = F.broadcast(q_src
-                        .select(F.col(id_col).alias("query_id"),
-                                as_double(F.col(vec_col)).alias("qv")))
+    # No local-setup arm (one collect of every vector for min/max + query
+    # rows): a controlled alternating A/B measured it 15-30% SLOWER than
+    # this distributed setup (distributed faster in 4/5 rounds, e.g. 1.13
+    # vs 1.46 s warm) — unlike ivfsq_topk, which collapses three setup
+    # jobs incl. a window and keeps its gated arm, sq8 setup is only two
+    # cheap jobs: a 64-row aggregated collect and a broadcast filter.
+    mn, mx = sq8_stats(emb, vec_col)
+    # `queries`: a caller that already holds the query vectors (the recall
+    # audits' shared collect) passes them as a local relation instead of
+    # paying another corpus filter scan
+    q_src = queries if queries is not None else \
+        emb.filter(F.col(id_col).isin(query_ids))
+    q = F.broadcast(q_src
+                    .select(F.col(id_col).alias("query_id"),
+                            as_double(F.col(vec_col)).alias("qv")))
     scale = [255.0 / (b - a) if b > a else 0.0 for a, b in zip(mn, mx)]
     step = [(b - a) / 255.0 for a, b in zip(mn, mx)]
     from kstream_spark.functions.vectors import lit_doubles

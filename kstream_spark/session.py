@@ -9,9 +9,30 @@ the scale-safe default.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
+
+
+def _driver_memory() -> str:
+    """``$SPARK_DRIVER_MEMORY`` if set, else the smaller of 16g and half
+    of the machine's ``MemTotal``.  A fixed 16g heap outgrows a 16 GB
+    box: the driver JVM is killed mid-run and every later action fails
+    with a py4j ``EOFError``."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    cap_mb = 16 << 10
+    try:
+        with open("/proc/meminfo") as fh:
+            kb = next(int(line.split()[1]) for line in fh
+                      if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return f"{cap_mb}m"     # no /proc/meminfo: the historical default
+    return f"{min(cap_mb, kb // 2 // 1024)}m"
 
 
 def get_spark(
@@ -23,6 +44,8 @@ def get_spark(
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
+    mem = _driver_memory()
+    log.info("spark.driver.memory=%s", mem)
 
     b = (
         SparkSession.builder.master(master)
@@ -33,7 +56,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # testdata parquet carries TIMESTAMP(NANOS); surface as long, the

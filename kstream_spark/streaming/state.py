@@ -22,65 +22,15 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
-def tws_available(spark) -> bool:
-    """True when Spark 4's ``transformWithStateInPandas`` can actually
-    run here: the API exists AND its Python worker's hard dependency
-    (google.protobuf — the state-server wire protocol) is importable IN
-    THE EXECUTOR PYTHON, not just on the driver (separately-built worker
-    images commonly diverge).  The executor probe is one 1-partition,
-    1-row job, cached per session.  COMPAT.md: the build sandbox lacks
-    protobuf, so this gates the modern arm and the operators fall back
-    to applyInPandasWithState."""
-    try:
-        import google.protobuf  # noqa: F401
-        from pyspark.sql.streaming.stateful_processor import (  # noqa: F401
-            StatefulProcessor)
-    except ImportError:
-        return False
-    try:
-        if int(spark.version.split(".")[0]) < 4:
-            return False
-    except Exception:  # noqa: BLE001
-        return False
-    cached = getattr(spark, "_kstream_tws_worker_probe", None)
-    if cached is not None:
-        return cached
-
-    def _worker_has_protobuf(_):
-        try:
-            import google.protobuf  # noqa: F401
-            return True
-        except ImportError:
-            return False
-
-    try:
-        ok = bool(spark.sparkContext.parallelize([0], 1)
-                  .map(_worker_has_protobuf).collect()[0])
-    except Exception:  # noqa: BLE001
-        ok = False
-    spark._kstream_tws_worker_probe = ok
-    return ok
-
-
 def latest_with_ttl(df: DataFrame, key_col: str, version_col: str,
-                    payload_cols: list[str], ttl_ms: int | None = None,
-                    impl: str = "auto") -> DataFrame:
+                    payload_cols: list[str], ttl_ms: int | None = None
+                    ) -> DataFrame:
     """Streaming latest-by-key with optional per-key TTL.
 
     Emits (key, version, payload_json, expired) rows on every update; when a
     key's TTL elapses with no updates, a tombstone row (expired=true) is
     emitted and state is dropped — the streaming analog of the reference's
-    background cleaner deleting expired entries.
-
-    ``impl``: 'auto' uses Spark 4's ``transformWithStateInPandas`` (typed
-    state vars + timers, RocksDB-backed) when the runtime supports it
-    (``tws_available``) and falls back to ``applyInPandasWithState``
-    otherwise; 'tws' / 'legacy' force an arm (parity tests use both)."""
-    if impl not in ("auto", "tws", "legacy"):
-        raise ValueError(f"impl must be auto|tws|legacy, got {impl!r}")
-    if impl == "tws" or (impl == "auto" and tws_available(df.sparkSession)):
-        return _latest_with_ttl_tws(df, key_col, version_col,
-                                    payload_cols, ttl_ms)
+    background cleaner deleting expired entries."""
     out_schema = T.StructType([
         T.StructField(key_col, T.LongType()),
         T.StructField("version", T.LongType()),
@@ -123,85 +73,8 @@ def latest_with_ttl(df: DataFrame, key_col: str, version_col: str,
         update, out_schema, state_schema, "append", timeout)
 
 
-def _latest_with_ttl_tws(df: DataFrame, key_col: str, version_col: str,
-                         payload_cols: list[str],
-                         ttl_ms: int | None) -> DataFrame:
-    """``latest_with_ttl`` on the Spark 4 ``transformWithStateInPandas``
-    API: one ValueState var holds (version, payload-json); a per-key
-    processing-time TIMER (registered on every update, re-armed by
-    cancelling the old one) implements the TTL tombstone.  Same output
-    contract as the legacy arm — the parity test drives both.
-
-    Requires the RocksDB state-store provider (Spark enforces this for
-    transformWithState); callers get a clear error from Spark itself if
-    the session is configured with the HDFS-backed provider."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
-
-    out_schema = T.StructType([
-        T.StructField(key_col, T.LongType()),
-        T.StructField("version", T.LongType()),
-        T.StructField("payload", T.StringType()),
-        T.StructField("expired", T.BooleanType()),
-    ])
-    state_schema = T.StructType([
-        T.StructField("version", T.LongType()),
-        T.StructField("payload", T.StringType()),
-    ])
-
-    class LatestWithTTL(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._latest = handle.getValueState("latest", state_schema)
-
-        def handleInputRows(self, key, rows, timer_values):
-            (k,) = key
-            cur = self._latest.get()
-            best_ver, best_payload = cur if cur is not None else (None, None)
-            for pdf in rows:
-                for _, row in pdf.iterrows():
-                    v = int(row[version_col])
-                    if best_ver is None or v > best_ver:
-                        best_ver = v
-                        best_payload = json.dumps(
-                            {c: (None if pd.isna(row[c]) else
-                                 (row[c].item() if hasattr(row[c], "item")
-                                  else row[c]))
-                             for c in payload_cols},
-                            sort_keys=True, default=str)
-            self._latest.update((best_ver, best_payload))
-            if ttl_ms is not None:
-                # re-arm: drop any previously registered timer, then set
-                # the new deadline relative to the batch's proc time
-                for t in self._handle.listTimers():
-                    self._handle.deleteTimer(t)
-                self._handle.registerTimer(
-                    timer_values.getCurrentProcessingTimeInMs() + ttl_ms)
-            yield pd.DataFrame([{key_col: k, "version": best_ver,
-                                 "payload": best_payload, "expired": False}])
-
-        def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            (k,) = key
-            cur = self._latest.get()
-            if cur is None:
-                return
-            ver, payload = cur
-            self._latest.clear()
-            yield pd.DataFrame([{key_col: k, "version": ver,
-                                 "payload": payload, "expired": True}])
-
-        def close(self) -> None:
-            pass
-
-    return df.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=LatestWithTTL(),
-        outputStructType=out_schema,
-        outputMode="append",
-        timeMode="processingTime" if ttl_ms is not None else "none")
-
-
 def session_stream(df: DataFrame, user_col: str, ts_col: str,
-                   gap: str = "30 minutes", impl: str = "auto") -> DataFrame:
+                   gap: str = "30 minutes") -> DataFrame:
     """Streaming gap sessionization with event-time timeouts: per user,
     events closer than ``gap`` belong to one session; a session closes
     (and emits one row) either when a later event arrives past the gap
@@ -217,17 +90,8 @@ def session_stream(df: DataFrame, user_col: str, ts_col: str,
     State is three numbers per live user (start_ms, last_ms, n) —
     O(active users), safe at any stream volume; the shuffle key is
     user_col, the same key every downstream per-user consumer needs.
-
-    ``impl``: 'auto' uses Spark 4's ``transformWithStateInPandas``
-    (event-time timers, RocksDB-backed) when the runtime supports it
-    (``tws_available``) and falls back to ``applyInPandasWithState``
-    otherwise; 'tws' / 'legacy' force an arm (parity tests use both).
     """
-    if impl not in ("auto", "tws", "legacy"):
-        raise ValueError(f"impl must be auto|tws|legacy, got {impl!r}")
     gap_ms = int(pd.Timedelta(gap).total_seconds() * 1000)
-    if impl == "tws" or (impl == "auto" and tws_available(df.sparkSession)):
-        return _session_stream_tws(df, user_col, ts_col, gap_ms)
     out_schema = T.StructType([
         T.StructField(user_col, T.LongType()),
         T.StructField("session_start", T.TimestampType()),
@@ -276,88 +140,6 @@ def session_stream(df: DataFrame, user_col: str, ts_col: str,
     return df.groupBy(user_col).applyInPandasWithState(
         update, out_schema, state_schema, "append",
         GroupStateTimeout.EventTimeTimeout)
-
-
-def _session_stream_tws(df: DataFrame, user_col: str, ts_col: str,
-                        gap_ms: int) -> DataFrame:
-    """``session_stream`` on the Spark 4 ``transformWithStateInPandas``
-    API (the second operator migrated behind ``tws_available``, after
-    ``latest_with_ttl``): one ValueState var holds the open session
-    (start_ms, last_ms, n); an EVENT-TIME timer at last_ms + gap
-    (clamped strictly above the watermark, exactly like the legacy arm's
-    setTimeoutTimestamp) closes-and-emits when the watermark passes with
-    no new events.  Timers are re-armed per batch by deleting the old
-    one (TWS timers don't auto-cancel on state update).  Same output
-    contract as the legacy arm — the parity test drives both."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
-
-    out_schema = T.StructType([
-        T.StructField(user_col, T.LongType()),
-        T.StructField("session_start", T.TimestampType()),
-        T.StructField("session_end", T.TimestampType()),
-        T.StructField("n_events", T.LongType()),
-    ])
-    state_schema = T.StructType([
-        T.StructField("start_ms", T.LongType()),
-        T.StructField("last_ms", T.LongType()),
-        T.StructField("n", T.LongType()),
-    ])
-
-    def row(k, s, l, n):
-        return {user_col: k,
-                "session_start": pd.Timestamp(s, unit="ms"),
-                "session_end": pd.Timestamp(l, unit="ms"),
-                "n_events": n}
-
-    class SessionStream(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._sess = handle.getValueState("sess", state_schema)
-
-        def handleInputRows(self, key, rows, timer_values):
-            (k,) = key
-            ts = sorted(int(t) for pdf in rows
-                        for t in pdf[ts_col].astype("int64") // 1_000_000)
-            cur = self._sess.get()
-            open_sess = tuple(cur) if cur is not None else None
-            closed = []
-            for t in ts:
-                if open_sess is None:
-                    open_sess = (t, t, 1)
-                elif t > open_sess[1] + gap_ms:
-                    closed.append(open_sess)
-                    open_sess = (t, t, 1)
-                else:
-                    open_sess = (open_sess[0], max(open_sess[1], t),
-                                 open_sess[2] + 1)
-            self._sess.update(open_sess)
-            for t in self._handle.listTimers():
-                self._handle.deleteTimer(t)
-            # timer must sit strictly above the current watermark
-            self._handle.registerTimer(max(
-                open_sess[1] + gap_ms,
-                timer_values.getCurrentWatermarkInMs() + 1))
-            if closed:
-                yield pd.DataFrame([row(k, s, l, n) for s, l, n in closed])
-
-        def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            (k,) = key
-            cur = self._sess.get()
-            if cur is None:
-                return
-            s, l, n = cur
-            self._sess.clear()
-            yield pd.DataFrame([row(k, s, l, n)])
-
-        def close(self) -> None:
-            pass
-
-    return df.groupBy(user_col).transformWithStateInPandas(
-        statefulProcessor=SessionStream(),
-        outputStructType=out_schema,
-        outputMode="append",
-        timeMode="eventTime")
 
 
 def funnel_stream(df: DataFrame, user_col: str, type_col: str, ts_col: str,

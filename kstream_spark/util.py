@@ -196,7 +196,8 @@ def local_df(spark, rows, schema) -> DataFrame:
     conversion — no pandas type inference, no NaN coercion.  Schemas
     containing timestamp/date types fall back to the classic row path
     (Arrow's tz-localization semantics differ from the pickle path);
-    Arrow conversion failures (e.g. nested Row objects) also fall back.
+    Arrow conversion failures (e.g. nested Row objects) also fall back,
+    with a once-per-process ``RuntimeWarning`` naming the exception.
 
     ``rows`` must be a list of tuples/Rows matching ``schema``."""
     import pandas as pd
@@ -218,16 +219,35 @@ def local_df(spark, rows, schema) -> DataFrame:
     if not isinstance(struct, T.StructType):
         try:
             struct = T._parse_datatype_string(schema)
-        except Exception:
+        except Exception as exc:  # noqa: BLE001
+            _warn_local_df_fallback(exc)
             return spark.createDataFrame(rows, schema)
     if rows and not _temporal(struct):
         try:
             pdf = pd.DataFrame([tuple(r) for r in rows], dtype=object)
             pdf.columns = [f.name for f in struct.fields]
             return spark.createDataFrame(pdf, struct)
-        except Exception:
-            pass  # nested Rows / exotic types: classic path below
+        except Exception as exc:  # noqa: BLE001
+            # nested Rows / exotic types: classic path below
+            _warn_local_df_fallback(exc)
     return spark.createDataFrame(rows, struct)
+
+
+_local_df_warned = False
+
+
+def _warn_local_df_fallback(exc: Exception) -> None:
+    """Say once per process that ``local_df`` fell back to the
+    Python-RDD ``createDataFrame`` path, and why."""
+    global _local_df_warned
+    if _local_df_warned:
+        return
+    _local_df_warned = True
+    import warnings
+    warnings.warn(
+        f"local_df: Arrow local relation failed ({type(exc).__name__}: "
+        f"{exc}); falling back to the Python-RDD createDataFrame path",
+        RuntimeWarning, stacklevel=3)
 
 
 def collect_freeing(out: DataFrame, *cached: DataFrame) -> DataFrame:

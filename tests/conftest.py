@@ -1,8 +1,9 @@
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kstream_spark import get_spark  # noqa: E402
 
@@ -21,6 +22,9 @@ def spark():
     # Production sessions are untouched — this is the test fixture.
     s = get_spark(app_name="kstream_spark_tests", shuffle_partitions=4,
                   extra_conf={"spark.default.parallelism": "4"})
+    # getOrCreate hands back an already-running session unchanged, so
+    # check the pin actually took effect
+    assert s.sparkContext.defaultParallelism == 4
     yield s
 
 

@@ -117,22 +117,29 @@ def test_lsh_cosine_recovers_planted_near_dups(spark):
     assert len(brute) == 20
 
 
-def test_cosine_pairs_impls_identical(spark):
-    """The blocked-matmul and codegen arms of cosine_pairs must emit the
-    IDENTICAL pair set with identical rounded cosines (the numpy arm is
-    the default; dedup_embedding/decon_embedding inherit it) — including
-    at a low threshold where many pairs survive, across several block
-    counts (tile boundaries must not change results), and with a
-    zero-norm vector (JVM division NULLs, numpy must drop, not emit inf)."""
+def test_cosine_pairs_matches_sql_oracle(spark):
+    """cosine_pairs (blocked numpy matmul) must emit the IDENTICAL pair
+    set with identical rounded cosines as the inventory's DuckDB oracle
+    SQL on the same rows — at a low threshold where many pairs survive,
+    across several block counts (tile boundaries must not change
+    results), and with a zero-norm vector (the SQL division NULLs and
+    the filter drops it; numpy must drop it too, not emit inf)."""
     import random
+
+    import duckdb
+    import pandas as pd
+    from kstream_spark.inventory_pipeline import SQL_SIM_COSINE_PAIRS
     random.seed(13)
     rows = [(i, [float(random.gauss(0, 1)) for _ in range(16)])
             for i in range(60)]
-    rows.append((60, [0.0] * 16))     # zero-norm: both arms must drop it
+    rows.append((60, [0.0] * 16))     # zero-norm: must pair with nothing
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    ref = sorted((r.id_a, r.id_b, r.cos) for r in
-                 S.cosine_pairs(emb, "vec_id", "embedding", threshold=0.1,
-                                impl="codegen").collect())
+    con = duckdb.connect()
+    con.register("src", pd.DataFrame(rows, columns=["vec_id", "embedding"]))
+    con.execute("CREATE TABLE embeddings AS SELECT vec_id, "
+                "embedding::FLOAT[] AS embedding FROM src")
+    sql = SQL_SIM_COSINE_PAIRS.replace("cos >= 0.4", "cos >= 0.1")
+    ref = sorted(map(tuple, con.execute(sql).fetchall()))
     assert len(ref) > 50                 # non-trivial survivor set
     for nb in (1, 4, 16):
         got = sorted((r.id_a, r.id_b, r.cos) for r in
@@ -175,13 +182,18 @@ def test_training_local_arm_bit_identical(spark):
     assert _train_local(emb, "vec_id", None, None) is False
 
 
-def test_sq8_local_setup_arm_identical(spark, tmp_path):
-    """sq8_topk / ivfsq_topk local-setup arms (one collect derives the
-    per-dim min/max, the seed centroids, and the numpy probe selection)
-    must return the IDENTICAL ranked rows as the distributed-setup arms.
-    Runs over a parquet scan so the auto gate ALSO resolves to local
-    (scan stats present and tiny)."""
+def test_sq8_oracle_and_ivfsq_local_arm_identical(spark, tmp_path):
+    """sq8_topk must return the IDENTICAL ranked rows as the inventory's
+    DuckDB oracle SQL over the same parquet file (bit-exact codes and
+    scores: the quantizer bounds are exact data picks).  ivfsq_topk's
+    local-setup arm (one collect derives the per-dim min/max, the seed
+    centroids, and the numpy probe selection) must return the IDENTICAL
+    ranked rows as its distributed-setup arm; the parquet scan makes the
+    auto gate ALSO resolve to local (scan stats present and tiny)."""
     import random
+
+    import duckdb
+    from kstream_spark.inventory_pipeline import SQL_SIM_SQ8_TOPK
     random.seed(31)
     src = spark.createDataFrame(
         [(i, [float(random.gauss(0, 1)) for _ in range(16)])
@@ -189,17 +201,23 @@ def test_sq8_local_setup_arm_identical(spark, tmp_path):
     path = str(tmp_path / "emb.parquet")
     src.write.parquet(path)
     emb = spark.read.parquet(path)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{path}/*.parquet'")
+    ref = sorted(map(tuple, con.execute(SQL_SIM_SQ8_TOPK).fetchall()))
+    got = sorted(map(tuple, S.sq8_topk(emb, "vec_id", "embedding",
+                                       [0, 1, 2, 3, 4], k=10).collect()))
+    assert got == ref
+    assert len(got) == 50
     qids = [0, 1, 2]
-    for fn, kw in ((S.sq8_topk, {}),
-                   (S.ivfsq_topk, {"n_cells": 6, "n_probe": 3})):
-        loc = sorted(map(tuple, fn(emb, "vec_id", "embedding", qids,
-                                   k=5, local=True, **kw).collect()))
-        dist = sorted(map(tuple, fn(emb, "vec_id", "embedding", qids,
-                                    k=5, local=False, **kw).collect()))
-        auto = sorted(map(tuple, fn(emb, "vec_id", "embedding", qids,
-                                    k=5, **kw).collect()))
-        assert loc == dist == auto
-        assert len(loc) == 15
+    kw = {"n_cells": 6, "n_probe": 3}
+    loc = sorted(map(tuple, S.ivfsq_topk(emb, "vec_id", "embedding", qids,
+                                         k=5, local=True, **kw).collect()))
+    dist = sorted(map(tuple, S.ivfsq_topk(emb, "vec_id", "embedding", qids,
+                                          k=5, local=False, **kw).collect()))
+    auto = sorted(map(tuple, S.ivfsq_topk(emb, "vec_id", "embedding", qids,
+                                          k=5, **kw).collect()))
+    assert loc == dist == auto
+    assert len(loc) == 15
 
 
 def test_cosine_topk_self_excluded(spark):
@@ -825,30 +843,39 @@ def test_fake_decode_image_segment_means(spark):
     assert set(px) == {97}
 
 
-def test_fake_decode_impls_bit_identical(spark):
-    """The pandas (default) and codegen decode-stub arms must agree on
+def _segments(text, n_seg, mean):
+    """Reference decode stub: n_seg integer segment sums (or floor
+    means) of the char codes, bounds (k*n) // n_seg; NULL text -> NULLs."""
+    if text is None:
+        return [None] * n_seg
+    n = len(text)
+    out = []
+    for k in range(n_seg):
+        seg = [ord(c) for c in text[k * n // n_seg:(k + 1) * n // n_seg]]
+        out.append(sum(seg) // max(len(seg), 1) if mean else sum(seg))
+    return out
+
+
+def test_fake_decode_matches_reference(spark):
+    """The decode stubs must match a plain-Python segment sum/mean on
     every row — the thumbnails/envelopes they emit feed the Hamming-band
     dedup hashes, so one differing segment silently changes candidate
-    generation.  Hostile rows: NULL text (both arms fold every segment
-    to NULL), empty text (zeros, from the empty-slice aggregate), text
-    shorter than n_seg, BMP non-ASCII and astral chars (Spark ascii ==
-    Python ord at full codepoint width), plus a normal long payload.
-    Covers both the mean (image) and sum (audio) shapes."""
+    generation.  Hostile rows: NULL text (every segment NULL), empty
+    text (zeros), text shorter than n_seg, BMP non-ASCII and astral
+    chars (full-codepoint ord), plus a normal long payload.  Covers both
+    the mean (image) and sum (audio) shapes."""
     from kstream_spark.operators import multimodal as M
-    df = spark.createDataFrame(
-        [(1, "ab" * 72), (2, None), (3, ""), (4, "xy"),
-         (5, "héllo wörld" * 20), (6, "a\U0001F600é" * 40)],
-        "doc_id long, text string")
-    for fn, kw in ((M.fake_decode_image, {"n_px": 8}),
-                   (M.fake_decode_audio, {"n_seg": 8})):
-        a = {r["doc_id"]: r.asDict() for r in
-             fn(df, "doc_id", "text", impl="pandas", **kw).collect()}
-        b = {r["doc_id"]: r.asDict() for r in
-             fn(df, "doc_id", "text", impl="codegen", **kw).collect()}
-        assert a == b
-        out_col = next(c for c in a[1] if c != "doc_id")
-        assert a[2][out_col] == [None] * 8      # NULL text -> NULL segments
-        assert a[3][out_col] == [0] * 8         # empty text -> zero segments
+    rows = [(1, "ab" * 72), (2, None), (3, ""), (4, "xy"),
+            (5, "héllo wörld" * 20), (6, "a\U0001F600é" * 40)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    for fn, kw, col, mean in (
+            (M.fake_decode_image, {"n_px": 8}, "pixels", True),
+            (M.fake_decode_audio, {"n_seg": 8}, "energies", False)):
+        got = {r["doc_id"]: r[col] for r in
+               fn(df, "doc_id", "text", **kw).collect()}
+        assert got == {i: _segments(t, 8, mean) for i, t in rows}
+        assert got[2] == [None] * 8          # NULL text -> NULL segments
+        assert got[3] == [0] * 8             # empty text -> zero segments
 
 
 def test_afp_dedup_survives_reencode_jitter_banded(spark):
@@ -895,24 +922,34 @@ def test_frame_overlap_pairs_recovers_trimmed_copy(spark):
     assert got == [(1, 2, 7)]
 
 
-def test_cdc_chunks_arrow_equals_expr_and_covers(spark):
-    """The Arrow (numpy sliding-dot) and pure-expression CDC paths are
-    bit-identical; chunks tile each document exactly; inserting a byte
-    early in a doc shifts at most the chunks around the edit (the
-    shift-resistance fixed-size blocking lacks)."""
+def test_cdc_chunks_matches_sql_oracle_and_covers(spark):
+    """cdc_chunks (numpy sliding dot) derives the same chunks as the
+    inventory's DuckDB oracle SQL on the same rows, including non-ASCII
+    and shorter-than-window rows; chunks tile each document exactly;
+    inserting a byte early in a doc shifts at most the chunks around the
+    edit (the shift-resistance fixed-size blocking lacks)."""
     import random
     import string
+
+    import duckdb
+    import pandas as pd
+    from kstream_spark.inventory_pipeline import _cdc_sql
     from kstream_spark.operators.dedup import cdc_chunks
     random.seed(3)
     txt = "".join(random.choice(string.ascii_lowercase + " ")
                   for _ in range(400))
-    rows = [(1, txt), (2, "x" + txt), (3, "sh"), (4, "é" * 40)]
+    rows = [(1, txt), (2, "x" + txt), (3, "sh"), (4, "é" * 40),
+            (5, "ünï" + txt[:90] + "ç")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = cdc_chunks(df, "doc_id", "text", impl="arrow").toPandas()
-    e = cdc_chunks(df, "doc_id", "text", impl="expr").toPandas()
-    key = lambda p: sorted(map(tuple, p.astype(str)
-                               .itertuples(index=False, name=None)))
-    assert key(a) == key(e)
+    a = cdc_chunks(df, "doc_id", "text").toPandas()
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    # chunk level: the oracle's `ch` CTE (one row per chunk)
+    sql = _cdc_sql()
+    chunk_sql = sql[:sql.index(",\nper AS")] + \
+        "\nSELECT doc_id, chunk_md5, chunk_len FROM ch"
+    ref = sorted(con.execute(chunk_sql).fetchall())
+    assert sorted(zip(a.doc_id, a.chunk_md5, a.chunk_len)) == ref
     # tiling: per doc, chunks are contiguous and cover [0, len)
     for doc_id, g in a.groupby("doc_id"):
         g = g.sort_values("chunk_start")

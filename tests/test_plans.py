@@ -246,6 +246,39 @@ def test_plan_stats_unavailable_degrades_gracefully(spark):
         u._plan_size_bytes = orig
 
 
+def test_local_df_warns_once_on_python_rdd_fallback(spark, monkeypatch):
+    """local_df plans tiny rows as a JVM LocalTableScan; when the Arrow
+    route fails it still returns the rows through the Python-RDD path,
+    and says so once per process with a RuntimeWarning naming the
+    exception — never silently."""
+    import warnings
+
+    import pandas as pd
+    import pytest
+
+    import kstream_spark.util as u
+
+    rows, schema = [(1, "a"), (2, "b")], "id long, s string"
+    ok = u.local_df(spark, rows, schema)
+    assert "LocalTableScan" in \
+        ok._jdf.queryExecution().executedPlan().toString()
+
+    class ArrowFails:
+        """Session stand-in whose pandas route raises."""
+        def createDataFrame(self, data, schema):
+            if isinstance(data, pd.DataFrame):
+                raise ValueError("arrow route unavailable")
+            return spark.createDataFrame(data, schema)
+
+    monkeypatch.setattr(u, "_local_df_warned", False)
+    with pytest.warns(RuntimeWarning, match="ValueError: arrow route"):
+        out = u.local_df(ArrowFails(), rows, schema)
+    assert sorted(map(tuple, out.collect())) == rows
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")          # second fallback: silent
+        u.local_df(ArrowFails(), rows, schema)
+
+
 def test_winnow_single_shuffle_no_cartesian(spark):
     """The fingerprint self-join is equi-keyed (broadcast or SMJ, never a
     cartesian).  Since the r7 capped-by-default flip the boilerplate cap

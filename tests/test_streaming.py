@@ -125,73 +125,6 @@ def test_latest_with_ttl_stateful(spark, stream_dir, tmp_path):
     assert out[10] == (2, False) and out[20] == (3, False)
 
 
-def test_latest_with_ttl_impl_dispatch(spark, stream_dir, tmp_path):
-    """impl='auto' must resolve to the arm the runtime supports and give
-    the same answer as the forced legacy arm; bad impl values error."""
-    import pytest as _pytest
-    from kstream_spark.streaming.state import tws_available
-
-    src = SC.read_stream_parquet(spark, stream_dir)
-    with _pytest.raises(ValueError):
-        latest_with_ttl(src, "k", "uuid", ["t", "v"], impl="nope")
-    auto = latest_with_ttl(src, "k", "uuid", ["t", "v"], impl="auto")
-    q = (auto.writeStream.format("memory").queryName("state_auto")
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ck_auto")).start())
-    _run(q)
-    out = {r.k: (r.version, r.expired) for r in
-           spark.sql("SELECT * FROM state_auto").collect()}
-    assert out[10] == (2, False) and out[20] == (3, False)
-    if tws_available(spark):
-        # auto resolved to the tws arm here — run the forced-legacy arm
-        # on the same input and require identical per-key output, the
-        # real cross-arm parity proof (in the protobuf-less sandbox auto
-        # IS legacy and the exact-value asserts above already cover it)
-        legacy = latest_with_ttl(src, "k", "uuid", ["t", "v"],
-                                 impl="legacy")
-        q2 = (legacy.writeStream.format("memory").queryName("state_legacy")
-              .outputMode("append")
-              .option("checkpointLocation", str(tmp_path / "ck_leg"))
-              .start())
-        _run(q2)
-        leg = {r.k: (r.version, r.expired) for r in
-               spark.sql("SELECT * FROM state_legacy").collect()}
-        assert leg == out
-
-
-def test_latest_with_ttl_tws_arm(spark, stream_dir, tmp_path):
-    """The transformWithStateInPandas arm, run for real where the
-    runtime supports it (skips in the protobuf-less sandbox)."""
-    import pytest as _pytest
-    from kstream_spark.streaming.state import tws_available
-
-    if not tws_available(spark):
-        _pytest.skip("transformWithStateInPandas needs google.protobuf "
-                     "in the Python worker (COMPAT.md)")
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    try:
-        src = SC.read_stream_parquet(spark, stream_dir)
-        tws = latest_with_ttl(src, "k", "uuid", ["t", "v"], impl="tws")
-        q = (tws.writeStream.format("memory").queryName("state_tws")
-             .outputMode("append")
-             .option("checkpointLocation", str(tmp_path / "ck_tws")).start())
-        _run(q)
-        out = {r.k: (r.version, r.expired) for r in
-               spark.sql("SELECT * FROM state_tws").collect()}
-        assert out[10] == (2, False) and out[20] == (3, False)
-    finally:
-        # the session fixture is shared — leave the provider as found
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
 def test_kafka_wire_roundtrip_batch(spark):
     """Kafka connector jar isn't in the container; the encode/decode path is
     exercised on a wire-shaped batch DataFrame (exact source schema)."""
@@ -636,61 +569,6 @@ def test_session_stream_in_batch_and_timeout_close(spark, tmp_path):
            for r in spark.sql("SELECT * FROM sess_out").collect()}
     assert (20, "2024-01-01 10:00:00", 1) in got
     assert (10, "2024-01-01 12:00:00", 1) in got
-
-
-def test_session_stream_impl_dispatch(spark, tmp_path):
-    """session_stream impl='auto' resolves to the supported arm; bad impl
-    errors; where the runtime has transformWithStateInPandas, the tws arm
-    must emit the identical session set as the forced legacy arm (in the
-    protobuf-less sandbox auto IS legacy, covered by the main test)."""
-    import pytest as _pytest
-
-    from kstream_spark.streaming.state import session_stream, tws_available
-
-    d = tmp_path / "sess_di"
-    d.mkdir()
-    spark.createDataFrame(
-        [(10, "2024-01-01 10:00:00"), (10, "2024-01-01 10:10:00"),
-         (10, "2024-01-01 12:00:00")],
-        "user_id long, ts string") \
-        .withColumn("ts", F.col("ts").cast("timestamp")) \
-        .coalesce(1).write.mode("overwrite").parquet(str(d))
-    src = SC.read_stream_parquet(spark, str(d)) \
-        .withWatermark("ts", "10 seconds")
-    with _pytest.raises(ValueError):
-        session_stream(src, "user_id", "ts", impl="nope")
-    if not tws_available(spark):
-        _pytest.skip("transformWithStateInPandas needs google.protobuf "
-                     "in the Python worker (COMPAT.md)")
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    try:
-        outs = {}
-        for arm in ("tws", "legacy"):
-            sess = session_stream(src, "user_id", "ts",
-                                  gap="30 minutes", impl=arm)
-            q = (sess.writeStream.format("memory")
-                 .queryName(f"sess_{arm}").outputMode("append")
-                 .option("checkpointLocation",
-                         str(tmp_path / f"ck_{arm}")).start())
-            q.processAllAvailable()
-            q.stop()
-            q.awaitTermination(10)
-            outs[arm] = {(r.user_id, str(r.session_start),
-                          str(r.session_end), r.n_events) for r in
-                         spark.sql(f"SELECT * FROM sess_{arm}").collect()}
-        assert outs["tws"] == outs["legacy"]
-        assert (10, "2024-01-01 10:00:00",
-                "2024-01-01 10:10:00", 2) in outs["tws"]
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def test_funnel_stream_stage_advances_across_batches(spark, tmp_path):
