@@ -87,11 +87,29 @@ def free_local_checkpoint(df: DataFrame) -> None:
     immediately (probe: storage info goes to [] right after).  Uses the
     py4j-private ``_jdf`` like ``_plan_size_bytes``; any failure (plan
     shape changed on a Spark upgrade, Spark Connect) degrades to the
-    old behavior — GC-driven cleanup — rather than crashing."""
+    old behavior — GC-driven cleanup — rather than crashing, with a
+    once-per-process ``RuntimeWarning`` naming the exception."""
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass  # fall back to ContextCleaner GC
+    except Exception as exc:  # noqa: BLE001
+        _warn_free_checkpoint_fallback(exc)
+
+
+_free_checkpoint_warned = False
+
+
+def _warn_free_checkpoint_fallback(exc: Exception) -> None:
+    """Say once per process that ``free_local_checkpoint`` could not
+    unpersist the checkpointed RDD, and why."""
+    global _free_checkpoint_warned
+    if _free_checkpoint_warned:
+        return
+    _free_checkpoint_warned = True
+    import warnings
+    warnings.warn(
+        f"free_local_checkpoint: unpersist failed ({type(exc).__name__}: "
+        f"{exc}); the checkpoint blocks stay until ContextCleaner GC",
+        RuntimeWarning, stacklevel=3)
 
 
 def with_salt(df: DataFrame, buckets: int, salt_col: str = "__salt") -> DataFrame:

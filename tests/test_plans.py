@@ -279,6 +279,39 @@ def test_local_df_warns_once_on_python_rdd_fallback(spark, monkeypatch):
         u.local_df(ArrowFails(), rows, schema)
 
 
+def test_free_local_checkpoint_warns_once_on_failure(spark, monkeypatch):
+    """free_local_checkpoint releases a localCheckpoint's blocks at once;
+    when the private plan handle fails it leaves them to ContextCleaner
+    GC, and says so once per process with a RuntimeWarning naming the
+    exception — never silently."""
+    import warnings
+
+    import pytest
+
+    import kstream_spark.util as u
+
+    cp = spark.range(10).localCheckpoint()
+    sc = spark.sparkContext
+    before = len(sc._jsc.sc().getRDDStorageInfo())
+    monkeypatch.setattr(u, "_free_checkpoint_warned", False)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")          # the working path: silent
+        u.free_local_checkpoint(cp)
+    assert len(sc._jsc.sc().getRDDStorageInfo()) < before
+
+    class NoPlan:
+        """Frame stand-in whose private plan handle is gone."""
+        @property
+        def _jdf(self):
+            raise AttributeError("no _jdf on this frame")
+
+    with pytest.warns(RuntimeWarning, match="AttributeError: no _jdf"):
+        u.free_local_checkpoint(NoPlan())
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")          # second failure: silent
+        u.free_local_checkpoint(NoPlan())
+
+
 def test_winnow_single_shuffle_no_cartesian(spark):
     """The fingerprint self-join is equi-keyed (broadcast or SMJ, never a
     cartesian).  Since the r7 capped-by-default flip the boilerplate cap

@@ -372,11 +372,13 @@ def test_stateful_join_equals_batch_unbounded_join(spark, tmp_path):
 
 
 def test_stateful_join_bucketed_mode_same_match_set(spark, tmp_path):
-    """buckets=N (per-bucket state, per-key buffers inside) must produce
-    the IDENTICAL match set as per-key state — including cross-batch
-    matches against still-buffered entries."""
+    """Every bucket count (one bucket holding all keys, two, and the
+    default "auto") produces the IDENTICAL match set as the batch
+    unbounded join over all records — including cross-batch matches
+    against still-buffered entries."""
     import pyspark.sql.functions as F
     import pyspark.sql.types as T
+    from kstream_spark import StreamBuilder
     from kstream_spark.streaming import core as SC
     from kstream_spark.streaming.join import parse_joined, stateful_stream_join
 
@@ -409,11 +411,65 @@ def test_stateful_join_bucketed_mode_same_match_set(spark, tmp_path):
             T.StructType([T.StructField("lv", T.StringType())]),
             T.StructType([T.StructField("rv", T.StringType())])).collect()}
 
-    per_key = run(None, "bm_perkey")
-    bucketed = run(2, "bm_bucketed")
-    assert bucketed == per_key
-    assert ("0", "late-0", "r0-1") not in bucketed  # sanity: typed keys
-    assert (0, "late-0", "r0-1") in bucketed
+    got = {b: run(b, f"bm_{b}") for b in (1, 2, "auto")}
+    b = StreamBuilder(spark)
+    batch = b.from_df(spark.read.parquet(str(tmp_path / "l_bm_1"))) \
+        .join_stream(b.from_df(spark.read.parquet(str(tmp_path / "r_bm_1"))),
+                     on="k", select=[F.col("l.k").alias("k"),
+                                     F.col("l.lv").alias("lv"),
+                                     F.col("r.rv").alias("rv")])
+    batch_set = {(r.k, r.lv, r.rv) for r in batch.to_df().collect()}
+    assert len(batch_set) == 4 * 2 * 2 + 2 * 2
+    for buckets, streaming_set in got.items():
+        assert streaming_set == batch_set, buckets
+    assert (0, "late-0", "r0-1") in got["auto"]
+
+
+def test_stateful_join_per_key_checkpoint_fails_loudly(spark, tmp_path):
+    """A checkpoint written by the removed one-group-per-key layout (state
+    keyed by k, value (lbuf, rbuf)) cannot resume under bucketed state:
+    the restart must stop on Spark's state-schema check, never run on
+    with a silently empty state."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from kstream_spark.streaming.join import stateful_stream_join, tag_sides
+
+    ldir, rdir = tmp_path / "l", tmp_path / "r"
+    spark.createDataFrame([(1, "a1")], "k long, lv string").coalesce(1) \
+        .write.parquet(str(ldir))
+    spark.createDataFrame([(1, "b1")], "k long, rv string").coalesce(1) \
+        .write.parquet(str(rdir))
+
+    def start(df):
+        return (df.writeStream.format("parquet")
+                .option("path", str(tmp_path / "out"))
+                .option("checkpointLocation", str(tmp_path / "ck")).start())
+
+    def per_key(pkey, pdfs, state):
+        for _ in pdfs:
+            pass
+        state.update((b"l", b"r"))
+        yield from ()
+
+    l = SC.read_stream_parquet(spark, str(ldir))
+    r = SC.read_stream_parquet(spark, str(rdir))
+    q = start(tag_sides(l, r, "k", ["lv"], ["rv"]).groupBy("k")
+              .applyInPandasWithState(
+                  per_key, "k long, __l_lv string, __r_rv string",
+                  "lbuf binary, rbuf binary", "append",
+                  GroupStateTimeout.NoTimeout))
+    q.processAllAvailable(); q.stop(); q.awaitTermination(10)
+
+    spark.createDataFrame([(1, "a2")], "k long, lv string").coalesce(1) \
+        .write.mode("append").parquet(str(ldir))
+    q = start(stateful_stream_join(SC.read_stream_parquet(spark, str(ldir)),
+                                   SC.read_stream_parquet(spark, str(rdir)),
+                                   "k", ["lv"], ["rv"]))
+    try:
+        with pytest.raises(Exception, match="SCHEMA_NOT_COMPATIBLE"):
+            q.processAllAvailable()
+    finally:
+        q.stop()
 
 
 def test_encode_records_struct_value_not_double_wrapped(spark):
@@ -961,10 +1017,18 @@ def test_resolve_buckets_pins_across_restarts(spark, tmp_path):
     # a restart asking for an explicit different count still gets the pin
     assert resolve_buckets(spark, 7, ckpt) == first
     assert resolve_buckets(spark, "auto", ckpt) == first
-    # per-key mode (None) pins too
+    # a sidecar pinned to None comes from the removed per-key layout:
+    # that checkpoint cannot resume, and says so
+    import json
+    import os
     ckpt2 = str(tmp_path / "ckpt2")
-    assert resolve_buckets(spark, None, ckpt2) is None
-    assert resolve_buckets(spark, "auto", ckpt2) is None
+    os.makedirs(ckpt2)
+    with open(os.path.join(ckpt2, "kstream_buckets.json"), "w") as fh:
+        json.dump({"buckets": None}, fh)
+    with pytest.raises(ValueError, match="per-key state layout"):
+        resolve_buckets(spark, "auto", ckpt2)
+    with pytest.raises(ValueError, match="positive int"):
+        resolve_buckets(spark, None, None)
     # no checkpoint -> fresh resolution each time (no recoverable state)
     assert resolve_buckets(spark, 7, None) == 7
 

@@ -7,13 +7,16 @@ records/second for each:
 
   materialize — file-stream source -> filter/transform -> version-gated
       store materialization (foreachBatch merge); the reference's
-      hot path (consume -> process -> materialized view).
+      hot path (consume -> process -> materialized view).  The in-memory
+      registry defers the merge work to the first read, so the timed
+      window ends after a verified get_all() aggregate.
   windowed_agg — watermarked tumbling-window aggregation (count/sum/
       approx-distinct per key-group), the built-in stateful shape with
       no Python in the loop.
   stream_join — unbounded-buffer stateful stream-stream join
-      (applyInPandasWithState; reference side_joiner.go semantics),
-      the heaviest per-key state shape.
+      (applyInPandasWithState; reference side_joiner.go semantics,
+      default buckets), the heaviest keyed-state shape; its emitted pair
+      count is checked against the closed form.
   sessionize  — event-time gap sessionization with timeouts
       (applyInPandasWithState, EventTimeTimeout), the
       watermark-driven state shape.
@@ -27,11 +30,14 @@ value is the materialize (hot-path) number; per-shape results under
 from __future__ import annotations
 
 import json
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+import numpy as np
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _seed(spark, path: str, n: int, files: int = 8) -> None:
@@ -55,48 +61,72 @@ def bench_materialize(spark, b, tmp: str, n: int) -> dict:
     q = SC.materialize_stream(stream, b.stores, "bench_store", key="k",
                               version="uuid", checkpoint_dir=f"{tmp}/ck")
     q.processAllAvailable()
-    batch_ms = [p["durationMs"]["triggerExecution"] for p in q.recentProgress
-                if "addBatch" in (p["durationMs"] or {})]
+    batches = [p for p in q.recentProgress
+               if "addBatch" in (p["durationMs"] or {})]
     q.stop()
     q.awaitTermination(30)
+    # the registry only records lineage per batch; reading the store is
+    # where the merge runs, so the window ends after a verified read:
+    # key k = uuid % 10_000 keeps its highest uuid
+    got = b.stores.store("bench_store").get_all().agg(
+        F.count("*").alias("keys"), F.sum("uuid").alias("uuids")).first()
     dt = time.time() - t0
-    keys = b.stores.store("bench_store").get_all().count()
+    keys = np.arange(min(n, 10_000))
+    want = (len(keys), int((keys + (n - 1 - keys) // 10_000 * 10_000).sum()))
+    if (got["keys"], got["uuids"]) != want:
+        raise RuntimeError(f"materialize: store holds {tuple(got)}, "
+                           f"expected (keys, uuid sum) {want}")
     return {"records_per_sec": round(n / dt), "records": n,
-            "seconds": round(dt, 2), "micro_batch_latency_ms": batch_ms,
-            "distinct_keys_materialized": keys}
+            "seconds": round(dt, 2),
+            "micro_batch_latency_ms": [p["durationMs"]["triggerExecution"]
+                                       for p in batches],
+            "batch_input_rows": [p["numInputRows"] for p in batches],
+            "distinct_keys_materialized": got["keys"]}
 
 
-def bench_stream_join(spark, tmp: str, n: int,
-                      buckets: int | None = None) -> dict:
-    """Both sides stream; per-key buffers in keyed state.  Keys are wide
-    (n/5 distinct) so per-key buffers stay small — the throughput number
-    measures state machinery, not a deliberate cross-product blowup.
-    ``buckets`` benches the bucketed-state production arm (per-bucket
-    state groups, per-key buffers inside — the high-cardinality dial)."""
+def join_pairs(n: int) -> int:
+    """Closed-form pair count of ``bench_stream_join``'s key scheme: uuids
+    ``2j`` (left) and ``2j+1`` (right) share key ``j % (n // 4)``, so each
+    key pairs its lefts with its rights."""
+    uuid = np.arange(n)
+    keys = (uuid // 2) % (n // 4)
+    left = np.bincount(keys[uuid % 2 == 0], minlength=n // 4)
+    right = np.bincount(keys[uuid % 2 == 1], minlength=n // 4)
+    return int(left @ right)
+
+
+def bench_stream_join(spark, tmp: str, n: int) -> dict:
+    """Both sides stream from one source (even uuids left, odd right) into
+    keyed state with the default bucket count.  Key ``(uuid div 2) %
+    (n/4)`` gives each key about two lefts and two rights, so buffers stay
+    small and the emitted pair count (n for n divisible by 4) is known in
+    closed form — the sink's numOutputRows must equal it."""
     import pyspark.sql.functions as F
     from kstream_spark.streaming.core import read_stream_parquet
     from kstream_spark.streaming.join import stateful_stream_join
-    tag = "b" if buckets else "k"
-    src = f"{tmp}/jin_{tag}"
+    src = f"{tmp}/jin"
     _seed(spark, src, n)
     base = read_stream_parquet(spark, src).withColumn(
-        "k5", (F.col("uuid") % (n // 5)).alias("k5"))
+        "jk", F.expr(f"(uuid div 2) % {n // 4}"))
     left = base.filter(F.col("uuid") % 2 == 0).select(
-        F.col("k5").alias("k"), F.col("v").alias("lv"))
+        F.col("jk").alias("k"), F.col("v").alias("lv"))
     right = base.filter(F.col("uuid") % 2 == 1).select(
-        F.col("k5").alias("k"), F.col("v").alias("rv"))
-    joined = stateful_stream_join(left, right, "k", ["lv"], ["rv"],
-                                  buckets=buckets)
+        F.col("jk").alias("k"), F.col("v").alias("rv"))
+    joined = stateful_stream_join(left, right, "k", ["lv"], ["rv"])
     t0 = time.time()
     q = (joined.writeStream.format("noop")
-         .option("checkpointLocation", f"{tmp}/jck_{tag}").start())
+         .option("checkpointLocation", f"{tmp}/jck").start())
     q.processAllAvailable()
+    pairs = sum(p["sink"]["numOutputRows"] for p in q.recentProgress
+                if "addBatch" in (p["durationMs"] or {}))
     q.stop()
     q.awaitTermination(30)
     dt = time.time() - t0
+    if pairs != join_pairs(n):
+        raise RuntimeError(f"stream_join: emitted {pairs} pairs, expected "
+                           f"{join_pairs(n)}")
     return {"records_per_sec": round(n / dt), "records": n,
-            "seconds": round(dt, 2),
-            **({"buckets": buckets} if buckets else {})}
+            "seconds": round(dt, 2), "pairs": pairs}
 
 
 def bench_windowed_agg(spark, tmp: str, n: int) -> dict:
@@ -284,8 +314,6 @@ def main():
         shapes["materialize"] = bench_materialize(spark, b, tmp, n)
         shapes["windowed_agg"] = bench_windowed_agg(spark, tmp, n)
         shapes["stream_join"] = bench_stream_join(spark, tmp, n)
-        shapes["stream_join_bucketed"] = bench_stream_join(
-            spark, tmp, n, buckets=1024)
         shapes["sessionize"] = bench_sessionize(spark, tmp, n)
         shapes["ann_admit"] = bench_ann_admit(spark, tmp, n // 2)
         shapes["tokenize"] = bench_tokenize(spark, tmp, n // 2)
@@ -307,6 +335,7 @@ def main():
         "records": m["records"],
         "seconds": m["seconds"],
         "micro_batch_latency_ms": m["micro_batch_latency_ms"],
+        "batch_input_rows": m["batch_input_rows"],
         "distinct_keys_materialized": m["distinct_keys_materialized"],
         "shapes": shapes,
         "baseline_reference_msgs_per_sec": 50_000,
