@@ -35,7 +35,7 @@ def lit_doubles(vals) -> Column:
     ``F.lit(list)`` recurses element-by-element through py4j — a 16x64
     centroid matrix cost ~0.9 s of socket round trips PER QUERY
     CONSTRUCTION (cProfile: 1269 ``lit`` calls inside
-    cell_cosine_scores), pure driver overhead the bench pays every run.
+    nearest_cell), pure driver overhead the bench pays every run.
     One ``F.expr`` string with D-suffixed shortest-repr doubles builds
     the IDENTICAL literal JVM-side: Python ``repr`` emits the shortest
     decimal that round-trips to the exact double, and Java's
@@ -61,24 +61,23 @@ def lit_double_matrix(rows) -> Column:
         "array(" + ",".join(f"{v!r}D" for v in r) + ")" for r in rows) + ")")
 
 
-def cell_cosine_scores(v: Column, vnorm: Column, centroids: list) -> Column:
-    """Round-6 cosine of ``v`` against every row of a LITERAL centroid
-    matrix — the IVF cell-assignment scores — as one constant-size
-    expression: the matrix and the precomputed centroid norms ride as
-    single nested Literals and the per-cell score is a ``transform``
-    over them.  The previous unrolled form (an F.array of n_cells
-    separate dot expressions, each holding dim literal nodes) cost
-    ~0.35s of per-run analysis/optimization at n_cells=8 x dim=64,
-    measured min-of-5 at sf0.1 — pure driver-side plan overhead that
-    bench pays on every run.  Arithmetic is bit-identical: same
-    left-fold dot, same driver-side float centroid norm, same round-6;
-    ties still resolve by array_position's first match downstream."""
+def nearest_cell(v: Column, vnorm: Column, centroids: list) -> Column:
+    """Index of the nearest row of a LITERAL centroid matrix (the IVF cell
+    assignment): round-6 cosine of ``v`` against every centroid, then the
+    first maximum, so ties go to the lowest cell (ORDER BY score DESC,
+    cell ASC in the oracle).  The matrix and the driver-side float
+    centroid norms ride as single nested Literals and the per-cell score
+    is a ``transform`` over them — a constant-size expression.  An
+    unrolled form (an F.array of n_cells separate dot expressions, each
+    holding dim literal nodes) cost ~0.35s of per-run analysis at
+    n_cells=8 x dim=64, measured min-of-5 at sf0.1.  Returns a long."""
     import math
     cmat = lit_double_matrix(centroids)
     cn = lit_doubles([math.sqrt(sum(float(x) * float(x) for x in c))
                       for c in centroids])
-    return F.transform(
+    scores = F.transform(
         cmat,
         lambda cv, i: F.round(
             dot(v, cv)
             / (vnorm * F.element_at(cn, (i + F.lit(1)).cast("int"))), 6))
+    return (F.array_position(scores, F.array_max(scores)) - 1).cast("long")

@@ -546,25 +546,18 @@ INVENTORY.update(QUALITY_INVENTORY)
 # touched + the 27-query r6-stale band (group 3's current front).
 
 _TOUCHED_THIS_ROUND: list[str] = [
-    # r14: sq8 auto arm reverted to distributed setup; recall audits
-    # share one query-side collect between approximate and exact arms
-    "sim_sq8_topk", "sim_sq8_recall", "sim_ivf_recall",
-    "sim_ivfpq_recall",
-    # r14: BSP partition counts derived from real row counts (LPA
-    # rounds; components round-0 seed)
-    "graph_lpa", "graph_components",
-    # r14: union-find arm + dedup cluster chain return local_df
-    # relations (LocalTableScan instead of Python-RDD scans)
-    "dedup_clusters", "dedup_survivors", "dedup_best_of_cluster",
-    # r14: local_df conversion of driver-built probe/table/codebook
-    # relations — one representative per changed constructor
+    # one implementation per vector-quantization step (round6, pq_codes,
+    # adc_tables, probe_cells, nearest_cell, Lloyd kernels, one encoder
+    # and ADC scorer) — every query that runs the shared code
+    "sim_sq8_topk", "sim_sq8_recall", "sim_ivf_recall", "sim_ivfpq_recall",
     "sim_ivf_kmeans_topk", "sim_pq_adc_topk", "sim_ivfpq_topk",
-    "sim_ivfpq_residual_topk", "sim_ivfsq_topk", "sketch_kmv_overlap",
-    "select_kcenter", "text_bpe_train", "text_wordpiece_train",
-    "text_unigram_train", "j_skew_split",
-    # r14: collect_freeing materializes through local_df — re-prove the
-    # heaviest consumers
-    "pipeline_selection_mix", "mm_phash_dedup", "sim_ann_retrain",
+    "sim_ivfpq_residual_topk", "sim_ivfsq_topk", "sim_ann_retrain",
+    "sim_ivf_topk", "sim_cosine_topk", "dedup_semantic", "sim_ann_drift",
+    "select_cluster_balanced", "sim_mmr_rerank", "sim_rp_recall",
+    "sim_rp_rerank_topk", "sim_cosine_pairs", "sim_lsh_pairs",
+    "dedup_embedding_lsh", "sim_hard_negatives",
+    # triangle_count: the wedge arm and its options are gone
+    "graph_triangles",
 ]
 
 

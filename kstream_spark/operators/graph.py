@@ -240,9 +240,7 @@ def connected_components(edges: DataFrame, src_col: str, dst_col: str,
             .select("node", F.coalesce("m", "node").alias("component")))
 
 
-def triangle_count(edges: DataFrame, src_col: str, dst_col: str,
-                   method: str = "adj",
-                   broadcast_adj: bool = True) -> DataFrame:
+def triangle_count(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
     """Exact per-node triangle counts over an UNDIRECTED graph (the
     edge list may contain either or both directions and self-loops;
     both are canonicalized away), via DEGREE ORIENTATION — the standard
@@ -258,26 +256,17 @@ def triangle_count(edges: DataFrame, src_col: str, dst_col: str,
     Returns (node, n_triangles) for every node of the graph (zero rows
     included).
 
-    ``method``:
-      * ``adj`` (default) — edge-iterator over oriented ADJACENCY ARRAYS:
-        attach each edge's two out-neighbor arrays (rows bounded by the
-        oriented out-degree <= O(sqrt(2m)), so an array is at most that
-        long) and close wedges with one in-memory ``array_intersect`` —
-        the O(#wedges) intermediate never exists as ROWS and never
-        shuffles; only (node, count) contributions leave the stage.  On
-        dense graphs this removes the dominant exchange (sf0.1 supplier
-        graph: 46s -> ~8s).  NOTE the adjacency RELATION totals O(m):
-        ``broadcast_adj=True`` (default) force-broadcasts it, which the
-        driver must collect and Spark hard-caps at 8 GB per broadcast
-        relation — at ~16-24 bytes per oriented edge that is roughly m
-        in the low HUNDREDS OF MILLIONS of edges, not billions.  Past
-        that pass ``broadcast_adj=False`` (the planner shuffle-joins the
-        arrays — per-ROW size stays bounded by the oriented out-degree,
-        and the exchange keys on node ids) or use ``wedge``.
-      * ``wedge`` — materialize wedges as rows and equi-join the closing
-        edge; every exchange keyed on node ids.  Prefer when adjacency
-        arrays would not fit a row comfortably (max oriented out-degree
-        in the millions).
+    Edge-iterator over oriented ADJACENCY ARRAYS: attach each edge's two
+    out-neighbor arrays (rows bounded by the oriented out-degree <=
+    O(sqrt(2m)), so an array is at most that long) and close wedges with
+    one in-memory ``array_intersect`` — the O(#wedges) intermediate never
+    exists as ROWS and never shuffles; only (node, count) contributions
+    leave the stage.  On dense graphs this removes the dominant exchange
+    (sf0.1 supplier graph: 46s -> ~8s).  NOTE the adjacency RELATION
+    totals O(m) and is force-broadcast, which the driver must collect and
+    Spark hard-caps at 8 GB per broadcast relation — at ~16-24 bytes per
+    oriented edge that is roughly m in the low HUNDREDS OF MILLIONS of
+    edges, not billions.
     """
     both = edges.select(F.col(src_col).alias("a"),
                         F.col(dst_col).alias("b")) \
@@ -296,57 +285,38 @@ def triangle_count(edges: DataFrame, src_col: str, dst_col: str,
     oriented = ranked.select(
         F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("v"))
-    if method == "adj":
-        # for a triangle with rank order u < v < w the oriented edges are
-        # u->v, u->w, v->w, so it is found EXACTLY once: at edge (u, v),
-        # as w in adj(u) ∩ adj(v)
-        adj = oriented.groupBy("u").agg(F.collect_list("v").alias("_n"))
-        # the edge relation is BYTE-small but the per-row intersect/explode
-        # work is amplified by O(out-degree) — AQE would coalesce the
-        # ~MB-sized exchange to one task and serialize the whole closure
-        # phase (measured: 85s vs 8s at sf0.1).  An EXPLICIT partition
-        # count survives AQE coalescing; round-robin balances perfectly
-        # and the adj sides broadcast, so no co-partitioning is lost.
-        par = oriented.sparkSession.sparkContext.defaultParallelism
-        au = adj.select("u", F.col("_n").alias("_nu"))
-        av = adj.select(F.col("u").alias("v"), F.col("_n").alias("_nv"))
-        if broadcast_adj:
-            au, av = F.broadcast(au), F.broadcast(av)
-        e = oriented.repartition(par).join(au, "u").join(av, "v")
-        e = (e.withColumn("_ws", F.array_intersect("_nu", "_nv"))
-             .withColumn("_c", F.size("_ws").cast("long"))
-             .filter(F.col("_c") > 0))
-        # ONE explode carries all three corner attributions (a union of
-        # three selects would re-run the join + intersect per branch)
-        one = F.lit(1).cast("long")
-        contrib = F.explode(F.concat(
-            F.array(F.struct(F.col("u").alias("node"),
-                             F.col("_c").alias("c")),
-                    F.struct(F.col("v").alias("node"),
-                             F.col("_c").alias("c"))),
-            F.transform("_ws", lambda w: F.struct(w.alias("node"),
-                                                  one.alias("c")))))
-        per_corner = (e.select(contrib.alias("x"))
-                      .select("x.node", "x.c")
-                      .groupBy("node").agg(
-                          F.sum("c").cast("long").alias("n_triangles")))
-    elif method == "wedge":
-        # wedges from the lowest-rank corner u: (u -> v), (u -> w), v != w;
-        # close with the oriented edge between v and w (either direction —
-        # orientation of the closing edge depends on v/w ranks)
-        e1 = oriented.select(F.col("u"), F.col("v"))
-        e2 = oriented.select(F.col("u"), F.col("v").alias("w"))
-        wedges = e1.join(e2, "u").filter(F.col("v") < F.col("w"))
-        closing = oriented.select(
-            F.least("u", "v").alias("v"), F.greatest("u", "v").alias("w"))
-        tris = wedges.join(closing, ["v", "w"])
-        per_corner = (tris.select(F.explode(F.array("u", "v", "w"))
-                                  .alias("node"))
-                      .groupBy("node")
-                      .agg(F.count("*").cast("long").alias("n_triangles")))
-    else:
-        raise ValueError(f"triangle_count method must be adj/wedge, "
-                         f"got {method!r}")
+    # for a triangle with rank order u < v < w the oriented edges are
+    # u->v, u->w, v->w, so it is found EXACTLY once: at edge (u, v),
+    # as w in adj(u) ∩ adj(v)
+    adj = oriented.groupBy("u").agg(F.collect_list("v").alias("_n"))
+    # the edge relation is BYTE-small but the per-row intersect/explode
+    # work is amplified by O(out-degree) — AQE would coalesce the
+    # ~MB-sized exchange to one task and serialize the whole closure
+    # phase (measured: 85s vs 8s at sf0.1).  An EXPLICIT partition
+    # count survives AQE coalescing; round-robin balances perfectly
+    # and the adj sides broadcast, so no co-partitioning is lost.
+    par = oriented.sparkSession.sparkContext.defaultParallelism
+    au = F.broadcast(adj.select("u", F.col("_n").alias("_nu")))
+    av = F.broadcast(adj.select(F.col("u").alias("v"),
+                                F.col("_n").alias("_nv")))
+    e = oriented.repartition(par).join(au, "u").join(av, "v")
+    e = (e.withColumn("_ws", F.array_intersect("_nu", "_nv"))
+         .withColumn("_c", F.size("_ws").cast("long"))
+         .filter(F.col("_c") > 0))
+    # ONE explode carries all three corner attributions (a union of
+    # three selects would re-run the join + intersect per branch)
+    one = F.lit(1).cast("long")
+    contrib = F.explode(F.concat(
+        F.array(F.struct(F.col("u").alias("node"),
+                         F.col("_c").alias("c")),
+                F.struct(F.col("v").alias("node"),
+                         F.col("_c").alias("c"))),
+        F.transform("_ws", lambda w: F.struct(w.alias("node"),
+                                              one.alias("c")))))
+    per_corner = (e.select(contrib.alias("x"))
+                  .select("x.node", "x.c")
+                  .groupBy("node").agg(
+                      F.sum("c").cast("long").alias("n_triangles")))
     return (deg.select("node").join(per_corner, "node", "left")
             .select("node", F.coalesce("n_triangles", F.lit(0))
                     .cast("long").alias("n_triangles")))

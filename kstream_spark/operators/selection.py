@@ -475,7 +475,7 @@ def cluster_balanced_select(emb: DataFrame, id_col: str, vec_col: str,
     kept set is a pure function of (ids, centroids).
 
     Scale shape: assignment is the literal-projection argmax
-    (functions/vectors.cell_cosine_scores — zero corpus shuffle, the
+    (functions/vectors.nearest_cell — zero corpus shuffle, the
     ivf_topk discipline); the per-cell pick routes through
     _per_query_topk's NARROW per-partition top-k, so no reducer ever
     sorts a cell-sized slice even though there are only k cells — the
@@ -483,19 +483,17 @@ def cluster_balanced_select(emb: DataFrame, id_col: str, vec_col: str,
     through k tasks.  Returns (vec_id, cell_id, rk).
     """
     from kstream_spark.functions.text import hash_str
-    from kstream_spark.functions.vectors import cell_cosine_scores, norm
+    from kstream_spark.functions.vectors import nearest_cell, norm
     from kstream_spark.operators.similarity import _per_query_topk
     src = (emb.select(F.col(id_col).alias("vec_id"),
                       as_double(F.col(vec_col)).alias("v"))
            .withColumn("_n", norm(F.col("v"))))
-    scores = cell_cosine_scores(F.col("v"), F.col("_n"), centroids)
     key = (F.conv(F.substring(
         hash_str(F.col("vec_id").cast("string"), "cbal"), 1, 12), 16, 10)
         .cast("double"))
     assigned = src.select(
         "vec_id",
-        (F.array_position(scores, F.array_max(scores)) - 1)
-        .cast("long").alias("cell_id"),
+        nearest_cell(F.col("v"), F.col("_n"), centroids).alias("cell_id"),
         key.alias("_sk")).withColumn("query_id", F.col("cell_id"))
     kept = _per_query_topk(assigned, per_cell, score_col="_sk",
                            id_col="vec_id", asc=True, rank_col="rk")

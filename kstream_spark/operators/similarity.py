@@ -6,19 +6,41 @@ shape).  Scale path: random-hyperplane LSH bucketing — candidates meet only
 inside a bucket, turning the |N|² all-pairs search into sum-of-bucket²; an
 IVF-style coarse quantizer is the same pattern with learned centroids.
 
-All arithmetic is JVM-side (functions/vectors.py) — no Python UDFs.
 Similarities are rounded in-query and ranked on the ROUNDED value with id
 tie-breaks, so results are deterministic across engines (oracle parity).
+
+Vector quantization has one definition per step, and every searcher, both
+arms of each trainer and ``streaming/ann`` call it.  The rule they share:
+round-6 HALF_UP, lowest-index ties, contiguous subspaces.
+
+* ``round6`` — binary round-6 for per-row numpy paths
+  (``np_round6_half_up`` is the exact decimal form for driver-bounded
+  matrices);
+* ``functions/vectors.nearest_cell`` — nearest-centroid assignment as a
+  literal projection;
+* ``pq_codes`` — PQ subspace assignment; ``_encode`` is the one
+  ``mapInPandas`` encoder around it (carries ``cell_id``, subtracts the
+  cell centroid in residual mode);
+* ``adc_tables`` — per-query ADC distance tables; ``_adc_topk`` is the one
+  ADC scorer (m ``element_at`` lookups + ``_per_query_topk``);
+* ``probe_cells`` — driver-side probe ranking, (cos DESC, cell ASC);
+  ``fold_norm`` is the JVM/oracle fold-order query norm;
+* ``kmeans_partials`` / ``pq_partials`` — the Lloyd assign-and-partial-sum
+  kernels, run by the local training arm on the whole matrix and by the
+  distributed arm per Arrow batch; ``_lloyd_reduce`` sums the partials;
+* ``_sq8_dequantized`` — SQ8 quantize + dequantize.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd  # module-level so pandas_udf string type hints resolve
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from kstream_spark.functions.vectors import as_double
+from kstream_spark.functions.vectors import (as_double, dot, lit_doubles,
+                                             nearest_cell, norm)
 from kstream_spark.util import local_df
 
 
@@ -36,7 +58,6 @@ def cosine_topk(emb: DataFrame, id_col: str, vec_col: str,
     """
     from kstream_spark.util import ensure_parallelism
     emb = ensure_parallelism(emb)
-    from kstream_spark.functions.vectors import dot, norm
     if queries is None:
         queries = emb.filter(F.col(id_col).isin(query_ids))
     # norms precomputed per vector (identical doubles, computed once) so the
@@ -85,9 +106,6 @@ def cosine_pairs(emb: DataFrame, id_col: str, vec_col: str,
     bucket verify does (oracle-proven discipline).  Zero-norm vectors
     pair with nothing, as in the SQL oracle.
     """
-    import numpy as np
-
-    from kstream_spark.functions.vectors import norm
     from kstream_spark.util import ensure_parallelism, input_size_bytes
 
     emb = ensure_parallelism(emb)
@@ -135,10 +153,10 @@ def cosine_pairs(emb: DataFrame, id_col: str, vec_col: str,
             nr = pdf["_n"].to_numpy()[order]
             with np.errstate(divide="ignore", invalid="ignore"):
                 raw = (mat @ mat.T) / np.outer(nr, nr)
-            # HALF_UP to 6 dp, inlined (see np_round6_half_up); zero-norm
-            # vectors divide to inf/nan — mask to -inf so they never pass
+            # zero-norm vectors divide to inf/nan — mask to -inf so they
+            # never pass
             raw[~np.isfinite(raw)] = -np.inf
-            sims = np.copysign(np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6, raw)
+            sims = round6(raw)
             iu, ju = np.triu_indices(len(ids), k=1)
             m = sims[iu, ju] >= thr
             return pd.DataFrame({"id_a": ids[iu[m]], "id_b": ids[ju[m]],
@@ -154,7 +172,7 @@ def cosine_pairs(emb: DataFrame, id_col: str, vec_col: str,
             raw = (ma @ mb.T) / np.outer(pdf["_n"].to_numpy()[am],
                                          pdf["_n"].to_numpy()[bm])
         raw[~np.isfinite(raw)] = -np.inf
-        sims = np.copysign(np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6, raw)
+        sims = round6(raw)
         ii, jj = np.nonzero(sims >= thr)
         if not len(ii):
             return empty
@@ -186,7 +204,6 @@ def hard_negatives(emb: DataFrame, id_col: str, vec_col: str,
     for the IVF/LSH candidate generators (same composition as the dedup
     family) — this exact ranker is then the per-candidate verify.
     """
-    from kstream_spark.functions.vectors import dot, norm
     from kstream_spark.util import ensure_parallelism
     emb = ensure_parallelism(emb)
     q = F.broadcast(
@@ -230,10 +247,9 @@ def np_round6_half_up(a):
     so Decimal(repr(x)) reproduces the JVM/DuckDB result bit-for-bit.
     This helper only ever runs on DRIVER-BOUNDED arrays (k*dim centroid /
     m*k codebook matrices, per-step MMR scores), so per-element Decimal
-    cost is irrelevant; the per-row Arrow paths keep their inlined binary
-    round, where 7 rounds of oracle evidence show the boundary case does
-    not arise for raw similarity values."""
-    import numpy as np
+    cost is irrelevant; the per-row Arrow paths keep the binary round
+    (``round6``), where 7 rounds of oracle evidence show the boundary case
+    does not arise for raw similarity values."""
     from decimal import ROUND_HALF_UP, Decimal
     q = Decimal("0.000001")
     arr = np.asarray(a, dtype=np.float64)
@@ -241,6 +257,95 @@ def np_round6_half_up(a):
         q, rounding=ROUND_HALF_UP)) for x in arr.ravel()],
         dtype=np.float64).reshape(arr.shape)
     return out if arr.shape else np.float64(out)
+
+
+def round6(x):
+    """Binary round-6 HALF_UP, ``floor(|x|*1e6 + 0.5)/1e6`` with x's sign
+    — the per-row numpy rounding (see np_round6_half_up for why the
+    per-row paths keep the binary form).  Works on scalars and arrays;
+    +-inf stay +-inf."""
+    return np.copysign(np.floor(np.abs(x) * 1e6 + 0.5) / 1e6, x)
+
+
+def pq_codes(mat, books):
+    """PQ codes of the rows of ``mat``: the vector splits into
+    ``len(books)`` contiguous subspaces, and code j is the index of the
+    codeword of ``books[j]`` (a (k, sub) array) at the lowest round-6
+    squared distance, lowest index on ties (ORDER BY dist ASC, code ASC).
+    Returns an (n, m) int array."""
+    sub = books[0].shape[1]
+    return np.stack([
+        np.argmin(round6(((mat[:, j * sub:(j + 1) * sub][:, None, :]
+                           - cb[None, :, :]) ** 2).sum(-1)), axis=1)
+        for j, cb in enumerate(books)], axis=1)
+
+
+def adc_tables(qv, books) -> list:
+    """A query's ADC distance tables: for each subspace j, the round-6
+    squared distance from qv's j-th subvector to every codeword of
+    ``books[j]``.  Returns m lists of k floats."""
+    sub = books[0].shape[1]
+    return [[float(d) for d in round6(
+                ((cb - qv[j * sub:(j + 1) * sub][None, :]) ** 2).sum(-1))]
+            for j, cb in enumerate(books)]
+
+
+def fold_norm(qv) -> float:
+    """L2 norm with the squares added left to right — the summation order
+    of the JVM ``norm()`` fold and the oracle's ``list_sum``; numpy's
+    pairwise sum can differ in the last ulp."""
+    acc = 0.0
+    for x in qv:
+        acc += float(x) * float(x)
+    return float(np.sqrt(acc))
+
+
+def probe_cells(qv, cents, n_probe: int, qnorm: float | None = None) -> list:
+    """The ``n_probe`` cells a query probes: round-6 cosine of ``qv``
+    against every row of ``cents``, ordered (cos DESC, cell ASC).
+    ``qnorm`` is the query norm; None means numpy's
+    ``sqrt(sum(qv ** 2))``."""
+    cnorm = np.sqrt((cents ** 2).sum(-1))
+    if qnorm is None:
+        qnorm = float(np.sqrt((qv ** 2).sum()))
+    cos = round6((cents @ qv) / (cnorm * qnorm))
+    return [int(c) for c in np.lexsort((np.arange(len(cos)), -cos))[:n_probe]]
+
+
+def kmeans_partials(mat, cents) -> dict:
+    """One Lloyd step of ``kmeans_centroids`` over a block of rows: each
+    row goes to the centroid of highest cosine, rounded with ``np.round``
+    to 6 dp before the argmax (first maximum, so ties go to the lowest
+    cell), and the block emits one (cell, n, s) row per cell it touched,
+    s being the component sum of the raw rows."""
+    normed = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True),
+                              1e-12)
+    cells = np.argmax(np.round(normed @ cents.T, 6), axis=1)
+    out = {"cell": [], "n": [], "s": []}
+    for cell in np.unique(cells):
+        sel = mat[cells == cell]
+        out["cell"].append(int(cell))
+        out["n"].append(int(sel.shape[0]))
+        out["s"].append(sel.sum(axis=0).tolist())
+    return out
+
+
+def pq_partials(mat, books) -> dict:
+    """One Lloyd step of ``pq_codebooks`` over a block of rows: assign
+    every subvector with ``pq_codes`` and emit one (j, code, n, s) row per
+    (subspace, codeword) touched, s being the subvector component sum."""
+    sub = books[0].shape[1]
+    codes = pq_codes(mat, books)
+    out = {"j": [], "code": [], "n": [], "s": []}
+    for j in range(len(books)):
+        x = mat[:, j * sub:(j + 1) * sub]
+        for c in np.unique(codes[:, j]):
+            sel = x[codes[:, j] == c]
+            out["j"].append(j)
+            out["code"].append(int(c))
+            out["n"].append(int(sel.shape[0]))
+            out["s"].append(sel.sum(axis=0).tolist())
+    return out
 
 
 def md5_plane_matrix(dim: int, nbits: int, seed: int = 42):
@@ -252,8 +357,6 @@ def md5_plane_matrix(dim: int, nbits: int, seed: int = 42):
     distribution changes slightly, and candidate precision is unaffected
     because survivors are exact-verified."""
     import hashlib
-
-    import numpy as np
 
     def u(d: int, j: int) -> float:
         h = hashlib.md5(f"{seed}:{d}:{j}".encode()).hexdigest()[:8]
@@ -286,7 +389,6 @@ def lsh_cosine_pairs(emb: DataFrame, id_col: str, vec_col: str,
     tables*planes Catalyst ``aggregate`` dot-products would dwarf the
     actual join cost (~10x slower end-to-end measured at 2k vectors).
     """
-    import numpy as np
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
@@ -328,7 +430,6 @@ def lsh_cosine_pairs(emb: DataFrame, id_col: str, vec_col: str,
     # rounded cosine, so the trailing distinct dedups exactly.  Task memory
     # is O(|bucket|^2): a hot bucket means too few planes for the
     # threshold (the documented LSH tuning dial).
-    from kstream_spark.functions.vectors import norm
     vecs = emb.select(F.col(id_col).alias("_bid"),
                       as_double(F.col(vec_col)).alias("_v")) \
         .withColumn("_n", norm(F.col("_v")))
@@ -340,7 +441,6 @@ def lsh_cosine_pairs(emb: DataFrame, id_col: str, vec_col: str,
     id_dt = emb.schema[id_col].dataType.simpleString()
 
     def bucket_pairs(pdf):
-        import numpy as np
         empty = dict(id_a=np.empty(0, dtype=object),
                      id_b=np.empty(0, dtype=object),
                      cos=np.empty(0, dtype=np.float64))
@@ -350,10 +450,7 @@ def lsh_cosine_pairs(emb: DataFrame, id_col: str, vec_col: str,
         ids = pdf["_id"].to_numpy(dtype=object)[order]
         mat = np.vstack(pdf["_v"].to_numpy()[order]).astype(np.float64)
         nr = pdf["_n"].to_numpy()[order]
-        raw = (mat @ mat.T) / np.outer(nr, nr)
-        # HALF_UP to 6 dp, inlined (see np_round6_half_up — kept
-        # closure-local so the pickled function has no module deps)
-        sims = np.copysign(np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6, raw)
+        sims = round6((mat @ mat.T) / np.outer(nr, nr))
         iu, ju = np.triu_indices(len(ids), k=1)
         m = sims[iu, ju] >= thr
         return pd.DataFrame({"id_a": ids[iu[m]], "id_b": ids[ju[m]],
@@ -411,7 +508,6 @@ def decontaminate_embedding(corpus: DataFrame, eval_set: DataFrame,
     no candidate materialization, cost O(|corpus| x |eval|) fully
     parallel over corpus splits.  Returns the surviving corpus rows.
     """
-    from kstream_spark.functions.vectors import dot, norm
     from kstream_spark.util import ensure_parallelism
     corpus = ensure_parallelism(corpus)
     c = corpus.withColumn("__v", as_double(F.col(vec_col))) \
@@ -448,13 +544,69 @@ def _collect_vecs_sorted_seeds(emb: DataFrame, vec_col: str, sort_key: str,
     ROW INDICES driver-side (same seed set as the distributed arm's
     ``orderBy(sort_key).limit(k)``; keys are unique in every caller, so
     tie order cannot differ).  Returns (mat, seed_indices)."""
-    import numpy as np
-
     rows = emb.select(as_double(F.col(vec_col)).alias("v"),
                       F.col(sort_key).alias("_sk")).collect()
     mat = np.array([r["v"] for r in rows], dtype=np.float64)
     order = sorted(range(len(rows)), key=lambda i: rows[i]["_sk"])
     return mat, order[:k]
+
+
+def _local_sums(kernel, mat, state, keys: tuple):
+    """The local training arm's Lloyd step: ``kernel`` (kmeans_partials /
+    pq_partials) over the whole collected matrix, as the ``(sums,
+    counts)`` dicts ``_lloyd_reduce`` returns, keyed by ``keys`` tuples."""
+    out = kernel(mat, state)
+    ks = list(zip(*(out[c] for c in keys)))
+    return ({key: np.asarray(s, dtype=np.float64)
+             for key, s in zip(ks, out["s"])}, dict(zip(ks, out["n"])))
+
+
+def _lloyd_reduce(vecs: DataFrame, nparts: int, kernel, state, keys: tuple,
+                  width: int):
+    """The distributed training arm's Lloyd step: ``kernel`` runs inside
+    every Arrow batch of ``vecs`` (column ``v``) and emits at most one
+    partial per key, and the partials are summed into ``(sums, counts)``
+    keyed by ``keys`` tuples.
+
+    Up to 64 partitions the raw partials are collected and summed on the
+    driver.  Past that they reduce DISTRIBUTED per (key, component) — a
+    posexplode and one map-side-combinable aggregate — so the driver
+    collects at most keys x ``width`` rows at any partition count.  The
+    distributed fold adds each component's partials in ASCENDING
+    PARTITION-ID order (array_sort + aggregate), the order of the driver
+    collect loop, so both paths give BIT-identical sums (a free-order
+    F.sum could differ in the last ulp and flip a HALF_UP round)."""
+    def partials(batches):
+        for pdf in batches:
+            yield pd.DataFrame(kernel(
+                np.vstack(pdf["v"].to_numpy()).astype(np.float64), state))
+
+    schema = ", ".join(f"{c} int" for c in keys) + ", n long, s array<double>"
+    part = vecs.mapInPandas(partials, schema=schema)
+    sums: dict = {}
+    counts: dict = {}
+    if nparts <= 64:
+        for r in part.collect():
+            key = tuple(r[c] for c in keys)
+            sums[key] = sums.get(key, np.zeros(width)) \
+                + np.array(r["s"], dtype=np.float64)
+            counts[key] = counts.get(key, 0) + r["n"]
+        return sums, counts
+    red = (part
+           .withColumn("pid", F.spark_partition_id())
+           .select("pid", *keys, "n", F.posexplode("s").alias("sd", "x"))
+           .groupBy(*keys, "sd")
+           .agg(F.aggregate(
+                    F.array_sort(F.collect_list(F.struct("pid", "x"))),
+                    F.lit(0.0),
+                    lambda acc, e: acc + e["x"]).alias("sx"),
+                F.sum("n").alias("nn"))
+           .collect())
+    for r in red:
+        key = tuple(r[c] for c in keys)
+        sums.setdefault(key, np.zeros(width))[r["sd"]] = r["sx"]
+        counts[key] = r["nn"]          # the same across a key's components
+    return sums, counts
 
 
 def kmeans_centroids(emb: DataFrame, vec_col: str, k: int = 16,
@@ -466,10 +618,11 @@ def kmeans_centroids(emb: DataFrame, vec_col: str, k: int = 16,
     centroids L2-normalized each round).
 
     The heavy step — assigning every vector to its nearest centroid — runs
-    distributed as one Arrow-batched matmul per batch; only the k x dim
-    centroid matrix ever reaches the driver (per-cell sums reduced with a
-    groupBy, so the pattern survives any corpus size).  Returns the centroid
-    matrix as a list of lists (broadcastable literal).
+    distributed as one Arrow-batched matmul per batch (kmeans_partials);
+    only the k x dim centroid matrix ever reaches the driver (per-cell
+    sums reduced by _lloyd_reduce, so the pattern survives any corpus
+    size).  Returns the centroid matrix as a list of lists (broadcastable
+    literal).
 
     DETERMINISM / ORACLE PARITY: seeds are the k lowest rows by ``id_col``
     (falling back to ordering by the vector column itself — never an
@@ -477,135 +630,60 @@ def kmeans_centroids(emb: DataFrame, vec_col: str, k: int = 16,
     quantity (seed components, assignment scores, cell means, re-normalized
     centroids) is rounded to 6 dp, so any engine replaying the same recipe
     — including the DuckDB SQL oracle — derives bit-identical centroids.
-    Ties in assignment break toward the lowest cell id (np.argmax picks the
-    first maximum), matching ORDER BY score DESC, cell ASC.
+    Ties in assignment break toward the lowest cell id.
 
-    HYBRID EXECUTION (r13, guide §1/§5): at the bench SFs the embeddings
-    relation is thousands of rows, and each Lloyd iteration's cost is the
-    ACTION (plan + Arrow round-trip + collect), not the math — k=8 x
-    iters=3 paid 4 driver actions ~0.2 s each for ~1 ms of numpy.  When
-    Catalyst scan stats prove the input <= ``local_bytes`` (default 32 MB
-    — comfortably bounded driver traffic, the same class as the existing
-    centroid/codebook collects), ONE action collects the vector column
-    and every iteration runs driver-side with the IDENTICAL numpy
-    expressions the executor partials use — on a single-partition
-    single-Arrow-batch input (all bench SFs) that is bit-identical, and
-    under any batching the shared round-6 HALF_UP discipline absorbs
-    summation-order ulps exactly as it already does between the two
-    distributed reduce paths and the SQL oracle.  ``local=True/False``
-    pins the arm (parity tests); missing stats or ``local_bytes=None``
-    keep the distributed arm — at 100 TB nothing changes.
+    HYBRID EXECUTION (r13): at the bench SFs the embeddings relation is
+    thousands of rows, and each Lloyd iteration's cost is the ACTION
+    (plan + Arrow round-trip + collect), not the math — k=8 x iters=3 paid
+    4 driver actions ~0.2 s each for ~1 ms of numpy.  When Catalyst scan
+    stats prove the input <= ``local_bytes`` (default 32 MB — the same
+    class as the centroid/codebook collects), ONE action collects the
+    vector column and every iteration runs kmeans_partials on the driver
+    over the whole matrix.  On a single-partition single-Arrow-batch input
+    (all bench SFs) that is bit-identical to the distributed arm, and
+    under any batching the round-6 HALF_UP discipline absorbs
+    summation-order ulps as it does between the two reduce paths and the
+    SQL oracle.  ``local=True/False`` pins the arm (parity tests); missing
+    stats or ``local_bytes=None`` keep the distributed arm.
     """
-    import numpy as np
-
     sort_key = id_col if id_col is not None else vec_col
+    vecs = None
     if _train_local(emb, id_col, local_bytes, local):
         mat, seed_idx = _collect_vecs_sorted_seeds(emb, vec_col, sort_key, k)
-        cents = mat[seed_idx].copy()
-        cents = np_round6_half_up(
-            cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True),
-                               1e-12))
-        for _ in range(iters):
-            # same expressions as the executor partials, one full batch
-            normed = mat / np.maximum(
-                np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-            cells = np.argmax(np.round(normed @ cents.T, 6), axis=1)
-            new = cents.copy()
-            for cell in np.unique(cells):
-                sel = mat[cells == cell]
-                m = np_round6_half_up(sel.sum(axis=0) / sel.shape[0])
-                nrm = np.linalg.norm(m)
-                if nrm > 1e-12:
-                    new[cell] = np_round6_half_up(m / nrm)
-            if np.allclose(new, cents, atol=1e-9):
-                cents = new
-                break
-            cents = new
-        return cents.tolist()
-    first = (emb.orderBy(sort_key).limit(k)
-             .select(as_double(F.col(vec_col)).alias("v")).collect())
-    cents = np.array([r["v"] for r in first], dtype=np.float64)
+        cents = mat[seed_idx]
+
+        def sums_of(c):
+            return _local_sums(kmeans_partials, mat, c, ("cell",))
+    else:
+        first = (emb.orderBy(sort_key).limit(k)
+                 .select(as_double(F.col(vec_col)).alias("v")).collect())
+        cents = np.array([r["v"] for r in first], dtype=np.float64)
+        vecs = emb.select(as_double(F.col(vec_col)).alias("v")).persist()
+        # partition count is fixed for the persisted relation — resolve the
+        # reduction-path gate ONCE, not through a per-iteration .rdd trip
+        nparts = vecs.rdd.getNumPartitions()
+        dim = cents.shape[1]
+
+        def sums_of(c):
+            return _lloyd_reduce(vecs, nparts, kmeans_partials, c, ("cell",),
+                                 dim)
     cents = np_round6_half_up(
         cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True),
                            1e-12))
-    dim = cents.shape[1]
-
-    vecs = emb.select(as_double(F.col(vec_col)).alias("v")).persist()
-    # partition count is fixed for the persisted relation — resolve the
-    # reduction-path gate ONCE, not through a per-iteration .rdd round-trip
-    nparts = vecs.rdd.getNumPartitions()
-    schema = "cell int, n long, s array<double>"
     for _ in range(iters):
-        c = cents  # capture current centroids in the closure
-
-        def partials(batches):
-            # assign + partially reduce inside each Arrow batch: emits at
-            # most k rows per batch, so the driver only ever collects
-            # ~num_partitions x k partial sums regardless of corpus size
-            import numpy as np  # noqa: F811 — runs on executors
-            for pdf in batches:
-                mat = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-                normed = mat / np.maximum(
-                    np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-                # round before argmax: any engine summing the dot product in
-                # a different order assigns the identical cell (ties -> the
-                # first/lowest cell, matching ORDER BY score DESC, cell ASC)
-                cells = np.argmax(np.round(normed @ c.T, 6), axis=1)
-                out = {"cell": [], "n": [], "s": []}
-                for cell in np.unique(cells):
-                    sel = mat[cells == cell]
-                    out["cell"].append(int(cell))
-                    out["n"].append(int(sel.shape[0]))
-                    out["s"].append(sel.sum(axis=0).tolist())
-                yield pd.DataFrame(out)
-
-        sums: dict[int, np.ndarray] = {}
-        counts: dict[int, int] = {}
-        # reduce the per-partition partials: up to a few dozen partitions
-        # the raw k-rows-per-partition collect is cheapest; past that the
-        # partials reduce DISTRIBUTED per (cell, component) — posexplode +
-        # one map-side-combinable sum — so the driver collects <= k*dim
-        # rows no matter how many partitions the corpus has (raw partials
-        # would be O(partitions * k * dim) driver traffic at cluster
-        # scale).  The distributed reduce folds each component's partials
-        # in ASCENDING PARTITION-ID order (array_sort + aggregate), the
-        # same order the driver path's collect loop uses — so both paths
-        # produce BIT-identical sums (a free-order F.sum could differ in
-        # the last ulp run-to-run and flip the HALF_UP round).
-        part = vecs.mapInPandas(partials, schema=schema)
-        if nparts <= 64:
-            for r in part.collect():
-                sums[r["cell"]] = sums.get(r["cell"], np.zeros(dim)) \
-                    + np.array(r["s"], dtype=np.float64)
-                counts[r["cell"]] = counts.get(r["cell"], 0) + r["n"]
-        else:
-            red = (part
-                   .withColumn("pid", F.spark_partition_id())
-                   .select("pid", "cell", "n",
-                           F.posexplode("s").alias("sd", "x"))
-                   .groupBy("cell", "sd")
-                   .agg(F.aggregate(
-                            F.array_sort(F.collect_list(
-                                F.struct("pid", "x"))),
-                            F.lit(0.0),
-                            lambda acc, e: acc + e["x"]).alias("sx"),
-                        F.sum("n").alias("nn"))
-                   .collect())
-            for r in red:
-                sums.setdefault(r["cell"],
-                                np.zeros(dim))[r["sd"]] = r["sx"]
-                counts[r["cell"]] = r["nn"]   # same across a cell's sds
+        sums, counts = sums_of(cents)
         new = cents.copy()
-        for cell, s in sums.items():
-            m = np_round6_half_up(s / counts[cell])
-            norm = np.linalg.norm(m)
-            if norm > 1e-12:
-                new[cell] = np_round6_half_up(m / norm)
+        for (cell,), s in sums.items():
+            m = np_round6_half_up(s / counts[(cell,)])
+            nrm = np.linalg.norm(m)
+            if nrm > 1e-12:
+                new[cell] = np_round6_half_up(m / nrm)
         if np.allclose(new, cents, atol=1e-9):
             cents = new
             break
         cents = new
-    vecs.unpersist()
+    if vecs is not None:
+        vecs.unpersist()
     return cents.tolist()
 
 
@@ -639,7 +717,6 @@ def ivf_topk(emb: DataFrame, id_col: str, vec_col: str,
     cosine_topk.
     """
 
-    from kstream_spark.functions.vectors import dot, norm
     from kstream_spark.util import ensure_parallelism
     emb = ensure_parallelism(emb)
     if centroids is not None:
@@ -649,56 +726,39 @@ def ivf_topk(emb: DataFrame, id_col: str, vec_col: str,
                      emb.orderBy(id_col).limit(n_cells)
                      .select(as_double(F.col(vec_col)).alias("cv"))
                      .collect()]
-    spark = emb.sparkSession
 
-    # assign every corpus vector to its nearest centroid as a LITERAL
-    # PROJECTION (the centroid matrix rides into the expression; no join,
-    # no shuffle of the corpus — the ivfpq_topk shape; the old
-    # join+per-row window form pushed corpus x n_cells rows through an
-    # exchange just to argmax).  The matrix is a single nested Literal
-    # (cell_cosine_scores) so the plan stays constant-size; argmax ties
-    # toward the lowest cell via array_position's first-match.
-    from kstream_spark.functions.vectors import cell_cosine_scores
-    corpus = emb.select(F.col(id_col).alias("neighbor_id"),
-                        as_double(F.col(vec_col)).alias("nv")) \
-        .withColumn("nn", norm(F.col("nv")))
-    cell_scores = cell_cosine_scores(F.col("nv"), F.col("nn"), cent_list)
-    assigned = corpus.withColumn(
-        "cell_id",
-        (F.array_position(cell_scores, F.array_max(cell_scores)) - 1)
-        .cast("long")).select("neighbor_id", "nv", "nn", "cell_id")
-
-    # queries probe their n_probe nearest cells — probe selection runs
-    # DRIVER-SIDE on the |Q|-bounded query rows (the ivfpq_topk recipe,
-    # r13: same round-6 cos, same (cos DESC, cell ASC) lexsort), which
-    # replaces the centroid-relation broadcast join + rank window with a
-    # tiny literal relation.  ``qn`` stays a JVM ``norm()`` column so the
-    # downstream score arithmetic is bit-identical to the old plan.
-    import numpy as np
-    id_dt = emb.schema[id_col].dataType.simpleString()
+    # nearest-cell assignment is a LITERAL PROJECTION (no join, no
+    # shuffle of the corpus); the queries' probes are chosen driver-side
+    # on the |Q|-bounded query rows.  ``qn`` stays a JVM ``norm()``
+    # column so the score arithmetic matches the oracle's fold.
+    assigned = emb.select(F.col(id_col).alias("neighbor_id"),
+                          as_double(F.col(vec_col)).alias("nv")) \
+        .withColumn("nn", norm(F.col("nv"))) \
+        .withColumn("cell_id",
+                    nearest_cell(F.col("nv"), F.col("nn"), cent_list))
     qrows = (query_rows if query_rows is not None
              else collect_query_rows(emb, id_col, vec_col, query_ids))
-    cents_np = np.asarray(cent_list, dtype=np.float64)
-    cnorm = np.sqrt((cents_np ** 2).sum(-1))
-    probe_rows = []
-    for r in qrows:
-        qv = np.asarray(r["qv"], dtype=np.float64)
-        raw = (cents_np @ qv) / (cnorm * float(np.sqrt((qv ** 2).sum())))
-        cos = np.copysign(np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6, raw)
-        cell_order = np.lexsort((np.arange(len(cos)), -cos))
-        for cell in cell_order[:n_probe]:
-            probe_rows.append((r["query_id"], list(r["qv"]), int(cell)))
-    probes = F.broadcast(local_df(
-        spark, probe_rows, f"query_id {id_dt}, qv array<double>, "
-                           f"cell_id long")
-        .withColumn("qn", norm(F.col("qv"))))
-
-    scored = (probes.join(assigned, "cell_id")
+    probes = _probe_relation(emb, id_col, qrows, cent_list, n_probe) \
+        .withColumn("qn", norm(F.col("qv")))
+    scored = (F.broadcast(probes).join(assigned, "cell_id")
               .filter(F.col("query_id") != F.col("neighbor_id"))
               .select("query_id", "neighbor_id",
                       F.round(dot(F.col("qv"), F.col("nv"))
                               / (F.col("qn") * F.col("nn")), 6).alias("cos")))
     return _per_query_topk(scored, k, score_col="cos", asc=False)
+
+
+def _probe_relation(emb: DataFrame, id_col: str, qrows, centroids,
+                    n_probe: int) -> DataFrame:
+    """(query_id, qv, cell_id): every (query_id, qv) of ``qrows`` paired
+    with each of its ``probe_cells``, as a tiny local relation."""
+    cents = np.asarray(centroids, dtype=np.float64)
+    rows = [(qid, list(qv), cell) for qid, qv in qrows
+            for cell in probe_cells(np.asarray(qv, dtype=np.float64), cents,
+                                    n_probe)]
+    id_dt = emb.schema[id_col].dataType.simpleString()
+    return local_df(emb.sparkSession, rows,
+                    f"query_id {id_dt}, qv array<double>, cell_id long")
 
 
 def semantic_dedup(emb: DataFrame, id_col: str, vec_col: str,
@@ -725,25 +785,18 @@ def semantic_dedup(emb: DataFrame, id_col: str, vec_col: str,
     oracle replays the identical cluster -> pair -> prune pipeline.
     """
 
-    from kstream_spark.functions.vectors import dot, norm
     from kstream_spark.util import ensure_parallelism
     emb = ensure_parallelism(emb)
     if centroids is None:
         centroids = kmeans_centroids(emb, vec_col, k=k, iters=iters,
                                      id_col=id_col)
-    corpus = emb.select(F.col(id_col).alias("_id"),
-                        as_double(F.col(vec_col)).alias("v")) \
-        .withColumn("n", norm(F.col("v")))
-    # the centroid matrix is a driver-side literal, so nearest-cell
-    # assignment is a pure PROJECTION (k dot folds + argmax per row): no
-    # k x n join blow-up, no row_number shuffle.  array_position picks the
-    # FIRST maximum — ties break toward the lowest cell id, same as
-    # ORDER BY score DESC, cell ASC in the oracle
-    from kstream_spark.functions.vectors import cell_cosine_scores
-    scores = cell_cosine_scores(F.col("v"), F.col("n"), centroids)
-    assigned = corpus.withColumn(
-        "cell_id",
-        (F.array_position(scores, F.array_max(scores)) - 1).cast("long"))
+    # nearest-cell assignment is a pure PROJECTION over the literal
+    # centroid matrix: no k x n join blow-up, no row_number shuffle
+    assigned = emb.select(F.col(id_col).alias("_id"),
+                          as_double(F.col(vec_col)).alias("v")) \
+        .withColumn("n", norm(F.col("v"))) \
+        .withColumn("cell_id", nearest_cell(F.col("v"), F.col("n"),
+                                            centroids))
     # within-cell pairs as ONE Arrow matmul per cell (vectors cross the
     # Python boundary once per cell, pairs are generated inside numpy) —
     # a pair-expanded join would fold a 64-dim dot per pair in the
@@ -755,16 +808,13 @@ def semantic_dedup(emb: DataFrame, id_col: str, vec_col: str,
     id_dt = emb.schema[id_col].dataType.simpleString()
 
     def cell_pairs(pdf):
-        import numpy as np
         order = np.argsort(pdf["_id"].to_numpy())
         ids = pdf["_id"].to_numpy(dtype=object)[order]
         if len(ids) < 2:
             return pd.DataFrame({"_drop": np.empty(0, dtype=object)})
         mat = np.vstack(pdf["v"].to_numpy()[order]).astype(np.float64)
         norms = pdf["n"].to_numpy()[order]
-        raw = (mat @ mat.T) / np.outer(norms, norms)
-        # HALF_UP to 6 dp, inlined (see np_round6_half_up)
-        sims = np.copysign(np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6, raw)
+        sims = round6((mat @ mat.T) / np.outer(norms, norms))
         iu, ju = np.triu_indices(len(ids), k=1)
         # id_b of every above-threshold (lower-id, higher-id) pair is dropped
         return pd.DataFrame(
@@ -828,153 +878,146 @@ def pq_codebooks(emb: DataFrame, vec_col: str, m: int = 4, k: int = 16,
     (operators/similarity.ivf_topk is the coarse half).
 
     Same scale + determinism discipline as kmeans_centroids: the heavy
-    assign step is one Arrow-batched numpy pass per batch emitting at most
-    m*k partial sums (driver traffic is O(partitions * m * k), corpus-size
-    independent), seeds are the k lowest-``id_col`` rows' subvectors, and
-    every distance/mean is rounded to 6 dp HALF_UP with ties toward the
-    lowest code — so a SQL oracle replays training bit-for-bit.  Returns
-    ``m`` lists of ``k`` codewords (list of lists of floats).
+    assign step is pq_partials, one Arrow-batched numpy pass per batch
+    emitting at most m*k partial sums (driver traffic is O(partitions * m
+    * k), corpus-size independent), seeds are the k lowest-``id_col``
+    rows' subvectors, and every distance/mean is rounded to 6 dp HALF_UP
+    with ties toward the lowest code — so a SQL oracle replays training
+    bit-for-bit.  Returns ``m`` lists of ``k`` codewords (list of lists
+    of floats).
 
-    HYBRID EXECUTION (r13): same size-gated driver-local arm as
+    HYBRID EXECUTION (r13): the same size-gated driver-local arm as
     kmeans_centroids — when scan stats prove the input <= ``local_bytes``
-    the whole training runs off ONE collect with the executor partials'
-    exact numpy expressions (seed collect + iters actions collapse to a
-    single action); ``local=True/False`` pins an arm, missing stats keep
-    the distributed path.  Callers whose input has no stats (e.g. the
-    residual mapInPandas chain) pass ``local=`` derived from their own
-    source relation.
+    the whole training runs pq_partials off ONE collect (seed collect +
+    iters actions collapse to a single action); ``local=True/False`` pins
+    an arm, missing stats keep the distributed path.  Callers whose input
+    has no stats (e.g. the residual mapInPandas chain) pass ``local=``
+    derived from their own source relation.
     """
-    import numpy as np
-
     sort_key = id_col if id_col is not None else vec_col
-    if _train_local(emb, id_col, local_bytes, local):
+    vecs = None
+    train_local = _train_local(emb, id_col, local_bytes, local)
+    if train_local:
         mat, seed_idx = _collect_vecs_sorted_seeds(emb, vec_col, sort_key, k)
-        dim = mat.shape[1]
-        if dim % m:
-            raise ValueError(f"dim {dim} not divisible by m={m}")
-        sub = dim // m
         seed_mat = mat[seed_idx]
-        books = [seed_mat[:, j * sub:(j + 1) * sub].copy() for j in range(m)]
-        for _ in range(iters):
-            for j, cb in enumerate(books):
-                # identical expressions to the executor partials
-                x = mat[:, j * sub:(j + 1) * sub]
-                raw = ((x[:, None, :] - cb[None, :, :]) ** 2).sum(-1)
-                d = np.copysign(np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6, raw)
-                codes = np.argmin(d, axis=1)
-                for c in np.unique(codes):
-                    sel = x[codes == c]
-                    books[j][c] = np_round6_half_up(
-                        sel.sum(axis=0) / sel.shape[0])
-        return [b.tolist() for b in books]
-    first = (emb.orderBy(sort_key).limit(k)
-             .select(as_double(F.col(vec_col)).alias("v")).collect())
-    seed_mat = np.array([r["v"] for r in first], dtype=np.float64)
+    else:
+        first = (emb.orderBy(sort_key).limit(k)
+                 .select(as_double(F.col(vec_col)).alias("v")).collect())
+        seed_mat = np.array([r["v"] for r in first], dtype=np.float64)
     dim = seed_mat.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     sub = dim // m
     # books[j]: (k, sub) codewords for subspace j — raw data, no rounding
     books = [seed_mat[:, j * sub:(j + 1) * sub].copy() for j in range(m)]
+    if train_local:
+        def sums_of(bks):
+            return _local_sums(pq_partials, mat, bks, ("j", "code"))
+    else:
+        vecs = emb.select(as_double(F.col(vec_col)).alias("v")).persist()
+        nparts = vecs.rdd.getNumPartitions()   # fixed while persisted
 
-    vecs = emb.select(as_double(F.col(vec_col)).alias("v")).persist()
-    nparts = vecs.rdd.getNumPartitions()   # fixed while persisted; see kmeans
-    schema = "j int, code int, n long, s array<double>"
+        def sums_of(bks):
+            return _lloyd_reduce(vecs, nparts, pq_partials, bks,
+                                 ("j", "code"), sub)
     for _ in range(iters):
-        bks = [b.copy() for b in books]
-
-        def partials(batches):
-            import numpy as np  # noqa: F811 — runs on executors
-            for pdf in batches:
-                mat = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-                out = {"j": [], "code": [], "n": [], "s": []}
-                for j, cb in enumerate(bks):
-                    x = mat[:, j * sub:(j + 1) * sub]
-                    # sum((x - c)^2) per (row, code); HALF_UP round-6 then
-                    # argmin with first-minimum tie-break == the oracle's
-                    # ORDER BY dist ASC, code ASC
-                    raw = ((x[:, None, :] - cb[None, :, :]) ** 2).sum(-1)
-                    d = np.copysign(
-                        np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6, raw)
-                    codes = np.argmin(d, axis=1)
-                    for c in np.unique(codes):
-                        sel = x[codes == c]
-                        out["j"].append(j)
-                        out["code"].append(int(c))
-                        out["n"].append(int(sel.shape[0]))
-                        out["s"].append(sel.sum(axis=0).tolist())
-                yield pd.DataFrame(out)
-
-        import numpy as np  # reimport for driver scope clarity
-        # same hybrid as kmeans_centroids: direct collect while the
-        # partial count is small; distributed per-(j, code, component)
-        # reduction past 64 partitions, so driver traffic is <= m*k*sub
-        # rows at any corpus size (raw partials grow O(partitions * m * k));
-        # the fold runs in ascending partition-id order so the result is
-        # BIT-identical to the driver path (see kmeans_centroids)
-        sums: dict = {}
-        counts: dict = {}
-        part = vecs.mapInPandas(partials, schema=schema)
-        if nparts <= 64:
-            for r in part.collect():
-                key = (r["j"], r["code"])
-                sums[key] = sums.get(key, np.zeros(sub)) \
-                    + np.array(r["s"], dtype=np.float64)
-                counts[key] = counts.get(key, 0) + r["n"]
-        else:
-            red = (part
-                   .withColumn("pid", F.spark_partition_id())
-                   .select("pid", "j", "code", "n",
-                           F.posexplode("s").alias("sd", "x"))
-                   .groupBy("j", "code", "sd")
-                   .agg(F.aggregate(
-                            F.array_sort(F.collect_list(
-                                F.struct("pid", "x"))),
-                            F.lit(0.0),
-                            lambda acc, e: acc + e["x"]).alias("sx"),
-                        F.sum("n").alias("nn"))
-                   .collect())
-            for r in red:
-                key = (r["j"], r["code"])
-                sums.setdefault(key, np.zeros(sub))[r["sd"]] = r["sx"]
-                counts[key] = r["nn"]     # identical across a code's sds
+        sums, counts = sums_of([b.copy() for b in books])
         for (j, c), s in sums.items():
             books[j][c] = np_round6_half_up(s / counts[(j, c)])
-    vecs.unpersist()
+    if vecs is not None:
+        vecs.unpersist()
     return [b.tolist() for b in books]
+
+
+def _encode(src: DataFrame, codebooks: list,
+            centroids: list | None = None) -> DataFrame:
+    """The one PQ encoder: ``src`` is (_id, v) or (_id, cell_id, v), and
+    the result keeps its id (and cell_id) columns next to ``codes
+    array<int>`` from pq_codes, in one Arrow pass — the codebooks ride
+    into the closure as literals, no join, no shuffle.  With
+    ``centroids`` the encoded vector is the residual v - centroids[cell_id]
+    (exact double subtraction)."""
+    bks = [np.asarray(b, dtype=np.float64) for b in codebooks]
+    cents = (None if centroids is None
+             else np.asarray(centroids, dtype=np.float64))
+    keep = [c for c in ("_id", "cell_id") if c in src.columns]
+
+    def encode(batches):
+        for pdf in batches:
+            mat = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
+            if cents is not None:
+                mat = mat - cents[pdf["cell_id"].to_numpy().astype(np.int64)]
+            out = {c: pdf[c].to_numpy(dtype=object) for c in keep}
+            out["codes"] = list(pq_codes(mat, bks).astype(int).tolist())
+            yield pd.DataFrame(out)
+
+    id_dt = src.schema["_id"].dataType.simpleString()
+    cell = ", cell_id long" if "cell_id" in keep else ""
+    return src.mapInPandas(encode,
+                           schema=f"_id {id_dt}{cell}, codes array<int>")
+
+
+def _assign_cells(emb: DataFrame, id_col: str, vec_col: str,
+                  centroids: list, unit: bool = False) -> DataFrame:
+    """(_id, cell_id, v): ``nearest_cell`` as a literal projection.
+    ``unit`` divides v by its JVM ``norm()`` — a left-to-right fold, the
+    summation order of the oracle's list_sum — for the spherical residual
+    formulation."""
+    src = emb.select(F.col(id_col).alias("_id"),
+                     as_double(F.col(vec_col)).alias("v")) \
+        .withColumn("n", norm(F.col("v")))
+    v = (F.transform(F.col("v"), lambda x: x / F.col("n")) if unit
+         else F.col("v"))
+    return src.select("_id", nearest_cell(F.col("v"), F.col("n"),
+                                          centroids).alias("cell_id"),
+                      v.alias("v"))
+
+
+def _encode_cells(emb: DataFrame, id_col: str, vec_col: str,
+                 centroids: list, codebooks: list,
+                 residual: bool = False) -> DataFrame:
+    """(_id, cell_id, codes): nearest-cell assignment, then ``_encode`` —
+    of the raw vector, or with ``residual`` of v/||v|| - centroid[cell].
+    The IVF-PQ searchers and streaming/ann.encode_against_index share
+    it, so streamed codes equal batch codes by construction."""
+    src = _assign_cells(emb, id_col, vec_col, centroids, unit=residual)
+    return _encode(src, codebooks, centroids if residual else None)
 
 
 def pq_encode(emb: DataFrame, id_col: str, vec_col: str,
               codebooks: list) -> DataFrame:
     """Encode each vector as ``m`` codebook indices — dim*8 bytes become m
-    bytes (the PQ compression step).  Pure Arrow-batched projection: the
-    codebooks ride into the closure as literals, no join, no shuffle.
-    Returns (id, codes array<int>); deterministic (round-6 HALF_UP
-    distances, lowest-code ties) so the oracle re-derives every code."""
-    import numpy as np
-
-    bks = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    sub = bks[0].shape[1]
-    id_dt = emb.schema[id_col].dataType.simpleString()
+    bytes (the PQ compression step), through ``_encode``.  Returns (id,
+    codes array<int>); deterministic (round-6 HALF_UP distances,
+    lowest-code ties) so the oracle re-derives every code."""
     src = emb.select(F.col(id_col).alias("_id"),
                      as_double(F.col(vec_col)).alias("v"))
+    return _encode(src, codebooks).withColumnRenamed("_id", id_col)
 
-    def encode(batches):
-        import numpy as np  # noqa: F811
-        for pdf in batches:
-            mat = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-            cols = []
-            for j, cb in enumerate(bks):
-                x = mat[:, j * sub:(j + 1) * sub]
-                raw = ((x[:, None, :] - cb[None, :, :]) ** 2).sum(-1)
-                d = np.copysign(np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6, raw)
-                cols.append(np.argmin(d, axis=1))
-            codes = np.stack(cols, axis=1)
-            yield pd.DataFrame({"_id": pdf["_id"].to_numpy(dtype=object),
-                                "codes": list(codes.astype(int).tolist())})
 
-    out = src.mapInPandas(encode, schema=f"_id {id_dt}, codes array<int>")
-    return out.withColumnRenamed("_id", id_col)
+def _adc_topk(cands: DataFrame, tab_rows: list, id_dt: str, m: int, k: int,
+              on: str | None = None) -> DataFrame:
+    """The one ADC scorer.  ``cands`` carries (neighbor_id, codes) — plus
+    query_id or cell_id when ``on`` names the join key — and ``tab_rows``
+    are (query_id, tabs) rows, or (query_id, cell_id, tabs) when ``on`` is
+    "cell_id".  The tables broadcast; with ``on=None`` every query scores
+    every candidate.  adist = round-6 of sum_j tabs[j][codes[j]], m
+    codegen ``element_at`` lookups, ranked ascending through the narrow
+    _per_query_topk.  Returns (query_id, neighbor_id, adist, rank)."""
+    cell = ", cell_id long" if on == "cell_id" else ""
+    tables = F.broadcast(local_df(
+        cands.sparkSession, tab_rows,
+        f"query_id {id_dt}{cell}, tabs array<array<double>>"))
+    adist = None
+    for j in range(m):
+        term = F.element_at(F.element_at("tabs", j + 1),
+                            F.element_at("codes", j + 1) + 1)
+        adist = term if adist is None else adist + term
+    other = F.col("query_id") != F.col("neighbor_id")
+    pairs = (cands.join(tables, other) if on is None
+             else cands.join(tables, on).filter(other))
+    return _per_query_topk(pairs.select("query_id", "neighbor_id",
+                                        F.round(adist, 6).alias("adist")), k)
 
 
 def _per_query_topk(scored: DataFrame, k: int, score_col: str = "adist",
@@ -1038,45 +1081,17 @@ def pq_adc_topk(emb: DataFrame, id_col: str, vec_col: str,
     (query_id, neighbor_id, adist, rank) ranked by approximate distance
     ASC with id tie-breaks — fully deterministic (round-6 HALF_UP at the
     subvector-distance level, exactly what the encode step used)."""
-    import numpy as np
-
     bks = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    m_, kk = len(bks), bks[0].shape[0]
-    sub = bks[0].shape[1]
     codes = pq_encode(emb, id_col, vec_col, codebooks) \
         .withColumnRenamed(id_col, "neighbor_id")
-
-    # per-query distance tables, built driver-side (|Q| x m x k doubles —
-    # tiny) and broadcast as literal arrays; ``query_rows`` (r14) lets a
-    # recall audit share one collect across its arms
+    # ``query_rows`` (r14) lets a recall audit share one collect across
+    # its arms
     qrows = (query_rows if query_rows is not None
              else collect_query_rows(emb, id_col, vec_col, query_ids))
-    spark = emb.sparkSession
-    tab_rows = []
-    for r in qrows:
-        qv = np.asarray(r["qv"], dtype=np.float64)
-        tabs = []
-        for j, cb in enumerate(bks):
-            x = qv[j * sub:(j + 1) * sub]
-            raw = ((cb - x[None, :]) ** 2).sum(-1)
-            d = np.copysign(np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6, raw)
-            tabs.append([float(v) for v in d])
-        tab_rows.append((r["query_id"], tabs))
+    tab_rows = [(qid, adc_tables(np.asarray(qv, dtype=np.float64), bks))
+                for qid, qv in qrows]
     id_dt = emb.schema[id_col].dataType.simpleString()
-    tables = F.broadcast(local_df(
-        spark, tab_rows, f"query_id {id_dt}, tabs array<array<double>>"))
-
-    # adist = sum_j tabs[j][codes[j]] — m element_at lookups, codegen only
-    adist = None
-    for j in range(m_):
-        term = F.element_at(F.element_at("tabs", j + 1),
-                            F.element_at("codes", j + 1) + 1)
-        adist = term if adist is None else adist + term
-    scored = (codes.join(tables,
-                         F.col("query_id") != F.col("neighbor_id"))
-              .select("query_id", "neighbor_id",
-                      F.round(adist, 6).alias("adist")))
-    return _per_query_topk(scored, k)
+    return _adc_topk(codes, tab_rows, id_dt, len(bks), k)
 
 
 def ivfpq_topk(emb: DataFrame, id_col: str, vec_col: str,
@@ -1097,85 +1112,23 @@ def ivfpq_topk(emb: DataFrame, id_col: str, vec_col: str,
     cell/code/id ties), so the oracle replays train -> assign -> encode ->
     probe -> ADC-rank exactly.  Returns (query_id, neighbor_id, adist,
     rank) — ascending approximate distance."""
-
-    import numpy as np
-
-    from kstream_spark.functions.vectors import dot, norm
-
-    # --- coarse assignment as a literal projection (semantic_dedup shape;
-    # single nested-Literal matrix — see cell_cosine_scores)
-    from kstream_spark.functions.vectors import cell_cosine_scores
-    corpus = emb.select(F.col(id_col).alias("neighbor_id"),
-                        as_double(F.col(vec_col)).alias("v")) \
-        .withColumn("n", norm(F.col("v")))
-    cell_scores = cell_cosine_scores(F.col("v"), F.col("n"), centroids)
-    assigned = corpus.withColumn(
-        "cell_id",
-        (F.array_position(cell_scores, F.array_max(cell_scores)) - 1)
-        .cast("long"))
-
-    # --- PQ codes, carrying cell_id through the Arrow projection
     bks = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    sub = bks[0].shape[1]
-    id_dt = emb.schema[id_col].dataType.simpleString()
-
-    def encode(batches):
-        import numpy as np  # noqa: F811
-        for pdf in batches:
-            mat = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-            cols = []
-            for j, cb in enumerate(bks):
-                x = mat[:, j * sub:(j + 1) * sub]
-                raw = ((x[:, None, :] - cb[None, :, :]) ** 2).sum(-1)
-                d = np.copysign(np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6, raw)
-                cols.append(np.argmin(d, axis=1))
-            codes = np.stack(cols, axis=1)
-            yield pd.DataFrame(
-                {"neighbor_id": pdf["neighbor_id"].to_numpy(dtype=object),
-                 "cell_id": pdf["cell_id"].to_numpy(dtype=object),
-                 "codes": list(codes.astype(int).tolist())})
-
-    encoded = assigned.select("neighbor_id", "cell_id", "v").mapInPandas(
-        encode, schema=f"neighbor_id {id_dt}, cell_id long, codes array<int>")
-
-    # --- probes + per-query ADC tables, built driver-side (tiny)
+    cents = np.asarray(centroids, dtype=np.float64)
+    encoded = _encode_cells(emb, id_col, vec_col, centroids, codebooks) \
+        .withColumnRenamed("_id", "neighbor_id")
+    # probes (|Q| x n_probe) and per-query ADC tables, built driver-side
     qrows = (query_rows if query_rows is not None
              else collect_query_rows(emb, id_col, vec_col, query_ids))
-    spark = emb.sparkSession
-    cents = np.asarray(centroids, dtype=np.float64)
-    cnorm = np.sqrt((cents ** 2).sum(-1))
     probe_rows, tab_rows = [], []
-    for r in qrows:
-        qv = np.asarray(r["qv"], dtype=np.float64)
-        raw = (cents @ qv) / (cnorm * float(np.sqrt((qv ** 2).sum())))
-        cos = np.copysign(np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6, raw)
-        # ORDER BY cos DESC, cell ASC — argsort on (-cos, cell) is stable
-        order = np.lexsort((np.arange(len(cos)), -cos))
-        for cell in order[:n_probe]:
-            probe_rows.append((r["query_id"], int(cell)))
-        tabs = []
-        for j, cb in enumerate(bks):
-            x = qv[j * sub:(j + 1) * sub]
-            rawd = ((cb - x[None, :]) ** 2).sum(-1)
-            d = np.copysign(np.floor(np.abs(rawd) * 1e6 + 0.5) / 1e6, rawd)
-            tabs.append([float(v) for v in d])
-        tab_rows.append((r["query_id"], tabs))
-    probes = F.broadcast(local_df(
-        spark, probe_rows, f"query_id {id_dt}, cell_id long"))
-    tables = F.broadcast(local_df(
-        spark, tab_rows, f"query_id {id_dt}, tabs array<array<double>>"))
-
-    adist = None
-    for j in range(len(bks)):
-        term = F.element_at(F.element_at("tabs", j + 1),
-                            F.element_at("codes", j + 1) + 1)
-        adist = term if adist is None else adist + term
-    scored = (encoded.join(probes, "cell_id")
-              .filter(F.col("query_id") != F.col("neighbor_id"))
-              .join(tables, "query_id")
-              .select("query_id", "neighbor_id",
-                      F.round(adist, 6).alias("adist")))
-    return _per_query_topk(scored, k)
+    for qid, qv in qrows:
+        qv = np.asarray(qv, dtype=np.float64)
+        probe_rows += [(qid, c) for c in probe_cells(qv, cents, n_probe)]
+        tab_rows.append((qid, adc_tables(qv, bks)))
+    id_dt = emb.schema[id_col].dataType.simpleString()
+    probes = F.broadcast(local_df(emb.sparkSession, probe_rows,
+                                  f"query_id {id_dt}, cell_id long"))
+    return _adc_topk(encoded.join(probes, "cell_id"), tab_rows, id_dt,
+                     len(bks), k, on="query_id")
 
 
 def ivfpq_residual_topk(emb: DataFrame, id_col: str, vec_col: str,
@@ -1214,122 +1167,43 @@ def ivfpq_residual_topk(emb: DataFrame, id_col: str, vec_col: str,
     SQL oracle replays assign -> residual -> train -> encode -> probe ->
     per-cell ADC bit-for-bit.  Returns (query_id, neighbor_id, adist,
     rank), ascending approximate distance."""
-
-    import numpy as np
-
-    from kstream_spark.functions.vectors import dot, norm
-
-    # --- coarse assignment: literal projection (ivfpq_topk shape;
-    # single nested-Literal matrix — see cell_cosine_scores)
-    from kstream_spark.functions.vectors import cell_cosine_scores
-    corpus = emb.select(F.col(id_col).alias("neighbor_id"),
-                        as_double(F.col(vec_col)).alias("v")) \
-        .withColumn("n", norm(F.col("v")))
-    cell_scores = cell_cosine_scores(F.col("v"), F.col("n"), centroids)
-    assigned = corpus.withColumn(
-        "cell_id",
-        (F.array_position(cell_scores, F.array_max(cell_scores)) - 1)
-        .cast("long")).select(
-            "neighbor_id", "cell_id",
-            # normalize JVM-side: norm() is a left-to-right fold, the
-            # same summation order the oracle's list_sum uses — a numpy
-            # pairwise sum here could differ in the last ulp
-            F.transform(F.col("v"), lambda x: x / F.col("n")).alias("v"))
     cents = np.asarray(centroids, dtype=np.float64)
     id_dt = emb.schema[id_col].dataType.simpleString()
-
-    # --- residuals: one Arrow pass (v/||v|| - centroid[cell], exact
-    # double subtraction on the already-normalized components)
+    # --- residuals for training: one Arrow pass of v/||v|| -
+    # centroid[cell] (exact double subtraction on the already-normalized
+    # components)
     def residual(batches):
-        import numpy as np  # noqa: F811
         for pdf in batches:
             mat = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-            cells = pdf["cell_id"].to_numpy().astype(np.int64)
-            res = mat - cents[cells]
-            yield pd.DataFrame(
-                {"neighbor_id": pdf["neighbor_id"].to_numpy(dtype=object),
-                 "cell_id": pdf["cell_id"].to_numpy(dtype=object),
-                 "rv": list(res.tolist())})
+            res = mat - cents[pdf["cell_id"].to_numpy().astype(np.int64)]
+            yield pd.DataFrame({"_id": pdf["_id"].to_numpy(dtype=object),
+                                "rv": list(res.tolist())})
 
-    res_df = assigned.mapInPandas(
-        residual,
-        schema=f"neighbor_id {id_dt}, cell_id long, rv array<double>")
-
+    res_df = _assign_cells(emb, id_col, vec_col, centroids, unit=True) \
+        .mapInPandas(residual, schema=f"_id {id_dt}, rv array<double>")
     # --- PQ codebooks trained ON RESIDUALS (seeds: k lowest-id residuals).
     # res_df is a mapInPandas child — no Catalyst stats — but its row set
     # is exactly emb's, so the local-arm gate reads the SOURCE relation's
-    # scan stats (r13: collapses seed collect + persist fill + per-iter
-    # actions, each of which re-ran the assign+residual chain, into one).
+    # scan stats (r13: one collect instead of seed collect + persist fill
+    # + per-iteration actions, each re-running the assign+residual chain).
     books = pq_codebooks(res_df, "rv", m=m, k=pq_k, iters=pq_iters,
-                         id_col="neighbor_id",
-                         local=_train_local(emb, "neighbor_id", 32 << 20,
+                         id_col="_id",
+                         local=_train_local(emb, "_id", 32 << 20,
                                             None) or None)
     bks = [np.asarray(b, dtype=np.float64) for b in books]
-    sub = bks[0].shape[1]
-
-    # --- encode residuals, carrying cell_id (no join back)
-    def encode(batches):
-        import numpy as np  # noqa: F811
-        for pdf in batches:
-            mat = np.vstack(pdf["rv"].to_numpy()).astype(np.float64)
-            cols = []
-            for j, cb in enumerate(bks):
-                x = mat[:, j * sub:(j + 1) * sub]
-                raw = ((x[:, None, :] - cb[None, :, :]) ** 2).sum(-1)
-                d = np.copysign(np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6, raw)
-                cols.append(np.argmin(d, axis=1))
-            codes = np.stack(cols, axis=1)
-            yield pd.DataFrame(
-                {"neighbor_id": pdf["neighbor_id"].to_numpy(dtype=object),
-                 "cell_id": pdf["cell_id"].to_numpy(dtype=object),
-                 "codes": list(codes.astype(int).tolist())})
-
-    encoded = res_df.mapInPandas(
-        encode, schema=f"neighbor_id {id_dt}, cell_id long, codes array<int>")
-
+    encoded = _encode_cells(emb, id_col, vec_col, centroids, books,
+                            residual=True) \
+        .withColumnRenamed("_id", "neighbor_id")
     # --- driver-side probes + PER-(query, cell) ADC tables (|Q| x n_probe
-    # rows, each m x pq_k doubles — tiny, broadcast)
-    qrows = (emb.filter(F.col(id_col).isin(query_ids))
-             .select(F.col(id_col).alias("query_id"),
-                     as_double(F.col(vec_col)).alias("qv")).collect())
-    spark = emb.sparkSession
-    cnorm = np.sqrt((cents ** 2).sum(-1))
+    # rows, each m x pq_k doubles — tiny, broadcast).  The table is built
+    # for the fold-order-normalized query, the probe uses numpy's norm.
     tab_rows = []
-    for r in qrows:
-        qv = np.asarray(r["qv"], dtype=np.float64)
-        raw = (cents @ qv) / (cnorm * float(np.sqrt((qv ** 2).sum())))
-        cos = np.copysign(np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6, raw)
-        order = np.lexsort((np.arange(len(cos)), -cos))
-        # fold-order norm (left-to-right adds, matching the JVM/oracle
-        # fold) — np.sum's pairwise summation can differ in the last ulp
-        acc = 0.0
-        for x in qv:
-            acc += float(x) * float(x)
-        qvn = qv / float(np.sqrt(acc))
-        for cell in order[:n_probe]:
-            qres = qvn - cents[int(cell)]
-            tabs = []
-            for j, cb in enumerate(bks):
-                x = qres[j * sub:(j + 1) * sub]
-                rawd = ((cb - x[None, :]) ** 2).sum(-1)
-                d = np.copysign(np.floor(np.abs(rawd) * 1e6 + 0.5) / 1e6,
-                                rawd)
-                tabs.append([float(v) for v in d])
-            tab_rows.append((r["query_id"], int(cell), tabs))
-    tables = F.broadcast(local_df(
-        spark, tab_rows,
-        f"query_id {id_dt}, cell_id long, tabs array<array<double>>"))
-
-    adist = None
-    for j in range(m):
-        term = F.element_at(F.element_at("tabs", j + 1),
-                            F.element_at("codes", j + 1) + 1)
-        adist = term if adist is None else adist + term
-    scored = (encoded.join(tables, on="cell_id")
-              .filter(F.col("query_id") != F.col("neighbor_id"))
-              .select("query_id", "neighbor_id",
-                      F.round(adist, 6).alias("adist")))
-    return _per_query_topk(scored, k)
+    for qid, qv in collect_query_rows(emb, id_col, vec_col, query_ids):
+        qv = np.asarray(qv, dtype=np.float64)
+        qvn = qv / fold_norm(qv)
+        tab_rows += [(qid, cell, adc_tables(qvn - cents[cell], bks))
+                     for cell in probe_cells(qv, cents, n_probe)]
+    return _adc_topk(encoded, tab_rows, id_dt, m, k, on="cell_id")
 
 
 def sq8_stats(emb: DataFrame, vec_col: str) -> tuple[list, list]:
@@ -1370,14 +1244,13 @@ def sq8_topk(emb: DataFrame, id_col: str, vec_col: str, query_ids: list,
     partitioner for sub-linear probes.
     """
     from kstream_spark.util import ensure_parallelism
-    from kstream_spark.functions.vectors import dot
     emb = ensure_parallelism(emb)
     # No local-setup arm (one collect of every vector for min/max + query
     # rows): a controlled alternating A/B measured it 15-30% SLOWER than
     # this distributed setup (distributed faster in 4/5 rounds, e.g. 1.13
     # vs 1.46 s warm) — unlike ivfsq_topk, which collapses three setup
-    # jobs incl. a window and keeps its gated arm, sq8 setup is only two
-    # cheap jobs: a 64-row aggregated collect and a broadcast filter.
+    # jobs and keeps its gated arm, sq8 setup is only two cheap jobs: a
+    # 64-row aggregated collect and a broadcast filter.
     mn, mx = sq8_stats(emb, vec_col)
     # `queries`: a caller that already holds the query vectors (the recall
     # audits' shared collect) passes them as a local relation instead of
@@ -1387,26 +1260,34 @@ def sq8_topk(emb: DataFrame, id_col: str, vec_col: str, query_ids: list,
     q = F.broadcast(q_src
                     .select(F.col(id_col).alias("query_id"),
                             as_double(F.col(vec_col)).alias("qv")))
-    scale = [255.0 / (b - a) if b > a else 0.0 for a, b in zip(mn, mx)]
-    step = [(b - a) / 255.0 for a, b in zip(mn, mx)]
-    from kstream_spark.functions.vectors import lit_doubles
-    mnl, scl, stl = lit_doubles(mn), lit_doubles(scale), lit_doubles(step)
-    codes = F.transform(
-        as_double(F.col(vec_col)),
-        lambda x, i: F.least(
-            F.lit(255.0),
-            F.floor((x - F.element_at(mnl, (i + F.lit(1)).cast("int")))
-                    * F.element_at(scl, (i + F.lit(1)).cast("int")))
-            .cast("double")))
-    dq = F.zip_with(
-        codes, F.transform(codes, lambda _c, i: (i + F.lit(1)).cast("int")),
-        lambda c, idx: F.element_at(mnl, idx) + c * F.element_at(stl, idx))
-    c = emb.select(F.col(id_col).alias("neighbor_id"), dq.alias("dv"))
+    c = emb.select(F.col(id_col).alias("neighbor_id"),
+                   _sq8_dequantized(as_double(F.col(vec_col)), mn, mx)
+                   .alias("dv"))
     scored = (q.join(c, F.col("query_id") != F.col("neighbor_id"))
               .select("query_id", "neighbor_id",
                       F.round(dot(F.col("qv"), F.col("dv")), 6)
                       .alias("score")))
     return _per_query_topk(scored, k, score_col="score", asc=False)
+
+
+def _sq8_dequantized(v: Column, mn: list, mx: list) -> Column:
+    """SQ8 quantize then dequantize ``v``: code = least(255, floor((x -
+    mn_i) * (255/(mx_i - mn_i)))) and dequant = mn_i + code * ((mx_i -
+    mn_i)/255), the per-dim factors computed ONCE driver-side and riding
+    as dim-sized literal arrays."""
+    scale = [255.0 / (b - a) if b > a else 0.0 for a, b in zip(mn, mx)]
+    step = [(b - a) / 255.0 for a, b in zip(mn, mx)]
+    mnl, scl, stl = lit_doubles(mn), lit_doubles(scale), lit_doubles(step)
+    codes = F.transform(
+        v,
+        lambda x, i: F.least(
+            F.lit(255.0),
+            F.floor((x - F.element_at(mnl, (i + F.lit(1)).cast("int")))
+                    * F.element_at(scl, (i + F.lit(1)).cast("int")))
+            .cast("double")))
+    return F.zip_with(
+        codes, F.transform(codes, lambda _c, i: (i + F.lit(1)).cast("int")),
+        lambda c, idx: F.element_at(mnl, idx) + c * F.element_at(stl, idx))
 
 
 def ivfsq_topk(emb: DataFrame, id_col: str, vec_col: str, query_ids: list,
@@ -1432,23 +1313,15 @@ def ivfsq_topk(emb: DataFrame, id_col: str, vec_col: str, query_ids: list,
     reads only n_probe/n_cells of the data (the layout
     streaming/ann.compact_code_store produces).
     """
-    from kstream_spark.functions.vectors import (cell_cosine_scores, dot,
-                                                 norm)
     from kstream_spark.util import ensure_parallelism
     emb = ensure_parallelism(emb)
-    id_dt = emb.schema[id_col].dataType.simpleString()
-    spark = emb.sparkSession
     # r13 local-setup arm (training-loop size gate): seeds, per-dim
-    # min/max, and the probe selection each cost a job over a tiny
-    # relation; one collect derives all three.  Probe choice runs the
-    # ivfpq_topk driver-side recipe (same round-6 cos, same
-    # (cos DESC, cell ASC) lexsort).  Corpus-side assignment, quantize
-    # and scoring stay distributed — only bounded setup localizes, so
-    # the 100 TB shape is untouched (stats past the gate keep every
-    # job distributed exactly as before).
-    probes = None
+    # min/max and the query rows each cost a job over a tiny relation;
+    # one collect derives all three.  Both arms probe with
+    # _probe_relation, and corpus-side assignment, quantize and scoring
+    # stay distributed — only bounded setup localizes, so the 100 TB
+    # shape is untouched.
     if _train_local(emb, id_col, 32 << 20, local):
-        import numpy as np
         rows = emb.select(F.col(id_col).alias("_id"),
                           as_double(F.col(vec_col)).alias("v")).collect()
         mat = np.array([r["v"] for r in rows], dtype=np.float64)
@@ -1456,72 +1329,24 @@ def ivfsq_topk(emb: DataFrame, id_col: str, vec_col: str, query_ids: list,
         cent_list = [[float(x) for x in mat[i]] for i in order[:n_cells]]
         mn = [float(x) for x in mat.min(axis=0)]
         mx = [float(x) for x in mat.max(axis=0)]
-        cents_np = np.asarray(cent_list, dtype=np.float64)
-        cnorm = np.sqrt((cents_np ** 2).sum(-1))
         want = set(query_ids)
-        probe_rows = []
-        for i, r in enumerate(rows):
-            if r["_id"] not in want:
-                continue
-            qv = mat[i]
-            raw = (cents_np @ qv) / (cnorm * float(np.sqrt((qv ** 2).sum())))
-            cos = np.copysign(np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6, raw)
-            cell_order = np.lexsort((np.arange(len(cos)), -cos))
-            for cell in cell_order[:n_probe]:
-                probe_rows.append((r["_id"], [float(x) for x in r["v"]],
-                                   int(cell)))
-        probes = F.broadcast(local_df(
-            spark, probe_rows,
-            f"query_id {id_dt}, qv array<double>, cell_id long"))
+        qrows = [(r["_id"], r["v"]) for r in rows if r["_id"] in want]
     else:
         cent_list = [list(r["cv"]) for r in
                      emb.orderBy(id_col).limit(n_cells)
                      .select(as_double(F.col(vec_col)).alias("cv"))
                      .collect()]
         mn, mx = sq8_stats(emb, vec_col)
-    scale = [255.0 / (b - a) if b > a else 0.0 for a, b in zip(mn, mx)]
-    step = [(b - a) / 255.0 for a, b in zip(mn, mx)]
-    from kstream_spark.functions.vectors import lit_doubles
-    mnl, scl, stl = lit_doubles(mn), lit_doubles(scale), lit_doubles(step)
+        qrows = collect_query_rows(emb, id_col, vec_col, query_ids)
+    probes = _probe_relation(emb, id_col, qrows, cent_list, n_probe)
 
     corpus = emb.select(F.col(id_col).alias("neighbor_id"),
                         as_double(F.col(vec_col)).alias("nv")) \
         .withColumn("nn", norm(F.col("nv")))
-    cell_scores = cell_cosine_scores(F.col("nv"), F.col("nn"), cent_list)
-    codes = F.transform(
-        F.col("nv"),
-        lambda x, i: F.least(
-            F.lit(255.0),
-            F.floor((x - F.element_at(mnl, (i + F.lit(1)).cast("int")))
-                    * F.element_at(scl, (i + F.lit(1)).cast("int")))
-            .cast("double")))
-    dq = F.zip_with(
-        codes, F.transform(codes, lambda _c, i: (i + F.lit(1)).cast("int")),
-        lambda c, idx: F.element_at(mnl, idx) + c * F.element_at(stl, idx))
     assigned = corpus.select(
         "neighbor_id",
-        (F.array_position(cell_scores, F.array_max(cell_scores)) - 1)
-        .cast("long").alias("cell_id"),
-        dq.alias("dv"))
-
-    if probes is None:
-        cents = F.broadcast(local_df(
-            spark, [(i, c) for i, c in enumerate(cent_list)],
-            "cell_id long, cv array<double>")
-            .withColumn("cn", norm(F.col("cv"))))
-        queries = emb.filter(F.col(id_col).isin(query_ids)) \
-            .select(F.col(id_col).alias("query_id"),
-                    as_double(F.col(vec_col)).alias("qv")) \
-            .withColumn("qn", norm(F.col("qv")))
-        w_probe = W.partitionBy("query_id").orderBy(F.desc("cell_cos"),
-                                                    F.asc("cell_id"))
-        probes = (F.broadcast(queries).join(cents)
-                  .withColumn("cell_cos",
-                              F.round(dot(F.col("qv"), F.col("cv"))
-                                      / (F.col("qn") * F.col("cn")), 6))
-                  .withColumn("rn", F.row_number().over(w_probe))
-                  .filter(F.col("rn") <= n_probe)
-                  .select("query_id", "qv", "cell_id"))
+        nearest_cell(F.col("nv"), F.col("nn"), cent_list).alias("cell_id"),
+        _sq8_dequantized(F.col("nv"), mn, mx).alias("dv"))
     scored = (F.broadcast(probes).join(assigned, "cell_id")
               .filter(F.col("query_id") != F.col("neighbor_id"))
               .select("query_id", "neighbor_id",
@@ -1552,7 +1377,6 @@ def rp_rerank_topk(emb: DataFrame, id_col: str, vec_col: str,
     for exact scoring, again broadcast.  Returns (query_id, neighbor_id,
     cos, rank).
     """
-    from kstream_spark.functions.vectors import dot, norm
     from kstream_spark.operators.vectors import random_projection
     if in_dim is None:  # cheap scalar probe; empty input -> empty result
         row = emb.select(F.size(F.col(vec_col)).alias("d")).first()

@@ -100,7 +100,7 @@ def random_projection(df: DataFrame, vec_col: str, in_dim: int,
     traffic.  (The unrolled per-term add/subtract chain form blows the
     generated-method size limit at 16x64 terms — Janino
     InternalCompilerException, interpreted fallback — the same hazard
-    cell_cosine_scores documents; the literal-matrix fold stays inside
+    nearest_cell documents; the literal-matrix fold stays inside
     the normal expression evaluator.)  [[oracle-parity]]: x*(+-1.0) is an
     exact sign flip and the 0.0-seeded left fold in input order equals a
     left-associated add/subtract chain, so any engine replaying that

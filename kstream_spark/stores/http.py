@@ -36,13 +36,36 @@ class StoreHttpServer:
             def log_message(self, *a):  # quiet
                 pass
 
-            def _json(self, code: int, payload) -> None:
+            def _json(self, code: int, payload,
+                      headers: dict | None = None) -> None:
                 body = json.dumps(payload, default=str).encode()
                 self.send_response(code)
                 self.send_header("Content-Type", "application/json")
+                for name, value in (headers or {}).items():
+                    self.send_header(name, value)
                 self.send_header("Content-Length", str(len(body)))
                 self.end_headers()
                 self.wfile.write(body)
+
+            def _paging(self, query: str, names: tuple):
+                """The non-negative int query parameters ``names``
+                (``limit`` defaults to the scan cap, the others to 0), or
+                None after answering 400 when one is not."""
+                q = parse_qs(query)
+                raw = [q.get(n, [DEFAULT_SCAN_LIMIT if n == "limit" else 0])
+                       [0] for n in names]
+                label = "/".join(names)
+                try:
+                    vals = [int(r) for r in raw]
+                except (TypeError, ValueError):
+                    self._json(400, {"error": f"bad {label}: "
+                                     + "/".join(repr(r) for r in raw)})
+                    return None
+                if min(vals) < 0:
+                    self._json(400, {"error": f"bad {label}: "
+                                     + "/".join(str(v) for v in vals)})
+                    return None
+                return vals
 
             def do_GET(self):  # noqa: N802
                 url = urlparse(self.path)
@@ -74,16 +97,10 @@ class StoreHttpServer:
                                 return self._json(
                                     404, {"error": f"index dose not "
                                           f"exist: {col}"})
-                            q = parse_qs(url.query)
-                            raw = q.get("limit", [DEFAULT_SCAN_LIMIT])[0]
-                            try:
-                                limit = int(raw)
-                            except (TypeError, ValueError):
-                                return self._json(
-                                    400, {"error": f"bad limit: {raw!r}"})
-                            if limit < 0:   # parity with the paged scan
-                                return self._json(
-                                    400, {"error": f"bad limit: {limit}"})
+                            paging = self._paging(url.query, ("limit",))
+                            if paging is None:
+                                return None
+                            limit, = paging
                             # limit+1 rows so a capped dump is
                             # distinguishable from a complete index —
                             # same X-Truncated contract as the paged
@@ -99,31 +116,15 @@ class StoreHttpServer:
                                 keys = [r[c] for c in store.key]
                                 idx.setdefault(k, []).append(
                                     keys[0] if len(keys) == 1 else keys)
-                            body = json.dumps(idx, default=str).encode()
-                            self.send_response(200)
-                            self.send_header("Content-Type",
-                                             "application/json")
-                            self.send_header("X-Truncated",
-                                             "true" if truncated else "false")
-                            self.send_header("Content-Length", str(len(body)))
-                            self.end_headers()
-                            self.wfile.write(body)
-                            return None
+                            return self._json(200, idx, {
+                                "X-Truncated":
+                                    "true" if truncated else "false"})
                         if len(parts) == 2:          # full scan (paged)
-                            q = parse_qs(url.query)
-                            raw = q.get("limit", [DEFAULT_SCAN_LIMIT])[0]
-                            off_raw = q.get("offset", [0])[0]
-                            try:
-                                limit = int(raw)
-                                offset = int(off_raw)
-                            except (TypeError, ValueError):
-                                return self._json(
-                                    400, {"error": f"bad limit/offset: "
-                                          f"{raw!r}/{off_raw!r}"})
-                            if limit < 0 or offset < 0:
-                                return self._json(
-                                    400, {"error": f"bad limit/offset: "
-                                          f"{limit}/{offset}"})
+                            paging = self._paging(url.query,
+                                                  ("limit", "offset"))
+                            if paging is None:
+                                return None
+                            limit, offset = paging
                             # page against a DETERMINISTIC key sort so
                             # ?offset= walks the COMPLETE store without
                             # gaps or repeats (the reference pages the
@@ -139,20 +140,11 @@ class StoreHttpServer:
                             rows = [r.asDict() for r in
                                     scan.limit(limit + 1).collect()]
                             truncated = len(rows) > limit
-                            self.send_response(200)
-                            body = json.dumps(rows[:limit],
-                                              default=str).encode()
-                            self.send_header("Content-Type",
-                                             "application/json")
-                            self.send_header("X-Truncated",
-                                             "true" if truncated else "false")
+                            headers = {"X-Truncated":
+                                       "true" if truncated else "false"}
                             if truncated:
-                                self.send_header("X-Next-Offset",
-                                                 str(offset + limit))
-                            self.send_header("Content-Length", str(len(body)))
-                            self.end_headers()
-                            self.wfile.write(body)
-                            return None
+                                headers["X-Next-Offset"] = str(offset + limit)
+                            return self._json(200, rows[:limit], headers)
                         if len(parts) == 3:          # point lookup
                             key: object = parts[2]
                             try:

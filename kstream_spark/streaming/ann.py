@@ -11,6 +11,11 @@ is the search half that reads codes only.  Per micro-batch cost is one
 literal-projection cell assignment + one Arrow encode pass over JUST the
 new vectors; the 100 TB standing corpus is never re-scanned.
 
+Streamed and batch results agree by construction: encoding goes through
+operators/similarity's cell assignment and encoder, and search through
+its ``adc_tables``, ``probe_cells`` and ADC scorer — the same functions
+the batch searchers call.
+
 Capability superset: the reference has no vector tooling; the lifecycle
 mirrors its changelog-backed store maintenance (continuously-updated
 derived state) applied to an ANN index.
@@ -18,10 +23,12 @@ derived state) applied to an ANN index.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kstream_spark.util import local_df
+from kstream_spark.functions.vectors import as_double
+from kstream_spark.operators import similarity as S
 
 
 def encode_against_index(batch: DataFrame, id_col: str, vec_col: str,
@@ -29,59 +36,14 @@ def encode_against_index(batch: DataFrame, id_col: str, vec_col: str,
                          residual: bool = False) -> DataFrame:
     """Encode vectors against a FIXED index: nearest-cell assignment as a
     literal projection (no join/shuffle), PQ codes as one Arrow pass —
-    the identical arithmetic (round-6 HALF_UP, lowest-index ties) as
-    training-time encode, so codes are reproducible from any engine.
-    ``residual=True`` encodes the spherical residual v/||v|| -
-    centroid[cell] (the ivfpq_residual_topk formulation — codebooks
-    must have been trained on residuals); the centroid subtraction
-    happens inside the same Arrow pass.  Returns
-    (id, cell_id, codes array<int>)."""
-
-    import numpy as np
-    import pandas as pd
-
-    from kstream_spark.functions.vectors import (as_double,
-                                                 cell_cosine_scores, norm)
-
-    src = batch.select(F.col(id_col).alias("_id"),
-                       as_double(F.col(vec_col)).alias("v")) \
-        .withColumn("n", norm(F.col("v")))
-    cell_scores = cell_cosine_scores(F.col("v"), F.col("n"), centroids)
-    v_out = (F.transform(F.col("v"), lambda x: x / F.col("n"))
-             if residual else F.col("v"))
-    assigned = src.withColumn(
-        "cell_id",
-        (F.array_position(cell_scores, F.array_max(cell_scores)) - 1)
-        .cast("long")).select("_id", "cell_id", v_out.alias("v"))
-
-    cents_mat = np.asarray(centroids, dtype=np.float64)
-    bks = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    sub = bks[0].shape[1]
-    id_dt = batch.schema[id_col].dataType.simpleString()
-
-    def encode(batches):
-        import numpy as np  # noqa: F811
-        import pandas as pd  # noqa: F811
-        for pdf in batches:
-            mat = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-            if residual:
-                cells = pdf["cell_id"].to_numpy().astype(np.int64)
-                mat = mat - cents_mat[cells]
-            cols = []
-            for j, cb in enumerate(bks):
-                x = mat[:, j * sub:(j + 1) * sub]
-                raw = ((x[:, None, :] - cb[None, :, :]) ** 2).sum(-1)
-                d = np.copysign(np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6, raw)
-                cols.append(np.argmin(d, axis=1))
-            codes = np.stack(cols, axis=1)
-            yield pd.DataFrame(
-                {"_id": pdf["_id"].to_numpy(dtype=object),
-                 "cell_id": pdf["cell_id"].to_numpy(dtype=object),
-                 "codes": list(codes.astype(int).tolist())})
-
-    return (assigned.mapInPandas(
-        encode, schema=f"_id {id_dt}, cell_id long, codes array<int>")
-        .withColumnRenamed("_id", id_col))
+    the encoder the batch IVF-PQ searchers use, so codes are
+    reproducible from any engine.  ``residual=True`` encodes the
+    spherical residual v/||v|| - centroid[cell] (the ivfpq_residual_topk
+    formulation — codebooks must have been trained on residuals).
+    Returns (id, cell_id, codes array<int>)."""
+    return (S._encode_cells(batch, id_col, vec_col, centroids, codebooks,
+                            residual=residual)
+            .withColumnRenamed("_id", id_col))
 
 
 def admit_stream(emb_stream: DataFrame, id_col: str, vec_col: str,
@@ -122,75 +84,30 @@ def adc_topk_from_codes(codes: DataFrame, queries: DataFrame,
     (candidates in unprobed cells drop out of the equi-join on cell_id
     — the IVF cost dial; None scores every cell).  Returns (query_id,
     neighbor_id, adist, rank)."""
-    import numpy as np
-
-    from kstream_spark.functions.vectors import as_double
-    from kstream_spark.operators.similarity import _per_query_topk
-
     bks = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    m_, sub = len(bks), bks[0].shape[1]
     qrows = queries.select(F.col(id_col).alias("query_id"),
                            as_double(F.col(vec_col)).alias("qv")).collect()
-    spark = codes.sparkSession
     id_dt = queries.schema[id_col].dataType.simpleString()
-
-    def dist_tabs(vec):
-        tabs = []
-        for j, cb in enumerate(bks):
-            x = vec[j * sub:(j + 1) * sub]
-            raw = ((cb - x[None, :]) ** 2).sum(-1)
-            d = np.copysign(np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6, raw)
-            tabs.append([float(v) for v in d])
-        return tabs
-
-    adist = None
-    for j in range(m_):
-        term = F.element_at(F.element_at("tabs", j + 1),
-                            F.element_at("codes", j + 1) + 1)
-        adist = term if adist is None else adist + term
-
     if centroids is None:           # plain ADC: one table per query
-        tab_rows = [(r["query_id"],
-                     dist_tabs(np.asarray(r["qv"], dtype=np.float64)))
-                    for r in qrows]
-        tables = F.broadcast(local_df(
-            spark, tab_rows, f"query_id {id_dt}, tabs array<array<double>>"))
-        scored = (codes.select(F.col(id_col).alias("neighbor_id"), "codes")
-                  .join(tables, F.col("query_id") != F.col("neighbor_id"))
-                  .select("query_id", "neighbor_id",
-                          F.round(adist, 6).alias("adist")))
-    else:                           # residual store: table per (q, cell)
-        cents_mat = np.asarray(centroids, dtype=np.float64)
-        cnorm = np.sqrt((cents_mat ** 2).sum(-1))
-        tab_rows = []
-        for r in qrows:
-            qv = np.asarray(r["qv"], dtype=np.float64)
-            acc = 0.0                       # fold-order norm (oracle parity)
-            for x in qv:
-                acc += float(x) * float(x)
-            qvn = qv / float(np.sqrt(acc))
-            if n_probe is None:             # exhaustive: every cell
-                probe_cells = range(cents_mat.shape[0])
-            else:                           # ivfpq probing: nearest cells
-                raw = (cents_mat @ qv) / (cnorm * float(np.sqrt(acc)))
-                cos = np.copysign(
-                    np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6, raw)
-                order = np.lexsort((np.arange(len(cos)), -cos))
-                probe_cells = [int(c) for c in order[:n_probe]]
-            for cell in probe_cells:
-                tab_rows.append((r["query_id"], cell,
-                                 dist_tabs(qvn - cents_mat[cell])))
-        tables = F.broadcast(local_df(
-            spark, tab_rows,
-            f"query_id {id_dt}, cell_id long, "
-            "tabs array<array<double>>"))
-        scored = (codes.select(F.col(id_col).alias("neighbor_id"),
-                               "cell_id", "codes")
-                  .join(tables, on="cell_id")
-                  .filter(F.col("query_id") != F.col("neighbor_id"))
-                  .select("query_id", "neighbor_id",
-                          F.round(adist, 6).alias("adist")))
-    return _per_query_topk(scored, k)
+        tab_rows = [(qid, S.adc_tables(np.asarray(qv, dtype=np.float64),
+                                       bks)) for qid, qv in qrows]
+        return S._adc_topk(
+            codes.select(F.col(id_col).alias("neighbor_id"), "codes"),
+            tab_rows, id_dt, len(bks), k)
+    # residual store: a table per (query, probed cell); the probe uses
+    # the fold-order query norm that also normalizes the query
+    cents = np.asarray(centroids, dtype=np.float64)
+    tab_rows = []
+    for qid, qv in qrows:
+        qv = np.asarray(qv, dtype=np.float64)
+        qnorm = S.fold_norm(qv)
+        cells = (range(cents.shape[0]) if n_probe is None
+                 else S.probe_cells(qv, cents, n_probe, qnorm=qnorm))
+        tab_rows += [(qid, cell, S.adc_tables(qv / qnorm - cents[cell], bks))
+                     for cell in cells]
+    return S._adc_topk(
+        codes.select(F.col(id_col).alias("neighbor_id"), "cell_id", "codes"),
+        tab_rows, id_dt, len(bks), k, on="cell_id")
 
 
 def compact_code_store(spark, store_dir: str, out_dir: str, id_col: str,
@@ -237,10 +154,9 @@ def recall_report(emb: DataFrame, id_col: str, vec_col: str,
     recovers.  The measurement half of the drift->retrain loop (the
     sim_ann_drift / sim_ann_retrain driver rows run exactly this shape).
     Returns (query_id, n_hits)."""
-    from kstream_spark.operators.similarity import cosine_topk, pq_adc_topk
-    exact = cosine_topk(emb, id_col, vec_col, query_ids=query_ids,
+    exact = S.cosine_topk(emb, id_col, vec_col, query_ids=query_ids,
                         k=k).select("query_id", "neighbor_id")
-    approx = pq_adc_topk(emb, id_col, vec_col, query_ids, codebooks,
+    approx = S.pq_adc_topk(emb, id_col, vec_col, query_ids, codebooks,
                          k=k).select("query_id", "neighbor_id")
     ind = F.broadcast(approx.withColumn("_hit", F.lit(1)))
     return (exact.join(ind, ["query_id", "neighbor_id"], "left")
@@ -264,11 +180,10 @@ def retrain_if_drifted(emb: DataFrame, id_col: str, vec_col: str,
     ``(books, report_df, retrained)``: ``books`` is the retrained set
     when triggered, the incoming ``codebooks`` otherwise; ``report_df``
     is the BEFORE audit either way."""
-    from kstream_spark.operators.similarity import pq_codebooks
     report = recall_report(emb, id_col, vec_col, query_ids, codebooks, k=k)
     total = report.agg(F.sum("n_hits")).collect()[0][0] or 0
     if total >= threshold_hits:
         return codebooks, report, False
-    fresh = pq_codebooks(emb, vec_col, m=m, k=pq_k, iters=pq_iters,
+    fresh = S.pq_codebooks(emb, vec_col, m=m, k=pq_k, iters=pq_iters,
                          id_col=id_col)
     return fresh, report, True

@@ -135,9 +135,12 @@ def admit_stream(df: DataFrame, corpus_path: str, signature_path: str,
         (sigs.withColumn(epoch_col, F.lit(epoch_id))
          .write.mode("overwrite").partitionBy(epoch_col)
          .option("partitionOverwriteMode", "dynamic").parquet(signature_path))
-        for h in [admitted, *handles]:
-            h.unpersist()                # persisted relations
-            free_local_checkpoint(h)     # the checkpointed fresh handle
+        # handles = [checkpointed fresh survivors, two persisted minhash
+        # relations]; only the checkpoint has a LogicalRDD root to free
+        fresh, *persisted = handles
+        for h in [admitted, *persisted]:
+            h.unpersist()
+        free_local_checkpoint(fresh)
 
     return (df.writeStream.foreachBatch(_admit)
             .option("checkpointLocation", checkpoint_dir).start())

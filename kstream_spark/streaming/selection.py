@@ -81,8 +81,7 @@ def admit_cluster_balanced_stream(df: DataFrame, centroids_path: str,
     function of ids and centroids.  Returns the StreamingQuery."""
     from pyspark.sql import Window as W
     from kstream_spark.functions.text import hash_str
-    from kstream_spark.functions.vectors import (as_double,
-                                                 cell_cosine_scores, norm)
+    from kstream_spark.functions.vectors import as_double, nearest_cell, norm
     from kstream_spark.operators.similarity import load_centroids
 
     def _admit(batch: DataFrame, epoch_id: int) -> None:
@@ -106,14 +105,12 @@ def admit_cluster_balanced_stream(df: DataFrame, centroids_path: str,
         src = (batch.select(F.col(id_col).alias("vec_id"),
                             as_double(F.col(vec_col)).alias("v"))
                .withColumn("_n", norm(F.col("v"))))
-        scores = cell_cosine_scores(F.col("v"), F.col("_n"), cents)
         key = (F.conv(F.substring(
             hash_str(F.col("vec_id").cast("string"), "cbal"), 1, 12),
             16, 10).cast("double"))
         assigned = src.select(
             "vec_id",
-            (F.array_position(scores, F.array_max(scores)) - 1)
-            .cast("long").alias("cell_id"),
+            nearest_cell(F.col("v"), F.col("_n"), cents).alias("cell_id"),
             key.alias("_sk"))
         if store is not None:
             taken = F.broadcast(

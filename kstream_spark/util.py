@@ -112,37 +112,6 @@ def _warn_free_checkpoint_fallback(exc: Exception) -> None:
         RuntimeWarning, stacklevel=3)
 
 
-def with_salt(df: DataFrame, buckets: int, salt_col: str = "__salt") -> DataFrame:
-    """Add a per-ROW salt column for skew mitigation.
-
-    The salt must vary WITHIN a key (that's what splits a hot key across
-    ``buckets`` reducers), so it is derived from the row position, not the
-    key.  Aggregate on (key, salt) first (partial), then on key (final) —
-    two balanced shuffles instead of one skewed one.  For skewed joins,
-    explode the small side over all salt values and join on (key, salt).
-    AQE's skew-join handling (on by default in get_spark) covers joins at
-    runtime; explicit salting is the aggregation-side tool."""
-    from pyspark.sql import functions as F
-    return df.withColumn(
-        salt_col, F.pmod(F.monotonically_increasing_id(), F.lit(buckets)))
-
-
-def salted_agg(df: DataFrame, key: str, aggs: dict, buckets: int = 16) -> DataFrame:
-    """Two-phase skew-safe aggregation.
-
-    ``aggs``: name -> (partial Column aggregate, final reducer name), where
-    the final reducer is one of 'sum' | 'min' | 'max' (the re-combine step
-    for algebraic aggregates; count re-combines with sum)."""
-    from pyspark.sql import functions as F
-    salted = with_salt(df, buckets)
-    partial = salted.groupBy(key, "__salt").agg(
-        *[expr.alias(f"__p_{name}") for name, (expr, _fin) in aggs.items()])
-    final_fns = {"sum": F.sum, "min": F.min, "max": F.max}
-    finals = [final_fns[fin](F.col(f"__p_{name}")).alias(name)
-              for name, (_expr, fin) in aggs.items()]
-    return partial.groupBy(key).agg(*finals)
-
-
 def skew_join(left: DataFrame, right: DataFrame, key: str,
               how: str = "inner", hot_keys: list | None = None,
               hot_threshold: int = 100_000,
@@ -306,28 +275,3 @@ def input_size_bytes(df: DataFrame) -> int | None:
     scans).  None when stats are unavailable — see ``_plan_size_bytes``
     for the private-API caveat."""
     return _plan_size_bytes(df)
-
-
-def tune_shuffle_partitions(spark, input_bytes: int,
-                            target_partition_bytes: int = 128 << 20,
-                            max_partitions: int = 200_000) -> int:
-    """Size ``spark.sql.shuffle.partitions`` from the job's input volume.
-
-    The default (200, or a fixed test value) is wrong at both ends of the
-    scale: at 100 TB it packs ~500 GB into each reduce partition (OOM/spill),
-    at 100 MB it schedules hundreds of empty tasks.  The right starting
-    point is input_bytes / target_partition_bytes, floored at the cluster's
-    core count so every core gets work; with AQE's partition coalescing on
-    (session.get_spark enables it) an over-estimate is cheap — AQE merges
-    small shuffle partitions at runtime, but it can never SPLIT an
-    under-estimated one (only the skew-join path splits, and just for
-    joins), so erring high is the safe side.
-
-    Call once per job with the dominant input's size
-    (``input_size_bytes``); returns the partition count it set."""
-    import math
-    cores = spark.sparkContext.defaultParallelism
-    parts = max(cores, min(math.ceil(input_bytes / target_partition_bytes),
-                           max_partitions))
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    return parts

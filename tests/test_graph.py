@@ -218,21 +218,20 @@ def test_label_propagation_tiebreak_is_smallest_label(spark):
 
 
 def test_triangle_count_methods_agree(spark):
-    """adj (array-intersect edge iterator) and wedge (row join) must give
-    identical per-node counts on a random-ish graph with hubs, isolated
-    pairs, and both edge directions present."""
+    """The degree-orientation count must agree with the brute-force
+    per-node counts on a random-ish graph with hubs, isolated pairs, and
+    both edge directions present; the old method= switch is gone."""
     import random
+
+    import pytest as _pytest
 
     from kstream_spark.operators.graph import triangle_count
     rng = random.Random(7)
     edges = [(rng.randrange(30), rng.randrange(30)) for _ in range(150)]
     edges += [(0, i) for i in range(1, 20)]          # hub
     df = spark.createDataFrame(edges, "s long, d long")
-    a = {(r.node, r.n_triangles)
-         for r in triangle_count(df, "s", "d", method="adj").collect()}
-    w = {(r.node, r.n_triangles)
-         for r in triangle_count(df, "s", "d", method="wedge").collect()}
-    assert a == w and len(a) > 0
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
+    got = {r.node: r.n_triangles for r in
+           triangle_count(df, "s", "d").collect()}
+    assert got == _reference_triangles(edges) and sum(got.values()) > 0
+    with _pytest.raises(TypeError):
         triangle_count(df, "s", "d", method="nope")

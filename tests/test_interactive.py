@@ -65,10 +65,18 @@ def test_full_scan_truncation_signal(server):
 
 
 def test_full_scan_bad_limit_400(server):
-    for bad in ("abc", "-1"):
+    """A bad ?limit= (or ?offset=) answers 400 naming the parameter and
+    the rejected value — on the paged scan and the index dump alike."""
+    for path, text in (
+            ("/stores/accounts?limit=abc", "bad limit/offset: 'abc'/0"),
+            ("/stores/accounts?limit=-1", "bad limit/offset: -1/0"),
+            ("/stores/accounts?offset=-2", "bad limit/offset: 10000/-2"),
+            ("/stores/accounts/indexes/tag?limit=abc", "bad limit: 'abc'"),
+            ("/stores/accounts/indexes/tag?limit=-1", "bad limit: -1")):
         with pytest.raises(urllib.error.HTTPError) as ei:
-            _get(server, f"/stores/accounts?limit={bad}")
+            _get(server, path)
         assert ei.value.code == 400
+        assert json.loads(ei.value.read()) == {"error": text}
 
 
 def test_point_lookup_and_miss(server):

@@ -288,19 +288,17 @@ def test_cluster_balanced_select_equal_depth_and_window_parity(spark):
     assert (depth <= 7).all() and len(out) >= 7  # capped, non-trivial
     assert set(out["rk"]) <= set(range(1, 8))
     # parity with the naive window form on the same assignment + key
-    from kstream_spark.functions.vectors import (as_double,
-                                                 cell_cosine_scores, norm)
+    from kstream_spark.functions.vectors import as_double, nearest_cell, norm
     src = (emb.select(F.col("vec_id"),
                       as_double(F.col("embedding")).alias("v"))
            .withColumn("_n", norm(F.col("v"))))
-    sc = cell_cosine_scores(F.col("v"), F.col("_n"), cents)
     key = (F.conv(F.substring(
         hash_str(F.col("vec_id").cast("string"), "cbal"), 1, 12), 16, 10)
         .cast("double"))
     naive = (src.select(
         "vec_id",
-        (F.array_position(sc, F.array_max(sc)) - 1).cast("long")
-        .alias("cell_id"), key.alias("sk"))
+        nearest_cell(F.col("v"), F.col("_n"), cents).alias("cell_id"),
+        key.alias("sk"))
         .withColumn("rk", F.row_number().over(
             W.partitionBy("cell_id").orderBy("sk", "vec_id")).cast("long"))
         .filter(F.col("rk") <= 7).toPandas())

@@ -81,27 +81,6 @@ def test_to_sink_with_tombstone_filter(spark, events, tmp_path):
     assert sorted(r.id for r in back.collect()) == [1, 2]
 
 
-def test_salted_agg_matches_plain(spark):
-    from kstream_spark.util import salted_agg, with_salt
-    # one hot key (90% of rows) + others
-    df = spark.range(0, 10000).selectExpr(
-        "CASE WHEN id % 10 < 9 THEN 0 ELSE id % 7 END AS k",
-        "CAST(id AS DOUBLE) AS v")
-    got = {(r.k): (r.total, r.n, r.mx) for r in salted_agg(
-        df, "k",
-        {"total": (F.sum("v"), "sum"),
-         "n": (F.count("*"), "sum"),
-         "mx": (F.max("v"), "max")}).collect()}
-    want = {r.k: (r.total, r.n, r.mx) for r in
-            df.groupBy("k").agg(F.sum("v").alias("total"),
-                                F.count("*").alias("n"),
-                                F.max("v").alias("mx")).collect()}
-    assert got == want
-    # the salt actually splits the hot key across buckets
-    salted = with_salt(df.filter("k = 0"), buckets=8)
-    assert salted.select("__salt").distinct().count() > 1
-
-
 def test_filter_strict_routes_null_predicates_to_dlq(spark):
     from kstream_spark import StreamBuilder
     from kstream_spark.operators.joins import DLQ

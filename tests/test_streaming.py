@@ -757,12 +757,21 @@ def test_dedup_stream_by_content_hash(spark, tmp_path):
         "SELECT * FROM dedup_content_out").columns
 
 
-def test_admit_stream_incremental_corpus(spark, tmp_path):
+def test_admit_stream_incremental_corpus(spark, tmp_path, monkeypatch):
     """Streaming corpus admission: batch 2's exact dup AND near-dup of
     batch-1 docs are rejected via the PERSISTED signature store (corpus
-    text is never re-minhashed); novel docs are admitted."""
+    text is never re-minhashed); novel docs are admitted.  Each batch
+    frees its checkpointed survivors without free_local_checkpoint's
+    ContextCleaner fallback (made to raise here, failing the query)."""
     import time as _time
+
+    import kstream_spark.util as u
     from kstream_spark.streaming.corpus import admit_stream
+
+    def fallback(exc):
+        raise AssertionError(f"free_local_checkpoint fell back: {exc!r}")
+
+    monkeypatch.setattr(u, "_warn_free_checkpoint_fallback", fallback)
 
     base = ("the quick brown fox jumps over the lazy dog and then runs far "
             "away into the deep dark forest to hide from every hunter")
