@@ -546,18 +546,9 @@ INVENTORY.update(QUALITY_INVENTORY)
 # touched + the 27-query r6-stale band (group 3's current front).
 
 _TOUCHED_THIS_ROUND: list[str] = [
-    # one implementation per vector-quantization step (round6, pq_codes,
-    # adc_tables, probe_cells, nearest_cell, Lloyd kernels, one encoder
-    # and ADC scorer) — every query that runs the shared code
-    "sim_sq8_topk", "sim_sq8_recall", "sim_ivf_recall", "sim_ivfpq_recall",
-    "sim_ivf_kmeans_topk", "sim_pq_adc_topk", "sim_ivfpq_topk",
-    "sim_ivfpq_residual_topk", "sim_ivfsq_topk", "sim_ann_retrain",
-    "sim_ivf_topk", "sim_cosine_topk", "dedup_semantic", "sim_ann_drift",
-    "select_cluster_balanced", "sim_mmr_rerank", "sim_rp_recall",
-    "sim_rp_rerank_topk", "sim_cosine_pairs", "sim_lsh_pairs",
-    "dedup_embedding_lsh", "sim_hard_negatives",
-    # triangle_count: the wedge arm and its options are gone
-    "graph_triangles",
+    # stores hold executed state: the registry write path appends, and the
+    # first read folds the parts into a checkpointed, compacted base
+    "gt_versioned_upsert", "j3_stream_table_join",
 ]
 
 

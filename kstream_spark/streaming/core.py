@@ -15,8 +15,8 @@ Reference parity map (citations into /root/reference/):
   exactly-once via record UUID     consumer/consumer.go:16-41
       -> dedup_stream(): withWatermark + dropDuplicates on the UUID
   GlobalTable continuous sync      kstream/global_table_stream_instance.go:105-161
-      -> materialize_stream(): foreachBatch merge into the store registry
-         (version-gated latest-by-key per batch)
+      -> materialize_stream(): each micro-batch checkpointed once into the
+         store registry, folded version-gated latest-by-key on read
   DLQ producer                     kstream/dlq/dlq.go:12-79
       -> route_errors(): per-batch predicate split, failures to a DLQ sink
 """
@@ -91,14 +91,20 @@ def materialize_stream(df: DataFrame, registry, store_name: str,
 
     Ref: GlobalTable sync loop (global_table_stream_instance.go:105-161) and
     Materialize (processors/materializer.go:65-94).  Each micro-batch is
-    version-gated merged into the registry store; the merge itself re-compacts
-    (union + max_by), so replayed batches are idempotent — at-least-once
-    delivery + idempotent apply == effective exactly-once, replacing the
-    reference's mark->process->delete changelog protocol (processor.go:116-170).
+    executed exactly once, inside its batch, as one
+    ``localCheckpoint(eager=True)`` (no shuffle): upstream operator state
+    (``dedup_stream``) commits with the batch, and the lineage back to the
+    source files is cut.  The checkpoint is appended to the store as a
+    pending part; the store's next read folds it into the compacted base
+    with a version-gated ``max_by``, so a replayed batch — after a crash
+    anywhere in the batch, even after its part was appended — appends the
+    same versions and folds to the same store: at-least-once delivery +
+    idempotent apply == effective exactly-once, replacing the reference's
+    mark->process->delete changelog protocol (processor.go:116-170).
     """
     def apply_batch(bdf: DataFrame, epoch_id: int) -> None:
         registry.materialize(store_name, bdf, key=key, version=version,
-                             tombstone=tombstone)
+                             tombstone=tombstone, micro_batch=True)
 
     writer = df.writeStream.foreachBatch(apply_batch).outputMode("update")
     if checkpoint_dir:

@@ -6,10 +6,11 @@ Drives FOUR full streaming pipeline shapes end-to-end and reports
 records/second for each:
 
   materialize — file-stream source -> filter/transform -> version-gated
-      store materialization (foreachBatch merge); the reference's
-      hot path (consume -> process -> materialized view).  The in-memory
-      registry defers the merge work to the first read, so the timed
-      window ends after a verified get_all() aggregate.
+      store materialization (each micro-batch checkpointed into the
+      store); the reference's hot path (consume -> process ->
+      materialized view).  The timed window ends after a verified
+      get_all() aggregate, whose read folds the batches' parts into the
+      store's compacted base.
   windowed_agg — watermarked tumbling-window aggregation (count/sum/
       approx-distinct per key-group), the built-in stateful shape with
       no Python in the loop.
@@ -65,9 +66,15 @@ def bench_materialize(spark, b, tmp: str, n: int) -> dict:
                if "addBatch" in (p["durationMs"] or {})]
     q.stop()
     q.awaitTermination(30)
-    # the registry only records lineage per batch; reading the store is
-    # where the merge runs, so the window ends after a verified read:
-    # key k = uuid % 10_000 keeps its highest uuid
+    # every batch executes its input inside the batch; a batch that
+    # reports no input rows deferred its work past the timed window
+    rows = [p["numInputRows"] for p in batches]
+    if not batches or min(rows) <= 0:
+        raise RuntimeError(f"materialize: batch input rows {rows}, "
+                           "expected > 0 in every batch")
+    # the first read folds the parts into the compacted store, so the
+    # window ends after a verified read: key k = uuid % 10_000 keeps its
+    # highest uuid
     got = b.stores.store("bench_store").get_all().agg(
         F.count("*").alias("keys"), F.sum("uuid").alias("uuids")).first()
     dt = time.time() - t0
@@ -80,7 +87,7 @@ def bench_materialize(spark, b, tmp: str, n: int) -> dict:
             "seconds": round(dt, 2),
             "micro_batch_latency_ms": [p["durationMs"]["triggerExecution"]
                                        for p in batches],
-            "batch_input_rows": [p["numInputRows"] for p in batches],
+            "batch_input_rows": rows,
             "distinct_keys_materialized": got["keys"]}
 
 
