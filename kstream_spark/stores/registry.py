@@ -17,23 +17,23 @@ endpoints.  Secondary indexes need no maintenance: a filter on any column IS
 the index lookup (Catalyst prunes/pushes down).
 
 A store holds executed state, as the reference applies each record to its
-store on arrival (processors/materializer.go:65-94): a compacted,
-``localCheckpoint``-ed base plus a short list of pending parts — Structured
-Streaming's per-batch state deltas folded into snapshots.  A write appends a
-part; a foreachBatch micro-batch is executed once, inside its batch, into a
-checkpoint the store owns (the batch's upstream operator state commits and
-the lineage back to the source files is cut), while a batch caller's stable
-relation is appended as-is.  Every read folds the pending parts and the base
-into a new checkpointed base under a per-store lock (``Store._fold``, the
-one place the registry runs ``compact_latest``), so a lookup scans one
-compacted relation and never re-runs the pipeline that fed the store.
-Writes fold too once the pending count reaches Spark's own delta-to-snapshot
-threshold (``spark.sql.streaming.stateStore.minDeltasForSnapshot``), so a
-store nobody reads stays bounded.  A fold frees the micro-batch parts it
-folded at once and the base it replaced at the NEXT fold, so a frame read
-from a store stays valid until the store has folded twice more.  A store's
-temp view points at its last fold; ``StoreRegistry.sql`` folds every store
-first.
+store on arrival (processors/materializer.go:65-94): a compacted base plus a
+short list of pending parts — Structured Streaming's per-batch state deltas
+folded into snapshots.  A write executes its input once into a
+``localCheckpoint`` the store owns and appends it as a part; for a
+foreachBatch micro-batch that happens inside its batch, so the batch's
+upstream operator state commits and the lineage back to the source files is
+cut.  Every read folds the pending parts and the base into a new base under
+a per-store lock (``Store._fold``, the one place the registry runs
+``compact_latest``), so a lookup scans one compacted relation and never
+re-runs the pipeline that fed the store.  Writes fold too once ``_FOLD_AT``
+parts are pending, so a store nobody reads stays bounded.  The in-memory
+registry's base is a ``localCheckpoint``; ``PersistentStoreRegistry``'s is the
+parquet snapshot the fold just wrote.  A fold frees the parts it folded (no
+reader ever saw them) and only drops its reference to the base it replaced:
+a frame a reader still holds keeps that base's blocks alive, and Spark's
+ContextCleaner frees them once no frame does.  A store's temp view points at
+its last fold; ``StoreRegistry.sql`` folds every store first.
 
 TTL (store.go:25, memory cleaner memory.go:88-100): rows carry an expiry
 timestamp; reads filter ``expiry > now`` — lazy expiry, same observable
@@ -44,7 +44,7 @@ from __future__ import annotations
 
 import threading
 from functools import reduce
-from typing import Sequence
+from typing import Callable, Sequence
 
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -53,9 +53,10 @@ from pyspark.sql import functions as F
 from kstream_spark.global_table import compact_latest
 from kstream_spark.util import free_local_checkpoint
 
-# Spark's delta-to-snapshot threshold for its own state stores; a write that
-# leaves this many parts pending folds them
-_FOLD_AT_CONF = "spark.sql.streaming.stateStore.minDeltasForSnapshot"
+# a write that leaves this many parts pending folds them: the default of
+# Structured Streaming's own delta-to-snapshot threshold
+# (spark.sql.streaming.stateStore.minDeltasForSnapshot)
+_FOLD_AT = 10
 
 
 def _checkpoint(df: DataFrame) -> DataFrame:
@@ -74,32 +75,31 @@ class Store:
     """A named latest-by-key KV relation with the reference Store surface.
 
     ``key``, ``version`` and ``tombstone`` are those of the latest write;
-    the fold compacts with them."""
+    the fold compacts with them and executes the result with ``execute``
+    (the registry's: a ``localCheckpoint`` or a parquet snapshot)."""
 
     def __init__(self, name: str, key: str | Sequence[str],
-                 ttl_col: str | None = None, base: DataFrame | None = None):
+                 ttl_col: str | None = None, base: DataFrame | None = None,
+                 execute: Callable[[DataFrame], DataFrame] = _checkpoint):
         self.name = name
         self.key = [key] if isinstance(key, str) else list(key)
         self.ttl_col = ttl_col
         self.version: str | None = None
         self.tombstone: Column | str | None = None
         self._base = base          # compacted relation; None until a fold
-        self._base_owned = False   # True once ``_base`` is a fold's checkpoint
-        self._retired: list[DataFrame] = []   # the replaced owned base
-        self._pending: list[DataFrame] = []
-        self._owned: list[DataFrame] = []   # pending micro-batch checkpoints
+        self._pending: list[DataFrame] = []   # checkpoints of the writes
+        self._execute = execute
         self._lock = threading.RLock()
 
     def _fold(self) -> DataFrame:
         """The store as one compacted relation: fold the pending parts into
-        the base, execute it once into a new ``localCheckpoint`` and point
-        the temp view at it.
+        the base, execute it once into a new base and point the temp view
+        at it.
 
-        Frees only checkpoints the store made itself, never a batch
-        caller's relation or a loaded snapshot.  The folded micro-batch
-        parts are freed now: no reader ever saw them.  The replaced base is
-        freed at the next fold, so a frame read before this fold stays
-        valid through it."""
+        The folded parts are freed: they are checkpoints the store made, and
+        no reader ever saw them.  The replaced base is only dropped, never
+        freed, so a frame read before this fold stays valid through any
+        number of folds."""
         with self._lock:
             if self._pending:
                 parts = ([self._base] if self._base is not None else []) \
@@ -107,14 +107,12 @@ class Store:
                 merged = reduce(
                     lambda a, b: a.unionByName(b, allowMissingColumns=True),
                     parts)
-                base = _checkpoint(compact_latest(
+                base = self._execute(compact_latest(
                     merged, self.key, version=self.version,
                     tombstone=self.tombstone))
-                for df in self._owned + self._retired:
+                for df in self._pending:
                     free_local_checkpoint(df)
-                self._retired = [self._base] if self._base_owned else []
-                self._base, self._base_owned = base, True
-                self._pending, self._owned = [], []
+                self._base, self._pending = base, []
                 base.createOrReplaceTempView(self.name)
             return self._base
 
@@ -157,36 +155,34 @@ class StoreRegistry:
     """Process-global name -> store map.  Ref: store/registry.go:12-63.
 
     ``materialize`` is the write path (ref processors/materializer.go:65-94):
-    it appends the incoming change-set to the named store as a pending part;
-    the next read folds it into the store's compacted base, version-gated
-    latest-per-key (the batch analog of the upsert, MERGE-free: no Delta
-    dependency).
+    it executes the incoming change-set once and appends it to the named
+    store as a pending part; the next read folds it into the store's
+    compacted base, version-gated latest-per-key (the batch analog of the
+    upsert, MERGE-free: no Delta dependency).
     """
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self._stores: dict[str, Store] = {}
 
+    def _new_store(self, name: str, key, ttl_col: str | None = None,
+                   base: DataFrame | None = None) -> Store:
+        return Store(name, key, ttl_col=ttl_col, base=base)
+
     def materialize(self, name: str, df: DataFrame, key: str | Sequence[str],
                     version: str | None = None,
                     tombstone: Column | str | None = None,
-                    ttl_col: str | None = None, *,
-                    micro_batch: bool = False) -> Store:
-        """Append ``df`` to the store ``name``, creating it on first write.
-
-        ``micro_batch=True`` says ``df`` is only valid inside its batch (a
-        foreachBatch micro-batch): it is executed now, once, into a
-        ``localCheckpoint`` the store owns and frees after a fold."""
-        part = _checkpoint(df) if micro_batch else df
-        store = self._stores.setdefault(name, Store(name, key))
+                    ttl_col: str | None = None) -> Store:
+        """Execute ``df`` once into a checkpoint and append it to the store
+        ``name``, creating the store on first write."""
+        part = _checkpoint(df)
+        store = self._stores.setdefault(name, self._new_store(name, key))
         with store._lock:
             store.key = [key] if isinstance(key, str) else list(key)
             store.version, store.tombstone = version, tombstone
             store.ttl_col = ttl_col
             store._pending.append(part)
-            if micro_batch:
-                store._owned.append(part)
-            if len(store._pending) >= int(self.spark.conf.get(_FOLD_AT_CONF)):
+            if len(store._pending) >= _FOLD_AT:
                 store._fold()
         return store
 
@@ -218,11 +214,11 @@ class PersistentStoreRegistry(StoreRegistry):
     Ref: the rocksdb backend the reference stubs out entirely
     (backend/rocks/rocks.go:10-302 is 100% commented out) and the
     local-offset resume path (global_table_stream_instance.go:93-98) —
-    here: every materialize folds and writes the folded base as a parquet
-    snapshot, and ``load`` restores stores after a restart.  Snapshots are
-    partitioned-overwrite parquet — at scale this is the same pattern as a
-    Delta/Iceberg table without the transaction log (no lake-format
-    dependency).
+    here: every materialize folds into a new parquet snapshot, reads are
+    served from that snapshot, and ``load`` restores stores after a
+    restart.  Snapshots are partitioned-overwrite parquet — at scale this
+    is the same pattern as a Delta/Iceberg table without the transaction
+    log (no lake-format dependency).
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -238,19 +234,26 @@ class PersistentStoreRegistry(StoreRegistry):
             return None
         return max(int(os.path.basename(d).split("=")[1]) for d in dirs)
 
-    def materialize(self, name, df, key, version=None, tombstone=None,
-                    ttl_col=None, *, micro_batch=False) -> Store:
-        store = super().materialize(name, df, key, version=version,
-                                    tombstone=tombstone, ttl_col=ttl_col,
-                                    micro_batch=micro_batch)
-        # the snapshot must be durable per write, so fold now and write the
-        # folded checkpoint itself (no second compaction).  A NEW directory
-        # per materialization: a store restored by ``load`` reads from the
-        # prior snapshot until its first fold
+    def _new_store(self, name, key, ttl_col=None, base=None) -> Store:
+        return Store(name, key, ttl_col=ttl_col, base=base,
+                     execute=lambda df: self._snapshot(name, df))
+
+    def _snapshot(self, name: str, df: DataFrame) -> DataFrame:
+        """Write the folded store as a NEW snapshot directory and serve
+        reads from it: the base survives executor and driver loss, and a
+        frame read from an older snapshot stays valid."""
         epoch = self._epochs.get(name, self._latest_epoch(name) or 0) + 1
         self._epochs[name] = epoch
-        store._fold().write.mode("overwrite").parquet(
-            f"{self.root}/{name}/epoch={epoch}")
+        path = f"{self.root}/{name}/epoch={epoch}"
+        df.write.mode("overwrite").parquet(path)
+        return self.spark.read.parquet(path)
+
+    def materialize(self, name, df, key, version=None, tombstone=None,
+                    ttl_col=None) -> Store:
+        # the snapshot must be durable per write, so fold now
+        store = super().materialize(name, df, key, version=version,
+                                    tombstone=tombstone, ttl_col=ttl_col)
+        store._fold()
         return store
 
     def load(self, name: str, key, ttl_col: str | None = None) -> Store:
@@ -260,7 +263,7 @@ class PersistentStoreRegistry(StoreRegistry):
             raise KeyError(f"no snapshot for store: {name}")
         self._epochs[name] = epoch
         df = self.spark.read.parquet(f"{self.root}/{name}/epoch={epoch}")
-        store = Store(name, key, ttl_col=ttl_col, base=df)
+        store = self._new_store(name, key, ttl_col=ttl_col, base=df)
         self._stores[name] = store
         df.createOrReplaceTempView(name)
         return store

@@ -104,7 +104,7 @@ def materialize_stream(df: DataFrame, registry, store_name: str,
     """
     def apply_batch(bdf: DataFrame, epoch_id: int) -> None:
         registry.materialize(store_name, bdf, key=key, version=version,
-                             tombstone=tombstone, micro_batch=True)
+                             tombstone=tombstone)
 
     writer = df.writeStream.foreachBatch(apply_batch).outputMode("update")
     if checkpoint_dir:

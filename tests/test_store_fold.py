@@ -1,18 +1,22 @@
 """Stores hold executed state: each micro-batch is checkpointed once inside
 its batch and folded into one compacted relation on read (stores/registry.py
 ``Store._fold``).  Exactly-once through a stateful upstream operator, a
-bounded store without reads, a crash after a batch's part was appended, and
-a fold that frees only the checkpoints the store made itself."""
+bounded store without reads, a crash after a batch's part was appended, a
+fold that frees its parts but never a base a reader may hold, and readers
+running while a stream writes."""
 
 import datetime
+import json
 import sys
 import threading
+import urllib.request
 
 import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
 from kstream_spark import StreamBuilder, util
+from kstream_spark.stores import registry
 from kstream_spark.stores.registry import PersistentStoreRegistry
 from kstream_spark.streaming import core as SC
 
@@ -57,14 +61,22 @@ def _key_batches(n_batches, per_batch, keys, seed):
     return [rows[i * per_batch:(i + 1) * per_batch] for i in range(n_batches)]
 
 
-def test_fold_frees_only_its_own_checkpoints(spark, tmp_path, monkeypatch):
-    # a fold that tried to free a relation it did not checkpoint (a batch
-    # caller's lazy input, a loaded parquet snapshot) would fall back and warn
+def _rdd_id(df) -> int:
+    return df._jdf.queryExecution().analyzed().rdd().id()
+
+
+def _persisted(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_fold_frees_its_parts_and_keeps_read_frames_valid(spark, tmp_path,
+                                                          monkeypatch):
+    # every part is a checkpoint the store made, so freeing one never falls
+    # back; a replaced base is dropped, not freed, so a frame read before
+    # any number of folds stays valid
     def no_fallback(exc):
         raise AssertionError(f"free_local_checkpoint fell back: {exc}")
     monkeypatch.setattr(util, "_warn_free_checkpoint_fallback", no_fallback)
-    persisted = lambda: len(spark.sparkContext._jsc.getPersistentRDDs())  # noqa: E731
-    before = persisted()
 
     b = StreamBuilder(spark)
     batches = _key_batches(3, 40, 15, seed=1)
@@ -73,32 +85,110 @@ def test_fold_frees_only_its_own_checkpoints(spark, tmp_path, monkeypatch):
                                  "owned", key="k", version="ver",
                                  checkpoint_dir=str(tmp_path / "ck")))
     store = b.stores.store("owned")
+    parts = [_rdd_id(df) for df in store._pending]
     rows = [r for part in batches for r in part]
     early = store.get_all()
-    assert {r.k: r.ver for r in early.collect()} == _latest(rows)
+    want_early = _latest(rows)
+    assert {r.k: r.ver for r in early.collect()} == want_early
     for i in range(4):   # batch writes of lazy file reads, one fold each
         extra = [(1000 + i, i, 10_000 + i), (2000 + i, 99, i)]
         _write_batches(spark, tmp_path / f"extra{i}", [extra])
         b.stores.materialize("owned", spark.read.parquet(
             str(tmp_path / f"extra{i}")), key="k", version="ver")
+        parts += [_rdd_id(df) for df in store._pending]
         rows += extra
         assert {r.k: r.ver for r in store.get_all().collect()} == _latest(rows)
-        if i == 0:   # a frame read before a fold stays valid through it
-            assert early.count() == len(_latest(rows[:-2]))
-    # the store holds its base plus the generation the last fold retired;
-    # every older checkpoint, micro-batch parts included, is freed
-    assert persisted() <= before + 2
+    assert len(parts) == 7 and not set(parts) & _persisted(spark)
+    assert {r.k: r.ver for r in early.collect()} == want_early
+    assert _rdd_id(store._base) in _persisted(spark)
 
     reg = PersistentStoreRegistry(spark, str(tmp_path / "snap"))
     reg.materialize("p", spark.createDataFrame(
         [(1, 1, 1)], "uuid long, k long, ver long"), key="k", version="ver")
     reg = PersistentStoreRegistry(spark, str(tmp_path / "snap"))
     loaded = reg.load("p", key="k")
-    for ver in (2, 3, 4):   # folds over the parquet read, then its own bases
+    for ver in (2, 3, 4):   # folds over the loaded snapshot, then its own
         reg.materialize("p", spark.createDataFrame(
             [(ver, 1, ver)], "uuid long, k long, ver long"),
             key="k", version="ver")
         assert [r.ver for r in loaded.get_all().collect()] == [ver]
+
+
+@pytest.mark.parametrize("persistent", [False, True],
+                         ids=["memory", "persistent"])
+def test_reads_stay_valid_while_a_stream_writes(spark, tmp_path, persistent):
+    # a reader thread pages a frame it read before the stream started, and
+    # pages the live store over HTTP, while a streaming query writes one
+    # micro-batch per file; the persistent registry folds on every write,
+    # the in-memory one on every read after a write.  A fold that freed a
+    # base the reader still held would fail the held frame's collect
+    from kstream_spark.stores.http import StoreHttpServer
+    from kstream_spark.stores.registry import StoreRegistry
+
+    reg = (PersistentStoreRegistry(spark, str(tmp_path / "snap"))
+           if persistent else StoreRegistry(spark))
+    batches = _key_batches(8, 30, 20, seed=5)
+    _write_batches(spark, tmp_path / "first", batches[:1])
+    _write_batches(spark, tmp_path / "in", batches[1:])
+    schema = "uuid long, k long, ver long"
+    store = reg.materialize("live", spark.createDataFrame(batches[0], schema),
+                            key="k", version="ver")
+    folds = []
+    execute = store._execute
+
+    def counting(df):
+        folds.append(1)
+        return execute(df)
+    store._execute = counting
+    held = store.get_all()
+    want_held = sorted(tuple(r) for r in held.collect())
+
+    def page(df, size=7):
+        out, offset = [], 0
+        while True:
+            chunk = df.orderBy("k").offset(offset).limit(size).collect()
+            out += [tuple(r) for r in chunk]
+            if len(chunk) < size:
+                return sorted(out)
+            offset += size
+
+    server = StoreHttpServer(reg).start()
+    done, errors, rounds = threading.Event(), [], []
+
+    def reader():
+        try:
+            while not done.is_set():
+                assert page(held) == want_held
+                # each page is a fresh read of a store that may have
+                # grown since the last page, so only a page is consistent
+                offset, pages = 0, 0
+                while offset is not None:
+                    with urllib.request.urlopen(
+                            f"http://127.0.0.1:{server.port}/stores/live"
+                            f"?limit=7&offset={offset}", timeout=120) as r:
+                        keys = [row["k"] for row in json.loads(r.read())]
+                        nxt = r.headers.get("X-Next-Offset")
+                    assert keys == sorted(set(keys))
+                    offset, pages = (int(nxt) if nxt else None), pages + 1
+                rounds.append(pages)
+        except Exception as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+
+    t = threading.Thread(target=reader)
+    t.start()
+    try:
+        _drain(SC.materialize_stream(_source(spark, tmp_path / "in"), reg,
+                                     "live", key="k", version="ver",
+                                     checkpoint_dir=str(tmp_path / "ck")))
+    finally:
+        done.set()
+        t.join(timeout=300)
+        server.stop()
+    assert not t.is_alive() and not errors, errors
+    assert rounds and len(folds) >= 2
+    assert page(held) == want_held
+    rows = [r for part in batches for r in part]
+    assert {r.k: r.ver for r in store.get_all().collect()} == _latest(rows)
 
 
 def test_dedup_then_materialize_is_exactly_once(spark, tmp_path):
@@ -142,8 +232,7 @@ def _lookup_jobs(spark, store, key) -> int:
 
 
 def test_store_stays_bounded_without_reads(spark, tmp_path):
-    threshold = int(spark.conf.get(
-        "spark.sql.streaming.stateStore.minDeltasForSnapshot"))
+    threshold = registry._FOLD_AT
     batches = _key_batches(12, 30, 20, seed=2)
     _write_batches(spark, tmp_path / "in12", batches)
     _write_batches(spark, tmp_path / "in1", batches[:1])
