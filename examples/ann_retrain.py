@@ -73,9 +73,7 @@ def main():
         if retrained:
             codes2 = A.encode_against_index(emb, "vec_id", "embedding",
                                             cents, fresh)
-            (codes2.withColumn("__epoch", F.lit(0))
-             .write.mode("overwrite").partitionBy("__epoch")
-             .parquet(f"{tmp}/codes2"))
+            SC.write_epoch(codes2, f"{tmp}/codes2", 0)
             compacted = A.compact_code_store(spark, f"{tmp}/codes2",
                                              f"{tmp}/serving", "vec_id")
             print(f"rebuilt store: {compacted.count()} codes, "

@@ -1,6 +1,7 @@
 """Streaming ANN index maintenance: encode arriving vectors against the
 PERSISTED index (coarse centroids + PQ codebooks — train once, encode
-forever) and append their m-byte codes to a code store; searches run over
+forever) and append their m-byte codes to a code store, an epoch store
+(``streaming/core.write_epoch``: replays are idempotent); searches run over
 the accumulated store without ever touching raw vectors again.
 
 This is the streaming arm of the IVF-PQ lifecycle (operators/similarity:
@@ -29,6 +30,7 @@ from pyspark.sql import functions as F
 
 from kstream_spark.functions.vectors import as_double
 from kstream_spark.operators import similarity as S
+from kstream_spark.streaming import core as SC
 
 
 def encode_against_index(batch: DataFrame, id_col: str, vec_col: str,
@@ -48,23 +50,17 @@ def encode_against_index(batch: DataFrame, id_col: str, vec_col: str,
 
 def admit_stream(emb_stream: DataFrame, id_col: str, vec_col: str,
                  centroids: list, codebooks: list, store_dir: str,
-                 checkpoint_dir: str, epoch_col: str = "__epoch",
-                 residual: bool = False):
+                 checkpoint_dir: str, residual: bool = False):
     """Continuously encode arriving vectors against the persisted index
-    and append (id, cell_id, codes) to the code store.  Epoch-keyed
-    partitions keep replays idempotent (the admit_stream discipline of
-    streaming/corpus.py).  Returns the StreamingQuery."""
+    and append (id, cell_id, codes) to the code store.  Returns the
+    StreamingQuery."""
     def _admit(batch: DataFrame, epoch_id: int) -> None:
         if not batch.head(1):
             return
         codes = encode_against_index(batch, id_col, vec_col,
                                      centroids, codebooks,
                                      residual=residual)
-        (codes.withColumn(epoch_col, F.lit(int(epoch_id)))
-         .write.mode("overwrite")
-         .partitionBy(epoch_col)
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(store_dir))
+        SC.write_epoch(codes, store_dir, epoch_id)
 
     return (emb_stream.writeStream.foreachBatch(_admit)
             .option("checkpointLocation", checkpoint_dir).start())
@@ -110,23 +106,23 @@ def adc_topk_from_codes(codes: DataFrame, queries: DataFrame,
         tab_rows, id_dt, len(bks), k, on="cell_id")
 
 
-def compact_code_store(spark, store_dir: str, out_dir: str, id_col: str,
-                       epoch_col: str = "__epoch") -> DataFrame:
+def compact_code_store(spark, store_dir: str, out_dir: str,
+                       id_col: str) -> DataFrame:
     """Compact the epoch partitions ``admit_stream`` accumulates into one
     cell-partitioned layout — the maintenance op a production vector
     pipeline runs periodically.
 
     Two things happen: (1) LATEST-WINS dedup — a vector re-admitted in a
-    later micro-batch supersedes its earlier codes (the same
-    latest-by-key compaction the changelog stores use,
-    global_table.compact_latest), so the store stays one row per id no
-    matter how many epochs replayed it; (2) the output is repartitioned
-    and PARTITIONED BY cell_id, so a probed search
+    later micro-batch supersedes its earlier codes
+    (``streaming/core.compact_epochs``), so the store stays one row per
+    id no matter how many epochs replayed it; (2) the output is
+    repartitioned and PARTITIONED BY cell_id, so a probed search
     (``adc_topk_from_codes`` with n_probe) reading the compacted store
     prunes whole partitions at the scan — at 100 TB the probe dial then
-    bounds IO, not just compute.  Epoch dirs collapse into a single
-    epoch-0 partition column (kept so a fresh ``admit_stream`` can
-    resume appending epochs next to it).
+    bounds IO, not just compute.  The compacted store is a serving
+    snapshot, not an epoch store: it has no epoch column, and new
+    arrivals go to a fresh ``admit_stream`` store that the next
+    compaction folds in.
 
     Out-of-place: writes ``out_dir`` and leaves ``store_dir`` untouched —
     swap directories (or re-point the reader) only after the write
@@ -134,16 +130,9 @@ def compact_code_store(spark, store_dir: str, out_dir: str, id_col: str,
     stop-compact-swap-resume discipline; compacting under a live writer
     would race the epoch listing).  Returns the compacted DataFrame.
     """
-    from pyspark.sql import Window as W
-    codes = spark.read.parquet(store_dir)
-    w = W.partitionBy(id_col).orderBy(F.desc(epoch_col))
-    latest = (codes.withColumn("_rn", F.row_number().over(w))
-              .filter(F.col("_rn") == 1)
-              .select(id_col, "cell_id", "codes"))
-    (latest.withColumn(epoch_col, F.lit(0))
-     .repartition("cell_id")
-     .write.mode("overwrite").partitionBy("cell_id", epoch_col)
-     .parquet(out_dir))
+    latest = SC.compact_epochs(spark, store_dir, id_col)
+    (latest.select(id_col, "cell_id", "codes").repartition("cell_id")
+     .write.mode("overwrite").partitionBy("cell_id").parquet(out_dir))
     return spark.read.parquet(out_dir)
 
 

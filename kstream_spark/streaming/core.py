@@ -11,7 +11,9 @@ Reference parity map (citations into /root/reference/):
                                    kstream/changelog/*
       -> checkpointLocation: WAL + state snapshots; replay-after-crash gives
          the same at-least-once-with-idempotent-apply guarantee the
-         changelog protocol implements by hand
+         changelog protocol implements by hand; file sinks replay
+         idempotently through the epoch store (write_epoch / read_epochs /
+         compact_epochs), which every file sink in streaming/ uses
   exactly-once via record UUID     consumer/consumer.go:16-41
       -> dedup_stream(): withWatermark + dropDuplicates on the UUID
   GlobalTable continuous sync      kstream/global_table_stream_instance.go:105-161
@@ -194,21 +196,63 @@ def with_retries(fn: Callable, attempts: int = 3, delay_ms: int = 100) -> Callab
     return wrapped
 
 
-def write_stream_idempotent(df: DataFrame, path: str, checkpoint_dir: str,
-                            partition_col: str = "__epoch"):
-    """Exactly-once file sink: each micro-batch writes to an epoch-keyed
-    partition with dynamic partition overwrite, so a replayed epoch
-    OVERWRITES its own partition instead of appending duplicates.
+# The epoch store: one parquet directory per sink, one ``__epoch=N``
+# partition per micro-batch.  Every file sink in streaming/ writes, reads
+# and compacts its store through the three helpers below.
+EPOCH = "__epoch"
+
+
+def write_epoch(df: DataFrame, path: str, epoch_id: int) -> None:
+    """Write micro-batch ``epoch_id`` into partition ``__epoch=epoch_id``
+    of ``path``, replacing only that partition: a replayed epoch
+    OVERWRITES its own rows instead of appending duplicates.  An empty
+    ``df`` writes no partition, so it leaves an existing one in place.
 
     This is the file-sink analog of the reference's changelog
     mark->process->delete protocol (processor.go:116-170): replay is safe
-    because re-applying epoch N is idempotent."""
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    because re-applying epoch N is idempotent.  Dynamic partition
+    overwrite is a per-write option, so the session's overwrite mode is
+    never touched."""
+    (df.withColumn(EPOCH, F.lit(int(epoch_id)))
+     .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+     .partitionBy(EPOCH).parquet(path))
 
-    def apply_batch(bdf: DataFrame, epoch_id: int) -> None:
-        (bdf.withColumn(partition_col, F.lit(epoch_id))
-         .write.mode("overwrite").partitionBy(partition_col).parquet(path))
 
-    return (df.writeStream.foreachBatch(apply_batch)
+def read_epochs(spark: SparkSession, path: str,
+                exclude_epoch: int | None = None) -> DataFrame | None:
+    """The rows of the epoch store at ``path``, without the ``__epoch``
+    column, or ``None`` when nothing was ever written there: Spark reports
+    a missing directory (PATH_NOT_FOUND) or one holding no data files
+    (UNABLE_TO_INFER_SCHEMA — every epoch's output was empty).  Every
+    other failure, e.g. a corrupt file, raises.
+
+    ``exclude_epoch``: leave that epoch's rows out.  A batch that reads
+    its own sink passes its epoch id, so a replay after a crash that
+    followed the write sees the store as its first attempt did."""
+    from pyspark.errors import AnalysisException
+    try:
+        store = spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise
+    if exclude_epoch is not None:
+        store = store.filter(F.col(EPOCH) != int(exclude_epoch))
+    return store.drop(EPOCH)
+
+
+def compact_epochs(spark: SparkSession, path: str, id_col: str) -> DataFrame:
+    """The epoch store at ``path`` reduced latest-wins by ``id_col``: a row
+    re-admitted in a later epoch supersedes its earlier versions.  The
+    ``__epoch`` column is dropped.  A missing store raises."""
+    from kstream_spark.global_table import compact_latest
+    return compact_latest(spark.read.parquet(path), id_col,
+                          version=EPOCH).drop(EPOCH)
+
+
+def write_stream_idempotent(df: DataFrame, path: str, checkpoint_dir: str):
+    """Exactly-once file sink: each micro-batch lands in its own epoch
+    partition of ``path`` (``write_epoch``), so replays are idempotent."""
+    return (df.writeStream
+            .foreachBatch(lambda bdf, epoch: write_epoch(bdf, path, epoch))
             .option("checkpointLocation", checkpoint_dir).start())

@@ -13,10 +13,8 @@ precomputed bands instead of re-minhashing all of history.  Per-batch work
 is O(|increment| + one scan of the signature store), never O(|corpus|)
 text processing.
 
-Replay safety: both the corpus and the signature store land in epoch-keyed
-partitions with dynamic partition overwrite (same protocol as
-``core.write_stream_idempotent``), so a replayed micro-batch overwrites its
-own partitions — no duplicate admissions from at-least-once delivery.
+Both the corpus and the signature store are epoch stores
+(``streaming/core.write_epoch``), so replays are idempotent.
 
 No reference analog (the reference has no dedup surface); this module is
 part of the training-data capability superset.
@@ -25,7 +23,8 @@ part of the training-data capability superset.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from kstream_spark.streaming import core as SC
 
 
 def gopher_gate(id_col: str, text_col: str, **bounds):
@@ -45,17 +44,18 @@ def gopher_gate(id_col: str, text_col: str, **bounds):
 
 def admit_stream(df: DataFrame, corpus_path: str, signature_path: str,
                  checkpoint_dir: str, id_col: str, text_col: str, n: int = 3,
-                 threshold: float = 0.8, epoch_col: str = "__epoch",
-                 quality_gate=None, min_trigger: int | None = 1_000_000):
+                 threshold: float = 0.8, quality_gate=None,
+                 min_trigger: int | None = 1_000_000):
     """Continuously admit only-novel documents from a stream into a corpus
     directory, maintaining the signature store alongside.  Returns the
     StreamingQuery.
 
     Each micro-batch runs ``incremental_dedup(batch, corpus_state=...)``
     against the persisted signature store; on the first batch (no state
-    yet) the batch self-dedups against an empty corpus.  Admitted rows and
-    their signatures write under epoch-keyed partitions (idempotent on
-    replay).
+    yet) the batch self-dedups against an empty corpus.  A batch reads the
+    store without its own epoch, so a replay after a crash anywhere in the
+    batch admits what the first attempt would have.  A store that exists
+    but cannot be read fails the batch.
 
     ``quality_gate``: optional ``DataFrame -> DataFrame`` filter applied
     to each batch BEFORE dedup (cheap rule screens first — the published
@@ -97,10 +97,7 @@ def admit_stream(df: DataFrame, corpus_path: str, signature_path: str,
                     stacklevel=2)
         if quality_gate is not None:
             batch = quality_gate(batch)
-        try:
-            state = spark.read.parquet(signature_path).drop(epoch_col)
-        except Exception:  # first batch: nothing admitted yet
-            state = None
+        state = SC.read_epochs(spark, signature_path, exclude_epoch=epoch_id)
         handles: list = []  # dedup's internal caches, freed after the writes
         # return_signatures: the store write below reuses the increment's
         # persisted minhash relation instead of re-minhashing every
@@ -126,53 +123,43 @@ def admit_stream(df: DataFrame, corpus_path: str, signature_path: str,
                                            checkpoint_fresh=True,
                                            sig_impl="codegen")
         admitted = admitted.persist()
-        # per-write dynamic overwrite: replayed epochs replace only their own
-        # partitions, WITHOUT flipping the session-wide overwrite semantics
-        # for every other writer in the application
-        (admitted.withColumn(epoch_col, F.lit(epoch_id))
-         .write.mode("overwrite").partitionBy(epoch_col)
-         .option("partitionOverwriteMode", "dynamic").parquet(corpus_path))
-        (sigs.withColumn(epoch_col, F.lit(epoch_id))
-         .write.mode("overwrite").partitionBy(epoch_col)
-         .option("partitionOverwriteMode", "dynamic").parquet(signature_path))
-        # handles = [checkpointed fresh survivors, two persisted minhash
-        # relations]; only the checkpoint has a LogicalRDD root to free
-        fresh, *persisted = handles
-        for h in [admitted, *persisted]:
-            h.unpersist()
-        free_local_checkpoint(fresh)
+        try:
+            SC.write_epoch(admitted, corpus_path, epoch_id)
+            SC.write_epoch(sigs, signature_path, epoch_id)
+        finally:
+            # handles = [checkpointed fresh survivors, two persisted
+            # minhash relations]; only the checkpoint has a LogicalRDD
+            # root to free
+            fresh, *persisted = handles
+            for h in [admitted, *persisted]:
+                h.unpersist()
+            free_local_checkpoint(fresh)
 
     return (df.writeStream.foreachBatch(_admit)
             .option("checkpointLocation", checkpoint_dir).start())
 
 
 def compact_signature_store(spark, store_dir: str, out_dir: str,
-                            id_col: str = "doc_id",
-                            epoch_col: str = "__epoch") -> DataFrame:
+                            id_col: str = "doc_id") -> DataFrame:
     """Compact the epoch partitions ``admit_stream`` accumulates in the
     signature store into one latest-wins layout — the maintenance twin of
     ``streaming/ann.compact_code_store`` for the dedup state.
 
     LATEST-WINS by document id: a doc re-admitted in a later micro-batch
     (same id, revised text) supersedes its older signature row, so the
-    store stays one row per document regardless of replays; epoch dirs
-    collapse into a single epoch-0 partition (kept so a resumed
-    ``admit_stream`` appends new epochs next to it).  The output is
-    repartitioned by the first band column, which co-locates each band
-    bucket's rows for the increment-vs-corpus band join that
-    ``incremental_dedup`` runs every batch.
+    store stays one row per document regardless of replays
+    (``streaming/core.compact_epochs``).  The result is epoch 0 of a new
+    epoch store at ``out_dir``, so a resumed ``admit_stream`` appends new
+    epochs next to it.  It is repartitioned by the first band column,
+    which co-locates each band bucket's rows for the increment-vs-corpus
+    band join that ``incremental_dedup`` runs every batch.
 
     Out-of-place and stop-compact-swap-resume, same as the code store:
     compacting under a live admitting query would race the epoch listing.
-    Returns the compacted DataFrame.
+    ``out_dir`` must be new: only its epoch 0 is replaced, so other
+    epochs already there would survive.  Returns the compacted
+    DataFrame.
     """
-    from pyspark.sql import Window as W
-    sig = spark.read.parquet(store_dir)
-    w = W.partitionBy(id_col).orderBy(F.desc(epoch_col))
-    latest = (sig.withColumn("_rn", F.row_number().over(w))
-              .filter(F.col("_rn") == 1)
-              .drop("_rn", epoch_col))
-    (latest.withColumn(epoch_col, F.lit(0))
-     .repartition("b0")
-     .write.mode("overwrite").partitionBy(epoch_col).parquet(out_dir))
+    latest = SC.compact_epochs(spark, store_dir, id_col)
+    SC.write_epoch(latest.repartition("b0"), out_dir, 0)
     return spark.read.parquet(out_dir)

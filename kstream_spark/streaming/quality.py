@@ -12,8 +12,8 @@ Scale shape: per-batch work is one bucket-count aggregation over the
 batch plus a join of two bucket-count relations (each at most
 groups x n_buckets rows) — O(|batch|), zero streaming state; the
 reference is re-read per trigger, so refreshing it takes effect on the
-next batch without restarting the query.  Replay safety: reports land in
-epoch-keyed partitions with dynamic overwrite.
+next batch without restarting the query.  Reports go to the epoch store
+(``streaming/core.write_epoch``), so replays are idempotent.
 
 No reference analog (tryfix/kstream validates nothing); part of the
 data-quality capability superset.  The per-batch PSI is computed by the
@@ -24,13 +24,14 @@ stream reproduces the batch report bit-for-bit (parity test).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from kstream_spark.streaming import core as SC
 
 
 def drift_stream(df: DataFrame, ref_counts_path: str, out_path: str,
                  checkpoint_dir: str, bucket_col,
                  group_cols: list[str] | None = None,
-                 n_buckets: int = 10, epoch_col: str = "__epoch"):
+                 n_buckets: int = 10):
     """Score every micro-batch's bucket distribution against the
     persisted reference counts (parquet with columns group..., bucket,
     count_ref).  Emits (group..., bucket, count_ref, count_cur,
@@ -44,10 +45,7 @@ def drift_stream(df: DataFrame, ref_counts_path: str, out_path: str,
         ref = spark.read.parquet(ref_counts_path)
         cur = bucket_counts(batch, bucket_col, gcols, "count_cur")
         psi = drift_psi_from_counts(ref, cur, gcols, n_buckets)
-        (psi.withColumn(epoch_col, F.lit(epoch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy(epoch_col).parquet(out_path))
+        SC.write_epoch(psi, out_path, epoch_id)
 
     return (df.writeStream.foreachBatch(_score)
             .option("checkpointLocation", checkpoint_dir).start())

@@ -4,9 +4,9 @@ The streaming face of ``operators/scd.scd2_apply``: each arriving
 micro-batch of change events merges into a PERSISTED dimension laid out
 as two relations —
 
-  ``<dim>/closed``  append-only validity intervals (epoch-partitioned,
-                    dynamic-overwrite: at-least-once replays rewrite
-                    their own epoch instead of duplicating);
+  ``<dim>/closed``  append-only validity intervals, an epoch store
+                    (``streaming/core.write_epoch``: replays are
+                    idempotent);
   ``<dim>/open``    one row per live key, overwritten per batch.
 
 This is the warehouse upgrade of the reference's last-write-wins
@@ -43,6 +43,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kstream_spark.streaming import core as SC
+
 
 def _hdfs_exists(spark, path: str) -> bool:
     jvm = spark._jvm
@@ -51,35 +53,19 @@ def _hdfs_exists(spark, path: str) -> bool:
     return bool(fs.exists(p))
 
 
-def _read_parquet_or_empty(spark, path: str, like: DataFrame) -> DataFrame:
-    """Read ``path`` if it holds any parquet data; otherwise an empty
-    frame with ``like``'s schema (a partitioned write of an empty
-    relation leaves a directory with no data files — 'Unable to infer
-    schema' — which is a legitimate empty state, not an error)."""
-    if _hdfs_exists(spark, path):
-        try:
-            return spark.read.parquet(path)
-        except Exception:
-            pass  # directory exists but holds no data files
-    return spark.createDataFrame([], like.schema)
-
-
 def read_dimension(spark, dim_path: str) -> DataFrame:
     """The full SCD2 dimension (closed history + live rows), e.g. for
-    scd2_lookup point-in-time reads.  Drops the epoch bookkeeping.
-    A dimension where no interval has ever closed (all-new keys, no
-    attribute changes yet) reads as just its open rows."""
+    scd2_lookup point-in-time reads.  A dimension where no interval has
+    ever closed (all-new keys, no attribute changes yet) reads as just its
+    open rows."""
     open_rows = spark.read.parquet(f"{dim_path}/open")
-    closed = _read_parquet_or_empty(
-        spark, f"{dim_path}/closed",
-        open_rows.withColumn("__epoch", F.lit(0).cast("long"))) \
-        .drop("__epoch")
-    return closed.unionByName(open_rows)
+    closed = SC.read_epochs(spark, f"{dim_path}/closed")
+    return open_rows if closed is None else closed.unionByName(open_rows)
 
 
 def scd2_stream(df: DataFrame, dim_path: str, checkpoint_dir: str,
                 key_col: str, attr_cols: Sequence[str], ts_col: str,
-                id_col: str | None = None, epoch_col: str = "__epoch"):
+                id_col: str | None = None):
     """Maintain a persisted SCD2 dimension from a change stream.
     Returns the StreamingQuery."""
     from kstream_spark.operators.scd import scd2_apply, scd2_history
@@ -116,10 +102,7 @@ def scd2_stream(df: DataFrame, dim_path: str, checkpoint_dir: str,
         # detected (not absorbed) on the next batch if it tears
         (still_open.write.mode("overwrite")
          .parquet(f"{dim_path}/open.tmp"))
-        (newly_closed.withColumn(epoch_col, F.lit(epoch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy(epoch_col).parquet(f"{dim_path}/closed"))
+        SC.write_epoch(newly_closed, f"{dim_path}/closed", epoch_id)
         tmp = spark.read.parquet(f"{dim_path}/open.tmp")
         tmp.write.mode("overwrite").parquet(open_path)
 

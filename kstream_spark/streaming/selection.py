@@ -9,10 +9,9 @@ curation: the corpus never stores what selection would later discard.
 
 Scale shape: per-batch work is one tokenize + broadcast-join against the
 n_buckets-row weight table + one per-doc integer sum — O(|batch|), zero
-state beyond the static weight table, no shuffle of history.  Replay
-safety: admitted rows land in epoch-keyed partitions with dynamic
-partition overwrite (the ``write_stream_idempotent`` protocol), so
-at-least-once replays overwrite their own epoch instead of duplicating.
+state beyond the static weight table, no shuffle of history.  Admitted
+rows go to the epoch store (``streaming/core.write_epoch``), so replays
+are idempotent.
 
 No reference analog (the reference has no selection surface); part of the
 training-data capability superset.  Scores are exact integers, so the
@@ -25,11 +24,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kstream_spark.streaming import core as SC
+
 
 def admit_stream(df: DataFrame, weights_path: str, out_path: str,
                  checkpoint_dir: str, id_col: str, text_col: str,
-                 min_micro: int = 0, n_buckets: int = 256,
-                 epoch_col: str = "__epoch"):
+                 min_micro: int = 0, n_buckets: int = 256):
     """Admit only documents whose DSIR importance score clears
     ``min_micro`` (exact integer micro-log units).  Returns the
     StreamingQuery.  The weight table is re-read per batch so a model
@@ -44,10 +44,7 @@ def admit_stream(df: DataFrame, weights_path: str, out_path: str,
         admitted = (batch.join(
             scored.filter(F.col("dsir_micro") >= min_micro)
             .select(id_col, "dsir_micro"), id_col))
-        (admitted.withColumn(epoch_col, F.lit(epoch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy(epoch_col).parquet(out_path))
+        SC.write_epoch(admitted, out_path, epoch_id)
 
     return (df.writeStream.foreachBatch(_admit)
             .option("checkpointLocation", checkpoint_dir).start())
@@ -56,8 +53,7 @@ def admit_stream(df: DataFrame, weights_path: str, out_path: str,
 def admit_cluster_balanced_stream(df: DataFrame, centroids_path: str,
                                   out_path: str, checkpoint_dir: str,
                                   id_col: str, vec_col: str,
-                                  per_cell_quota: int = 100,
-                                  epoch_col: str = "__epoch"):
+                                  per_cell_quota: int = 100):
     """Cluster-balanced admission — the streaming face of
     ``operators/selection.cluster_balanced_select``: arriving vectors are
     assigned to their nearest persisted k-means cell (the same
@@ -68,9 +64,9 @@ def admit_cluster_balanced_stream(df: DataFrame, centroids_path: str,
     State discipline: there is NO separate counts table to tear — the
     admitted store itself is quota-bounded (<= k * per_cell_quota rows
     total, forever), so per-batch remaining-quota is one cheap
-    aggregation over the store.  Crash/replay safety: admitted rows land
-    epoch-partitioned with dynamic overwrite, the quota count EXCLUDES
-    the current epoch's partition (a replayed batch re-derives its own
+    aggregation over the store.  Crash/replay safety: admitted rows go to
+    the epoch store (``streaming/core.write_epoch``), the quota count
+    EXCLUDES the current epoch (a replayed batch re-derives its own
     admissions instead of double-counting them), and re-arriving ids
     already admitted in other epochs are anti-joined away against the
     bounded (hence broadcastable) store.
@@ -89,19 +85,9 @@ def admit_cluster_balanced_stream(df: DataFrame, centroids_path: str,
             return
         spark = batch.sparkSession
         cents = load_centroids(spark, centroids_path)
-        # Only a genuinely missing store means "first batch, empty quota".
-        # Any OTHER read failure (transient FS error, corrupt footer) must
-        # fail the batch so the streaming query retries — swallowing it
-        # would silently reset quota/dedup accounting and over-admit.
-        from py4j.protocol import Py4JJavaError
-        from pyspark.errors import AnalysisException
-        try:
-            store = (spark.read.parquet(out_path)
-                     .filter(F.col(epoch_col) != int(epoch_id)))
-        except (AnalysisException, Py4JJavaError) as e:
-            if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-                raise
-            store = None
+        # only a store never written reads as "first batch, empty quota";
+        # any other read failure fails the batch (read_epochs raises)
+        store = SC.read_epochs(spark, out_path, exclude_epoch=epoch_id)
         src = (batch.select(F.col(id_col).alias("vec_id"),
                             as_double(F.col(vec_col)).alias("v"))
                .withColumn("_n", norm(F.col("v"))))
@@ -127,11 +113,9 @@ def admit_cluster_balanced_stream(df: DataFrame, centroids_path: str,
                     .withColumn("_rn", F.row_number().over(w))
                     .filter(F.col("_rn") <= per_cell_quota - F.col("_taken"))
                     .select("vec_id", "cell_id"))
-        (admitted.join(batch.withColumnRenamed(id_col, "vec_id"), "vec_id")
-         .withColumn(epoch_col, F.lit(int(epoch_id)))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy(epoch_col).parquet(out_path))
+        SC.write_epoch(
+            admitted.join(batch.withColumnRenamed(id_col, "vec_id"), "vec_id"),
+            out_path, epoch_id)
 
     return (df.writeStream.foreachBatch(_admit)
             .option("checkpointLocation", checkpoint_dir).start())

@@ -32,7 +32,7 @@ def latest_with_ttl(df: DataFrame, key_col: str, version_col: str,
     emitted and state is dropped — the streaming analog of the reference's
     background cleaner deleting expired entries."""
     out_schema = T.StructType([
-        T.StructField(key_col, T.LongType()),
+        T.StructField(key_col, df.schema[key_col].dataType),
         T.StructField("version", T.LongType()),
         T.StructField("payload", T.StringType()),
         T.StructField("expired", T.BooleanType()),
@@ -93,7 +93,7 @@ def session_stream(df: DataFrame, user_col: str, ts_col: str,
     """
     gap_ms = int(pd.Timedelta(gap).total_seconds() * 1000)
     out_schema = T.StructType([
-        T.StructField(user_col, T.LongType()),
+        T.StructField(user_col, df.schema[user_col].dataType),
         T.StructField("session_start", T.TimestampType()),
         T.StructField("session_end", T.TimestampType()),
         T.StructField("n_events", T.LongType()),
@@ -159,7 +159,7 @@ def funnel_stream(df: DataFrame, user_col: str, type_col: str, ts_col: str,
     """
     n = len(steps)
     out_schema = T.StructType([
-        T.StructField(user_col, T.LongType()),
+        T.StructField(user_col, df.schema[user_col].dataType),
         T.StructField("stage", T.LongType()),
         T.StructField("step", T.StringType()),
         T.StructField("ts", T.TimestampType()),

@@ -12,10 +12,8 @@ and budget decisions never re-scan raw text.
 Scale shape: per-batch work is one Arrow-batched DP pass over the batch's
 rows with the piece table a broadcast python dict (vocab-sized, read per
 batch so a model refresh takes effect on the next trigger) — O(|batch|),
-zero streaming state.  Replay safety: outputs land in epoch-keyed
-partitions with dynamic partition overwrite (the
-``write_stream_idempotent`` protocol), so at-least-once replays overwrite
-their own epoch instead of duplicating.
+zero streaming state.  Outputs go to the epoch store
+(``streaming/core.write_epoch``), so replays are idempotent.
 
 No reference analog (tryfix/kstream carries opaque bytes); part of the
 training-data capability superset.  Segmentation is the exact-integer DP
@@ -28,12 +26,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kstream_spark.streaming import core as SC
+
 
 def tokenize_stream(df: DataFrame, vocab_path: str, out_path: str,
                     checkpoint_dir: str, id_col: str, text_col: str,
                     max_piece_len: int = 4,
-                    oov_logp_micro: int = -20_000_000,
-                    epoch_col: str = "__epoch"):
+                    oov_logp_micro: int = -20_000_000):
     """Viterbi-tokenize every arriving document against the persisted
     unigram vocab (parquet with columns piece, logp_micro).  Emits one
     row per (doc, position): (id, pos, token).  Returns the
@@ -73,10 +72,7 @@ def tokenize_stream(df: DataFrame, vocab_path: str, out_path: str,
                      lambda w: w != F.lit("")).alias("_ws"))
         out = toks.mapInPandas(
             run, f"{id_col} long, pos long, token string")
-        (out.withColumn(epoch_col, F.lit(epoch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy(epoch_col).parquet(out_path))
+        SC.write_epoch(out, out_path, epoch_id)
 
     return (df.writeStream.foreachBatch(_tokenize)
             .option("checkpointLocation", checkpoint_dir).start())

@@ -124,6 +124,18 @@ def test_latest_with_ttl_stateful(spark, stream_dir, tmp_path):
            spark.sql("SELECT * FROM state_out").collect()}
     assert out[10] == (2, False) and out[20] == (3, False)
 
+    # the output key column takes the input key's type
+    src = SC.read_stream_parquet(spark, stream_dir) \
+        .withColumn("k", F.concat(F.lit("k"), F.col("k")))
+    latest = latest_with_ttl(src, "k", "uuid", ["t", "v"])
+    q = (latest.writeStream.format("memory").queryName("state_out_str")
+         .outputMode("append")
+         .option("checkpointLocation", str(tmp_path / "ck_str")).start())
+    _run(q)
+    out = {r.k: (r.version, r.expired) for r in
+           spark.sql("SELECT * FROM state_out_str").collect()}
+    assert out == {"k10": (2, False), "k20": (3, False)}
+
 
 def test_kafka_wire_roundtrip_batch(spark):
     """Kafka connector jar isn't in the container; the encode/decode path is
@@ -244,6 +256,29 @@ def test_write_stream_idempotent_epoch_overwrite(spark, stream_dir, tmp_path):
     back = spark.read.parquet(out)
     # replay overwrote its own epoch partitions: row count == source count
     assert back.count() == 4
+
+
+def test_write_stream_idempotent_leaves_session_overwrite_mode(spark, stream_dir,
+                                                              tmp_path):
+    """The epoch sink's dynamic partition overwrite is a per-write option:
+    the session's overwrite mode is unchanged afterwards, so a later
+    unrelated partitioned overwrite still replaces every partition."""
+    from kstream_spark.streaming.core import write_stream_idempotent
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    try:
+        _run(write_stream_idempotent(SC.read_stream_parquet(spark, stream_dir),
+                                     str(tmp_path / "out"),
+                                     str(tmp_path / "ck")))
+        assert spark.conf.get(key) == before
+        other = str(tmp_path / "other")
+        for cells in ([1, 2, 3], [3]):
+            (spark.createDataFrame([(c, c) for c in cells],
+                                   "cell_id long, v long")
+             .write.mode("overwrite").partitionBy("cell_id").parquet(other))
+        assert [r.cell_id for r in spark.read.parquet(other).collect()] == [3]
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_streaming_lookup_join_against_refreshing_table(spark, stream_dir, tmp_path):
@@ -626,6 +661,19 @@ def test_session_stream_in_batch_and_timeout_close(spark, tmp_path):
     assert (20, "2024-01-01 10:00:00", 1) in got
     assert (10, "2024-01-01 12:00:00", 1) in got
 
+    # string user ids: the output key column takes the input key's type
+    src = SC.read_stream_parquet(spark, str(d)) \
+        .withColumn("user_id", F.concat(F.lit("u"), F.col("user_id"))) \
+        .withWatermark("ts", "10 seconds")
+    sess = session_stream(src, "user_id", "ts", gap="30 minutes")
+    q = (sess.writeStream.format("memory").queryName("sess_out_str")
+         .outputMode("append")
+         .option("checkpointLocation", str(tmp_path / "ck_sess_str")).start())
+    _run(q)
+    got = {(r.user_id, str(r.session_start), r.n_events)
+           for r in spark.sql("SELECT * FROM sess_out_str").collect()}
+    assert ("u10", "2024-01-01 10:00:00", 2) in got
+
 
 def test_funnel_stream_stage_advances_across_batches(spark, tmp_path):
     """Streaming funnel: stages advance in strict order, state carries
@@ -668,6 +716,20 @@ def test_funnel_stream_stage_advances_across_batches(spark, tmp_path):
     assert (1, 3, "purchase") in got
     assert (2, 1, "view") in got
     assert (2, 2, "click") not in got
+
+    # string user ids, every event in one batch: same advances
+    src = SC.read_stream_parquet(spark, str(d)) \
+        .withColumn("user_id", F.concat(F.lit("u"), F.col("user_id")))
+    out = funnel_stream(src, "user_id", "event_type", "ts",
+                        ["view", "click", "purchase"])
+    q = (out.writeStream.format("memory").queryName("funnel_out_str")
+         .outputMode("append")
+         .option("checkpointLocation", str(tmp_path / "ck_fun_str")).start())
+    _run(q)
+    got = {(r.user_id, r.stage, r.step)
+           for r in spark.sql("SELECT * FROM funnel_out_str").collect()}
+    assert got == {("u1", 1, "view"), ("u1", 2, "click"),
+                   ("u1", 3, "purchase"), ("u2", 1, "view")}
 
 
 def test_encode_records_transformer_hook(spark):
@@ -1443,3 +1505,116 @@ def test_admit_stream_quality_gate(spark, tmp_path):
     sigs = {r.doc_id for r in
             spark.read.parquet(str(tmp_path / "sigs")).collect()}
     assert 2 not in sigs
+
+
+def _seed_corpus_batches(spark, src):
+    """Two one-file batches for ``corpus.admit_stream``: batch 2 carries an
+    exact dup and a near-dup of batch-1 docs plus one novel doc."""
+    import time as _time
+    base = ("the quick brown fox jumps over the lazy dog and then runs far "
+            "away into the deep dark forest to hide from every hunter")
+    spark.createDataFrame([(1, base), (2, "completely different text about "
+                                          "spark structured streaming state")],
+                          "doc_id long, text string") \
+        .coalesce(1).write.mode("append").parquet(str(src))
+    _time.sleep(1.1)
+    spark.createDataFrame([(3, base), (4, base.replace("hunter", "tracker")),
+                           (5, "a third topic entirely unrelated to both")],
+                          "doc_id long, text string") \
+        .coalesce(1).write.mode("append").parquet(str(src))
+
+
+def _corpus_stream(spark, src):
+    return (spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", 1).parquet(str(src)))
+
+
+@pytest.mark.parametrize("sink", ["corpus", "cluster_balanced"])
+def test_admit_stream_corrupt_store_fails_the_batch(spark, tmp_path, sink):
+    """A store that exists but cannot be read fails the batch, naming the
+    read error, instead of reading as "first batch" and admitting against
+    an empty corpus (or an empty quota)."""
+    store = tmp_path / "store"
+    (store / "__epoch=0").mkdir(parents=True)
+    (store / "__epoch=0" / "part-0.parquet").write_text("not parquet")
+    src = tmp_path / "in"
+    if sink == "corpus":
+        from kstream_spark.streaming.corpus import admit_stream
+        _seed_corpus_batches(spark, src)
+        q = admit_stream(_corpus_stream(spark, src), str(tmp_path / "corpus"),
+                         str(store), str(tmp_path / "ck"), id_col="doc_id",
+                         text_col="text", min_trigger=None)
+    else:   # the admitted rows are the store
+        from kstream_spark.operators.similarity import save_centroids
+        from kstream_spark.streaming.selection import \
+            admit_cluster_balanced_stream
+        save_centroids(spark, [[1.0, 0.0], [0.0, 1.0]],
+                       str(tmp_path / "cents"))
+        spark.createDataFrame([(1, [1.0, 0.1]), (2, [0.1, 1.0])],
+                              "vec_id long, embedding array<double>") \
+            .coalesce(1).write.parquet(str(src))
+        q = admit_cluster_balanced_stream(
+            SC.read_stream_parquet(spark, str(src)), str(tmp_path / "cents"),
+            str(store), str(tmp_path / "ck"), "vec_id", "embedding",
+            per_cell_quota=10)
+    with pytest.raises(Exception, match="not a Parquet file"):
+        q.processAllAvailable()
+    q.stop()
+    # nothing was admitted
+    assert [p.name for p in store.iterdir()] == ["__epoch=0"]
+    assert not (tmp_path / "corpus").exists()
+
+
+def test_admit_stream_crash_mid_batch_replays_to_same_stores(spark, tmp_path,
+                                                             monkeypatch):
+    """A crash inside an admission batch, just before or just after its
+    signature-store write, replays from the checkpoint to the same corpus
+    and signature stores as an uninterrupted run."""
+    from kstream_spark.streaming.corpus import admit_stream
+
+    src = tmp_path / "in"
+    _seed_corpus_batches(spark, src)
+
+    def run(name):
+        q = admit_stream(_corpus_stream(spark, src),
+                         str(tmp_path / f"corpus_{name}"),
+                         str(tmp_path / f"sigs_{name}"),
+                         str(tmp_path / f"ck_{name}"), id_col="doc_id",
+                         text_col="text", min_trigger=None)
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    def stores(name):
+        return [sorted(tuple(r) for r in spark.read.parquet(
+            str(tmp_path / f"{kind}_{name}")).collect())
+            for kind in ("corpus", "sigs")]
+
+    run("clean")
+    want = stores("clean")
+    assert {r[0] for r in want[0]} == {1, 2, 5}
+
+    write = SC.write_epoch
+    for crash in ("before", "after"):
+        writes = []
+
+        def writer(df, path, epoch_id, crash=crash, writes=writes):
+            kind = (path.rsplit("/", 1)[-1].split("_")[0], epoch_id)
+            first = kind == ("sigs", 1) and kind not in [w[:2] for w in writes]
+            writes.append((*kind, df.count()))
+            if first and crash == "before":
+                raise RuntimeError("crash before the signature write")
+            write(df, path, epoch_id)
+            if first:
+                raise RuntimeError("crash after the signature write")
+
+        monkeypatch.setattr(SC, "write_epoch", writer)
+        with pytest.raises(Exception, match=f"crash {crash}"):
+            run(crash)
+        run(crash)               # restart: epoch 1 is replayed
+        # the replay rewrites epoch 1 with the rows its first attempt wrote
+        assert writes == [("corpus", 0, 2), ("sigs", 0, 2),
+                          ("corpus", 1, 1), ("sigs", 1, 1),
+                          ("corpus", 1, 1), ("sigs", 1, 1)]
+        assert stores(crash) == want

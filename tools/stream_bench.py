@@ -2,8 +2,9 @@
 reference's headline claim (50,000 msg/s at 2-5 ms latency with
 micro-batching, /root/reference/README.md:13-15).
 
-Drives FOUR full streaming pipeline shapes end-to-end and reports
-records/second for each:
+Drives these streaming pipeline shapes end-to-end and reports
+records/second for each; all but windowed_agg and sessionize check the
+work they timed and raise on a mismatch:
 
   materialize — file-stream source -> filter/transform -> version-gated
       store materialization (each micro-batch checkpointed into the
@@ -21,6 +22,10 @@ records/second for each:
   sessionize  — event-time gap sessionization with timeouts
       (applyInPandasWithState, EventTimeTimeout), the
       watermark-driven state shape.
+  ann_admit / tokenize / corpus_admit — the epoch-store sinks
+      (streaming/ann, text, corpus): one code per distinct id, tokens
+      for every doc, no two admitted docs sharing a text;
+      corpus_admit_amortized reruns corpus_admit at a 2M-record trigger.
 
 Usage: python tools/stream_bench.py [num_records]
 Prints one JSON line {"metric": "streaming_records_per_sec", ...} whose
@@ -221,9 +226,14 @@ def bench_ann_admit(spark, tmp: str, n: int) -> dict:
     q.stop()
     q.awaitTermination(30)
     dt = time.time() - t0
-    stored = spark.read.parquet(f"{tmp}/ann_store").count()
+    got = spark.read.parquet(f"{tmp}/ann_store").agg(
+        F.count("*").alias("codes"), F.countDistinct("vec_id").alias("ids")
+    ).first()
+    if (got["codes"], got["ids"]) != (n, n):
+        raise RuntimeError(f"ann_admit: store holds {got['codes']} codes "
+                           f"for {got['ids']} ids, expected {n} for {n}")
     return {"records_per_sec": round(n / dt), "records": n,
-            "seconds": round(dt, 2), "codes_stored": stored}
+            "seconds": round(dt, 2), "codes_stored": got["codes"]}
 
 
 def bench_tokenize(spark, tmp: str, n: int) -> dict:
@@ -257,9 +267,14 @@ def bench_tokenize(spark, tmp: str, n: int) -> dict:
     q.stop()
     q.awaitTermination(30)
     dt = time.time() - t0
-    toks = spark.read.parquet(f"{tmp}/tok_out").count()
+    got = spark.read.parquet(f"{tmp}/tok_out").agg(
+        F.count("*").alias("tokens"), F.countDistinct("doc_id").alias("docs")
+    ).first()
+    if got["docs"] != n:
+        raise RuntimeError(f"tokenize: {got['docs']} of {n} docs emitted "
+                           "tokens, expected every doc")
     return {"records_per_sec": round(n / dt), "records": n,
-            "seconds": round(dt, 2), "tokens_emitted": toks}
+            "seconds": round(dt, 2), "tokens_emitted": got["tokens"]}
 
 
 def bench_corpus_admit(spark, tmp: str, n: int) -> dict:
@@ -303,9 +318,15 @@ def bench_corpus_admit(spark, tmp: str, n: int) -> dict:
     q.stop()
     q.awaitTermination(30)
     dt = time.time() - t0
-    admitted = spark.read.parquet(f"{tmp}/corp_out").count()
+    got = spark.read.parquet(f"{tmp}/corp_out").agg(
+        F.count("*").alias("docs"), F.countDistinct("text").alias("texts")
+    ).first()
+    if got["docs"] != got["texts"]:
+        raise RuntimeError(f"corpus_admit: {got['docs']} admitted docs "
+                           f"share {got['texts']} texts, expected no exact "
+                           "duplicates")
     return {"records_per_sec": round(n / dt), "records": n,
-            "seconds": round(dt, 2), "admitted": admitted,
+            "seconds": round(dt, 2), "admitted": got["docs"],
             "unique_fraction": round((n // 8 if n >= 8 else 1) / n, 4)}
 
 
