@@ -803,7 +803,9 @@ def q_text_bigram_lm(spark: SparkSession, sf: str) -> DataFrame:
     upgrade of text_unigram_lm, restricted to the first 100 docs so the
     oracle's bigram replay stays readable."""
     from kstream_spark.operators.corpus import bigram_logprob
-    return bigram_logprob(_docs(spark, sf), "doc_id", "text") \
+    from kstream_spark.util import ensure_parallelism
+    return bigram_logprob(ensure_parallelism(_docs(spark, sf)),
+                          "doc_id", "text") \
         .filter(F.col("doc_id") < 100)
 
 
@@ -918,13 +920,12 @@ def q_pipeline_selection_mix(spark: SparkSession, sf: str) -> DataFrame:
                     .select("doc_id", "dsir_micro")),
         "doc_id").repartition(1).persist()
     # kept is <= _MIX_SELECT rows BY CONSTRUCTION, so the corpus-scale
-    # machinery is pinned off explicitly: no repartition floor, no
-    # bigram-table gate job (broadcast trivially), and the two-phase
+    # machinery stays off: no repartition spread, no bigram-table gate
+    # job (broadcast pinned), and the two-phase
     # ntile collapses to one range partition — each would otherwise
     # schedule dozens of near-empty tasks (measured: the 200-row LM +
     # ntile stages were 4s of the query's 7s at sf1)
-    lm = bigram_logprob(kept, "doc_id", "text",
-                        min_parallel_bytes=None, bigram_table="broadcast")
+    lm = bigram_logprob(kept, "doc_id", "text", bigram_table="broadcast")
     scored = lm.withColumn(
         "_lpb", F.col("sum_logp_micro").cast("double") / F.col("n_bigrams"))
     binned = with_ntile_percent_rank(

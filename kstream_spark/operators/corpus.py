@@ -122,8 +122,8 @@ def decontaminate(df: DataFrame, id_col: str, text_col: str,
 
     # shingle+md5 fan-out is CPU-heavy per byte: spread a single-split scan
     # across cores (same floor as the dedup shingle paths)
-    from kstream_spark.util import ensure_parallelism
-    train = shingled(ensure_parallelism(df, min_bytes=256 << 10),
+    from kstream_spark.util import FANOUT_MIN_BYTES, ensure_parallelism
+    train = shingled(ensure_parallelism(df, min_bytes=FANOUT_MIN_BYTES),
                      id_col, text_col, id_col)
     ev = F.broadcast(shingled(eval_df, eval_id_col, eval_text_col, "_eval_id")
                      .distinct())
@@ -395,7 +395,6 @@ def corpus_stats(df: DataFrame, text_col: str, lang_col: str,
 
 
 def bigram_logprob(df: DataFrame, id_col: str, text_col: str,
-                   min_parallel_bytes: int | None = 8 << 20,
                    bigram_table: str = "auto",
                    broadcast_max_bigrams: int = 2_000_000,
                    caches: list | None = None,
@@ -446,21 +445,18 @@ def bigram_logprob(df: DataFrame, id_col: str, text_col: str,
     than the materialization.  ``caches`` receives the persisted
     relation (callers free via collect_freeing); without the flag
     nothing persists.
+
+    The input is used as given — the repartition floor is a per-consumer
+    call, A/B'd at sf1: this operator alone runs FASTER without the
+    extra exchange (2.8s -> 1.4s: two fat map tasks feeding the shared
+    bg exchange beat 32 rescheduled ones), so callers spread their
+    input themselves (``ensure_parallelism``) where it pays.
     """
-    from kstream_spark.util import ensure_parallelism
     if bigram_table not in ("auto", "broadcast", "shuffle"):
         raise ValueError(f"bigram_table must be auto|broadcast|shuffle, "
                          f"got {bigram_table!r}")
     w = _clean_words(F.lower(F.col(text_col)))
-    # ``min_parallel_bytes``: the repartition floor is a PER-CONSUMER
-    # call, A/B'd at sf1 — this operator alone runs FASTER without the
-    # extra exchange (2.8s -> 1.4s: two fat map tasks feeding the
-    # shared bg exchange beat 32 rescheduled ones), so the default
-    # keeps ensure_parallelism's conservative 8MB skip; downstream-heavy
-    # consumers (curriculum_bins: +ntile +per-doc scoring, 10.5s -> 6.2s
-    # WITH the spread) pass the explode-heavy 256KB floor instead.
-    big = (ensure_parallelism(df, min_bytes=min_parallel_bytes)
-           .withColumn("_w", w).filter(F.size("_w") >= 2)
+    big = (df.withColumn("_w", w).filter(F.size("_w") >= 2)
            .select(F.col(id_col),
                    F.explode(F.expr(
                        "transform(sequence(2, size(_w)), "

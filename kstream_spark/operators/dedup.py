@@ -53,9 +53,11 @@ def shingle_sets(df: DataFrame, id_col: str, text_col: str, n: int = 3,
     ``array_distinct`` before the explode makes rows per-doc unique already —
     no global distinct (that would be a full shuffle of the largest relation
     for nothing)."""
-    from kstream_spark.util import ensure_parallelism
-    sh = ensure_parallelism(df, min_bytes=256 << 10).select(F.col(id_col), F.explode(
-        F.array_distinct(word_shingles(F.col(text_col), n))).alias("s"))
+    from kstream_spark.util import FANOUT_MIN_BYTES, ensure_parallelism
+    sh = ensure_parallelism(df, min_bytes=FANOUT_MIN_BYTES).select(
+        F.col(id_col),
+        F.explode(F.array_distinct(word_shingles(F.col(text_col), n)))
+        .alias("s"))
     if max_shingle_df is not None:
         keep = sh.groupBy("s").agg(F.count("*").alias("df")) \
                  .filter(F.col("df") <= max_shingle_df).select("s")
@@ -153,13 +155,13 @@ def winnow_pairs(df: DataFrame, id_col: str, text_col: str, k: int = 4,
     Documents shorter than k tokens emit no fingerprints; shorter than
     window+k-1 tokens emit the global-min fingerprint of what they have.
     """
-    from kstream_spark.util import ensure_parallelism
+    from kstream_spark.util import FANOUT_MIN_BYTES, ensure_parallelism
     # MATERIALIZE the hash array before windowing: a lambda body that
     # references the hash EXPRESSION re-evaluates the whole
     # split -> shingle -> md5 chain per window position (O(n^2) md5 calls
     # per doc, ~40x slower measured); against a materialized column each
     # window is an O(window) slice
-    hashed = ensure_parallelism(df, min_bytes=256 << 10).select(
+    hashed = ensure_parallelism(df, min_bytes=FANOUT_MIN_BYTES).select(
         F.col(id_col),
         F.transform(word_shingles(F.col(text_col), k),
                     lambda s: hash_str(s, "winnow")).alias("_hs"))
@@ -420,10 +422,10 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str, n: int = 3,
     """
     rows = num_hashes // bands
     if max_shingle_df is None:
-        from kstream_spark.util import ensure_parallelism
-        doc = _doc_local_minhash(ensure_parallelism(df, min_bytes=256 << 10),
-                                 id_col, text_col,
-                                 n, num_hashes, bands=bands).persist()
+        from kstream_spark.util import FANOUT_MIN_BYTES, ensure_parallelism
+        doc = _doc_local_minhash(
+            ensure_parallelism(df, min_bytes=FANOUT_MIN_BYTES),
+            id_col, text_col, n, num_hashes, bands=bands).persist()
         sig_b = doc.filter(F.col("n") > 0) \
             .select(id_col, *[f"b{b}" for b in range(bands)])
         stack = ", ".join(f"{b}, b{b}" for b in range(bands))
@@ -511,7 +513,7 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from kstream_spark.util import ensure_parallelism
+    from kstream_spark.util import FANOUT_MIN_BYTES, ensure_parallelism
 
     def run(batches):
         for pdf in batches:
@@ -541,7 +543,7 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
     id_type = dict(df.dtypes)[id_col]
     chunk_schema = ", ".join(f"c{c} long" for c in range(SIMHASH_CHUNKS))
-    return ensure_parallelism(df, min_bytes=256 << 10) \
+    return ensure_parallelism(df, min_bytes=FANOUT_MIN_BYTES) \
         .select(F.col(id_col), F.col(text_col)) \
         .mapInPandas(run, f"__id {id_type}, {chunk_schema}") \
         .withColumnRenamed("__id", id_col)

@@ -53,8 +53,8 @@ def _dsir_tokens(df: DataFrame, id_col: str, text_col: str,
 
     import pandas as pd
 
-    from kstream_spark.util import ensure_parallelism
-    df = ensure_parallelism(df, min_bytes=256 << 10)
+    from kstream_spark.util import FANOUT_MIN_BYTES, ensure_parallelism
+    df = ensure_parallelism(df, min_bytes=FANOUT_MIN_BYTES)
     cols = [F.col(id_col)] + ([] if extra is None else [extra])
     proj = df.select(*cols, F.lower(F.col(text_col)).alias("__txt"))
     keys = [f.name for f in proj.schema.fields[:-1]]
@@ -419,7 +419,7 @@ def curriculum_bins(df: DataFrame, id_col: str, text_col: str,
     """
     from kstream_spark.operators.corpus import bigram_logprob
     from kstream_spark.operators.ranking import with_ntile_percent_rank
-    from kstream_spark.util import ensure_parallelism
+    from kstream_spark.util import FANOUT_MIN_BYTES, ensure_parallelism
     # downstream-heavy consumer: a MODERATE spread wins at both measured
     # scales (sf0.1: 1.55s vs 2.1 unspread / 2.4 at full width; sf1:
     # 5.0 vs 5.7 / 6.0 — min-of-3, quiet) — 8 tasks amortize per-task
@@ -427,13 +427,6 @@ def curriculum_bins(df: DataFrame, id_col: str, text_col: str,
     # twice (both bigram consumers), while still unblocking the scan's
     # 1-2 file splits.  At real scale the input arrives in many splits
     # and this is a no-op.
-    # min_parallel_bytes=None pins the inner floor OFF explicitly: the
-    # input is already spread, and bigram_logprob's own 8MB gate would
-    # otherwise re-widen an >=8MB corpus to full defaultParallelism —
-    # exactly the A/B-measured losing arm.  (None, not a huge-bytes
-    # sentinel: when Catalyst stats are unavailable a size threshold is
-    # skipped and the partition check would repartition anyway —
-    # ADVICE r9.)
     # share_bigrams threads through to bigram_logprob: the exploded
     # (id, bigram) relation persists once and feeds the count table, the
     # probe join, and the auto gate (query-scale arm; see its docstring)
@@ -442,9 +435,8 @@ def curriculum_bins(df: DataFrame, id_col: str, text_col: str,
     # scale (natural-language corpora stay far under the 2M-bigram
     # broadcast ceiling) pins the arm and drops that job entirely
     lm = bigram_logprob(
-        ensure_parallelism(df, min_partitions=8, min_bytes=256 << 10),
-        id_col, text_col, min_parallel_bytes=None,
-        caches=caches, share_bigrams=share_bigrams,
+        ensure_parallelism(df, min_partitions=8, min_bytes=FANOUT_MIN_BYTES),
+        id_col, text_col, caches=caches, share_bigrams=share_bigrams,
         bigram_table=bigram_table)
     scored = lm.withColumn(
         "_lpb", F.col("sum_logp_micro").cast("double") / F.col("n_bigrams"))

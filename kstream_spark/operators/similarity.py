@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 
 from kstream_spark.functions.vectors import (as_double, dot, lit_doubles,
                                              nearest_cell, norm)
-from kstream_spark.util import local_df
+from kstream_spark.util import fits_driver, local_df
 
 
 def cosine_topk(emb: DataFrame, id_col: str, vec_col: str,
@@ -106,11 +106,11 @@ def cosine_pairs(emb: DataFrame, id_col: str, vec_col: str,
     bucket verify does (oracle-proven discipline).  Zero-norm vectors
     pair with nothing, as in the SQL oracle.
     """
-    from kstream_spark.util import ensure_parallelism, input_size_bytes
+    from kstream_spark.util import ensure_parallelism, plan_size_bytes
 
     emb = ensure_parallelism(emb)
     if n_blocks is None:
-        size = input_size_bytes(emb)
+        size = plan_size_bytes(emb)
         dim_probe = (emb.select(F.size(vec_col).alias("d")).first()
                      if size is not None else None)
         if size is None or dim_probe is None:   # no stats / empty input
@@ -480,8 +480,8 @@ def embedding_dedup_survivors(emb: DataFrame, id_col: str, vec_col: str,
     (Catalyst size stats, no job triggered; ~100k vecs x ~1 KB/vec).
     """
     if pair_fn is None:
-        from kstream_spark.util import input_size_bytes
-        size = input_size_bytes(emb)
+        from kstream_spark.util import plan_size_bytes
+        size = plan_size_bytes(emb)
         if size is not None and size > 100 << 20:
             import warnings
             warnings.warn(
@@ -518,23 +518,6 @@ def decontaminate_embedding(corpus: DataFrame, eval_set: DataFrame,
     hit = (F.round(dot(F.col("__v"), F.col("__ev"))
                    / (F.col("__n") * F.col("__en")), 6) >= threshold)
     return c.join(e, hit, "left_anti").drop("__v", "__n")
-
-
-def _train_local(emb: DataFrame, id_col: str | None,
-                 local_bytes: int | None, local: bool | None) -> bool:
-    """Arm gate shared by the training loops: run Lloyd's driver-local
-    when the INPUT is provably tiny (Catalyst scan stats — no job), the
-    seed order is well-defined (id_col given), and the caller didn't pin
-    an arm.  Missing stats (mapInPandas children, views) mean "can't
-    prove small" and keep the distributed arm — the safe default at any
-    scale."""
-    if local is not None:
-        return local
-    if id_col is None or local_bytes is None:
-        return False
-    from kstream_spark.util import _plan_size_bytes
-    size = _plan_size_bytes(emb)
-    return size is not None and size <= local_bytes
 
 
 def _collect_vecs_sorted_seeds(emb: DataFrame, vec_col: str, sort_key: str,
@@ -612,7 +595,6 @@ def _lloyd_reduce(vecs: DataFrame, nparts: int, kernel, state, keys: tuple,
 def kmeans_centroids(emb: DataFrame, vec_col: str, k: int = 16,
                      iters: int = 5, seed: int = 7,
                      id_col: str | None = None,
-                     local_bytes: int | None = 32 << 20,
                      local: bool | None = None) -> list:
     """Lloyd's k-means over the embedding column, cosine-style (vectors and
     centroids L2-normalized each round).
@@ -635,20 +617,25 @@ def kmeans_centroids(emb: DataFrame, vec_col: str, k: int = 16,
     HYBRID EXECUTION (r13): at the bench SFs the embeddings relation is
     thousands of rows, and each Lloyd iteration's cost is the ACTION
     (plan + Arrow round-trip + collect), not the math — k=8 x iters=3 paid
-    4 driver actions ~0.2 s each for ~1 ms of numpy.  When Catalyst scan
-    stats prove the input <= ``local_bytes`` (default 32 MB — the same
-    class as the centroid/codebook collects), ONE action collects the
-    vector column and every iteration runs kmeans_partials on the driver
-    over the whole matrix.  On a single-partition single-Arrow-batch input
+    4 driver actions ~0.2 s each for ~1 ms of numpy.  When the driver
+    size gate (``util.fits_driver``: Catalyst stats prove the input <=
+    32 MB — the same class as the centroid/codebook collects) passes and
+    ``id_col`` orders the seeds, ONE action collects the vector column and
+    every iteration runs kmeans_partials on the driver over the whole
+    matrix.  On a single-partition single-Arrow-batch input
     (all bench SFs) that is bit-identical to the distributed arm, and
     under any batching the round-6 HALF_UP discipline absorbs
     summation-order ulps as it does between the two reduce paths and the
     SQL oracle.  ``local=True/False`` pins the arm (parity tests); missing
-    stats or ``local_bytes=None`` keep the distributed arm.
+    stats or no ``id_col`` keep the distributed arm.
     """
     sort_key = id_col if id_col is not None else vec_col
     vecs = None
-    if _train_local(emb, id_col, local_bytes, local):
+    # without id_col the seeds are ordered by the vector itself, so only
+    # a pin picks the local arm
+    train_local = (fits_driver(emb, local) if id_col is not None
+                   else bool(local))
+    if train_local:
         mat, seed_idx = _collect_vecs_sorted_seeds(emb, vec_col, sort_key, k)
         cents = mat[seed_idx]
 
@@ -869,7 +856,6 @@ def load_codebooks(spark, path: str) -> list:
 
 def pq_codebooks(emb: DataFrame, vec_col: str, m: int = 4, k: int = 16,
                  iters: int = 2, id_col: str | None = None,
-                 local_bytes: int | None = 32 << 20,
                  local: bool | None = None) -> list:
     """Train product-quantization codebooks: the vector space splits into
     ``m`` contiguous subspaces (dim/m components each) and each learns an
@@ -887,16 +873,18 @@ def pq_codebooks(emb: DataFrame, vec_col: str, m: int = 4, k: int = 16,
     of floats).
 
     HYBRID EXECUTION (r13): the same size-gated driver-local arm as
-    kmeans_centroids — when scan stats prove the input <= ``local_bytes``
-    the whole training runs pq_partials off ONE collect (seed collect +
-    iters actions collapse to a single action); ``local=True/False`` pins
-    an arm, missing stats keep the distributed path.  Callers whose input
+    kmeans_centroids — when the driver size gate passes (Catalyst stats
+    prove the input <= 32 MB, ``id_col`` given) the whole training runs
+    pq_partials off ONE collect (seed collect + iters actions collapse to
+    a single action); ``local=True/False`` pins an arm, missing stats
+    keep the distributed path.  Callers whose input
     has no stats (e.g. the residual mapInPandas chain) pass ``local=``
     derived from their own source relation.
     """
     sort_key = id_col if id_col is not None else vec_col
     vecs = None
-    train_local = _train_local(emb, id_col, local_bytes, local)
+    train_local = (fits_driver(emb, local) if id_col is not None
+                   else bool(local))
     if train_local:
         mat, seed_idx = _collect_vecs_sorted_seeds(emb, vec_col, sort_key, k)
         seed_mat = mat[seed_idx]
@@ -1188,8 +1176,7 @@ def ivfpq_residual_topk(emb: DataFrame, id_col: str, vec_col: str,
     # + per-iteration actions, each re-running the assign+residual chain).
     books = pq_codebooks(res_df, "rv", m=m, k=pq_k, iters=pq_iters,
                          id_col="_id",
-                         local=_train_local(emb, "_id", 32 << 20,
-                                            None) or None)
+                         local=fits_driver(emb) or None)
     bks = [np.asarray(b, dtype=np.float64) for b in books]
     encoded = _encode_cells(emb, id_col, vec_col, centroids, books,
                             residual=True) \
@@ -1321,7 +1308,7 @@ def ivfsq_topk(emb: DataFrame, id_col: str, vec_col: str, query_ids: list,
     # _probe_relation, and corpus-side assignment, quantize and scoring
     # stay distributed — only bounded setup localizes, so the 100 TB
     # shape is untouched.
-    if _train_local(emb, id_col, 32 << 20, local):
+    if fits_driver(emb, local):
         rows = emb.select(F.col(id_col).alias("_id"),
                           as_double(F.col(vec_col)).alias("v")).collect()
         mat = np.array([r["v"] for r in rows], dtype=np.float64)

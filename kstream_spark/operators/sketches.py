@@ -97,10 +97,10 @@ def kmv_source_overlap(df: DataFrame, id_col: str, text_col: str,
     """
     from kstream_spark.functions.text import hash_str, word_shingles
     from kstream_spark.operators.similarity import _per_query_topk
-    from kstream_spark.util import ensure_parallelism
+    from kstream_spark.util import FANOUT_MIN_BYTES, ensure_parallelism
 
     # shingle+md5 fan-out is CPU-heavy per byte (shingle_sets floor)
-    df = ensure_parallelism(df, min_bytes=256 << 10)
+    df = ensure_parallelism(df, min_bytes=FANOUT_MIN_BYTES)
     sh = (df.select(F.col(source_col).alias("src"),
                     F.explode(word_shingles(F.lower(F.col(text_col)), n))
                     .alias("s"))

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from kstream_spark.util import local_df
+from kstream_spark.util import fits_driver, local_df
 
 from kstream_spark.functions.text import (content_hash, token_count,
                                           word_shingles, words)
@@ -88,8 +88,8 @@ def fingerprint(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFr
     few-split scan across cores first (the shingle_sets precedent; a
     single parquet file otherwise serializes the whole hash grind onto
     one task)."""
-    from kstream_spark.util import ensure_parallelism
-    df = ensure_parallelism(df, min_bytes=256 << 10)
+    from kstream_spark.util import FANOUT_MIN_BYTES, ensure_parallelism
+    df = ensure_parallelism(df, min_bytes=FANOUT_MIN_BYTES)
     sh = F.array_distinct(word_shingles(F.col(text_col), n))
     return df.select(
         F.col(id_col),
@@ -255,22 +255,6 @@ _BPE_PAIRS_EXPR = (
     "element_at(split(trim(seq), ' '), i + 1)))")
 
 
-def _local_train_arm(df: DataFrame, local_bytes: int | None,
-                     local: bool | None) -> bool:
-    """Size gate for the tokenizer-training local arms (the similarity
-    trainers' r13 pattern): run the merge/EM loop driver-side when the
-    SOURCE relation's Catalyst scan stats prove it tiny.  The collected
-    relation is the distinct-word vocabulary — smaller still.  Missing
-    stats keep the distributed loop (the 100 TB default)."""
-    if local is not None:
-        return local
-    if local_bytes is None:
-        return False
-    from kstream_spark.util import _plan_size_bytes
-    size = _plan_size_bytes(df)
-    return size is not None and size <= local_bytes
-
-
 def _bpe_pairs_local(seqs: list, wfs: list) -> dict:
     """Adjacent-pair counts over collected symbol sequences — the exact
     Python replay of the distributed round's statistic: tokens from
@@ -303,7 +287,6 @@ def _merge_seqs_local(seqs: list, pair: str, merged: str) -> list:
 
 def bpe_train(df: DataFrame, text_col: str,
               n_merges: int = 8,
-              local_bytes: int | None = 32 << 20,
               local: bool | None = None) -> DataFrame:
     """ITERATIVE byte-pair-encoding training (Sennrich et al. 2016): each
     round counts adjacent SYMBOL-pair frequencies across the corpus,
@@ -339,7 +322,7 @@ def bpe_train(df: DataFrame, text_col: str,
     wf_rel = (df.select(F.explode(w).alias("w"))
               .filter(F.length("w") >= 2)
               .groupBy("w").agg(F.count("*").cast("long").alias("wf")))
-    if _local_train_arm(df, local_bytes, local):
+    if fits_driver(df, local):
         # LOCAL ARM (r13): ONE action collects the vocab with the
         # char-spaced seq built JVM-SIDE (regexp_replace runs in the
         # collect projection, so Java's per-code-unit '.' semantics are
@@ -513,8 +496,8 @@ def lang_id_ngram(df: DataFrame, id_col: str, text_col: str,
     # ENTIRELY on the scan's 1-2 file splits (the r8 shape's early
     # distinct-exchange parallelized downstream work by accident; this
     # repartition does it on purpose)
-    from kstream_spark.util import ensure_parallelism
-    src = ensure_parallelism(df, min_bytes=256 << 10) \
+    from kstream_spark.util import FANOUT_MIN_BYTES, ensure_parallelism
+    src = ensure_parallelism(df, min_bytes=FANOUT_MIN_BYTES) \
         .select(F.col(id_col), *keep, t.alias("_t"))
     grams = F.when(
         F.length("_t") >= n,
@@ -765,7 +748,6 @@ def unigram_train(df: DataFrame, text_col: str, seed_v: int = 60,
                   max_piece_len: int = 4,
                   oov_logp_micro: int = -20_000_000,
                   max_word_len: int | None = None,
-                  local_bytes: int | None = 32 << 20,
                   local: bool | None = None) -> DataFrame:
     """Unigram-LM tokenizer training by HARD (Viterbi) EM with pruning —
     the SentencePiece algorithm's deterministic-oracle-friendly form
@@ -804,7 +786,7 @@ def unigram_train(df: DataFrame, text_col: str, seed_v: int = 60,
     # order-free count.  So the arms are bit-identical by construction
     # and the per-iteration action (Arrow round-trip + groupBy collect)
     # collapses into plain dict counting.
-    local_arm = _local_train_arm(df, local_bytes, local)
+    local_arm = fits_driver(df, local)
     ws_l: list = []
     wfs_l: list = []
     if local_arm:
@@ -1043,7 +1025,6 @@ def _right_size_vocab_relation(word_freq: DataFrame,
 
 def wordpiece_train(df: DataFrame, text_col: str,
                     n_merges: int = 6,
-                    local_bytes: int | None = 32 << 20,
                     local: bool | None = None) -> DataFrame:
     """ITERATIVE WordPiece training (Schuster & Nakajima 2012, the BERT
     tokenizer's training rule): structurally bpe_train's loop — merge one
@@ -1082,7 +1063,7 @@ def wordpiece_train(df: DataFrame, text_col: str,
     wf_rel = (df.select(F.explode(w).alias("w"))
               .filter(F.length("w") >= 2)
               .groupBy("w").agg(F.count("*").cast("long").alias("wf")))
-    if _local_train_arm(df, local_bytes, local):
+    if fits_driver(df, local):
         # LOCAL ARM (r13): one collect of the JVM-prepared seqs; each
         # round's symbol+pair statistic is integer counting in Python
         # (bit-identical to the fused groupBy sum) and the argmax was

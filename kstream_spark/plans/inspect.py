@@ -5,6 +5,9 @@ between a pruned and a full scan, is the difference between minutes and
 hours.  These helpers make plan shape testable so scale regressions fail in
 CI instead of production (the reference has no optimizer to inspect —
 SURVEY.md §4).
+
+The counting helpers take a DataFrame (its executed plan) or plan text,
+e.g. the recorded plan of a SQL execution (tools/dump_plans.py).
 """
 
 from __future__ import annotations
@@ -14,30 +17,32 @@ import re
 from pyspark.sql import DataFrame
 
 
-def physical_plan(df: DataFrame) -> str:
+def physical_plan(df: DataFrame | str) -> str:
+    if isinstance(df, str):
+        return df
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def count_op(df: DataFrame, op: str) -> int:
+def count_op(df: DataFrame | str, op: str) -> int:
     return physical_plan(df).count(op)
 
 
-def broadcast_join_count(df: DataFrame) -> int:
+def broadcast_join_count(df: DataFrame | str) -> int:
     return count_op(df, "BroadcastHashJoin")
 
 
-def shuffle_count(df: DataFrame) -> int:
+def shuffle_count(df: DataFrame | str) -> int:
     """Shuffle exchanges only (broadcast exchanges excluded)."""
     plan = physical_plan(df)
     return len(re.findall(r"Exchange (?:hashpartitioning|rangepartitioning|"
                           r"RoundRobinPartitioning|SinglePartition)", plan))
 
 
-def pushed_filters(df: DataFrame) -> list[str]:
+def pushed_filters(df: DataFrame | str) -> list[str]:
     return re.findall(r"PushedFilters: \[([^\]]*)\]", physical_plan(df))
 
 
-def read_schemas(df: DataFrame) -> list[str]:
+def read_schemas(df: DataFrame | str) -> list[str]:
     return re.findall(r"ReadSchema: (\S+)", physical_plan(df))
 
 

@@ -18,6 +18,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kstream_spark.util import warn_once
+
 
 def _nanos_timestamp_cols(path: str) -> list[str]:
     f = path
@@ -29,7 +31,11 @@ def _nanos_timestamp_cols(path: str) -> list[str]:
         f = files[0]
     try:
         schema = pq.read_schema(f)
-    except Exception:
+    except Exception as exc:  # noqa: BLE001
+        warn_once("read_parquet footer",
+                  f"read_parquet: cannot read the footer of {f} "
+                  f"({type(exc).__name__}: {exc}); TIMESTAMP(NANOS) columns "
+                  f"are not detected and stay int64 nanos")
         return []
     out = []
     for field in schema:

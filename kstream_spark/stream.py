@@ -19,12 +19,11 @@ lineage — Catalyst sees the whole pipeline and optimizes across operator
 boundaries (pushdown, pruning, join planning).  The reference executes its
 node tree verbatim (SURVEY.md §4); we deliberately do NOT reproduce that.
 
-The stream tracks its logical key column (``key``).  ``select_key`` /
-``transform`` mark the stream re-keyed (``kstream/k_stream.go:294-300``
-``keySelected``); keyed operators (stream-stream join, materialize, group_by)
-then know a shuffle on the new key is required — in Spark the shuffle is
-implicit, so this flag only drives optional explicit ``repartition`` and the
-``through`` compatibility no-op.
+The stream tracks its logical key column (``key``), set by ``select_key`` /
+``transform``.  The reference also marks a re-keyed stream
+(``kstream/k_stream.go:294-300`` ``keySelected``) so keyed operators know to
+repartition; in Spark the shuffle on the new key is planned by Catalyst, so
+no such flag is kept.
 """
 
 from __future__ import annotations
@@ -46,21 +45,19 @@ class Stream:
     share this API; streaming execution is wired in kstream_spark.streaming.
     """
 
-    def __init__(self, df: DataFrame, key: str | None = None, name: str = "stream",
-                 key_selected: bool = False):
+    def __init__(self, df: DataFrame, key: str | None = None,
+                 name: str = "stream"):
         self.df = df
         self.key = key
         self.name = name
-        self.key_selected = key_selected  # ref: k_stream.go:294-300
 
     # -- internals ---------------------------------------------------------
     def _derive(self, df: DataFrame, *, key: str | None = None,
-                key_selected: bool | None = None, name: str | None = None) -> "Stream":
+                name: str | None = None) -> "Stream":
         return Stream(
             df,
             key=key if key is not None else self.key,
             name=name or self.name,
-            key_selected=self.key_selected if key_selected is None else key_selected,
         )
 
     # -- stateless operators (SURVEY §2.2) ---------------------------------
@@ -87,11 +84,10 @@ class Stream:
     def select_key(self, expr: Column | str, key_col: str = "key") -> "Stream":
         """Re-key the stream.  Ref: processors/key_selector.go:54-68.
 
-        Marks the stream re-keyed so downstream keyed ops shuffle on the new
-        key (implicit in Spark).
+        Downstream keyed ops shuffle on the new key (implicit in Spark).
         """
         df = self.df.withColumn(key_col, _to_col(expr))
-        return self._derive(df, key=key_col, key_selected=True)
+        return self._derive(df, key=key_col)
 
     def transform_values(self, **exprs: Column | str) -> "Stream":
         """Map value columns, key unchanged.  Ref: value_transformer.go:54-68."""
@@ -151,7 +147,7 @@ class Stream:
             df = self.df.repartition(num_partitions, self.key)
         else:
             df = self.df.repartition(F.col(self.key))
-        return self._derive(df, key_selected=False)
+        return self._derive(df)
 
     # -- joins (SURVEY §2.3) ----------------------------------------------
     def join_global_table(self, table, on, how: str = "inner", dlq=None,

@@ -202,20 +202,35 @@ def with_retries(fn: Callable, attempts: int = 3, delay_ms: int = 100) -> Callab
 EPOCH = "__epoch"
 
 
+def _hadoop_path(spark: SparkSession, path: str):
+    """The session's Hadoop FileSystem for ``path`` and its ``Path``."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    fs, p = _hadoop_path(spark, path)
+    return bool(fs.exists(p))
+
+
 def write_epoch(df: DataFrame, path: str, epoch_id: int) -> None:
     """Write micro-batch ``epoch_id`` into partition ``__epoch=epoch_id``
-    of ``path``, replacing only that partition: a replayed epoch
-    OVERWRITES its own rows instead of appending duplicates.  An empty
-    ``df`` writes no partition, so it leaves an existing one in place.
+    of ``path``, replacing only that partition: the partition is deleted,
+    then ``df`` is appended as it.  A replayed epoch so REPLACES its own
+    rows instead of appending duplicates, and an empty replay leaves the
+    epoch empty.  Other epochs are never touched.
 
     This is the file-sink analog of the reference's changelog
     mark->process->delete protocol (processor.go:116-170): replay is safe
-    because re-applying epoch N is idempotent.  Dynamic partition
-    overwrite is a per-write option, so the session's overwrite mode is
-    never touched."""
+    because re-applying epoch N is idempotent — provided the caller's
+    batch computes the same rows on replay.  A batch that reads state it
+    wrote itself must read it as its first attempt did
+    (``read_epochs(exclude_epoch=)``, or ``streaming/scd``'s applied-epoch
+    check)."""
+    fs, p = _hadoop_path(df.sparkSession, f"{path}/{EPOCH}={int(epoch_id)}")
+    fs.delete(p, True)
     (df.withColumn(EPOCH, F.lit(int(epoch_id)))
-     .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-     .partitionBy(EPOCH).parquet(path))
+     .write.mode("append").partitionBy(EPOCH).parquet(path))
 
 
 def read_epochs(spark: SparkSession, path: str,

@@ -4,16 +4,26 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+# The one size gate for every driver-local arm: an input whose Catalyst
+# size is known and at most this many bytes runs its bounded setup or
+# training loop on the driver (one collect instead of one job per round).
+DRIVER_LOCAL_BYTES = 32 << 20
 
-def _plan_size_bytes(df: DataFrame) -> int | None:
+# The repartition floor of the CPU-heavy fan-out operators (shingling,
+# hashing, n-gram explodes grow each row ~10-50x), passed to
+# ``ensure_parallelism`` in place of its plain-codegen default.
+FANOUT_MIN_BYTES = 256 << 10
+
+
+def plan_size_bytes(df: DataFrame) -> int | None:
     """Catalyst's optimizer estimate of the plan's output volume (file
     sizes for scans) — no job, no rdd conversion.
 
     SINGLE choke point for the py4j-private ``_jdf.queryExecution()``
-    handle: it is not public API (stable on the pinned Spark 4.x, could
-    move in a future release), so it lives behind this one helper and
-    every caller must tolerate ``None``.  Any attribute/py4j change on a
-    Spark upgrade lands in the except and degrades to the conservative
+    stats handle: it is not public API (stable on the pinned Spark 4.x,
+    could move in a future release), so it lives behind this one helper
+    and every caller must tolerate ``None``.  Any attribute/py4j change on
+    a Spark upgrade lands in the except and degrades to the conservative
     no-stats path instead of crashing — the Spark-Connect case (no _jdf at
     all) degrades the same way.
 
@@ -34,8 +44,21 @@ def _plan_size_bytes(df: DataFrame) -> int | None:
         return None
 
 
+def fits_driver(df: DataFrame, local: bool | None = None) -> bool:
+    """Whether ``df`` is small enough for a driver-local arm: the ``local``
+    pin when one is given (parity tests compare the two arms through it),
+    else True iff Catalyst's size of ``df`` is known and at most
+    ``DRIVER_LOCAL_BYTES``.  Missing stats (in-memory rows, mapInPandas
+    children, views) cannot prove the input small, so they keep the
+    distributed arm — the safe choice at any scale."""
+    if local is not None:
+        return local
+    size = plan_size_bytes(df)
+    return size is not None and size <= DRIVER_LOCAL_BYTES
+
+
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None,
-                       min_bytes: int | None = 8 << 20) -> DataFrame:
+                       min_bytes: int = 8 << 20) -> DataFrame:
     """Repartition iff the input is both under-partitioned AND big enough
     for the shuffle to pay for itself.
 
@@ -49,17 +72,12 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None,
     no job, no rdd conversion on the skip path.  At real scale inputs
     arrive in many splits and the partition check is a no-op anyway.
 
-    ``min_bytes`` is per-operator: CPU-heavy fan-out operators (shingling
-    explodes text ~10-50x) pass a lower floor; plain codegen passes keep
-    the default.  ``min_bytes=None`` is the explicit OFF switch — return
-    the frame untouched unconditionally.  (Callers that want the
-    repartition pinned off must use None, not a huge-bytes sentinel: when
-    Catalyst stats are unavailable a size threshold is simply skipped and
-    the partition check would repartition anyway — ADVICE r9.)"""
-    if min_bytes is None:
-        return df
+    ``min_bytes`` is per-operator: CPU-heavy fan-out operators pass
+    ``FANOUT_MIN_BYTES``; plain codegen passes keep the default.  When
+    Catalyst stats are unavailable the size threshold is skipped and the
+    partition check alone decides."""
     spark = df.sparkSession
-    size = _plan_size_bytes(df)
+    size = plan_size_bytes(df)
     if size is not None and size < min_bytes:
         return df
     # stats unavailable -> fall through to the partition check
@@ -85,7 +103,7 @@ def free_local_checkpoint(df: DataFrame) -> None:
     of the analyzed plan: ``queryExecution().analyzed().rdd()`` is the
     persisted internal-row RDD, and unpersisting THAT frees the blocks
     immediately (probe: storage info goes to [] right after).  Uses the
-    py4j-private ``_jdf`` like ``_plan_size_bytes``; any failure (plan
+    py4j-private ``_jdf`` like ``plan_size_bytes``; any failure (plan
     shape changed on a Spark upgrade, Spark Connect) degrades to the
     old behavior — GC-driven cleanup — rather than crashing, with a
     once-per-process ``RuntimeWarning`` naming the exception."""
@@ -95,21 +113,27 @@ def free_local_checkpoint(df: DataFrame) -> None:
         _warn_free_checkpoint_fallback(exc)
 
 
-_free_checkpoint_warned = False
+_warned: set[str] = set()
+
+
+def warn_once(key: str, message: str) -> None:
+    """A ``RuntimeWarning`` with ``message``, said at most once per
+    process for each ``key`` — how a degraded fallback path announces
+    itself without flooding a per-batch loop."""
+    if key in _warned:
+        return
+    _warned.add(key)
+    import warnings
+    warnings.warn(message, RuntimeWarning, stacklevel=3)
 
 
 def _warn_free_checkpoint_fallback(exc: Exception) -> None:
     """Say once per process that ``free_local_checkpoint`` could not
     unpersist the checkpointed RDD, and why."""
-    global _free_checkpoint_warned
-    if _free_checkpoint_warned:
-        return
-    _free_checkpoint_warned = True
-    import warnings
-    warnings.warn(
-        f"free_local_checkpoint: unpersist failed ({type(exc).__name__}: "
-        f"{exc}); the checkpoint blocks stay until ContextCleaner GC",
-        RuntimeWarning, stacklevel=3)
+    warn_once("free_local_checkpoint",
+              f"free_local_checkpoint: unpersist failed "
+              f"({type(exc).__name__}: {exc}); the checkpoint blocks stay "
+              f"until ContextCleaner GC")
 
 
 def skew_join(left: DataFrame, right: DataFrame, key: str,
@@ -220,21 +244,13 @@ def local_df(spark, rows, schema) -> DataFrame:
     return spark.createDataFrame(rows, struct)
 
 
-_local_df_warned = False
-
-
 def _warn_local_df_fallback(exc: Exception) -> None:
     """Say once per process that ``local_df`` fell back to the
     Python-RDD ``createDataFrame`` path, and why."""
-    global _local_df_warned
-    if _local_df_warned:
-        return
-    _local_df_warned = True
-    import warnings
-    warnings.warn(
-        f"local_df: Arrow local relation failed ({type(exc).__name__}: "
-        f"{exc}); falling back to the Python-RDD createDataFrame path",
-        RuntimeWarning, stacklevel=3)
+    warn_once("local_df",
+              f"local_df: Arrow local relation failed "
+              f"({type(exc).__name__}: {exc}); falling back to the "
+              f"Python-RDD createDataFrame path")
 
 
 def collect_freeing(out: DataFrame, *cached: DataFrame) -> DataFrame:
@@ -250,15 +266,8 @@ def collect_freeing(out: DataFrame, *cached: DataFrame) -> DataFrame:
     is the contract: the caller asserts `out` is final-result-sized
     (audit rows, top-k, pair lists — never a corpus), so one bounded
     collect lets the caches be dropped deterministically the moment the
-    result exists.
-
-    KSTREAM_SPARK_KEEP_LAZY=1 returns ``out`` unchanged (keeping the
-    caches alive) — plan-inspection tooling (tools/dump_plans.py) sets
-    it so the distributed shape stays visible instead of collapsing to
-    a LocalTableScan of the materialized rows."""
-    import os
-    if os.environ.get("KSTREAM_SPARK_KEEP_LAZY") == "1":
-        return out
+    result exists.  The distributed plan behind that collect stays
+    inspectable: it is a recorded SQL execution (tools/dump_plans.py)."""
     rows = out.collect()
     schema = out.schema
     for df in cached:
@@ -268,10 +277,3 @@ def collect_freeing(out: DataFrame, *cached: DataFrame) -> DataFrame:
     # actions (the bench noop write, joins onto the audit rows) no
     # longer pay defaultParallelism Python worker round-trips per action
     return local_df(out.sparkSession, rows, schema)
-
-
-def input_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's estimate of the plan's input volume (file sizes for
-    scans).  None when stats are unavailable — see ``_plan_size_bytes``
-    for the private-API caveat."""
-    return _plan_size_bytes(df)

@@ -154,10 +154,8 @@ def test_training_local_arm_bit_identical(spark):
     in numpy) must return BIT-identical centroids/codebooks to the
     distributed partials arm on the same input — including a multi-batch
     shape (several partitions) and non-contiguous ids, so the seed
-    selection (k lowest ids) and per-cell sums line up across arms.  The
-    auto gate must also resolve: tiny scan stats -> local; an input with
-    no stats (in-memory rows keep the distributed arm via the
-    defaultSizeInBytes sentinel -> None) -> distributed."""
+    selection (k lowest ids) and per-cell sums line up across arms (the
+    auto gate itself: test_fits_driver_gate)."""
     import random
     random.seed(29)
     rows = [(i * 3 + 1, [float(random.gauss(0, 1)) for _ in range(16)])
@@ -174,12 +172,25 @@ def test_training_local_arm_bit_identical(spark):
     pq_l = S.pq_codebooks(emb, "embedding", m=4, k=6, iters=2,
                           id_col="vec_id", local=True)
     assert pq_l == pq_d
-    # createDataFrame relations carry no scan stats -> auto stays
-    # distributed (gate returns False); forced arms above prove parity
-    from kstream_spark.operators.similarity import _train_local
-    assert _train_local(emb, "vec_id", 32 << 20, None) is False
-    assert _train_local(emb, None, 32 << 20, None) is False
-    assert _train_local(emb, "vec_id", None, None) is False
+
+
+def test_fits_driver_gate(spark, tmp_path):
+    """The one driver-local size gate: a parquet input under the
+    threshold goes local (its scan stats are known and small); an
+    in-memory createDataFrame input has no stats (defaultSizeInBytes
+    sentinel -> None) and stays distributed; a pin overrides both."""
+    from kstream_spark.util import DRIVER_LOCAL_BYTES, fits_driver, \
+        plan_size_bytes
+    rows = [(i, [float(i), 1.0]) for i in range(50)]
+    mem = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    mem.write.parquet(str(tmp_path / "emb"))
+    scan = spark.read.parquet(str(tmp_path / "emb"))
+    assert 0 < plan_size_bytes(scan) <= DRIVER_LOCAL_BYTES
+    assert fits_driver(scan) is True
+    assert plan_size_bytes(mem) is None
+    assert fits_driver(mem) is False
+    assert fits_driver(scan, local=False) is False
+    assert fits_driver(mem, local=True) is True
 
 
 def test_sq8_oracle_and_ivfsq_local_arm_identical(spark, tmp_path):
@@ -602,13 +613,13 @@ def test_embedding_dedup_warns_on_large_exact_default(spark, monkeypatch):
     import kstream_spark.util as U
     emb = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "vec_id long, embedding array<double>")
-    monkeypatch.setattr(U, "input_size_bytes", lambda df: 200 << 20)
+    monkeypatch.setattr(U, "plan_size_bytes", lambda df: 200 << 20)
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
         S.embedding_dedup_survivors(emb, "vec_id", "embedding", threshold=0.9)
         assert any("lsh_cosine_pairs" in str(x.message) for x in w)
     # small input (or explicit pair_fn): silent
-    monkeypatch.setattr(U, "input_size_bytes", lambda df: 1 << 20)
+    monkeypatch.setattr(U, "plan_size_bytes", lambda df: 1 << 20)
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
         S.embedding_dedup_survivors(emb, "vec_id", "embedding", threshold=0.9)

@@ -182,14 +182,14 @@ def test_plan_stats_unavailable_degrades_gracefully(spark):
     """The private-API stats helper must return None (not raise) when the
     _jdf handle is missing — the Spark-Connect / version-drift case — and
     ensure_parallelism must still function on such a frame."""
-    from kstream_spark.util import _plan_size_bytes, ensure_parallelism
+    from kstream_spark.util import ensure_parallelism, plan_size_bytes
 
     class NoJdf:
         """DataFrame stand-in without a _jdf attribute."""
         def __getattr__(self, name):
             raise AttributeError(name)
 
-    assert _plan_size_bytes(NoJdf()) is None
+    assert plan_size_bytes(NoJdf()) is None
 
     # unknown-stats SENTINEL (spark.sql.defaultSizeInBytes ~= Long.Max):
     # Catalyst reports it for relations it cannot size; it must read as
@@ -213,24 +213,23 @@ def test_plan_stats_unavailable_degrades_gracefully(spark):
             self.sparkSession = spark
             self._jdf = _Chain(size)
 
-    assert _plan_size_bytes(FakeDF((1 << 63) - 1)) is None     # the sentinel
-    assert _plan_size_bytes(FakeDF(12345)) == 12345            # real estimate
+    assert plan_size_bytes(FakeDF((1 << 63) - 1)) is None     # the sentinel
+    assert plan_size_bytes(FakeDF(12345)) == 12345            # real estimate
     # stats-based size of a real scan: positive
-    from kstream_spark.util import input_size_bytes
     ev = StreamBuilder(spark).table(f"{SF}/events.parquet").to_df()
-    assert input_size_bytes(ev) > 0
+    assert plan_size_bytes(ev) > 0
 
     # real frame, stats path monkey-stripped: ensure_parallelism falls
     # through to the partition-count check instead of crashing
     df = spark.range(100).repartition(2)
     import kstream_spark.util as u
-    orig = u._plan_size_bytes
-    u._plan_size_bytes = lambda _df: None
+    orig = u.plan_size_bytes
+    u.plan_size_bytes = lambda _df: None
     try:
         out = ensure_parallelism(df, min_partitions=4)
         assert out.rdd.getNumPartitions() >= 4
     finally:
-        u._plan_size_bytes = orig
+        u.plan_size_bytes = orig
 
 
 def test_local_df_warns_once_on_python_rdd_fallback(spark, monkeypatch):
@@ -257,7 +256,7 @@ def test_local_df_warns_once_on_python_rdd_fallback(spark, monkeypatch):
                 raise ValueError("arrow route unavailable")
             return spark.createDataFrame(data, schema)
 
-    monkeypatch.setattr(u, "_local_df_warned", False)
+    monkeypatch.setattr(u, "_warned", set())
     with pytest.warns(RuntimeWarning, match="ValueError: arrow route"):
         out = u.local_df(ArrowFails(), rows, schema)
     assert sorted(map(tuple, out.collect())) == rows
@@ -280,7 +279,7 @@ def test_free_local_checkpoint_warns_once_on_failure(spark, monkeypatch):
     cp = spark.range(10).localCheckpoint()
     sc = spark.sparkContext
     before = len(sc._jsc.sc().getRDDStorageInfo())
-    monkeypatch.setattr(u, "_free_checkpoint_warned", False)
+    monkeypatch.setattr(u, "_warned", set())
     with warnings.catch_warnings():
         warnings.simplefilter("error")          # the working path: silent
         u.free_local_checkpoint(cp)

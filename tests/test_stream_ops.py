@@ -25,7 +25,7 @@ def test_filter(events):
 
 def test_select_key_marks_rekeyed(events):
     s = events.select_key(F.col("cat"))
-    assert s.key == "key" and s.key_selected
+    assert s.key == "key"
     assert {r.key for r in s.to_df().collect()} == {"a", "b", "c"}
 
 
@@ -62,7 +62,6 @@ def test_merge(events):
 def test_through_repartitions(events):
     s = events.select_key("cat").through(2)
     assert s.to_df().rdd.getNumPartitions() == 2
-    assert not s.key_selected  # repartition point clears the re-key flag
     assert s.to_df().count() == 4
 
 
@@ -112,6 +111,26 @@ def test_write_partitioned_layout(spark, tmp_path):
     back = spark.read.parquet(out)
     assert back.count() == ev.count()          # lossless roundtrip
     assert set(back.columns) == set(ev.columns)
+
+
+def test_nanos_detection_warns_once_on_unreadable_footer(tmp_path,
+                                                         monkeypatch):
+    """A parquet footer that cannot be read leaves TIMESTAMP(NANOS)
+    columns undetected; that must be said once per process with a
+    RuntimeWarning naming the exception — never silently."""
+    import warnings
+
+    import kstream_spark.sources.parquet as P
+    import kstream_spark.util as u
+    d = tmp_path / "bad"
+    d.mkdir()
+    (d / "part-0.parquet").write_bytes(b"not a parquet file")
+    monkeypatch.setattr(u, "_warned", set())
+    with pytest.warns(RuntimeWarning, match="part-0.parquet .*Arrow"):
+        assert P._nanos_timestamp_cols(str(d)) == []
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")          # second failure: silent
+        assert P._nanos_timestamp_cols(str(d)) == []
 
 
 def test_compact_parquet_reduces_file_count(spark, tmp_path):

@@ -281,6 +281,20 @@ def test_write_stream_idempotent_leaves_session_overwrite_mode(spark, stream_dir
         spark.conf.set(key, before)
 
 
+def test_write_epoch_empty_replay_clears_its_epoch(spark, tmp_path):
+    """A replayed epoch whose output is empty must leave that epoch
+    empty: the first attempt's rows may not survive the replay, and other
+    epochs stay untouched."""
+    out = str(tmp_path / "out")
+    schema = "id long, v string"
+    SC.write_epoch(spark.createDataFrame([(1, "a"), (2, "b")], schema), out, 0)
+    SC.write_epoch(spark.createDataFrame([(3, "c")], schema), out, 1)
+    SC.write_epoch(spark.createDataFrame([], schema), out, 1)
+    assert sorted(r.id for r in SC.read_epochs(spark, out).collect()) == [1, 2]
+    SC.write_epoch(spark.createDataFrame([], schema), out, 0)
+    assert SC.read_epochs(spark, out) is None
+
+
 def test_streaming_lookup_join_against_refreshing_table(spark, stream_dir, tmp_path):
     """Streaming J1: per-batch lookup join against a global table — the
     streaming analog of JoinGlobalTable (the table is re-resolvable per
@@ -1325,20 +1339,16 @@ def test_tokenize_stream_matches_batch_unigram_tokenize(spark, tmp_path):
         assert sorted(g["pos"]) == list(range(len(g)))
 
 
-def test_scd2_stream_matches_batch_history(spark, tmp_path):
-    """Streamed dimension maintenance == one batch scd2_history over the
-    full log for a strict event-time split (the documented contract:
-    same-timestamp events for a key must not straddle batches)."""
+def _scd_log_stream(spark, src):
+    """A change log written as two event-time-split files, and a stream
+    that reads them as two ordered micro-batches (epochs 0 and 1)."""
     import datetime as dt
-    from kstream_spark.operators.scd import scd2_history
-    from kstream_spark.streaming.scd import read_dimension, scd2_stream
 
     t = lambda d, h=0: dt.datetime(2024, 1, d, h)
     log = [(1, "a", t(1), 10), (1, "b", t(3), 11), (1, "b", t(5), 12),
            (2, "x", t(2), 13), (2, "y", t(6), 14), (3, "q", t(7), 15)]
     df = spark.createDataFrame(
         log, "k long, attr string, ts timestamp, eid long")
-    src = tmp_path / "in"
     # two files -> maxFilesPerTrigger=1 gives two ordered micro-batches
     df.filter("ts < '2024-01-04'").coalesce(1) \
         .write.parquet(str(src / "b1"))
@@ -1348,17 +1358,58 @@ def test_scd2_stream_matches_batch_history(spark, tmp_path):
               .schema("k long, attr string, ts timestamp, eid long")
               .option("maxFilesPerTrigger", 1)
               .parquet(str(src / "*")))
+    return df, stream
+
+
+def _dimension_rows(pdf):
+    return sorted(map(tuple, pdf[["k", "attr", "valid_from", "valid_to",
+                                  "is_current"]]
+                      .astype(str).itertuples(index=False, name=None)))
+
+
+def test_scd2_stream_matches_batch_history(spark, tmp_path):
+    """Streamed dimension maintenance == one batch scd2_history over the
+    full log for a strict event-time split (the documented contract:
+    same-timestamp events for a key must not straddle batches)."""
+    from kstream_spark.operators.scd import scd2_history
+    from kstream_spark.streaming.scd import read_dimension, scd2_stream
+
+    df, stream = _scd_log_stream(spark, tmp_path / "in")
     q = scd2_stream(stream, str(tmp_path / "dim"), str(tmp_path / "ck"),
                     "k", ["attr"], "ts", id_col="eid")
     _run(q)
 
     got = read_dimension(spark, str(tmp_path / "dim")).toPandas()
     want = scd2_history(df, "k", ["attr"], "ts", id_col="eid").toPandas()
-    key = lambda p: sorted(map(tuple, p[["k", "attr", "valid_from",
-                                         "valid_to", "is_current"]]
-                               .astype(str).itertuples(index=False,
-                                                       name=None)))
-    assert key(got) == key(want)
+    assert _dimension_rows(got) == _dimension_rows(want)
+
+
+def test_scd2_stream_replay_after_open_swap_keeps_history(spark, tmp_path):
+    """A crash after a batch's open-relation swap but before Spark's
+    commit log replays that batch on restart.  The replay must leave the
+    dimension as an uninterrupted run does: the batch's closed interval
+    (key 2's "x") may not be lost to an empty re-derivation."""
+    import os
+
+    from kstream_spark.operators.scd import scd2_history
+    from kstream_spark.streaming.scd import read_dimension, scd2_stream
+
+    df, stream = _scd_log_stream(spark, tmp_path / "in")
+    dim, ck = str(tmp_path / "dim"), str(tmp_path / "ck")
+    _run(scd2_stream(stream, dim, ck, "k", ["attr"], "ts", id_col="eid"))
+    # the crash: epoch 1's batch ran to its end, its commit is lost
+    commit = os.path.join(ck, "commits", "1")
+    os.remove(commit)
+    crc = os.path.join(ck, "commits", ".1.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    _run(scd2_stream(stream, dim, ck, "k", ["attr"], "ts", id_col="eid"))
+    assert os.path.exists(commit)               # epoch 1 was replayed
+
+    got = read_dimension(spark, dim).toPandas()
+    want = scd2_history(df, "k", ["attr"], "ts", id_col="eid").toPandas()
+    assert ("2", "x") in {r[:2] for r in _dimension_rows(got)}
+    assert _dimension_rows(got) == _dimension_rows(want)
 
 
 def test_drift_stream_matches_batch_psi(spark, tmp_path):
