@@ -23,12 +23,11 @@ run first), and the control query (dedup_exact) timed at the start, the
 end, and every 25 queries in between — machine drift and JVM aging then
 show up as a trend in control_runs/control_spread instead of silently
 inflating untouched queries (the r11/r12 unfalsifiable +2-3% creep).
-Fresh-JVM bands (the sf1 sweep's discipline) were measured and rejected
-as the DEFAULT for this suite: bands of 25 read 201.7 s cold / 181.9 s
-with a warm-up pass vs ~164 s aged-JVM on identical code, the penalty
-concentrated in driver-iterative queries (BSP rounds, merge loops) that
-need minutes of JIT aging.  Set SPARK_GRAFT_BENCH_BAND=N to opt in to
-banded fresh-JVM mode for drift diagnosis.
+Fresh-JVM bands were measured and rejected for this suite: bands of 25
+read 201.7 s cold / 181.9 s with a warm-up pass vs ~164 s aged-JVM on
+identical code, the penalty concentrated in driver-iterative queries
+(BSP rounds, merge loops) that need minutes of JIT aging.  For
+fresh-JVM measurements use ``tools/check.py --orchestrate``.
 
 Scale note: the exact all-pairs oracle anchors (sim_cosine_pairs,
 dedup_embedding) are deliberately NOT in HEADLINE — their scale-path
@@ -176,6 +175,38 @@ HEADLINE = [
 ]
 
 
+def _bench_state(spark, iters: int, prefix: str, variants: tuple,
+                 save, action) -> dict:
+    """The shared loop of the ``bench_*_state`` lifecycles: ``save(path)``
+    writes the persisted artifact once, untimed (production writes it
+    once); then per variant, the min over ``iters`` runs of the
+    zero-argument callable ``action(variant, path)`` returns (building
+    it is untimed, calling it is timed), with ``clearCache`` after every
+    run.  Returns {"<prefix>_<variant>": seconds}."""
+    import shutil
+
+    path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                        ".bench_tmp", prefix)
+    save(path)
+    out = {}
+    for variant in variants:
+        best = None
+        for _ in range(max(1, iters)):
+            go = action(variant, path)
+            t0 = time.time()
+            go()
+            dt = time.time() - t0
+            best = dt if best is None else min(best, dt)
+            spark.catalog.clearCache()
+        out[f"{prefix}_{variant}"] = round(best, 3)
+    shutil.rmtree(os.path.dirname(path), ignore_errors=True)
+    return out
+
+
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
 def bench_incremental_state(spark, sf_dir: str, iters: int) -> dict:
     """Time the PRODUCTION incremental-dedup shape both ways on a
     production-like split (increment = 2% of docs, standing corpus = 98% —
@@ -190,8 +221,6 @@ def bench_incremental_state(spark, sf_dir: str, iters: int) -> dict:
 
     The gap between the two numbers is the per-batch cost of NOT keeping
     the signature store, and it widens with the corpus:increment ratio."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     from kstream_spark.operators.dedup import (corpus_signatures,
@@ -200,27 +229,17 @@ def bench_incremental_state(spark, sf_dir: str, iters: int) -> dict:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     inc = docs.filter(F.col("doc_id") % 50 == 0)
     cor = docs.filter(F.col("doc_id") % 50 != 0)
-    state_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                             ".bench_tmp", "corpus_sig")
-    # untimed: the store is written once per admitted doc in production
-    corpus_signatures(cor, "doc_id", "text").write.mode("overwrite") \
-        .parquet(state_dir)
-    out = {}
-    for variant in ("stateless", "state"):
-        best = None
-        for _ in range(max(1, iters)):
-            state = (spark.read.parquet(state_dir)
-                     if variant == "state" else None)
-            t0 = time.time()
-            res = incremental_dedup(inc, cor, "doc_id", "text",
-                                    n=3, threshold=0.8, corpus_state=state)
-            res.select("doc_id").write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-            spark.catalog.clearCache()
-        out[f"dedup_incremental_prod_{variant}"] = round(best, 3)
-    shutil.rmtree(os.path.dirname(state_dir), ignore_errors=True)
-    return out
+
+    def action(variant, path):
+        state = spark.read.parquet(path) if variant == "state" else None
+        return lambda: _noop(incremental_dedup(
+            inc, cor, "doc_id", "text", n=3, threshold=0.8,
+            corpus_state=state).select("doc_id"))
+
+    return _bench_state(
+        spark, iters, "dedup_incremental_prod", ("stateless", "state"),
+        lambda path: corpus_signatures(cor, "doc_id", "text")
+        .write.mode("overwrite").parquet(path), action)
 
 
 def bench_ivf_state(spark, sf_dir: str, iters: int) -> dict:
@@ -236,37 +255,29 @@ def bench_ivf_state(spark, sf_dir: str, iters: int) -> dict:
 
     The gap is the per-query-batch cost of NOT persisting the quantizer —
     at 100 TB the retrain arm re-scans the corpus iters times per batch."""
-    import shutil
-
     from kstream_spark.operators.similarity import (ivf_topk,
                                                     kmeans_centroids,
                                                     load_centroids,
                                                     save_centroids)
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cent_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                            ".bench_tmp", "ivf_centroids")
-    # untimed: production trains once
-    save_centroids(spark, kmeans_centroids(emb, "embedding", k=8, iters=3,
-                                           id_col="vec_id"), cent_dir)
-    out = {}
-    for variant in ("retrain", "state"):
-        best = None
-        for _ in range(max(1, iters)):
-            t0 = time.time()
-            cents = (load_centroids(spark, cent_dir) if variant == "state"
-                     else kmeans_centroids(emb, "embedding", k=8, iters=3,
-                                           id_col="vec_id"))
-            res = ivf_topk(emb, "vec_id", "embedding",
+
+    def train():
+        return kmeans_centroids(emb, "embedding", k=8, iters=3,
+                                id_col="vec_id")
+
+    def action(variant, path):
+        def go():
+            cents = (load_centroids(spark, path) if variant == "state"
+                     else train())
+            _noop(ivf_topk(emb, "vec_id", "embedding",
                            query_ids=list(range(5)), k=10, n_probe=3,
-                           centroids=cents)
-            res.write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-            spark.catalog.clearCache()
-        out[f"sim_ivf_prod_{variant}"] = round(best, 3)
-    shutil.rmtree(os.path.dirname(cent_dir), ignore_errors=True)
-    return out
+                           centroids=cents))
+        return go
+
+    return _bench_state(spark, iters, "sim_ivf_prod", ("retrain", "state"),
+                        lambda path: save_centroids(spark, train(), path),
+                        action)
 
 
 def bench_pq_state(spark, sf_dir: str, iters: int) -> dict:
@@ -281,37 +292,29 @@ def bench_pq_state(spark, sf_dir: str, iters: int) -> dict:
     The gap is the per-query-batch cost of NOT persisting the codebooks —
     at 100 TB the retrain arm re-scans the corpus per batch for partial
     sums while the state arm's first stage is the encode projection."""
-    import shutil
-
     from kstream_spark.operators.similarity import (load_codebooks,
                                                     pq_adc_topk,
                                                     pq_codebooks,
                                                     save_codebooks)
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    book_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                            ".bench_tmp", "pq_codebooks")
-    # untimed: production trains once
-    save_codebooks(spark, pq_codebooks(emb, "embedding", m=4, k=16,
-                                       iters=2, id_col="vec_id"), book_dir)
-    out = {}
-    for variant in ("retrain", "state"):
-        best = None
-        for _ in range(max(1, iters)):
-            t0 = time.time()
-            books = (load_codebooks(spark, book_dir) if variant == "state"
-                     else pq_codebooks(emb, "embedding", m=4, k=16,
-                                       iters=2, id_col="vec_id"))
-            res = pq_adc_topk(emb, "vec_id", "embedding",
+
+    def train():
+        return pq_codebooks(emb, "embedding", m=4, k=16, iters=2,
+                            id_col="vec_id")
+
+    def action(variant, path):
+        def go():
+            books = (load_codebooks(spark, path) if variant == "state"
+                     else train())
+            _noop(pq_adc_topk(emb, "vec_id", "embedding",
                               query_ids=list(range(5)), codebooks=books,
-                              k=10)
-            res.write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-            spark.catalog.clearCache()
-        out[f"sim_pq_prod_{variant}"] = round(best, 3)
-    shutil.rmtree(os.path.dirname(book_dir), ignore_errors=True)
-    return out
+                              k=10))
+        return go
+
+    return _bench_state(spark, iters, "sim_pq_prod", ("retrain", "state"),
+                        lambda path: save_codebooks(spark, train(), path),
+                        action)
 
 
 CONTROL_QUERY = "dedup_exact"   # same control as the sf1 sweep instrument
@@ -324,19 +327,17 @@ def _time_query(spark, fn, sf_dir: str, iters: int) -> float:
     best = None
     for _ in range(max(1, iters)):
         t0 = time.time()
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
+        _noop(fn(spark, sf_dir))
         dt = time.time() - t0
         best = dt if best is None else min(best, dt)
     return best
 
 
-def run_band(names: list, sf_dir: str, iters: int,
-             with_state: bool) -> dict:
-    """One measurement band in THIS process: warm-up, control query,
-    the band's queries, control again.  The control pair brackets the
-    band so cross-band machine drift is measurable (the sf1 sweep's
-    instrument, ported after two rounds of unfalsifiable sf0.1 creep)."""
+def run_suite(names: list, sf_dir: str, iters: int) -> dict:
+    """Warm-up, control query, the queries, the state lifecycles, control
+    again — all in ONE JVM.  The control runs bracket the suite and
+    recur every CONTROL_EVERY queries, so machine drift and JVM aging
+    show up as a trend in the control series."""
     from kstream_spark import get_spark
     from kstream_spark.inventory import INVENTORY
 
@@ -344,27 +345,20 @@ def run_band(names: list, sf_dir: str, iters: int,
     # warm-up: JVM/JIT + file-listing so the first timed query isn't charged
     # for session startup (steady-state throughput is the comparison point);
     # the mapInPandas ping also forks the Python workers and initializes
-    # Arrow so a fresh-JVM band's first pandas query isn't charged either
+    # Arrow so the first pandas query isn't charged either
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-    spark.range(1000, numPartitions=8) \
-        .mapInPandas(lambda it: it, "id long") \
-        .write.format("noop").mode("overwrite").save()
-    # steady-state warm-up: run every band query once UNTIMED before the
+    _noop(spark.range(1000, numPartitions=8)
+          .mapInPandas(lambda it: it, "id long"))
+    # steady-state warm-up: run every query once UNTIMED before the
     # timed pass.  A fresh JVM spends its first minutes C2-compiling
-    # Spark itself (first banded run: the band-0 control read 0.455 s at
-    # band start vs 0.253 s at band end, and the banded total came out
-    # 201.7 s vs the aged-JVM 164.2 s on identical code), so charging
-    # that warm-up to whichever queries run early re-creates the very
-    # attribution problem the fresh-JVM bands exist to solve.  One
-    # untimed pass warms the codegen classes, file listings, Python
-    # workers, and shared JIT paths; the timed min-of-N then measures
-    # steady state — the regime a long-running production job lives in,
-    # and the same regime the old single-JVM instrument measured for
-    # every query except the first few.
+    # Spark itself, so charging that warm-up to whichever queries run
+    # early would misattribute it; one untimed pass warms the codegen
+    # classes, file listings, Python workers, and shared JIT paths, and
+    # the timed min-of-N then measures steady state — the regime a
+    # long-running production job lives in.
     for name in names:
         if name in INVENTORY:
-            INVENTORY[name][0](spark, sf_dir) \
-                .write.format("noop").mode("overwrite").save()
+            _noop(INVENTORY[name][0](spark, sf_dir))
             spark.catalog.clearCache()
     ctrl_fn = INVENTORY[CONTROL_QUERY][0]
     control_runs = []
@@ -383,20 +377,19 @@ def run_band(names: list, sf_dir: str, iters: int,
         # clear between queries so cache memory doesn't skew later timings
         spark.catalog.clearCache()
         done += 1
-        # interleaved control: in the single-JVM default, JVM aging (the
-        # r11/r12 unfalsifiable +2-3% creep) shows up as an upward trend
-        # in THIS series instead of silently inflating late queries
+        # interleaved control: JVM aging (the r11/r12 unfalsifiable
+        # +2-3% creep) shows up as an upward trend in THIS series instead
+        # of silently inflating late queries
         if done % CONTROL_EVERY == 0 and done < len(names):
             control_runs.append(
                 {"at": f"after_{done}",
                  "sec": round(_time_query(spark, ctrl_fn, sf_dir,
                                           iters), 3)})
             spark.catalog.clearCache()
-    if with_state:
-        timings.update(bench_incremental_state(spark, sf_dir, iters))
-        timings.update(bench_ivf_state(spark, sf_dir, iters))
-        timings.update(bench_pq_state(spark, sf_dir, iters))
-        spark.catalog.clearCache()
+    timings.update(bench_incremental_state(spark, sf_dir, iters))
+    timings.update(bench_ivf_state(spark, sf_dir, iters))
+    timings.update(bench_pq_state(spark, sf_dir, iters))
+    spark.catalog.clearCache()
     control_runs.append(
         {"at": "end", "sec": round(_time_query(spark, ctrl_fn, sf_dir,
                                                iters), 3)})
@@ -408,70 +401,13 @@ def main():
     sf = float(sf_dir.rstrip("/").split("sf")[-1]) if "sf" in sf_dir else 0.1
     iters = int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "3"))
 
-    if "--band" in sys.argv:
-        # band worker: fresh JVM, one band, JSON to the path after --json
-        spec = sys.argv[sys.argv.index("--band") + 1]
-        out_path = sys.argv[sys.argv.index("--json") + 1]
-        s, e = (int(x) for x in spec.split(":"))
-        res = run_band(HEADLINE[s:e], sf_dir, iters,
-                       with_state="--state" in sys.argv)
-        with open(out_path, "w") as fh:
-            json.dump(res, fh)
-        return
-
-    band_env = os.environ.get("SPARK_GRAFT_BENCH_BAND")
-    timings, control_runs = {}, []
-    if band_env is None or os.environ.get("SPARK_GRAFT_BENCH_INPROC"):
-        # DEFAULT: one JVM, untimed warm-up pass, control query
-        # interleaved every CONTROL_EVERY queries.  The r13 fresh-JVM
-        # band experiment measured the alternative and it is the worse
-        # instrument at this scale: bands of 25 read 201.7 s without a
-        # warm-up pass and 181.9 s with one, vs ~the aged-JVM 164 s on
-        # identical code — C2/codegen warm-up recurs per band and lands
-        # hardest on driver-iterative queries (graph BSP rounds, BPE
-        # merge loops) that need minutes of aging, not one pass.  The
-        # single JVM keeps r11/r12 comparability, and the aging creep
-        # those rounds could not falsify is now measured directly: an
-        # upward trend in the interleaved control series attributes it.
-        # A drifting control is reported (control_spread), never
-        # re-measured: keeping the flatter of two attempts could only
-        # bias the totals towards faster.
-        res = run_band(HEADLINE, sf_dir, iters, with_state=True)
-        timings = res["timings"]
-        control_runs = [dict(band=0, **c) for c in res["control_runs"]]
-    else:
-        # opt-in (SPARK_GRAFT_BENCH_BAND=N): fresh JVM per band of N,
-        # the sf1 sweep's discipline — kept for drift diagnosis and for
-        # memory-pressure regimes (at sf1 JVM accumulation corrupted
-        # late-query timings 3-4x, which is a different failure mode
-        # than the sf0.1 +2-3% creep).  Band workers are this same file
-        # re-invoked with --band; JVM startup is untimed.
-        band_size = int(band_env)
-        import subprocess
-        import tempfile
-
-        bands = [(s, min(s + band_size, len(HEADLINE)))
-                 for s in range(0, len(HEADLINE), band_size)]
-        for bi, (s, e) in enumerate(bands):
-            with tempfile.NamedTemporaryFile(mode="r", suffix=".json",
-                                             delete=False) as fh:
-                out_path = fh.name
-            cmd = [sys.executable, os.path.abspath(__file__),
-                   "--band", f"{s}:{e}", "--json", out_path]
-            if e == len(HEADLINE):
-                cmd.append("--state")
-            proc = subprocess.run(cmd, stdout=subprocess.DEVNULL)
-            if proc.returncode != 0:
-                print(json.dumps({"error": f"band {bi} ({s}:{e}) failed",
-                                  "returncode": proc.returncode}),
-                      file=sys.stderr)
-                continue
-            with open(out_path) as fh:
-                res = json.load(fh)
-            os.unlink(out_path)
-            timings.update(res["timings"])
-            control_runs.extend(dict(band=bi, **c)
-                                for c in res["control_runs"])
+    # A drifting control is reported (control_spread), never re-measured:
+    # keeping the flatter of two attempts could only bias the totals
+    # towards faster.  Control runs keep a ``band`` field (always 0) so
+    # readers of older BENCH_DETAIL files parse new ones unchanged.
+    res = run_suite(HEADLINE, sf_dir, iters)
+    timings = res["timings"]
+    control_runs = [dict(band=0, **c) for c in res["control_runs"]]
 
     total = round(sum(timings.values()), 3)
     ctrl = [c["sec"] for c in control_runs]
@@ -514,7 +450,7 @@ def main():
         "queries": {},
         "queries_omitted": len(timings),
         "slowest5": slowest,
-        "control": [[c.get("band", 0), c["at"], c["sec"]]
+        "control": [[c["band"], c["at"], c["sec"]]
                     for c in control_runs],
         "control_spread": full["control_spread"],
         "detail": "BENCH_DETAIL.json",

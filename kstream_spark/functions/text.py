@@ -9,13 +9,34 @@ xxhash64 but keeps signatures portable; swap ``hash_str`` for
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+# Java's ``\s`` class, spelled out: Python's ``\s`` is Unicode-wide and
+# would split on NBSP & friends where the JVM ``words`` does not
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
 
 def words(text: Column) -> Column:
     """Lower-cased whitespace-robust tokens (split on runs of whitespace)."""
     return F.split(F.lower(text), r"\s+")
+
+
+def py_words(text: str | None) -> list[str]:
+    """Python twin of ``words`` for code that runs inside mapInPandas:
+    ``text`` must already be lower-cased JVM-side (Python ``str.lower``
+    differs on dotted-I etc.).  Same split as the JVM, empty leading and
+    trailing tokens included; NULL text has no words."""
+    return [] if text is None else _JAVA_WS.split(text)
+
+
+def py_word_shingles(text: str | None, n: int = 3) -> list[str]:
+    """Python twin of ``word_shingles`` (with duplicates, empty when the
+    document has fewer than n words) over JVM-lowered ``text``."""
+    ws = py_words(text)
+    return [" ".join(ws[i:i + n]) for i in range(len(ws) - n + 1)]
 
 
 def hash_str(col: Column, seed: str = "") -> Column:

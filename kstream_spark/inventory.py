@@ -546,9 +546,14 @@ INVENTORY.update(QUALITY_INVENTORY)
 # touched + the 27-query r6-stale band (group 3's current front).
 
 _TOUCHED_THIS_ROUND: list[str] = [
-    # stores hold executed state: the registry write path appends, and the
-    # first read folds the parts into a checkpointed, compacted base
-    "gt_versioned_upsert", "j3_stream_table_join",
+    # one near-dup pipeline: every pair operator goes through the one
+    # shared-key join and one verify per metric; dedup_simhash now runs
+    # the banded Hamming join and the JVM-faithful Python shingler
+    "dedup_ngram_jaccard", "dedup_ngram_capped", "dedup_containment",
+    "dedup_cross_source", "dedup_prefix_jaccard", "dedup_minhash_lsh",
+    "dedup_survivors", "dedup_clusters", "dedup_best_of_cluster",
+    "dedup_incremental", "dedup_winnow", "dedup_winnow_capped",
+    "dedup_simhash", "mm_phash_dedup", "mm_afp_dedup", "mm_video_dedup",
 ]
 
 

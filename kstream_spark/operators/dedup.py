@@ -12,25 +12,32 @@ Scale design:
                         frequency exceeds the cap BEFORE the join (at scale
                         set it ~0.1% of corpus; also a correctness win — a
                         shingle in every doc carries no signal).
-  * minhash_lsh       — per-doc signature (one groupBy), band-bucket
+  * minhash_lsh       — per-doc band hashes and sorted shingle array in
+                        one shuffle-free doc-local pass, band-bucket
                         self-join (only docs sharing a band bucket meet),
                         exact-Jaccard verification of the candidate set.
                         This is the 100 TB path: candidate generation cost
                         is ~|bucket|² summed over buckets, not |corpus|².
                         Hashes are md5-hex strings (functions/text.py) so the
                         DuckDB oracle reproduces signatures exactly.
+
+Every pair operator is one pipeline: per-doc keys (shingles, band hashes,
+fingerprints, chunks) -> ``shared_key_pairs`` (the one join of docs on a
+shared key) -> one verify per metric (``_jaccard_on_pairs`` for Jaccard,
+``multimodal.banded_hamming_pairs`` for Hamming).  A doc with no shingles
+has no signature and pairs with nothing.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kstream_spark.functions.text import content_hash, hash_str, word_shingles
+from kstream_spark.functions.text import (content_hash, hash_str,
+                                          py_word_shingles, word_shingles)
 
 NUM_HASHES = 16
 BANDS = 4
-ROWS_PER_BAND = NUM_HASHES // BANDS
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str,
@@ -65,29 +72,76 @@ def shingle_sets(df: DataFrame, id_col: str, text_col: str, n: int = 3,
     return sh
 
 
-def _jaccard_on_pairs(cand: DataFrame, sh: DataFrame, id_col: str,
-                      threshold: float) -> DataFrame:
-    """Exact Jaccard for candidate (doc_a, doc_b) pairs.
+def shared_key_pairs(df: DataFrame, id_col: str, keys: list[str],
+                     a: str = "doc_a", b: str = "doc_b",
+                     carry: tuple[str, ...] = (),
+                     other: DataFrame | None = None) -> DataFrame:
+    """The shared-key join of the near-dup family: one row per (a, b,
+    key) where docs ``a`` and ``b`` share the key value.
 
-    Collapses the inverted index to one sorted shingle-array per doc, then
-    verifies each candidate with ``array_intersect`` — two joins keyed on doc
-    id instead of re-exploding candidates through the (doc, shingle) relation
-    (which shuffles |cand| x avg_shingles rows).  The per-doc array relation
-    is |docs| rows of ~shingle_count strings; joins on it shuffle (or
-    broadcast, when small) by doc id only."""
-    sets = sh.groupBy(id_col).agg(F.sort_array(F.collect_set("s")).alias("ss"),
-                                  F.count("*").alias("n"))
-    a = sets.select(F.col(id_col).alias("doc_a"),
-                    F.col("ss").alias("ssa"), F.col("n").alias("na"))
-    b = sets.select(F.col(id_col).alias("doc_b"),
-                    F.col("ss").alias("ssb"), F.col("n").alias("nb"))
+    ``df`` is (id, keys..., carry...); each ``carry`` column c comes out
+    as ``c + "a"`` / ``c + "b"``.  Without ``other`` it is a self-join
+    with ``a < b`` (every unordered pair once); with ``other`` the ``a``
+    side is ``df`` and the ``b`` side is ``other`` (new-vs-corpus), with
+    no ordering.  Callers add ``.distinct()`` for candidates, or a count
+    for shared-key counts.  Cost is ~|bucket|² summed over key values,
+    never all-pairs."""
+    def side(d: DataFrame, name: str, suffix: str) -> DataFrame:
+        return d.select(F.col(id_col).alias(name),
+                        *[F.col(c).alias(c + suffix) for c in carry], *keys)
+
+    pairs = side(df, a, "a").join(
+        side(df if other is None else other, b, "b"), keys)
+    return pairs.filter(F.col(a) < F.col(b)) if other is None else pairs
+
+
+def _jaccard_on_pairs(cand: DataFrame, sets: DataFrame, id_col: str,
+                      threshold: float, a: str = "doc_a",
+                      b: str = "doc_b",
+                      other: DataFrame | None = None) -> DataFrame:
+    """Exact-Jaccard verify of candidate (a, b) pairs -> (a, b, jaccard)
+    for jaccard >= threshold, rounded to 6 dp.
+
+    ``sets`` is the per-doc (id, ss sorted shingle array, n set size)
+    relation; ``other`` is the ``b`` side's when it differs
+    (new-vs-corpus).  Each candidate joins both sides by doc id and
+    intersects the arrays — never re-exploding candidates through the
+    (doc, shingle) relation, which shuffles |cand| x avg_shingles rows."""
+    sa = sets.select(F.col(id_col).alias(a),
+                     F.col("ss").alias("ssa"), F.col("n").alias("na"))
+    sb = (sets if other is None else other).select(
+        F.col(id_col).alias(b), F.col("ss").alias("ssb"),
+        F.col("n").alias("nb"))
     i = F.size(F.array_intersect("ssa", "ssb")).cast("long")
     j = i / (F.col("na") + F.col("nb") - i)
-    return (
-        cand.join(a, "doc_a").join(b, "doc_b")
-        .filter(j >= threshold)
-        .select("doc_a", "doc_b", F.round(j, 6).alias("jaccard"))
-    )
+    return (cand.join(sa, a).join(sb, b)
+            .filter(j >= threshold)
+            .select(a, b, F.round(j, 6).alias("jaccard")))
+
+
+def _shingle_intersections(df: DataFrame, id_col: str, text_col: str,
+                           n: int, max_shingle_df: int | None,
+                           persist: bool = False,
+                           caches: list | None = None) -> DataFrame:
+    """(doc_a, doc_b, na, nb, i): every doc pair sharing a shingle, with
+    both set sizes and the intersection size, straight off the shingle
+    self-join aggregation.
+
+    The set size is a per-doc constant: it is windowed onto the inverted
+    index once and CARRIED through the self-join (constant within each
+    group, so it rides in the groupBy key) — no separate sizes
+    aggregation and no post-aggregation re-joins.  ``persist`` caches
+    the sized index and appends it to ``caches``."""
+    from pyspark.sql import Window as W
+    sh = shingle_sets(df, id_col, text_col, n, max_shingle_df)
+    sized = sh.withColumn("n", F.count("*").over(W.partitionBy(id_col)))
+    if persist:
+        sized = sized.persist()
+        if caches is not None:
+            caches.append(sized)
+    return (shared_key_pairs(sized, id_col, ["s"], carry=("n",))
+            .groupBy("doc_a", "doc_b", "na", "nb")
+            .agg(F.count("*").alias("i")))
 
 
 def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str, n: int = 3,
@@ -99,24 +153,9 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str, n: int = 3,
     Intersections come straight off the shingle self-join aggregation — no
     intermediate distinct-pairs relation (that would re-shuffle the largest
     relation twice for nothing; the LSH path needs the candidate step, the
-    exact path does not)."""
-    sh = shingle_sets(df, id_col, text_col, n, max_shingle_df)
-    # set size is a per-doc constant: window it onto the inverted index once
-    # and CARRY it through the self-join (constant within each group, so it
-    # rides in the groupBy key) — no separate sizes aggregation and no
-    # post-aggregation re-joins (those were 1 shuffle + 2 joins for nothing)
-    from pyspark.sql import Window as W
-    sized = sh.withColumn("n", F.count("*").over(W.partitionBy(id_col))) \
-        .persist()
-    if caches is not None:
-        caches.append(sized)
-    inter = (
-        sized.select(F.col(id_col).alias("doc_a"), F.col("n").alias("na"), "s")
-        .join(sized.select(F.col(id_col).alias("doc_b"),
-                           F.col("n").alias("nb"), "s"), "s")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b", "na", "nb").agg(F.count("*").alias("i"))
-    )
+    exact path does not).  The sized index is persisted (``caches``)."""
+    inter = _shingle_intersections(df, id_col, text_col, n, max_shingle_df,
+                                   persist=True, caches=caches)
     j = F.col("i") / (F.col("na") + F.col("nb") - F.col("i"))
     return (
         inter.filter(j >= threshold)
@@ -187,9 +226,7 @@ def winnow_pairs(df: DataFrame, id_col: str, text_col: str, k: int = 4,
     fp = fp.persist()
     if caches is not None:
         caches.append(fp)
-    return (fp.select(F.col(id_col).alias("doc_a"), "f")
-            .join(fp.select(F.col(id_col).alias("doc_b"), "f"), "f")
-            .filter(F.col("doc_a") < F.col("doc_b"))
+    return (shared_key_pairs(fp, id_col, ["f"])
             .groupBy("doc_a", "doc_b")
             .agg(F.count("*").cast("long").alias("n_shared"))
             .filter(F.col("n_shared") >= min_shared))
@@ -197,8 +234,7 @@ def winnow_pairs(df: DataFrame, id_col: str, text_col: str, k: int = 4,
 
 def containment_pairs(df: DataFrame, id_col: str, text_col: str, n: int = 3,
                       threshold: float = 0.9,
-                      max_shingle_df: int | None = None,
-                      caches: list | None = None) -> DataFrame:
+                      max_shingle_df: int | None = None) -> DataFrame:
     """Directed near-SUBSET pairs: (doc_a, doc_b, containment) where
     containment = |A∩B| / |A| >= threshold — doc_a's shingle set is almost
     entirely inside doc_b's.
@@ -206,11 +242,10 @@ def containment_pairs(df: DataFrame, id_col: str, text_col: str, n: int = 3,
     Jaccard misses subset duplication (a paragraph pasted into a much
     longer page scores low Jaccard but containment ~1), which is a major
     duplication mode in web corpora; Broder's containment measure is the
-    standard answer.  Same inverted-index shape as ``ngram_jaccard_pairs``
-    — one self-join on shingle with per-doc set sizes carried in the
-    aggregation key — but each undirected intersection emits up to two
-    directed rows (i/na and i/nb gates), so the join itself still runs
-    once with doc_a < doc_b.
+    standard answer.  Same intersections as ``ngram_jaccard_pairs``
+    (``_shingle_intersections``), but each undirected intersection emits
+    up to two directed rows (i/na and i/nb gates), so the join itself
+    still runs once with doc_a < doc_b.
 
     Shape notes (r13 A/B at sf1): the two-sided index is deliberately
     NOT persisted — caching the exploded (doc, n, s) stream costs more
@@ -219,19 +254,8 @@ def containment_pairs(df: DataFrame, id_col: str, text_col: str, n: int = 3,
     (sizes joined post-aggregation) measured slower still (9.4–9.8 s).
     The threshold filter runs BEFORE the direction explode so only
     qualifying pairs double, not the full candidate-pair relation.
-    ``caches`` is accepted for signature parity with the family but the
-    operator holds no cache.
     """
-    from pyspark.sql import Window as W
-    sh = shingle_sets(df, id_col, text_col, n, max_shingle_df)
-    sized = sh.withColumn("n", F.count("*").over(W.partitionBy(id_col)))
-    inter = (
-        sized.select(F.col(id_col).alias("doc_a"), F.col("n").alias("na"), "s")
-        .join(sized.select(F.col(id_col).alias("doc_b"),
-                           F.col("n").alias("nb"), "s"), "s")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b", "na", "nb").agg(F.count("*").alias("i"))
-    )
+    inter = _shingle_intersections(df, id_col, text_col, n, max_shingle_df)
     # prune BEFORE doubling: only pairs qualifying in at least one
     # direction reach the explode (the candidate relation is
     # pair-space-sized; the survivors are the result)
@@ -245,14 +269,6 @@ def containment_pairs(df: DataFrame, id_col: str, text_col: str, n: int = 3,
     return (directed.filter(F.col("containment") >= threshold)
             .select("doc_a", "doc_b",
                     F.round("containment", 6).alias("containment")))
-
-
-def minhash_signatures(sh: DataFrame, id_col: str,
-                       num_hashes: int = NUM_HASHES) -> DataFrame:
-    """Per-doc minhash signature: h_i = min over shingles of md5('i:'||s)."""
-    aggs = [F.min(hash_str(F.col("s"), seed=str(i))).alias(f"h{i}")
-            for i in range(num_hashes)]
-    return sh.groupBy(id_col).agg(*aggs)
 
 
 def _doc_local_minhash(df: DataFrame, id_col: str, text_col: str, n: int,
@@ -291,8 +307,6 @@ def _doc_local_minhash(df: DataFrame, id_col: str, text_col: str, n: int,
                                          num_hashes, bands)
     if impl != "codegen":
         raise ValueError(f"impl must be pandas|codegen, got {impl!r}")
-    from kstream_spark.functions.text import word_shingles
-
     with_ss = df.select(
         F.col(id_col),
         F.sort_array(F.array_distinct(word_shingles(F.col(text_col), n)))
@@ -330,24 +344,18 @@ def _doc_local_minhash_pandas(df: DataFrame, id_col: str, text_col: str,
     docstring for the workload trade-off).  Memo bounded so a
     pathological partition can't hold gigabytes of digest rows.
 
-    Tokenization parity with the codegen arm (and the DuckDB/RE2 oracle)
-    is load-bearing: the split regex spells out Java's ASCII ``\\s``
-    class (Python's ``\\s`` is Unicode-wide and would diverge on NBSP &
-    friends), lower-casing happens JVM-side in the pre-projection (one
-    casing discipline — Python ``str.lower`` differs on dotted-I etc.),
-    and NULL text maps to the empty shingle set exactly as the codegen
-    arm's ``split(NULL)`` -> empty-array path does.  admit_stream
-    persists codegen-built signatures that later pandas-arm runs compare
-    against, so one differing token boundary silently loses near-dups."""
+    Tokenization parity with the codegen arm is load-bearing: shingles
+    come from ``functions/text.py_word_shingles`` over text lower-cased
+    JVM-side in the pre-projection.  admit_stream persists codegen-built
+    signatures that later pandas-arm runs compare against, so one
+    differing token boundary silently loses near-dups."""
     import hashlib
-    import re
 
     import pandas as pd
 
     rows = (num_hashes // bands) if bands else 0
     sig_cols = ([f"b{b}" for b in range(bands)] if bands
                 else [f"h{i}" for i in range(num_hashes)])
-    split = re.compile(r"[ \t\n\x0b\f\r]+").split   # Java \s, exactly
 
     def run(batches):
         memo: dict = {}
@@ -369,10 +377,7 @@ def _doc_local_minhash_pandas(df: DataFrame, id_col: str, text_col: str,
             out = {"__id": [], "ss": [], "n": [],
                    **{c: [] for c in sig_cols}}
             for did, text in zip(pdf["__id"], pdf["__txt"]):
-                ws = split(text) if text is not None else []
-                sh = sorted({" ".join(ws[i:i + n])
-                             for i in range(len(ws) - (n - 1))}) \
-                    if len(ws) >= n else []
+                sh = sorted(set(py_word_shingles(text, n)))
                 out["__id"].append(did)
                 out["ss"].append(sh)
                 out["n"].append(len(sh))
@@ -404,75 +409,33 @@ def _doc_local_minhash_pandas(df: DataFrame, id_col: str, text_col: str,
         .withColumnRenamed("__id", id_col)
 
 
+def _band_rows(sig: DataFrame, id_col: str) -> DataFrame:
+    """(id, band, bh): one row per LSH band of a band-hashed signature
+    relation; a doc with no shingles (n = 0) has no bands."""
+    stack = ", ".join(f"{b}, b{b}" for b in range(BANDS))
+    return sig.filter(F.col("n") > 0) \
+        .selectExpr(id_col, f"stack({BANDS}, {stack}) AS (band, bh)")
+
+
 def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str, n: int = 3,
-                      threshold: float = 0.8, num_hashes: int = NUM_HASHES,
-                      bands: int = BANDS,
-                      max_shingle_df: int | None = None) -> DataFrame:
+                      threshold: float = 0.8) -> DataFrame:
     """MinHash+LSH candidate generation, exact-Jaccard verified.
 
     shingle -> minhash -> band -> bucket-join -> verify.  Returns
     (doc_a, doc_b, jaccard) for verified pairs.
 
-    Default path (no ``max_shingle_df``): signatures AND shingle sets come
-    from one doc-local mapInPandas pass (no inverted-index shuffle at all);
-    candidates bucket-join on band hashes; verification intersects the
-    per-doc sorted arrays.  With ``max_shingle_df`` the stop-shingle cap
-    needs corpus-wide doc frequencies, so the exploded-relation path runs
-    instead (one extra shuffle).
+    Signatures (``NUM_HASHES`` hashes folded into ``BANDS`` band hashes)
+    AND shingle sets come from one doc-local pass (no inverted-index
+    shuffle at all); candidates bucket-join on band hashes; verification
+    intersects the per-doc sorted arrays.
     """
-    rows = num_hashes // bands
-    if max_shingle_df is None:
-        from kstream_spark.util import FANOUT_MIN_BYTES, ensure_parallelism
-        doc = _doc_local_minhash(
-            ensure_parallelism(df, min_bytes=FANOUT_MIN_BYTES),
-            id_col, text_col, n, num_hashes, bands=bands).persist()
-        sig_b = doc.filter(F.col("n") > 0) \
-            .select(id_col, *[f"b{b}" for b in range(bands)])
-        stack = ", ".join(f"{b}, b{b}" for b in range(bands))
-        band_long = sig_b.selectExpr(
-            id_col, f"stack({bands}, {stack}) AS (band, bh)")
-        cand = (
-            band_long.select(F.col(id_col).alias("doc_a"), "band", "bh")
-            .join(band_long.select(F.col(id_col).alias("doc_b"), "band", "bh"),
-                  ["band", "bh"])
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b").distinct()
-        )
-        a = doc.select(F.col(id_col).alias("doc_a"),
-                       F.col("ss").alias("ssa"), F.col("n").alias("na"))
-        b = doc.select(F.col(id_col).alias("doc_b"),
-                       F.col("ss").alias("ssb"), F.col("n").alias("nb"))
-        i = F.size(F.array_intersect("ssa", "ssb")).cast("long")
-        j = i / (F.col("na") + F.col("nb") - i)
-        return (cand.join(a, "doc_a").join(b, "doc_b")
-                .filter(j >= threshold)
-                .select("doc_a", "doc_b", F.round(j, 6).alias("jaccard")))
-
-    # stop-shingle-capped path: needs corpus-wide doc frequencies
-    sh = shingle_sets(df, id_col, text_col, n, max_shingle_df).persist()
-    sig = minhash_signatures(sh, id_col, num_hashes)
-    band_cols = [
-        F.md5(F.encode(F.concat_ws(
-            "", *[F.col(f"h{b * rows + r}") for r in range(rows)]), "UTF-8"))
-        .alias(f"b{b}")
-        for b in range(bands)
-    ]
-    sig_b = sig.select(id_col, *band_cols)
-    stack = ", ".join(f"{b}, b{b}" for b in range(bands))
-    # persist: the self-join references this twice and Spark does not reuse
-    # the signature-aggregation subtree through the stack() projection —
-    # without the cache the 16-way min-hash groupBy runs twice.
-    # Size is |docs| x bands rows of (id, hash) — negligible at any scale.
-    band_long = sig_b.selectExpr(id_col, f"stack({bands}, {stack}) AS (band, bh)") \
-        .persist()
-    cand = (
-        band_long.select(F.col(id_col).alias("doc_a"), "band", "bh")
-        .join(band_long.select(F.col(id_col).alias("doc_b"), "band", "bh"),
-              ["band", "bh"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b").distinct()
-    )
-    return _jaccard_on_pairs(cand, sh, id_col, threshold)
+    from kstream_spark.util import FANOUT_MIN_BYTES, ensure_parallelism
+    doc = _doc_local_minhash(
+        ensure_parallelism(df, min_bytes=FANOUT_MIN_BYTES),
+        id_col, text_col, n, NUM_HASHES, bands=BANDS).persist()
+    cand = shared_key_pairs(_band_rows(doc, id_col), id_col,
+                            ["band", "bh"]).select("doc_a", "doc_b").distinct()
+    return _jaccard_on_pairs(cand, doc, id_col, threshold)
 
 
 def dedup_survivors(pairs: DataFrame, df: DataFrame, id_col: str) -> DataFrame:
@@ -499,6 +462,9 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     hex nibble", so the DuckDB oracle reproduces signatures exactly
     (_minhash-style md5-hex discipline); chunks are INTEGERS, so candidate
     bucketing is an equi-join and hamming distance is bit_count(xor).
+    Shingles are ``functions/text.py_word_shingles`` of the JVM-lowered
+    text, the same as ``word_shingles``; a doc with no shingles (NULL
+    text, fewer than 3 words) has no signature row.
 
     Execution: a signature depends only on its OWN document, so the whole
     computation is one shuffle-free mapInPandas pass — shingle, hash, and
@@ -508,7 +474,6 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     is 2-4x faster at sf0.1 and strictly less shuffle at any scale.
     """
     import hashlib
-    import re
 
     import numpy as np
     import pandas as pd
@@ -518,10 +483,10 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     def run(batches):
         for pdf in batches:
             out = {"__id": [], **{f"c{c}": [] for c in range(SIMHASH_CHUNKS)}}
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                ws = re.split(r"\s+", text.lower())
-                sh = {" ".join(ws[i:i + 3]) for i in range(len(ws) - 2)} \
-                    if len(ws) >= 3 else set()
+            for did, text in zip(pdf["__id"], pdf["__txt"]):
+                sh = set(py_word_shingles(text, 3))
+                if not sh:
+                    continue
                 sums = np.zeros(SIMHASH_BITS, dtype=np.int64)
                 for s in sh:
                     d = np.frombuffer(
@@ -531,8 +496,7 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
                     # and (b>>3)&1 — same family as substring(md5_hex,i,1)>='8'
                     sums[0::2] += (d >> 7) & 1
                     sums[1::2] += (d >> 3) & 1
-                n = len(sh)
-                bits = (sums * 2 >= n).astype(np.int64) if n else sums
+                bits = (sums * 2 >= len(sh)).astype(np.int64)
                 out["__id"].append(did)
                 for c in range(SIMHASH_CHUNKS):
                     v = 0
@@ -544,7 +508,8 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     id_type = dict(df.dtypes)[id_col]
     chunk_schema = ", ".join(f"c{c} long" for c in range(SIMHASH_CHUNKS))
     return ensure_parallelism(df, min_bytes=FANOUT_MIN_BYTES) \
-        .select(F.col(id_col), F.col(text_col)) \
+        .select(F.col(id_col).alias("__id"),
+                F.lower(F.col(text_col)).alias("__txt")) \
         .mapInPandas(run, f"__id {id_type}, {chunk_schema}") \
         .withColumnRenamed("__id", id_col)
 
@@ -553,28 +518,20 @@ def simhash_pairs(df: DataFrame, id_col: str, text_col: str,
                   max_hamming: int = 1) -> DataFrame:
     """Near-dup pairs with SimHash hamming distance <= max_hamming.
 
-    Candidate generation by chunk equality: with 4 chunks, hamming <= 3
-    guarantees at least one identical chunk (pigeonhole) — so recall is
-    EXACT for max_hamming <= 3, unlike probabilistic LSH.  Verification
-    computes the true distance with bit_count(xor).  Scale: candidates meet
-    only within a (chunk_idx, chunk_value) bucket.
+    The 4 chunks are the bands of ``multimodal.banded_hamming_pairs``:
+    candidates by chunk equality — with 4 chunks, hamming <= 3 guarantees
+    at least one identical chunk (pigeonhole) — so recall is EXACT for
+    max_hamming <= 3, unlike probabilistic LSH; verification computes the
+    true distance.  The signature relation is persisted (the band join
+    and both verify sides read it).  Returns (doc_a, doc_b, hamming).
     """
-    sig = simhash_signatures(df, id_col, text_col).persist()
-    stack = ", ".join(f"{c}, c{c}" for c in range(SIMHASH_CHUNKS))
-    chunks = sig.selectExpr(id_col, f"stack({SIMHASH_CHUNKS}, {stack}) AS (ci, cv)")
-    cand = (chunks.select(F.col(id_col).alias("doc_a"), "ci", "cv")
-            .join(chunks.select(F.col(id_col).alias("doc_b"), "ci", "cv"),
-                  ["ci", "cv"])
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b").distinct())
-    a = sig.select(F.col(id_col).alias("doc_a"),
-                   *[F.col(f"c{c}").alias(f"a{c}") for c in range(SIMHASH_CHUNKS)])
-    bb = sig.select(F.col(id_col).alias("doc_b"),
-                    *[F.col(f"c{c}").alias(f"b{c}") for c in range(SIMHASH_CHUNKS)])
-    ham = sum(F.bit_count(F.expr(f"a{c} ^ b{c}")) for c in range(SIMHASH_CHUNKS))
-    return (cand.join(a, "doc_a").join(bb, "doc_b")
-            .select("doc_a", "doc_b", ham.cast("long").alias("hamming"))
-            .filter(F.col("hamming") <= max_hamming))
+    from kstream_spark.operators.multimodal import banded_hamming_pairs
+    sig = simhash_signatures(df, id_col, text_col).select(
+        F.col(id_col),
+        F.array(*[f"c{c}" for c in range(SIMHASH_CHUNKS)]).alias("bands")) \
+        .persist()
+    return banded_hamming_pairs(sig, id_col, SIMHASH_CHUNKS, max_hamming,
+                                a_name="doc_a", b_name="doc_b")
 
 
 def connected_components(pairs: DataFrame, max_iter: int = 20,
@@ -631,7 +588,7 @@ def incremental_dedup(new_docs: DataFrame, corpus: DataFrame, id_col: str,
                       text_col: str, n: int = 3,
                       threshold: float = 0.8,
                       corpus_state: DataFrame | None = None,
-                      persisted: list | None = None,
+                      caches: list | None = None,
                       return_signatures: bool = False,
                       checkpoint_fresh: bool = False,
                       sig_impl: str = "pandas") -> DataFrame:
@@ -658,7 +615,7 @@ def incremental_dedup(new_docs: DataFrame, corpus: DataFrame, id_col: str,
     one scan of the signature store (the admit-time-write pattern of
     ``streaming/corpus.admit_stream``).
 
-    ``persisted``: optional list the two internal persisted signature
+    ``caches``: optional list the two internal persisted signature
     relations are appended to, so a caller that runs this per micro-batch
     (``admit_stream``) can unpersist them after its action — otherwise the
     cached blocks outlive the batch and pile up for the life of the stream.
@@ -675,7 +632,7 @@ def incremental_dedup(new_docs: DataFrame, corpus: DataFrame, id_col: str,
     per-batch caller pins the SURVIVORS (|batch|/8 on the bench mix)
     instead of the raw batch it used to checkpoint (r12: 9.2s -> ~2s of
     the 2M-record admission trigger).  The handle is appended to
-    ``persisted``; free it with ``util.free_local_checkpoint``.
+    ``caches``; free it with ``util.free_local_checkpoint``.
     """
     from pyspark.sql import Window as W
 
@@ -691,8 +648,8 @@ def incremental_dedup(new_docs: DataFrame, corpus: DataFrame, id_col: str,
         .drop("__ch", "__first")
     if checkpoint_fresh:
         fresh = fresh.localCheckpoint(eager=True)
-        if persisted is not None:
-            persisted.append(fresh)
+        if caches is not None:
+            caches.append(fresh)
 
     # gate 2: near-dup vs corpus (increment bands join corpus bands only).
     # ONE signature pass per relation — the batch-internal phase below
@@ -706,43 +663,25 @@ def incremental_dedup(new_docs: DataFrame, corpus: DataFrame, id_col: str,
            else _doc_local_minhash(corpus, id_col, text_col, n,
                                    NUM_HASHES, bands=BANDS,
                                    impl=sig_impl)).persist()
-    if persisted is not None:
-        persisted += [inc, cor]
+    if caches is not None:
+        caches += [inc, cor]
 
-    def bands_of(doc, side):
-        stack = ", ".join(f"{b}, b{b}" for b in range(BANDS))
-        return doc.filter(F.col("n") > 0) \
-            .selectExpr(id_col, f"stack({BANDS}, {stack}) AS (band, bh)") \
-            .withColumnRenamed(id_col, side)
-
-    cand = (bands_of(inc, "new_id")
-            .join(bands_of(cor, "old_id"), ["band", "bh"])
-            .select("new_id", "old_id").distinct())
-    a = inc.select(F.col(id_col).alias("new_id"),
-                   F.col("ss").alias("ssa"), F.col("n").alias("na"))
-    b = cor.select(F.col(id_col).alias("old_id"),
-                   F.col("ss").alias("ssb"), F.col("n").alias("nb"))
-    i = F.size(F.array_intersect("ssa", "ssb")).cast("long")
-    j = i / (F.col("na") + F.col("nb") - i)
-    dup_new = (cand.join(a, "new_id").join(b, "old_id")
-               .filter(j >= threshold)
-               .select(F.col("new_id").alias(id_col)).distinct())
+    cand = shared_key_pairs(_band_rows(inc, id_col), id_col, ["band", "bh"],
+                            a="new_id", b="old_id",
+                            other=_band_rows(cor, id_col)) \
+        .select("new_id", "old_id").distinct()
+    dup_new = _jaccard_on_pairs(cand, inc, id_col, threshold, a="new_id",
+                                b="old_id", other=cor) \
+        .select(F.col("new_id").alias(id_col)).distinct()
     admitted = fresh.join(dup_new, id_col, "left_anti")
 
     # batch-internal near-dups (lower id wins): same band-bucket + verify
     # over the ALREADY-COMPUTED increment signatures, filtered to admitted
     adm_sig = inc.join(admitted.select(id_col), id_col, "left_semi")
-    icand = (bands_of(adm_sig, "doc_a")
-             .join(bands_of(adm_sig, "doc_b"), ["band", "bh"])
-             .filter(F.col("doc_a") < F.col("doc_b"))
-             .select("doc_a", "doc_b").distinct())
-    ia = adm_sig.select(F.col(id_col).alias("doc_a"),
-                        F.col("ss").alias("ssa"), F.col("n").alias("na"))
-    ib = adm_sig.select(F.col(id_col).alias("doc_b"),
-                        F.col("ss").alias("ssb"), F.col("n").alias("nb"))
-    losers = (icand.join(ia, "doc_a").join(ib, "doc_b")
-              .filter(i / (F.col("na") + F.col("nb") - i) >= threshold)
-              .select(F.col("doc_b").alias(id_col)).distinct())
+    icand = shared_key_pairs(_band_rows(adm_sig, id_col), id_col,
+                             ["band", "bh"]).select("doc_a", "doc_b").distinct()
+    losers = _jaccard_on_pairs(icand, adm_sig, id_col, threshold) \
+        .select(F.col("doc_b").alias(id_col)).distinct()
     result = admitted.join(losers, id_col, "left_anti")
     if not return_signatures:
         return result
@@ -896,7 +835,7 @@ def prefix_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     (~(1-t) of the index), and because prefixes are the RAREST shingles
     the join's per-key fan-out is inherently tiny — the hot-key hazard
     the full index needs ``max_shingle_df`` for never materializes.
-    Verification reuses ``_jaccard_on_pairs`` (id-keyed array-intersect,
+    Verification is ``_jaccard_on_pairs`` (id-keyed array-intersect,
     never re-exploded).  The ceil is exact integer arithmetic
     (``(t_micro*|x| + 999999) div 1e6``) — no float boundary can shift a
     prefix length between engines.
@@ -971,20 +910,8 @@ def prefix_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     # in the same exact integer micro arithmetic as the prefix length
     prefix = sets.select(F.col(id_col), F.col("n"),
                          F.explode("prefix").alias("s"))
-    cand = (prefix.select(F.col(id_col).alias("doc_a"),
-                          F.col("n").alias("_la"), "s")
-            .join(prefix.select(F.col(id_col).alias("doc_b"),
-                                F.col("n").alias("_lb"), "s"), "s")
-            .filter((F.col("doc_a") < F.col("doc_b"))
-                    & (F.least("_la", "_lb") * F.lit(1000000).cast("long")
-                       >= F.lit(t_micro) * F.greatest("_la", "_lb")))
+    cand = (shared_key_pairs(prefix, id_col, ["s"], carry=("n",))
+            .filter(F.least("na", "nb") * F.lit(1000000).cast("long")
+                    >= F.lit(t_micro) * F.greatest("na", "nb"))
             .select("doc_a", "doc_b").distinct())
-    a = sets.select(F.col(id_col).alias("doc_a"),
-                    F.col("ss").alias("ssa"), F.col("n").alias("na"))
-    b = sets.select(F.col(id_col).alias("doc_b"),
-                    F.col("ss").alias("ssb"), F.col("n").alias("nb"))
-    i = F.size(F.array_intersect("ssa", "ssb")).cast("long")
-    j = i / (F.col("na") + F.col("nb") - i)
-    return (cand.join(a, "doc_a").join(b, "doc_b")
-            .filter(j >= threshold)
-            .select("doc_a", "doc_b", F.round(j, 6).alias("jaccard")))
+    return _jaccard_on_pairs(cand, sets, id_col, threshold)

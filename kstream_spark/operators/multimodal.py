@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kstream_spark.operators.dedup import shared_key_pairs
+
 
 def attach_binary(df: DataFrame, source_col: str, modality: str = "image",
                   payload_col: str = "payload") -> DataFrame:
@@ -295,11 +297,12 @@ def banded_hamming_pairs(hb: DataFrame, id_col: str, n_bands: int,
                          max_hamming: int, a_name: str = "id_a",
                          b_name: str = "id_b",
                          max_band_df: int | None = None) -> DataFrame:
-    """Hamming-LSH pair generation shared by the perceptual-hash dedup
-    arms (image dHash, audio Haitsma-Kalker): candidates by exact-band
-    equi-join (never all-pairs), verification by true Hamming over the
-    full fingerprint, complete for max_hamming <= n_bands - 1 by
-    pigeonhole.  ``hb``: (id, bands array<int>).
+    """Hamming-LSH pair generation, the one Hamming verify of the dedup
+    family (image dHash, audio Haitsma-Kalker, text SimHash):
+    candidates by exact-band equi-join (never all-pairs), verification
+    by true Hamming over the full fingerprint, complete for
+    max_hamming <= n_bands - 1 by pigeonhole.  ``hb``: (id, bands
+    array of integers).
 
     ``max_band_df`` is the hot-bucket cap (the max_fp_df dial of
     dedup.winnow_pairs, applied to band buckets): a band value shared by
@@ -317,11 +320,8 @@ def banded_hamming_pairs(hb: DataFrame, id_col: str, n_bands: int,
                 .filter(F.col("_df") <= max_band_df)
                 .select("band_idx", "val"))
         sig = sig.join(keep, ["band_idx", "val"])
-    cand = (sig.select(F.col(id_col).alias(a_name), "band_idx", "val")
-            .join(sig.select(F.col(id_col).alias(b_name),
-                             "band_idx", "val"), ["band_idx", "val"])
-            .filter(F.col(a_name) < F.col(b_name))
-            .select(a_name, b_name).distinct())
+    cand = shared_key_pairs(sig, id_col, ["band_idx", "val"], a=a_name,
+                            b=b_name).select(a_name, b_name).distinct()
     xa = hb.select(F.col(id_col).alias(a_name), F.col("bands").alias("_ba"))
     xb = hb.select(F.col(id_col).alias(b_name), F.col("bands").alias("_bb"))
     ham = None
@@ -411,9 +411,7 @@ def frame_overlap_pairs(frames: DataFrame, id_col: str, hash_col: str,
     Input: one row per (clip, frame) with a fingerprint column (e.g.
     sample_frames' frame_sha).  Returns (clip_a, clip_b, n_shared)."""
     f = frames.select(F.col(id_col), F.col(hash_col).alias("_h")).distinct()
-    return (f.select(F.col(id_col).alias("clip_a"), "_h")
-            .join(f.select(F.col(id_col).alias("clip_b"), "_h"), "_h")
-            .filter(F.col("clip_a") < F.col("clip_b"))
+    return (shared_key_pairs(f, id_col, ["_h"], a="clip_a", b="clip_b")
             .groupBy("clip_a", "clip_b")
             .agg(F.count("*").cast("long").alias("n_shared"))
             .filter(F.col("n_shared") >= min_shared))

@@ -40,19 +40,18 @@ def _dsir_tokens(df: DataFrame, id_col: str, text_col: str,
     words) per task — the same workload lesson as
     ``dedup._doc_local_minhash`` (sf1 A/B: 1.32s -> 0.78s warm for the
     bucket-count pass, against a stateless explode + md5-per-occurrence
-    expression).  Splits on ASCII whitespace exactly (the regex spells
-    out Java's ``\\s`` class — Python's ``\\s`` is Unicode-wide and
-    would diverge on NBSP), lowercases JVM-side, and drops empties, so
-    it replays the DuckDB oracle.
+    expression).  Splits with ``functions/text.py_words`` (Java's
+    ``\\s`` class) over JVM-lowered text and drops empties, so it
+    replays the DuckDB oracle.
 
     md5-per-token is CPU-heavy per input byte — spread a few-split scan
     across cores first (the shingle_sets floor; without it a small-file
     corpus serializes the whole hash fan-out onto one or two tasks)."""
     import hashlib
-    import re
 
     import pandas as pd
 
+    from kstream_spark.functions.text import py_words
     from kstream_spark.util import FANOUT_MIN_BYTES, ensure_parallelism
     df = ensure_parallelism(df, min_bytes=FANOUT_MIN_BYTES)
     cols = [F.col(id_col)] + ([] if extra is None else [extra])
@@ -60,7 +59,6 @@ def _dsir_tokens(df: DataFrame, id_col: str, text_col: str,
     keys = [f.name for f in proj.schema.fields[:-1]]
     key_types = ", ".join(f"{f.name} {f.dataType.simpleString()}"
                           for f in proj.schema.fields[:-1])
-    split = re.compile(r"[ \t\n\x0b\f\r]+").split   # Java \s, exactly
 
     def run(batches):
         memo: dict = {}
@@ -82,9 +80,7 @@ def _dsir_tokens(df: DataFrame, id_col: str, text_col: str,
             bs: list = []
             for row in zip(*(pdf[k] for k in keys), pdf["__txt"]):
                 *kv, text = row
-                if text is None:        # explode(null) emits nothing
-                    continue
-                for w in split(text):
+                for w in py_words(text):
                     if w:
                         for k, v in zip(keys, kv):
                             out[k].append(v)

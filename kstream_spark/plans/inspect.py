@@ -39,7 +39,11 @@ def shuffle_count(df: DataFrame | str) -> int:
 
 
 def pushed_filters(df: DataFrame | str) -> list[str]:
-    return re.findall(r"PushedFilters: \[([^\]]*)\]", physical_plan(df))
+    """Each scan's pushed-filter list.  Spark truncates a long list with
+    ``...`` and no closing bracket, so a match also ends at the scan's
+    next field or at the end of the line, never in a later plan line."""
+    return re.findall(r"PushedFilters: \[([^\]\n]*?)(?:\]|, ReadSchema: |$)",
+                      physical_plan(df), re.M)
 
 
 def read_schemas(df: DataFrame | str) -> list[str]:

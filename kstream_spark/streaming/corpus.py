@@ -118,7 +118,7 @@ def admit_stream(df: DataFrame, corpus_path: str, signature_path: str,
                                            text_col, n=n,
                                            threshold=threshold,
                                            corpus_state=state,
-                                           persisted=handles,
+                                           caches=handles,
                                            return_signatures=True,
                                            checkpoint_fresh=True,
                                            sig_impl="codegen")
@@ -130,8 +130,8 @@ def admit_stream(df: DataFrame, corpus_path: str, signature_path: str,
             # handles = [checkpointed fresh survivors, two persisted
             # minhash relations]; only the checkpoint has a LogicalRDD
             # root to free
-            fresh, *persisted = handles
-            for h in [admitted, *persisted]:
+            fresh, *sig_caches = handles
+            for h in [admitted, *sig_caches]:
                 h.unpersist()
             free_local_checkpoint(fresh)
 

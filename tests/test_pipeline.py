@@ -297,6 +297,33 @@ def test_simhash_near_dups(spark, docs):
             assert 0 <= r[f"c{c}"] <= 255            # 8-bit chunks
 
 
+def test_simhash_shingle_less_docs_and_jvm_tokens(spark):
+    """A doc with no shingles (two words, NULL text) has no signature and
+    pairs with nothing, and tokens split where the JVM ``word_shingles``
+    splits: NBSP is not whitespace, so the NBSP doc's signature is the
+    majority vote over exactly the JVM's shingles."""
+    import hashlib
+
+    from kstream_spark.functions.text import word_shingles
+    df = spark.createDataFrame(
+        [(0, "two words"), (1, "two words"), (2, None),
+         (3, "w1\xa0w2 tail end of doc")], "doc_id long, text string")
+    assert D.simhash_pairs(df, "doc_id", "text", max_hamming=3).collect() \
+        == []
+    sig = {r.doc_id: [r.c0, r.c1, r.c2, r.c3]
+           for r in D.simhash_signatures(df, "doc_id", "text").collect()}
+    assert set(sig) == {3}
+    sh = df.filter("doc_id = 3").select(
+        F.array_distinct(word_shingles(F.col("text"), 3)).alias("s")) \
+        .first().s
+    assert "w1\xa0w2 tail end" in sh
+    votes = [sum(hashlib.md5(s.encode()).hexdigest()[i] >= "8" for s in sh)
+             for i in range(D.SIMHASH_BITS)]
+    bits = [int(v * 2 >= len(sh)) for v in votes]
+    assert sig[3] == [int("".join(map(str, bits[c * 8:(c + 1) * 8])), 2)
+                      for c in range(D.SIMHASH_CHUNKS)]
+
+
 def test_ivf_topk_high_recall_on_probed_cells(spark):
     import random
     random.seed(11)

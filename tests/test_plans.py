@@ -520,3 +520,21 @@ def test_bloom_semi_probe_sits_in_scan_stage(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     j = plan.find("Join")
     assert 0 <= j < plan.find("element_at")
+
+
+def test_pushed_filters_truncated_list_stays_on_its_line():
+    """Spark truncates a long pushed-filter list with ``...`` and no
+    closing bracket; the match must end at the scan's next field or at
+    the end of the line, not swallow later plan lines up to some ``]``."""
+    plan = (
+        "+- FileScan parquet [a#1] Batched: true, PartitionFilters: [], "
+        "PushedFilters: [IsNotNull(a), EqualTo(a,1), ..., "
+        "ReadSchema: struct<a:bigint>\n"
+        "   +- BroadcastExchange HashedRelationBroadcastMode("
+        "List(input[0, bigint, false]),false)\n"
+        "+- FileScan parquet [b#2] Batched: true, "
+        "PushedFilters: [IsNotNull(b)], ReadSchema: struct<b:int>\n"
+        "+- FileScan parquet [c#3] PushedFilters: [IsNotNull(c), ...\n"
+        "   +- Exchange SinglePartition [x]")
+    assert P.pushed_filters(plan) == ["IsNotNull(a), EqualTo(a,1), ...",
+                                      "IsNotNull(b)", "IsNotNull(c), ..."]

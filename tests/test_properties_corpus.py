@@ -335,3 +335,26 @@ def test_prefix_filter_is_lossless(spark, docs):
             prefix_jaccard_pairs(df, "doc_id", "text", n=2,
                                  threshold=0.6).collect()}
     assert pref == full
+
+
+# Java \s members, NBSP / ideographic space (not Java \s) and a
+# dotted capital I (JVM lower-casing)
+_WS_TEXT = st.one_of(st.none(), st.text(
+    alphabet=list("aB \t\n\x0b\f\r\xa0　İ"), max_size=16))
+
+
+@given(st.lists(_WS_TEXT, min_size=1, max_size=12), st.integers(1, 4))
+@settings(max_examples=25, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_py_word_shingles_matches_jvm(spark, texts, n):
+    """The Python shingler (mapInPandas arms) equals the JVM
+    ``word_shingles`` over JVM-lowered text, element for element: NULL,
+    fewer than n words, NBSP, VT, tabs and leading/trailing
+    whitespace included."""
+    import pyspark.sql.functions as F
+
+    from kstream_spark.functions.text import py_word_shingles, word_shingles
+    df = spark.createDataFrame(list(enumerate(texts)), "i long, t string")
+    for r in df.select(F.lower("t").alias("lt"),
+                       word_shingles(F.col("t"), n).alias("sh")).collect():
+        assert py_word_shingles(r.lt, n) == list(r.sh)
