@@ -17,6 +17,9 @@ from pyspark.sql import functions as F
 # Java's ``\s`` class, spelled out: Python's ``\s`` is Unicode-wide and
 # would split on NBSP & friends where the JVM ``words`` does not
 _JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+# the same run as an RE2 pattern, for the DuckDB oracles of ``words``:
+# RE2's ``\s`` leaves out VT (\x0b), which Java's includes
+RE2_WS = r"[\s\x0b]+"
 
 
 def words(text: Column) -> Column:

@@ -15,11 +15,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kstream_spark.builder import StreamBuilder
+from kstream_spark.functions.text import RE2_WS
 from kstream_spark.operators import corpus as C
 
 # clean words: whitespace split with empty tokens dropped (both engines)
 _CW = ("cw AS (SELECT doc_id, list_filter(string_split_regex(lower(text), "
-       "'\\s+'), x -> x <> '') AS ws FROM documents)")
+       f"'{RE2_WS}'), x -> x <> '') AS ws FROM documents)")
 
 
 def _docs(spark: SparkSession, sf: str) -> DataFrame:
@@ -65,8 +66,8 @@ def q_text_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     return C.decontaminate(train, "doc_id", "text", ev, "doc_id", "text", n=3)
 
 
-SQL_TEXT_DECONTAMINATE = """
-WITH w AS (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS words
+SQL_TEXT_DECONTAMINATE = f"""
+WITH w AS (SELECT doc_id, string_split_regex(lower(text), '{RE2_WS}') AS words
            FROM documents),
 sh AS (SELECT DISTINCT doc_id,
          md5('decon:' || unnest(list_transform(
@@ -263,7 +264,7 @@ rep AS (SELECT g.doc_id,
         FROM g LEFT JOIN top ON g.doc_id = top.doc_id),
 good AS (SELECT d.doc_id, d.lang FROM documents d JOIN rep USING (doc_id)
          WHERE rep.dup2 < 0.2 AND rep.twf < 0.3),
-w3 AS (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS words
+w3 AS (SELECT doc_id, string_split_regex(lower(text), '{RE2_WS}') AS words
        FROM documents),
 sh AS (SELECT DISTINCT doc_id,
          md5('decon:' || unnest(list_transform(
@@ -331,8 +332,8 @@ def q_text_vocab_topk(spark: SparkSession, sf: str) -> DataFrame:
     return vocab_top_terms(_docs(spark, sf), "text", top_v=200)
 
 
-SQL_TEXT_VOCAB_TOPK = r"""
-WITH t AS (SELECT unnest(string_split_regex(lower(text), '\s+')) AS token
+SQL_TEXT_VOCAB_TOPK = rf"""
+WITH t AS (SELECT unnest(string_split_regex(lower(text), '{RE2_WS}')) AS token
            FROM documents)
 SELECT token, CAST(count(*) AS BIGINT) AS cnt
 FROM t WHERE token <> ''
@@ -350,8 +351,8 @@ def q_text_bpe_pairs(spark: SparkSession, sf: str) -> DataFrame:
     return bpe_pair_counts(_docs(spark, sf), "text", top_k=50)
 
 
-SQL_TEXT_BPE_PAIRS = r"""
-WITH t AS (SELECT unnest(string_split_regex(lower(text), '\s+')) AS w
+SQL_TEXT_BPE_PAIRS = rf"""
+WITH t AS (SELECT unnest(string_split_regex(lower(text), '{RE2_WS}')) AS w
            FROM documents),
 wf AS (SELECT w, CAST(count(*) AS BIGINT) AS wf
        FROM t WHERE length(w) >= 2 GROUP BY w),
@@ -383,8 +384,8 @@ def _sql_bpe_train(n: int) -> str:
     leftmost-first non-overlapping Sennrich scan — consecutive
     occurrences of a repeated pair all merge; same (cnt desc, pair asc)
     winner)."""
-    parts = [r"""
-WITH t AS (SELECT unnest(string_split_regex(lower(text), '\s+')) AS w
+    parts = [rf"""
+WITH t AS (SELECT unnest(string_split_regex(lower(text), '{RE2_WS}')) AS w
            FROM documents),
 wf AS (SELECT w, CAST(count(*) AS BIGINT) AS wf
        FROM t WHERE length(w) >= 2 GROUP BY w),
@@ -642,8 +643,8 @@ def q_text_wordpiece_pairs(spark: SparkSession, sf: str) -> DataFrame:
     return wordpiece_pair_scores(_docs(spark, sf), "text", top_k=50)
 
 
-SQL_TEXT_WORDPIECE_PAIRS = r"""
-WITH t AS (SELECT unnest(string_split_regex(lower(text), '\s+')) AS w
+SQL_TEXT_WORDPIECE_PAIRS = rf"""
+WITH t AS (SELECT unnest(string_split_regex(lower(text), '{RE2_WS}')) AS w
            FROM documents),
 wf AS (SELECT w, CAST(count(*) AS BIGINT) AS wf
        FROM t WHERE length(w) >= 2 GROUP BY w),
@@ -682,7 +683,7 @@ def _wordpiece_train_ctes(n: int) -> str:
     winner by likelihood gain ln(c_ab)-ln(c_a)-ln(c_b) in micro-log ints
     (score desc, pair asc), merge via the same delimiter-doubling
     triple-replace as the BPE oracle."""
-    parts = [r"""t AS (SELECT unnest(string_split_regex(lower(text), '\s+')) AS w
+    parts = [rf"""t AS (SELECT unnest(string_split_regex(lower(text), '{RE2_WS}')) AS w
            FROM documents),
 wf AS MATERIALIZED (SELECT w, CAST(count(*) AS BIGINT) AS wf
        FROM t WHERE length(w) >= 2 GROUP BY w),
@@ -761,7 +762,7 @@ def _sql_wordpiece_tokenize(n: int) -> str:
     vocab_union = "\nUNION ALL ".join(
         f"SELECT merged FROM b{r}" for r in range(1, n + 1))
     return f"""WITH RECURSIVE {_wordpiece_train_ctes(n)},
-t2 AS (SELECT unnest(string_split_regex(lower(text), '\\s+')) AS w
+t2 AS (SELECT unnest(string_split_regex(lower(text), '{RE2_WS}')) AS w
        FROM documents WHERE doc_id < {_WPT_DOCS}),
 wf2 AS (SELECT w, CAST(count(*) AS BIGINT) AS wf
         FROM t2 WHERE w <> '' GROUP BY w),
@@ -809,9 +810,9 @@ def q_text_bigram_lm(spark: SparkSession, sf: str) -> DataFrame:
         .filter(F.col("doc_id") < 100)
 
 
-SQL_TEXT_BIGRAM_LM = r"""
+SQL_TEXT_BIGRAM_LM = rf"""
 WITH w AS (SELECT doc_id,
-                  list_filter(string_split_regex(lower(text), '\s+'),
+                  list_filter(string_split_regex(lower(text), '{RE2_WS}'),
                               x -> x <> '') AS ws
            FROM documents),
 big AS (SELECT doc_id,
@@ -853,9 +854,9 @@ def q_select_curriculum(spark: SparkSession, sf: str) -> DataFrame:
     return collect_freeing(out, *caches)
 
 
-SQL_SELECT_CURRICULUM = r"""
+SQL_SELECT_CURRICULUM = rf"""
 WITH w AS (SELECT doc_id,
-                  list_filter(string_split_regex(lower(text), '\s+'),
+                  list_filter(string_split_regex(lower(text), '{RE2_WS}'),
                               x -> x <> '') AS ws
            FROM documents),
 big AS (SELECT doc_id,
@@ -957,7 +958,7 @@ WITH dtok AS (SELECT doc_id, (source = 'src18') AS t,
                     % 256 AS BIGINT) AS b
         FROM (SELECT doc_id, source,
                      unnest(list_filter(string_split_regex(lower(text),
-                                                           '\\s+'),
+                                                           '{RE2_WS}'),
                                         x -> x <> '')) AS u
               FROM documents)),
 dcounts AS (SELECT b, count(*) AS cs, count(*) FILTER (t) AS ct
@@ -973,7 +974,7 @@ sel AS (SELECT doc_id, dsir_micro FROM ddoc
         QUALIFY row_number() OVER (ORDER BY dsir_micro DESC, doc_id)
                 <= {_MIX_SELECT}),
 w AS (SELECT d.doc_id,
-             list_filter(string_split_regex(lower(d.text), '\\s+'),
+             list_filter(string_split_regex(lower(d.text), '{RE2_WS}'),
                          x -> x <> '') AS ws
       FROM documents d JOIN sel USING (doc_id)),
 big AS (SELECT doc_id,
@@ -1023,9 +1024,9 @@ def q_text_lexical_diversity(spark: SparkSession, sf: str) -> DataFrame:
     return lexical_diversity(_docs(spark, sf), "doc_id", "text")
 
 
-SQL_TEXT_LEXDIV = r"""
+SQL_TEXT_LEXDIV = rf"""
 WITH w AS (SELECT doc_id,
-                  unnest(list_filter(string_split_regex(lower(text), '\s+'),
+                  unnest(list_filter(string_split_regex(lower(text), '{RE2_WS}'),
                                      x -> x <> '')) AS tok
            FROM documents),
 pt AS (SELECT doc_id, tok, count(*) AS c FROM w GROUP BY doc_id, tok),
@@ -1051,8 +1052,8 @@ _UNI_OOV = -20_000_000    # single-char OOV floor, micro-log units
 
 # DuckDB replay of unigram_seed_vocab over the corpus-wide distinct words:
 # substring enumeration is a per-word list comprehension, then one count
-_SQL_UNI_WF = r"""
-t AS (SELECT unnest(string_split_regex(lower(text), '\s+')) AS w
+_SQL_UNI_WF = rf"""
+t AS (SELECT unnest(string_split_regex(lower(text), '{RE2_WS}')) AS w
       FROM documents),
 wf AS (SELECT w, CAST(count(*) AS BIGINT) AS wf
        FROM t WHERE w <> '' GROUP BY w)"""
@@ -1225,7 +1226,7 @@ vocab{r} AS MATERIALIZED (SELECT piece, cnt,
 
     return f"""
 WITH RECURSIVE
-t AS (SELECT unnest(string_split_regex(lower(text), '\\s+')) AS w
+t AS (SELECT unnest(string_split_regex(lower(text), '{RE2_WS}')) AS w
       FROM documents WHERE doc_id < {docs}),
 wfa AS MATERIALIZED (SELECT w, CAST(count(*) AS BIGINT) AS wf
         FROM t WHERE w <> '' GROUP BY w),
@@ -1352,7 +1353,7 @@ np AS MATERIALIZED (SELECT w, CAST(len(pieces) AS BIGINT) AS np
                     FROM best3),
 wsrc AS (SELECT source, w, CAST(count(*) AS BIGINT) AS c
          FROM (SELECT source,
-                      unnest(string_split_regex(lower(text), '\\s+')) AS w
+                      unnest(string_split_regex(lower(text), '{RE2_WS}')) AS w
                FROM documents WHERE doc_id < {_UNT_DOCS})
          WHERE w <> '' AND length(w) <= {_UNT_WLEN}
          GROUP BY source, w),

@@ -8,9 +8,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kstream_spark.builder import StreamBuilder
+from kstream_spark.functions.text import RE2_WS
 from kstream_spark.operators import dedup as D
 
-_W = ("w AS (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS words "
+_W = (f"w AS (SELECT doc_id, string_split_regex(lower(text), '{RE2_WS}') AS words "
       "FROM documents)")
 _HEXHI = "('8','9','a','b','c','d','e','f')"
 
@@ -174,8 +175,8 @@ def q_text_tfidf(spark: SparkSession, sf: str) -> DataFrame:
     return tf_idf_top_terms(docs, "doc_id", "text", k=3)
 
 
-SQL_TEXT_TFIDF = """
-WITH w AS (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS words
+SQL_TEXT_TFIDF = f"""
+WITH w AS (SELECT doc_id, string_split_regex(lower(text), '{RE2_WS}') AS words
            FROM documents),
 tok AS (SELECT doc_id, unnest(words) AS w FROM w),
 tf AS (SELECT doc_id, w, count(*) AS tf FROM tok GROUP BY 1, 2),
@@ -218,8 +219,8 @@ def q_udtf_chunk_text(spark: SparkSession, sf: str) -> DataFrame:
     """)
 
 
-SQL_UDTF_CHUNK_TEXT = r"""
-WITH w AS (SELECT doc_id, string_split_regex(text, '\s+') AS ws FROM documents),
+SQL_UDTF_CHUNK_TEXT = rf"""
+WITH w AS (SELECT doc_id, string_split_regex(text, '{RE2_WS}') AS ws FROM documents),
 idx AS (SELECT doc_id, ws, unnest(range(0, len(ws), 24)) AS start FROM w)
 SELECT doc_id, CAST(start // 24 AS BIGINT) AS chunk_idx,
        array_to_string(ws[start + 1 : start + 32], ' ') AS chunk_text,
@@ -380,10 +381,10 @@ def q_fn_array_ops(spark: SparkSession, sf: str) -> DataFrame:
         F.element_at(F.col("_t"), 1).alias("first_token"))
 
 
-SQL_FN_ARRAY_OPS = r"""
+SQL_FN_ARRAY_OPS = rf"""
 WITH d AS (SELECT doc_id,
              list_sort(list_distinct(string_split_regex(lower(text),
-                                                        '\s+'))) AS t
+                                                        '{RE2_WS}'))) AS t
            FROM documents),
 s AS (SELECT ['the', 'a', 'and', 'of', 'value', 'table'] AS stop)
 SELECT doc_id,
@@ -503,10 +504,10 @@ def q_sketch_kmv_overlap(spark: SparkSession, sf: str) -> DataFrame:
     return collect_freeing(out, *caches)
 
 
-SQL_SKETCH_KMV_OVERLAP = r"""
+SQL_SKETCH_KMV_OVERLAP = rf"""
 WITH d AS (SELECT * FROM documents
            WHERE source IN ('src18', 'src6', 'src7', 'src12')),
-w AS (SELECT source AS src, string_split_regex(lower(text), '\s+') AS words
+w AS (SELECT source AS src, string_split_regex(lower(text), '{RE2_WS}') AS words
       FROM d),
 sh AS (SELECT DISTINCT src,
               md5('kmv:' || unnest(list_transform(

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kstream_spark.builder import StreamBuilder
+from kstream_spark.functions.text import RE2_WS
 from kstream_spark.operators import dedup as D
 from kstream_spark.operators import multimodal as M
 from kstream_spark.operators import similarity as S
@@ -24,12 +25,12 @@ from kstream_spark.operators import text as TX
 from kstream_spark.util import collect_freeing, local_df
 
 # shared DuckDB CTE fragments: words + distinct 3-word shingles
-_W = ("w AS (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS words "
+_W = (f"w AS (SELECT doc_id, string_split_regex(lower(text), '{RE2_WS}') AS words "
       "FROM documents)")
 _SH = ("sh AS (SELECT DISTINCT doc_id, "
        "unnest(list_transform(range(1, greatest(len(words)-2, 0)+1), "
        "i -> array_to_string(words[i:i+2], ' '))) AS s FROM w)")
-_NORM = "md5(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
+_NORM = f"md5(regexp_replace(lower(text), '{RE2_WS}', ' ', 'g'))"
 
 
 def _docs(b: StreamBuilder, sf: str) -> DataFrame:
@@ -991,7 +992,7 @@ def _bm25_sql() -> str:
         f"(tf{i} + 1.2 * (1.0 - 0.75 + 0.75 * dl / avgdl))"
         for i in range(len(terms)))
     return f"""
-WITH d AS (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS t
+WITH d AS (SELECT doc_id, string_split_regex(lower(text), '{RE2_WS}') AS t
            FROM documents),
 s AS (SELECT doc_id, CAST(len(t) AS DOUBLE) AS dl, {tfs} FROM d),
 g AS (SELECT CAST(count(*) AS DOUBLE) AS N, avg(dl) AS avgdl, {dfs} FROM s)
@@ -1110,9 +1111,9 @@ def q_text_unigram_lm(spark: SparkSession, sf: str) -> DataFrame:
                              "doc_id", "text")
 
 
-SQL_TEXT_UNIGRAM_LM = r"""
+SQL_TEXT_UNIGRAM_LM = rf"""
 WITH tok AS (SELECT doc_id,
-               unnest(list_filter(string_split_regex(lower(text), '\s+'),
+               unnest(list_filter(string_split_regex(lower(text), '{RE2_WS}'),
                                   w -> w <> '')) AS tok
              FROM documents),
 dt AS (SELECT doc_id, tok, count(*) AS m FROM tok GROUP BY doc_id, tok),
@@ -1177,9 +1178,9 @@ def q_text_html_extract(spark: SparkSession, sf: str) -> DataFrame:
         .withColumn("n_chars", F.length("clean_text").cast("long"))
 
 
-SQL_TEXT_HTML_EXTRACT = r"""
+SQL_TEXT_HTML_EXTRACT = rf"""
 WITH h AS (SELECT doc_id,
-  '<html><head><style>p{margin:0}</style></head><body><h1>' || source ||
+  '<html><head><style>p{{margin:0}}</style></head><body><h1>' || source ||
   '</h1>' || chr(10) || '<p>' || text ||
   ' &amp; more</p><script>var x=''<p>no</p>'';</script><!-- c --></body></html>'
   AS html FROM documents),
@@ -1198,8 +1199,8 @@ u AS (SELECT doc_id,
     '&nbsp;', ' '), '&amp;', '&') AS t
   FROM s)
 SELECT doc_id,
-       trim(regexp_replace(t, '\s+', ' ', 'g')) AS clean_text,
-       CAST(length(trim(regexp_replace(t, '\s+', ' ', 'g'))) AS BIGINT)
+       trim(regexp_replace(t, '{RE2_WS}', ' ', 'g')) AS clean_text,
+       CAST(length(trim(regexp_replace(t, '{RE2_WS}', ' ', 'g'))) AS BIGINT)
          AS n_chars
 FROM u
 """
@@ -1227,8 +1228,8 @@ def q_dedup_winnow(spark: SparkSession, sf: str) -> DataFrame:
                           k=4, window=4, min_shared=1, max_fp_df=None)
 
 
-SQL_DEDUP_WINNOW = """
-WITH w AS (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS words
+SQL_DEDUP_WINNOW = f"""
+WITH w AS (SELECT doc_id, string_split_regex(lower(text), '{RE2_WS}') AS words
            FROM documents),
 g AS (SELECT doc_id,
         list_transform(range(1, greatest(len(words) - 3, 0) + 1),
@@ -1263,8 +1264,8 @@ def q_dedup_winnow_capped(spark: SparkSession, sf: str) -> DataFrame:
                           max_fp_df=20)
 
 
-SQL_DEDUP_WINNOW_CAPPED = """
-WITH w AS (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS words
+SQL_DEDUP_WINNOW_CAPPED = f"""
+WITH w AS (SELECT doc_id, string_split_regex(lower(text), '{RE2_WS}') AS words
            FROM documents),
 g AS (SELECT doc_id,
         list_transform(range(1, greatest(len(words) - 3, 0) + 1),
@@ -1336,7 +1337,7 @@ WITH v1 AS (SELECT doc_id, {_NORM} AS old_hash FROM documents
 v2 AS (SELECT doc_id,
          md5(regexp_replace(lower(CASE WHEN doc_id % 5 = 0
                                        THEN text || ' rev2' ELSE text END),
-                            '\\s+', ' ', 'g')) AS new_hash
+                            '{RE2_WS}', ' ', 'g')) AS new_hash
        FROM documents WHERE doc_id % 10 <> 0)
 SELECT coalesce(v1.doc_id, v2.doc_id) AS doc_id,
        CASE WHEN v1.doc_id IS NULL THEN 'added'
@@ -1362,17 +1363,17 @@ def q_corpus_manifest(spark: SparkSession, sf: str) -> DataFrame:
     return shard_manifest(sharded, "doc_id", "text")
 
 
-SQL_CORPUS_MANIFEST = r"""
+SQL_CORPUS_MANIFEST = rf"""
 WITH sh AS (SELECT doc_id, text,
               CAST(CAST(('0x' || substr(md5('42:' || CAST(doc_id AS VARCHAR)),
                                         1, 8)) AS UBIGINT) AS BIGINT) % 8
                 AS shard
             FROM documents),
 h AS (SELECT shard, doc_id,
-        CAST(CAST(('0x' || substr(md5(regexp_replace(lower(text), '\s+', ' ',
+        CAST(CAST(('0x' || substr(md5(regexp_replace(lower(text), '{RE2_WS}', ' ',
                                                      'g')), 1, 15))
                   AS UBIGINT) AS BIGINT) AS doc_h,
-        len(list_filter(string_split_regex(lower(text), '\s+'),
+        len(list_filter(string_split_regex(lower(text), '{RE2_WS}'),
                         w -> w <> '')) AS toks
       FROM sh)
 SELECT shard, CAST(count(*) AS BIGINT) AS n_docs,
@@ -1975,9 +1976,9 @@ def q_select_dsir(spark: SparkSession, sf: str) -> DataFrame:
     return collect_freeing(out, *caches)
 
 
-SQL_SELECT_DSIR = """
+SQL_SELECT_DSIR = f"""
 WITH w AS (SELECT doc_id, source,
-                  list_filter(string_split_regex(lower(text), '\\s+'),
+                  list_filter(string_split_regex(lower(text), '{RE2_WS}'),
                               x -> x <> '') AS words FROM documents),
 tok AS (SELECT doc_id, (source = 'src18') AS t,
                CAST(CAST(('0x' || substr(md5('dsir:' || u), 1, 8)) AS UBIGINT)
@@ -2620,7 +2621,7 @@ _GOPHER_STOP_SQL = ", ".join(f"'{s}'" for s in TX.GOPHER_STOPSET)
 SQL_TEXT_GOPHER_FILTER = f"""
 WITH base AS (
   SELECT doc_id, text AS t,
-    list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS w,
+    list_filter(string_split_regex(lower(text), '{RE2_WS}'), x -> x <> '') AS w,
     list_filter(string_split(text, chr(10)), x -> trim(x) <> '') AS lines
   FROM documents),
 sig AS (
@@ -2675,7 +2676,7 @@ def q_text_c4_clean(spark: SparkSession, sf: str) -> DataFrame:
                             min_line_words=40, require_terminal_punct=False)
 
 
-SQL_TEXT_C4_CLEAN = """
+SQL_TEXT_C4_CLEAN = f"""
 WITH base AS (
   SELECT doc_id,
     list_filter(string_split(text, chr(10)), x -> trim(x) <> '') AS lines
@@ -2684,11 +2685,11 @@ k AS (
   SELECT doc_id, lines,
     list_transform(
       list_filter(lines, x ->
-        len(list_filter(string_split_regex(trim(x), '\\s+'),
+        len(list_filter(string_split_regex(trim(x), '{RE2_WS}'),
                         y -> y <> '')) >= 40
         AND NOT contains(lower(trim(x)), 'javascript')
         AND NOT contains(lower(trim(x)), 'lorem ipsum')
-        AND NOT contains(lower(trim(x)), '{')),
+        AND NOT contains(lower(trim(x)), '{{')),
       x -> trim(x)) AS kept
   FROM base)
 SELECT doc_id,

@@ -6,18 +6,27 @@ Ref: kstream/store/http.go:120-401 — REST endpoints over the store registry:
   GET /stores/{store}/{key}           point lookup            (http.go:333-392)
   GET /stores/{store}/indexes/{col}/{value}   index lookup    (http.go:194-327)
 
-Spark-first: every endpoint is a thin JSON shim over the registry's
-DataFrames — Spark SQL is the real query surface (StoreRegistry.sql); this
-server exists for drop-in parity with the reference's HTTP consumers.
+Spark SQL is the real query surface (StoreRegistry.sql); this server exists
+for drop-in parity with the reference's HTTP consumers.  The scan and the
+index dump are bounded collects of the store's DataFrame.  The point and
+index lookups decode the path segment by the column's Spark type
+(``decode_segment``, the reference's key encoder; 400 when it does not
+parse) and read through ``Store.lookup``: a dict hit on a driver-local copy
+of the store's base when it fits the driver, else a Spark filter.
 Stdlib-only (ThreadingHTTPServer), started on a daemon thread.
 """
 
 from __future__ import annotations
 
+import datetime
 import json
+import re
 import threading
+from decimal import Decimal
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, unquote, urlparse
+
+from pyspark.sql import types as T
 
 # full-scan page size: the reference pages its scan through an iterator
 # (store/http.go:149-192) instead of buffering the store; collect() has no
@@ -25,6 +34,52 @@ from urllib.parse import parse_qs, unquote, urlparse
 # and clients walk the complete store via ?offset= / the X-Next-Offset
 # continuation header against a deterministic key sort
 DEFAULT_SCAN_LIMIT = 10_000
+
+_INT_BITS = {T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32,
+             T.LongType: 64}
+
+
+def decode_segment(text: str, dtype: T.DataType):
+    """The URL path segment ``text`` as a Python value of the Spark type
+    ``dtype``, as the reference's ``KeyEncoder().Decode`` turns a segment
+    into a key of the store's key type (store/http.go:333-392): integers
+    are decimal digits in the type's range, so ``007`` is 7 on a long
+    column and ``'007'`` on a string one.  ValueError (or, for a decimal,
+    ArithmeticError) when ``text`` does not parse as the type."""
+    if isinstance(dtype, T.StringType):
+        return text
+    if text != text.strip() or "_" in text:
+        raise ValueError("stray whitespace or underscore")
+    if type(dtype) in _INT_BITS:
+        if not re.fullmatch(r"[+-]?[0-9]+", text):
+            raise ValueError("not an integer")
+        value, half = int(text), 1 << (_INT_BITS[type(dtype)] - 1)
+        if not -half <= value < half:
+            raise ValueError("out of range")
+        return value
+    if isinstance(dtype, (T.FloatType, T.DoubleType)):
+        return float(text)
+    if isinstance(dtype, T.BooleanType):
+        value = {"true": True, "false": False}.get(text.lower())
+        if value is None:
+            raise ValueError("not true or false")
+        return value
+    if isinstance(dtype, T.DecimalType):
+        value = Decimal(text)
+        if not value.is_finite():
+            raise ValueError("not a finite decimal")
+        return value
+    if isinstance(dtype, T.DateType):
+        return datetime.date.fromisoformat(text)
+    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
+        value = datetime.datetime.fromisoformat(text)
+        if value.tzinfo is None:
+            return value
+        if isinstance(dtype, T.TimestampNTZType):
+            raise ValueError("a time zone on a timestamp_ntz")
+        # a timestamp column collects as local wall-clock time
+        return value.astimezone().replace(tzinfo=None)
+    raise ValueError("no path encoding for this type")
 
 
 class StoreHttpServer:
@@ -78,12 +133,20 @@ class StoreHttpServer:
                         # index-able columns (non-key schema columns)
                         return self._json(200, reg.indexes())
                     if len(parts) >= 2 and parts[0] == "stores":
-                        store = reg.store(parts[1])
+                        try:
+                            store = reg.store(parts[1])
+                        except KeyError:
+                            return self._json(
+                                404, {"error": f"store not found: {parts[1]}"})
                         if len(parts) == 3 and parts[2] == "indexes":
                             # ref http.go:194-250 GET /stores/{s}/indexes
                             # (route shadows a literal point-lookup key
                             # "indexes", same as the reference's mux)
                             return self._json(200, store.indexes())
+                        if len(parts) in (4, 5) and parts[2] == "indexes" \
+                                and parts[3] not in store.indexes():
+                            return self._json(404, {
+                                "error": f"index dose not exist: {parts[3]}"})
                         if len(parts) == 4 and parts[2] == "indexes":
                             # ref http.go:251-331 GET /stores/{s}/indexes/
                             # {index}: dump the index as a map of
@@ -93,10 +156,6 @@ class StoreHttpServer:
                             # dump is ordered (index value, key) and
                             # bounded by ?limit= rows (default scan cap).
                             col = parts[3]
-                            if col not in store.indexes():
-                                return self._json(
-                                    404, {"error": f"index dose not "
-                                          f"exist: {col}"})
                             paging = self._paging(url.query, ("limit",))
                             if paging is None:
                                 return None
@@ -146,29 +205,36 @@ class StoreHttpServer:
                                 headers["X-Next-Offset"] = str(offset + limit)
                             return self._json(200, rows[:limit], headers)
                         if len(parts) == 3:          # point lookup
-                            key: object = parts[2]
-                            try:
-                                key = int(parts[2])
-                            except ValueError:
-                                pass
-                            rows = [r.asDict() for r in store.get(key).collect()]
+                            # ref http.go:333-392: the key encoder
+                            # decodes the segment, then one store Get
+                            col = store.key[0]
+                            key = self._decode(store, col, parts[2])
+                            if key is None:
+                                return None
+                            rows = store.lookup(col, key)
                             if not rows:
                                 return self._json(404, {"error": "key not found"})
                             return self._json(200, rows[0])
                         if len(parts) == 5 and parts[2] == "indexes":
-                            val: object = parts[4]
-                            try:
-                                val = int(parts[4])
-                            except ValueError:
-                                pass
-                            rows = [r.asDict() for r in
-                                    store.get_indexed(parts[3], val).collect()]
-                            return self._json(200, rows)
+                            col = parts[3]
+                            val = self._decode(store, col, parts[4])
+                            if val is None:
+                                return None
+                            return self._json(200, store.lookup(col, val))
                     return self._json(404, {"error": "unknown route"})
-                except KeyError:
-                    return self._json(404, {"error": f"store not found: {parts[1]}"})
                 except Exception as e:  # noqa: BLE001
                     return self._json(500, {"error": str(e)})
+
+            def _decode(self, store, col: str, text: str):
+                """The path segment ``text`` as a value of ``col``'s type,
+                or None after answering 400 when it does not parse."""
+                dtype = store.schema()[col].dataType
+                try:
+                    return decode_segment(text, dtype)
+                except (ValueError, ArithmeticError) as e:
+                    self._json(400, {"error": f"bad {col}: {text!r} is not "
+                                     f"a {dtype.simpleString()} ({e})"})
+                    return None
 
         self._server = ThreadingHTTPServer((host, port), Handler)
         self.port = self._server.server_port

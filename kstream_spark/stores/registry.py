@@ -12,9 +12,9 @@ Ref:
 
 Spark-first: a "store" is a named latest-by-key relation (compacted with the
 GlobalTable machinery) registered as a temp view — every store is queryable
-with full Spark SQL, which supersedes the reference's HTTP scan/point/index
-endpoints.  Secondary indexes need no maintenance: a filter on any column IS
-the index lookup (Catalyst prunes/pushes down).
+with full Spark SQL.  Secondary indexes need no maintenance: a filter on
+any column IS the index lookup (Catalyst prunes/pushes down), and the
+driver-local copy below hashes a column on its first lookup.
 
 A store holds executed state, as the reference applies each record to its
 store on arrival (processors/materializer.go:65-94): a compacted base plus a
@@ -35,6 +35,15 @@ a frame a reader still holds keeps that base's blocks alive, and Spark's
 ContextCleaner frees them once no frame does.  A store's temp view points at
 its last fold; ``StoreRegistry.sql`` folds every store first.
 
+Point and index lookups (``Store.lookup``, behind the HTTP routes) read a
+driver-local copy of the base when it fits the driver: the one size gate
+``util.fits_driver``, fed the bytes the base really holds (the
+``localCheckpoint``'s stored blocks, the snapshot's file sizes).  The copy
+is collected on the first lookup after a fold, each column hashed into
+``value -> rows`` on its first lookup, and a fold drops it, so a lookup is
+a dict hit as in the reference's memory backend.  A larger base keeps the
+Spark filter; ``get``/``get_indexed`` always return the filtered DataFrame.
+
 TTL (store.go:25, memory cleaner memory.go:88-100): rows carry an expiry
 timestamp; reads filter ``expiry > now`` — lazy expiry, same observable
 semantics as the reference's background cleaner.
@@ -42,6 +51,8 @@ semantics as the reference's background cleaner.
 
 from __future__ import annotations
 
+import datetime
+import logging
 import threading
 from functools import reduce
 from typing import Callable, Sequence
@@ -49,9 +60,15 @@ from typing import Callable, Sequence
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (AtomicType, BinaryType, StructType,
+                               TimestampType)
 
+from kstream_spark import util
 from kstream_spark.global_table import compact_latest
-from kstream_spark.util import free_local_checkpoint
+from kstream_spark.util import (checkpoint_bytes, fits_driver,
+                                free_local_checkpoint, plan_size_bytes)
+
+log = logging.getLogger(__name__)
 
 # a write that leaves this many parts pending folds them: the default of
 # Structured Streaming's own delta-to-snapshot threshold
@@ -71,16 +88,28 @@ def _checkpoint(df: DataFrame) -> DataFrame:
                               storageLevel=StorageLevel.MEMORY_AND_DISK)
 
 
+_NAN = object()
+
+
+def _hkey(value):
+    """``value`` as a key of a local index: NaN equals NaN in Spark's
+    ``=`` but not in Python's, so every NaN maps to one key."""
+    return _NAN if isinstance(value, float) and value != value else value
+
+
 class Store:
     """A named latest-by-key KV relation with the reference Store surface.
 
     ``key``, ``version`` and ``tombstone`` are those of the latest write;
     the fold compacts with them and executes the result with ``execute``
-    (the registry's: a ``localCheckpoint`` or a parquet snapshot)."""
+    (the registry's: a ``localCheckpoint`` or a parquet snapshot), whose
+    size ``measure`` reports in bytes."""
 
     def __init__(self, name: str, key: str | Sequence[str],
                  ttl_col: str | None = None, base: DataFrame | None = None,
-                 execute: Callable[[DataFrame], DataFrame] = _checkpoint):
+                 execute: Callable[[DataFrame], DataFrame] = _checkpoint,
+                 measure: Callable[[DataFrame], int | None] =
+                 checkpoint_bytes):
         self.name = name
         self.key = [key] if isinstance(key, str) else list(key)
         self.ttl_col = ttl_col
@@ -89,7 +118,16 @@ class Store:
         self._base = base          # compacted relation; None until a fold
         self._pending: list[DataFrame] = []   # checkpoints of the writes
         self._execute = execute
+        self._measure = measure
         self._lock = threading.RLock()
+        self._drop_copy()
+
+    def _drop_copy(self) -> None:
+        """Forget the driver-local copy of the base (see ``lookup``)."""
+        self._bytes: int | None = None    # the base's measured size
+        self._measured = False
+        self._rows = None                 # the collected base, once needed
+        self._by_col: dict[str, dict] = {}  # column -> value -> rows
 
     def _fold(self) -> DataFrame:
         """The store as one compacted relation: fold the pending parts into
@@ -113,17 +151,20 @@ class Store:
                 for df in self._pending:
                     free_local_checkpoint(df)
                 self._base, self._pending = base, []
+                self._drop_copy()
                 base.createOrReplaceTempView(self.name)
             return self._base
 
-    def _live(self) -> DataFrame:
-        df = self._fold()
+    def _unexpired(self, df: DataFrame) -> DataFrame:
         if self.ttl_col:
             return df.filter(
                 F.col(self.ttl_col).isNull()
                 | (F.col(self.ttl_col) > F.current_timestamp())
             )
         return df
+
+    def _live(self) -> DataFrame:
+        return self._unexpired(self._fold())
 
     # ref: store.go Get / GetRange / GetAll
     def get(self, key_value) -> DataFrame:
@@ -141,11 +182,79 @@ class Store:
     def get_indexed(self, index_col: str, value) -> DataFrame:
         return self._live().filter(F.col(index_col) == F.lit(value))
 
+    def lookup(self, col: str, value, local: bool | None = None) \
+            -> list[dict]:
+        """The live rows whose ``col`` equals ``value`` (a value of the
+        column's type), as row dicts: the rows, in their order, of
+        ``get_indexed(col, value).collect()``.  The HTTP point and index
+        routes read through here.
+
+        A base that fits the driver (``util.fits_driver`` fed the bytes
+        ``measure`` reports for it) is collected once, on the first lookup
+        after its fold, and a column is hashed into ``value -> rows`` on its
+        first lookup, so a lookup is a dict hit, as the reference's
+        (backend/memory/memory.go:52-86).  A fold drops the copy; TTL
+        expiry is checked against the clock on every lookup.  A larger
+        base, and a column of a type with no hashable Python value, keep
+        the Spark filter.  ``local`` pins the arm (the parity tests compare
+        the two)."""
+        with self._lock:
+            base = self._fold()
+            if col not in base.columns:
+                raise KeyError(f"store {self.name} has no column {col}")
+            if not self._measured:
+                self._bytes, self._measured = self._measure(base), True
+                self._log_arm(base)
+            if fits_driver(base, local, self._bytes) and self._local_ok(
+                    base, col):
+                return self._local_lookup(base, col, value)
+        rows = self._unexpired(base).filter(F.col(col) == F.lit(value))
+        return [r.asDict() for r in rows.collect()]
+
+    def _local_ok(self, base: DataFrame, col: str) -> bool:
+        """Whether the local copy can answer a lookup on ``col``: its
+        values collect as hashable Python values, and an expiry collects
+        as a datetime comparable with the clock."""
+        types = base.schema
+        return (isinstance(types[col].dataType, AtomicType)
+                and not isinstance(types[col].dataType, BinaryType)
+                and (not self.ttl_col or isinstance(
+                    types[self.ttl_col].dataType, TimestampType)))
+
+    def _local_lookup(self, base: DataFrame, col: str, value) -> list[dict]:
+        if self._rows is None:
+            self._rows = base.collect()
+        index = self._by_col.get(col)
+        if index is None:
+            index = self._by_col[col] = {}
+            for r in self._rows:
+                index.setdefault(_hkey(r[col]), []).append(r)
+        hits = [] if value is None else index.get(_hkey(value), [])
+        if self.ttl_col:
+            # a timestamp column collects as local wall-clock time
+            now = datetime.datetime.now()
+            hits = [r for r in hits
+                    if r[self.ttl_col] is None or r[self.ttl_col] > now]
+        return [r.asDict() for r in hits]
+
+    def _log_arm(self, base: DataFrame) -> None:
+        """Say, once per fold, which arm lookups on ``base`` take and why."""
+        log.info("store %s: base holds %s bytes, driver gate %d: lookups %s",
+                 self.name,
+                 "unknown (Catalyst's size decides)" if self._bytes is None
+                 else self._bytes, util.DRIVER_LOCAL_BYTES,
+                 "read a driver-local copy"
+                 if fits_driver(base, size=self._bytes)
+                 else "filter with Spark")
+
     # ref: indexed_store.go Indexes() — in the Spark model every non-key
     # column supports an index lookup (the filter IS the index, pushed to
     # the scan), so the listing is the schema minus the key
     def indexes(self) -> list[str]:
         return sorted(c for c in self._fold().columns if c not in self.key)
+
+    def schema(self) -> StructType:
+        return self._fold().schema
 
     def df(self) -> DataFrame:
         return self._live()
@@ -236,7 +345,8 @@ class PersistentStoreRegistry(StoreRegistry):
 
     def _new_store(self, name, key, ttl_col=None, base=None) -> Store:
         return Store(name, key, ttl_col=ttl_col, base=base,
-                     execute=lambda df: self._snapshot(name, df))
+                     execute=lambda df: self._snapshot(name, df),
+                     measure=plan_size_bytes)
 
     def _snapshot(self, name: str, df: DataFrame) -> DataFrame:
         """Write the folded store as a NEW snapshot directory and serve

@@ -207,3 +207,78 @@ def test_index_dump_truncation_signal(server):
             f"/stores/accounts/indexes/tag?limit=50") as r:
         assert r.headers["X-Truncated"] == "false"
         assert json.loads(r.read()) == {'"x"': [1], '"y"': [2]}
+
+
+def _code(srv, path):
+    try:
+        return _get(srv, path)
+    except urllib.error.HTTPError as e:
+        return e.code, json.loads(e.read())
+
+
+def test_lookup_segments_decode_by_column_type(spark):
+    """Point and index segments decode by the column's Spark type, as the
+    reference's key encoder does: on a string key '007' is the string
+    '007', on a long key it is 7; a segment that does not parse as the
+    column's type answers 400, an unknown index column 404."""
+    b = StreamBuilder(spark)
+    b.stores.materialize("str", spark.createDataFrame(
+        [("a", 1, 7), ("007", 1, 8), ("123", 1, 7)],
+        "key string, version long, n long"), key="key", version="version")
+    b.stores.materialize("num", spark.createDataFrame(
+        [(7, 1, 2.5), (8, 1, 2.5)], "key long, version long, x double"),
+        key="key", version="version")
+    srv = StoreHttpServer(b.stores).start()
+    try:
+        assert _code(srv, "/stores/str/123")[1]["key"] == "123"
+        assert _code(srv, "/stores/str/007")[1]["key"] == "007"
+        assert _code(srv, "/stores/str/7")[0] == 404
+        assert _code(srv, "/stores/num/007") == (
+            200, {"key": 7, "version": 1, "x": 2.5})
+        assert sorted(r["key"] for r in
+                      _code(srv, "/stores/str/indexes/n/7")[1]) == ["123", "a"]
+        assert sorted(r["key"] for r in
+                      _code(srv, "/stores/num/indexes/x/2.5")[1]) == [7, 8]
+        for path in ("/stores/num/a", "/stores/num/9223372036854775808",
+                     "/stores/num/1_0", "/stores/str/indexes/n/x",
+                     "/stores/num/indexes/x/abc"):
+            code, body = _code(srv, path)
+            assert code == 400 and body["error"].startswith("bad "), path
+        assert _code(srv, "/stores/num/indexes/nope/1") == (
+            404, {"error": "index dose not exist: nope"})
+        assert _code(srv, "/stores/nope/1") == (
+            404, {"error": "store not found: nope"})
+    finally:
+        srv.stop()
+
+
+def test_decode_segment_by_type():
+    import datetime
+    from decimal import Decimal
+
+    from pyspark.sql import types as T
+
+    from kstream_spark.stores.http import decode_segment
+    ts = datetime.datetime(2024, 1, 2, 3, 4, 5)
+    for text, dtype, want in (
+            ("007", T.StringType(), "007"), ("007", T.LongType(), 7),
+            ("-128", T.ByteType(), -128), ("-2.5", T.DoubleType(), -2.5),
+            ("True", T.BooleanType(), True),
+            ("1.50", T.DecimalType(4, 2), Decimal("1.50")),
+            ("2024-01-02", T.DateType(), ts.date()),
+            ("2024-01-02T03:04:05", T.TimestampType(), ts),
+            ("2024-01-02T03:04:05", T.TimestampNTZType(), ts),
+            ("2024-01-02T03:04:05+00:00", T.TimestampType(),
+             ts.replace(tzinfo=datetime.timezone.utc).astimezone()
+             .replace(tzinfo=None))):
+        assert decode_segment(text, dtype) == want, (text, dtype)
+    for text, dtype in (
+            ("128", T.ByteType()), ("9223372036854775808", T.LongType()),
+            ("1_0", T.LongType()), (" 7", T.LongType()), ("7.0", T.LongType()),
+            ("x", T.DoubleType()), ("yes", T.BooleanType()),
+            ("NaN", T.DecimalType(4, 2)), ("x", T.DecimalType(4, 2)),
+            ("2024-13-01", T.DateType()),
+            ("2024-01-02T03:04:05+00:00", T.TimestampNTZType()),
+            ("1", T.ArrayType(T.LongType()))):
+        with pytest.raises((ValueError, ArithmeticError)):
+            decode_segment(text, dtype)

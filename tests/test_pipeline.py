@@ -178,7 +178,8 @@ def test_fits_driver_gate(spark, tmp_path):
     """The one driver-local size gate: a parquet input under the
     threshold goes local (its scan stats are known and small); an
     in-memory createDataFrame input has no stats (defaultSizeInBytes
-    sentinel -> None) and stays distributed; a pin overrides both."""
+    sentinel -> None) and stays distributed; a measured size replaces
+    Catalyst's; a pin overrides both."""
     from kstream_spark.util import DRIVER_LOCAL_BYTES, fits_driver, \
         plan_size_bytes
     rows = [(i, [float(i), 1.0]) for i in range(50)]
@@ -191,6 +192,8 @@ def test_fits_driver_gate(spark, tmp_path):
     assert fits_driver(mem) is False
     assert fits_driver(scan, local=False) is False
     assert fits_driver(mem, local=True) is True
+    assert fits_driver(mem, size=DRIVER_LOCAL_BYTES) is True
+    assert fits_driver(scan, size=DRIVER_LOCAL_BYTES + 1) is False
 
 
 def test_sq8_oracle_and_ivfsq_local_arm_identical(spark, tmp_path):

@@ -358,3 +358,22 @@ def test_py_word_shingles_matches_jvm(spark, texts, n):
     for r in df.select(F.lower("t").alias("lt"),
                        word_shingles(F.col("t"), n).alias("sh")).collect():
         assert py_word_shingles(r.lt, n) == list(r.sh)
+
+
+@given(st.lists(_WS_TEXT.filter(lambda t: t is not None), min_size=1,
+                max_size=12))
+@SET
+def test_oracle_word_split_matches_py_words(texts):
+    """The DuckDB oracles split words with ``RE2_WS``, Java's ``\\s`` run:
+    RE2's own ``\\s+`` keeps 'a' VT 'b' as one word."""
+    import duckdb
+
+    from kstream_spark.functions.text import RE2_WS, py_words
+    con = duckdb.connect()
+    split = f"string_split_regex(?, '{RE2_WS}')"
+    assert con.execute(f"SELECT string_split_regex('a'||chr(11)||'b c', "
+                       f"'{RE2_WS}')").fetchone()[0] \
+        == py_words("a\x0bb c") == ["a", "b", "c"]
+    for t in texts:
+        assert con.execute(f"SELECT {split}", [t]).fetchone()[0] \
+            == py_words(t), repr(t)

@@ -9,11 +9,14 @@ import datetime
 import json
 import sys
 import threading
+import time
 import urllib.request
 
 import numpy as np
 import pyspark.sql.functions as F
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from kstream_spark import StreamBuilder, util
 from kstream_spark.stores import registry
@@ -117,11 +120,13 @@ def test_fold_frees_its_parts_and_keeps_read_frames_valid(spark, tmp_path,
 @pytest.mark.parametrize("persistent", [False, True],
                          ids=["memory", "persistent"])
 def test_reads_stay_valid_while_a_stream_writes(spark, tmp_path, persistent):
-    # a reader thread pages a frame it read before the stream started, and
-    # pages the live store over HTTP, while a streaming query writes one
-    # micro-batch per file; the persistent registry folds on every write,
-    # the in-memory one on every read after a write.  A fold that freed a
-    # base the reader still held would fail the held frame's collect
+    # a reader thread pages a frame it read before the stream started,
+    # pages the live store over HTTP and looks keys up over HTTP, while a
+    # streaming query writes one micro-batch per file; the persistent
+    # registry folds on every write, the in-memory one on every read after
+    # a write.  A fold that freed a base the reader still held would fail
+    # the held frame's collect; a local copy that outlived its fold would
+    # miss the stream's writes
     from kstream_spark.stores.http import StoreHttpServer
     from kstream_spark.stores.registry import StoreRegistry
 
@@ -142,6 +147,7 @@ def test_reads_stay_valid_while_a_stream_writes(spark, tmp_path, persistent):
     store._execute = counting
     held = store.get_all()
     want_held = sorted(tuple(r) for r in held.collect())
+    held_ver = {r.k: r.ver for r in held.collect()}
 
     def page(df, size=7):
         out, offset = [], 0
@@ -153,7 +159,7 @@ def test_reads_stay_valid_while_a_stream_writes(spark, tmp_path, persistent):
             offset += size
 
     server = StoreHttpServer(reg).start()
-    done, errors, rounds = threading.Event(), [], []
+    done, errors, rounds, seen = threading.Event(), [], [], {}
 
     def reader():
         try:
@@ -171,6 +177,15 @@ def test_reads_stay_valid_while_a_stream_writes(spark, tmp_path, persistent):
                     assert keys == sorted(set(keys))
                     offset, pages = (int(nxt) if nxt else None), pages + 1
                 rounds.append(pages)
+                # a key's latest version never goes back
+                for k in sorted(held_ver):
+                    with urllib.request.urlopen(
+                            f"http://127.0.0.1:{server.port}/stores/live/{k}",
+                            timeout=120) as r:
+                        row = json.loads(r.read())
+                    assert row["k"] == k
+                    assert row["ver"] >= seen.get(k, held_ver[k])
+                    seen[k] = row["ver"]
         except Exception as e:  # noqa: BLE001 - reported below
             errors.append(e)
 
@@ -185,10 +200,12 @@ def test_reads_stay_valid_while_a_stream_writes(spark, tmp_path, persistent):
         t.join(timeout=300)
         server.stop()
     assert not t.is_alive() and not errors, errors
-    assert rounds and len(folds) >= 2
+    assert rounds and len(folds) >= 2 and seen
     assert page(held) == want_held
     rows = [r for part in batches for r in part]
     assert {r.k: r.ver for r in store.get_all().collect()} == _latest(rows)
+    assert all(store.lookup("k", k)[0]["ver"] == ver
+               for k, ver in _latest(rows).items())
 
 
 def test_dedup_then_materialize_is_exactly_once(spark, tmp_path):
@@ -327,3 +344,154 @@ def test_concurrent_writes_lose_no_update(spark):
     got = {r.k: r.ver for r in b.stores.store("conc").get_all().collect()}
     assert got == {t * writes + i: i for t in range(threads)
                    for i in range(writes)}
+
+
+KEY_VALUES = {"long": st.integers(-3, 3),
+              "string": st.sampled_from(["a", "b", "007", "7", "", "é"]),
+              "double": st.sampled_from([0.0, -0.0, 1.5, -2.25,
+                                         float("nan"), float("inf")])}
+
+
+def _lookups_agree(store, col, values):
+    """``Store.lookup`` on both arms gives the rows, in their order, of the
+    Spark filter; repr compares NaN as equal."""
+    for value in values:
+        want = repr([r.asDict() for r in
+                     store.get_indexed(col, value).collect()])
+        for local in (True, False):
+            assert repr(store.lookup(col, value, local=local)) == want, \
+                (col, value, local)
+
+
+@settings(max_examples=12, deadline=None,
+          suppress_health_check=list(HealthCheck))
+@given(kind=st.sampled_from(sorted(KEY_VALUES)), composite=st.booleans(),
+       data=st.data())
+def test_lookup_matches_spark_filter(spark, kind, composite, data):
+    # long/string/double keys, a composite key (the point lookup filters
+    # its first column), null and absent index values, and a write after
+    # a lookup, which the next lookup must see
+    rows = data.draw(st.lists(st.tuples(
+        KEY_VALUES[kind], st.integers(0, 2), st.integers(0, 50),
+        st.one_of(st.none(), st.integers(0, 3))), min_size=1, max_size=25))
+    cut = data.draw(st.integers(1, len(rows)))
+    schema = f"k {kind}, j long, ver long, idx long"
+    reg = registry.StoreRegistry(spark)
+    key = ["k", "j"] if composite else "k"
+    absent = {"long": 99, "string": "zz", "double": 99.5}[kind]
+    keys = list({repr(r[0]): r[0] for r in rows}.values()) + [absent, None]
+    for part in (rows[:cut], rows[cut:]):
+        if not part:
+            continue
+        store = reg.materialize("p", spark.createDataFrame(part, schema),
+                                key=key, version="ver")
+        _lookups_agree(store, "k", keys)
+        _lookups_agree(store, "idx", [0, 1, 2, 3, 99, None])
+
+
+def test_lookup_expires_rows_between_lookups_without_a_fold(spark):
+    now = datetime.datetime.now(datetime.timezone.utc)
+    soon = now + datetime.timedelta(seconds=4)
+    df = spark.createDataFrame(
+        [("a", 1, soon), ("b", 1, now + datetime.timedelta(hours=1)),
+         ("c", 1, None), ("d", 1, now - datetime.timedelta(hours=1))],
+        "key string, version long, expiry timestamp")
+    store = registry.StoreRegistry(spark).materialize(
+        "ttl", df, key="key", version="version", ttl_col="expiry")
+    base = store._fold()
+    for local in (True, False):
+        assert [r["key"] for r in store.lookup("version", 1, local=local)] \
+            == ["a", "b", "c"]
+    assert datetime.datetime.now(datetime.timezone.utc) < soon
+    time.sleep((soon - datetime.datetime.now(datetime.timezone.utc))
+               .total_seconds() + 0.2)
+    _lookups_agree(store, "key", ["a", "b", "c", "d"])
+    _lookups_agree(store, "version", [1])
+    assert [r["key"] for r in store.lookup("version", 1, local=True)] \
+        == ["b", "c"]
+    assert store._fold() is base
+
+
+def test_lookup_gate_measures_the_stored_base(spark, tmp_path, monkeypatch,
+                                              caplog):
+    # the in-memory base is sized by the bytes its checkpoint stores, the
+    # persistent one by its snapshot's files; the arm is logged once per
+    # fold, and a base over the gate keeps the Spark filter
+    df = spark.range(50).selectExpr("id AS k", "id AS ver",
+                                    "concat('v', id) AS s")
+    mem = registry.StoreRegistry(spark).materialize("m", df, key="k",
+                                                    version="ver")
+    per = PersistentStoreRegistry(spark, str(tmp_path / "snap")).materialize(
+        "p", df, key="k", version="ver")
+    caplog.set_level("INFO", logger=registry.__name__)
+    for store, measure in ((mem, util.checkpoint_bytes),
+                           (per, util.plan_size_bytes)):
+        for _ in range(3):
+            assert store.lookup("k", 7) == [{"k": 7, "ver": 7, "s": "v7"}]
+        size = measure(store._fold())
+        assert 0 < size <= util.DRIVER_LOCAL_BYTES and store._bytes == size
+        assert store._rows is not None
+    assert 0 < util.checkpoint_bytes(mem._fold()) \
+        and util.checkpoint_bytes(df) is None
+    logged = [r.getMessage() for r in caplog.records]
+    assert len(logged) == 2 and all("driver-local copy" in m for m in logged)
+
+    caplog.clear()
+    monkeypatch.setattr(util, "DRIVER_LOCAL_BYTES", 0)
+    small = registry.StoreRegistry(spark).materialize("s", df, key="k",
+                                                      version="ver")
+    assert small.lookup("k", 7) == [{"k": 7, "ver": 7, "s": "v7"}]
+    assert small._rows is None
+    assert [m for m in (r.getMessage() for r in caplog.records)
+            if "filter with Spark" in m]
+
+
+def test_concurrent_lookups_never_read_a_stale_copy(spark):
+    # more threads than cores: two writers raise one key's version while
+    # readers look it up on the local copy, each lookup folding what was
+    # written since the last; a copy that outlived the fold replacing its
+    # base would read a version older than one its reader already saw, or
+    # miss the last write
+    b = StreamBuilder(spark)
+
+    def write(ver):
+        return b.stores.materialize("lk", spark.range(1).select(
+            F.lit(0).alias("k"), F.lit(ver).alias("ver")),
+            key="k", version="ver")
+    store = write(0)
+    writes, readers = 6, 6
+    done, errors = threading.Event(), []
+
+    def writer(w):
+        try:
+            for i in range(writes):
+                write(1 + 2 * i + w)
+        except Exception as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+
+    def reader():
+        try:
+            last = 0
+            while not done.is_set():
+                ver = store.lookup("k", 0, local=True)[0]["ver"]
+                assert ver >= last, (ver, last)
+                last = ver
+        except Exception as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        ws = [threading.Thread(target=writer, args=(w,)) for w in range(2)]
+        rs = [threading.Thread(target=reader) for _ in range(readers)]
+        for t in ws + rs:
+            t.start()
+        for t in ws:
+            t.join(timeout=300)
+        done.set()
+        for t in rs:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in ws + rs) and not errors, errors
+    assert store.lookup("k", 0, local=True)[0]["ver"] == 2 * writes
