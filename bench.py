@@ -35,15 +35,14 @@ twins (dedup_embedding_lsh, sim_ivf*/pq* top-k) are what headline
 wall-clock measures; the sf1 sweep (tools/check.py) covers the anchors
 with a deterministic vec-id slice.
 
-Measurement note (r9): queries that materialize internally via
-util.collect_freeing (pipeline_selection_mix, sim_ann_retrain,
-mm_phash_dedup, mm_afp_dedup) unpersist their shared subtrees at the end
-of every call, so min-of-N here is a min over COLD runs — r8 and earlier
-numbers for those four were flattered by iters 2..N reusing the previous
-iteration's still-cached persists.  The apparent r8->r9 jump on exactly
-those queries is the measurement becoming honest, not the engine
-regressing (their oracle-checked plans are unchanged upstream of the
-final materialization).
+Measurement note: every run (timed, warm-up, control, state lifecycle)
+is one ``util.cache_scope``, left after the clock stops, so each run
+frees the persists and checkpoints its query ``owned`` and min-of-N is a
+min over COLD runs.  Before, queries whose caches outlived the call
+(dedup_ngram_jaccard, dedup_minhash_lsh, dedup_winnow, text_tfidf, ...)
+had runs 2..N reuse run 1's cache and read several times faster than a
+cold run; their jump is the measurement becoming honest, not the engine
+regressing.
 """
 
 from __future__ import annotations
@@ -175,15 +174,17 @@ HEADLINE = [
 ]
 
 
-def _bench_state(spark, iters: int, prefix: str, variants: tuple,
+def _bench_state(iters: int, prefix: str, variants: tuple,
                  save, action) -> dict:
     """The shared loop of the ``bench_*_state`` lifecycles: ``save(path)``
     writes the persisted artifact once, untimed (production writes it
     once); then per variant, the min over ``iters`` runs of the
     zero-argument callable ``action(variant, path)`` returns (building
-    it is untimed, calling it is timed), with ``clearCache`` after every
-    run.  Returns {"<prefix>_<variant>": seconds}."""
+    it is untimed, calling it is timed), each run one cache scope.
+    Returns {"<prefix>_<variant>": seconds}."""
     import shutil
+
+    from kstream_spark.util import cache_scope
 
     path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                         ".bench_tmp", prefix)
@@ -192,12 +193,12 @@ def _bench_state(spark, iters: int, prefix: str, variants: tuple,
     for variant in variants:
         best = None
         for _ in range(max(1, iters)):
-            go = action(variant, path)
-            t0 = time.time()
-            go()
-            dt = time.time() - t0
+            with cache_scope():
+                go = action(variant, path)
+                t0 = time.time()
+                go()
+                dt = time.time() - t0
             best = dt if best is None else min(best, dt)
-            spark.catalog.clearCache()
         out[f"{prefix}_{variant}"] = round(best, 3)
     shutil.rmtree(os.path.dirname(path), ignore_errors=True)
     return out
@@ -237,7 +238,7 @@ def bench_incremental_state(spark, sf_dir: str, iters: int) -> dict:
             corpus_state=state).select("doc_id"))
 
     return _bench_state(
-        spark, iters, "dedup_incremental_prod", ("stateless", "state"),
+        iters, "dedup_incremental_prod", ("stateless", "state"),
         lambda path: corpus_signatures(cor, "doc_id", "text")
         .write.mode("overwrite").parquet(path), action)
 
@@ -275,7 +276,7 @@ def bench_ivf_state(spark, sf_dir: str, iters: int) -> dict:
                            centroids=cents))
         return go
 
-    return _bench_state(spark, iters, "sim_ivf_prod", ("retrain", "state"),
+    return _bench_state(iters, "sim_ivf_prod", ("retrain", "state"),
                         lambda path: save_centroids(spark, train(), path),
                         action)
 
@@ -312,7 +313,7 @@ def bench_pq_state(spark, sf_dir: str, iters: int) -> dict:
                               k=10))
         return go
 
-    return _bench_state(spark, iters, "sim_pq_prod", ("retrain", "state"),
+    return _bench_state(iters, "sim_pq_prod", ("retrain", "state"),
                         lambda path: save_codebooks(spark, train(), path),
                         action)
 
@@ -323,12 +324,15 @@ CONTROL_EVERY = 25              # interleave a timed control run this often
 
 def _time_query(spark, fn, sf_dir: str, iters: int) -> float:
     # each query timed end-to-end (plan + execute); min over `iters` runs
-    # so a GC pause / noisy neighbor doesn't masquerade as engine cost
+    # so a GC pause / noisy neighbor doesn't masquerade as engine cost;
+    # each run is one cache scope, released after the clock stops
+    from kstream_spark.util import cache_scope
     best = None
     for _ in range(max(1, iters)):
-        t0 = time.time()
-        _noop(fn(spark, sf_dir))
-        dt = time.time() - t0
+        with cache_scope():
+            t0 = time.time()
+            _noop(fn(spark, sf_dir))
+            dt = time.time() - t0
         best = dt if best is None else min(best, dt)
     return best
 
@@ -340,6 +344,7 @@ def run_suite(names: list, sf_dir: str, iters: int) -> dict:
     show up as a trend in the control series."""
     from kstream_spark import get_spark
     from kstream_spark.inventory import INVENTORY
+    from kstream_spark.util import cache_scope
 
     spark = get_spark(app_name="kstream_spark_bench")
     # warm-up: JVM/JIT + file-listing so the first timed query isn't charged
@@ -358,14 +363,13 @@ def run_suite(names: list, sf_dir: str, iters: int) -> dict:
     # long-running production job lives in.
     for name in names:
         if name in INVENTORY:
-            _noop(INVENTORY[name][0](spark, sf_dir))
-            spark.catalog.clearCache()
+            with cache_scope():
+                _noop(INVENTORY[name][0](spark, sf_dir))
     ctrl_fn = INVENTORY[CONTROL_QUERY][0]
     control_runs = []
     control_runs.append(
         {"at": "start", "sec": round(_time_query(spark, ctrl_fn, sf_dir,
                                                  iters), 3)})
-    spark.catalog.clearCache()
     timings = {}
     done = 0
     for name in names:
@@ -373,9 +377,6 @@ def run_suite(names: list, sf_dir: str, iters: int) -> dict:
             continue
         timings[name] = round(_time_query(spark, INVENTORY[name][0],
                                           sf_dir, iters), 3)
-        # operators may persist() intermediates (dedup's inverted index);
-        # clear between queries so cache memory doesn't skew later timings
-        spark.catalog.clearCache()
         done += 1
         # interleaved control: JVM aging (the r11/r12 unfalsifiable
         # +2-3% creep) shows up as an upward trend in THIS series instead
@@ -385,11 +386,9 @@ def run_suite(names: list, sf_dir: str, iters: int) -> dict:
                 {"at": f"after_{done}",
                  "sec": round(_time_query(spark, ctrl_fn, sf_dir,
                                           iters), 3)})
-            spark.catalog.clearCache()
     timings.update(bench_incremental_state(spark, sf_dir, iters))
     timings.update(bench_ivf_state(spark, sf_dir, iters))
     timings.update(bench_pq_state(spark, sf_dir, iters))
-    spark.catalog.clearCache()
     control_runs.append(
         {"at": "end", "sec": round(_time_query(spark, ctrl_fn, sf_dir,
                                                iters), 3)})

@@ -532,15 +532,10 @@ def q_graph_lpa(spark: SparkSession, sf: str) -> DataFrame:
     supplier co-purchase graph (the triangles edge relation;
     operators/graph.label_propagation)."""
     from kstream_spark.operators.graph import label_propagation
-    from kstream_spark.util import collect_freeing
     li = StreamBuilder(spark).table(f"{sf}/lineitem.parquet",
                                     name="lineitem").to_df()
     edges = _cooccur_pairs(li, "l_orderkey", "l_suppkey").distinct()
-    caches: list = []
-    out = label_propagation(edges, "s", "d", iters=3, caches=caches)
-    # (node, community) is node-bounded — materialize so the final
-    # round's persisted labels free with the query (ADVICE r12 leak)
-    return collect_freeing(out, *caches)
+    return label_propagation(edges, "s", "d", iters=3)
 
 
 def _lpa_sql(iters: int = 3) -> str:

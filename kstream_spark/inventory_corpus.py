@@ -839,19 +839,13 @@ def q_select_curriculum(spark: SparkSession, sf: str) -> DataFrame:
     (operators/selection.curriculum_bins): distributed two-phase ntile —
     no single-task sort of the corpus — cut into 10 equal-depth bins,
     one exact-integer audit row per bin.  share_bigrams: the exploded
-    bigram relation persists once for all three LM consumers; the 10-row
-    audit materializes via collect_freeing so the cache frees with the
-    query."""
+    bigram relation persists once for all three LM consumers."""
     from kstream_spark.operators.selection import curriculum_bins
-    from kstream_spark.util import collect_freeing
-    caches: list = []
     # bigram_table pinned: the documents corpus vocabulary is far under
     # the 2M-bigram broadcast ceiling at every SF (9.3k distinct bigrams
     # at sf1), so the auto gate's distinct-count job buys nothing here
-    out = curriculum_bins(_docs(spark, sf), "doc_id", "text", n_bins=10,
-                          caches=caches, share_bigrams=True,
-                          bigram_table="broadcast")
-    return collect_freeing(out, *caches)
+    return curriculum_bins(_docs(spark, sf), "doc_id", "text", n_bins=10,
+                           share_bigrams=True, bigram_table="broadcast")
 
 
 SQL_SELECT_CURRICULUM = rf"""
@@ -904,6 +898,7 @@ def q_pipeline_selection_mix(spark: SparkSession, sf: str) -> DataFrame:
     from kstream_spark.operators import selection as SEL
     from kstream_spark.operators.corpus import bigram_logprob
     from kstream_spark.operators.ranking import with_ntile_percent_rank
+    from kstream_spark.util import owned
     docs = _docs(spark, sf)
     # the kept slice feeds THREE consumers (bigram LM, the binned join,
     # the packed join-back) — persist the 200-row relation so the DSIR
@@ -912,14 +907,13 @@ def q_pipeline_selection_mix(spark: SparkSession, sf: str) -> DataFrame:
     # parallel, the 200 surviving rows collapse to one partition so every
     # downstream stage (LM explode, ntile, pack) schedules one task
     # instead of one per scan split (sf1: downstream 4.3s -> ~1.5s)
-    sel_caches: list = []
-    kept = docs.join(
+    kept = owned(docs.join(
         F.broadcast(SEL.select_dsir(docs, "doc_id", "text",
                                     F.col("source") == "src18",
                                     n_select=_MIX_SELECT, n_buckets=256,
-                                    caches=sel_caches, share_tokens=True)
+                                    share_tokens=True)
                     .select("doc_id", "dsir_micro")),
-        "doc_id").repartition(1).persist()
+        "doc_id").repartition(1).persist())
     # kept is <= _MIX_SELECT rows BY CONSTRUCTION, so the corpus-scale
     # machinery stays off: no repartition spread, no bigram-table gate
     # job (broadcast pinned), and the two-phase
@@ -935,21 +929,16 @@ def q_pipeline_selection_mix(spark: SparkSession, sf: str) -> DataFrame:
     sliced = kept.join(binned.select("doc_id", "difficulty"), "doc_id")
     packed = C.pack_chunks(sliced, "doc_id", "text", capacity=256,
                            shard_col="difficulty")
-    out = (packed.join(sliced.select("doc_id", "dsir_micro"), "doc_id")
-           .groupBy(F.col("shard").alias("difficulty"))
-           .agg(F.count("*").cast("long").alias("n_docs"),
-                F.sum("tokens").cast("long").alias("total_tokens"),
-                (F.max("chunk_last") + 1).cast("long").alias("n_chunks"),
-                F.sum("dsir_micro").cast("long").alias("sum_dsir_micro"))
-           .withColumn("fill_ratio",
-                       F.round(F.col("total_tokens")
-                               / (F.col("n_chunks") * 256.0), 6))
-           .orderBy("difficulty"))
-    # one audit row per bin — materialize so the kept-slice cache AND the
-    # shared DSIR token cache free with the query instead of living for
-    # the sweep session (ADVICE r8)
-    from kstream_spark.util import collect_freeing
-    return collect_freeing(out, kept, *sel_caches)
+    return (packed.join(sliced.select("doc_id", "dsir_micro"), "doc_id")
+            .groupBy(F.col("shard").alias("difficulty"))
+            .agg(F.count("*").cast("long").alias("n_docs"),
+                 F.sum("tokens").cast("long").alias("total_tokens"),
+                 (F.max("chunk_last") + 1).cast("long").alias("n_chunks"),
+                 F.sum("dsir_micro").cast("long").alias("sum_dsir_micro"))
+            .withColumn("fill_ratio",
+                        F.round(F.col("total_tokens")
+                                / (F.col("n_chunks") * 256.0), 6))
+            .orderBy("difficulty"))
 
 
 SQL_PIPELINE_SELECTION_MIX = f"""

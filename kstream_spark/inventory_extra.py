@@ -198,14 +198,15 @@ EXTRA_INVENTORY["text_tfidf"] = (q_text_tfidf, SQL_TEXT_TFIDF)
 def q_udtf_chunk_text(spark: SparkSession, sf: str) -> DataFrame:
     """Python UDTF (SURVEY §2.6 table-function surface): context-window
     chunking for LLM training corpora — each doc fans out to 32-word
-    chunks at stride 24, via a LATERAL table-function join."""
+    chunks at stride 24, via a LATERAL table-function join.  Words split
+    as the JVM splits them; a NULL text has none."""
     from pyspark.sql.functions import udtf
 
     @udtf(returnType="chunk_idx bigint, chunk_text string, n_words bigint")
     class ChunkText:
-        def eval(self, text: str):
-            import re
-            ws = re.split(r"\s+", text)
+        def eval(self, text: str | None):
+            from kstream_spark.functions.text import py_words
+            ws = py_words(text)
             for start in range(0, len(ws), 24):
                 chunk = ws[start:start + 32]
                 yield start // 24, " ".join(chunk), len(chunk)
@@ -494,14 +495,10 @@ def q_sketch_kmv_overlap(spark: SparkSession, sf: str) -> DataFrame:
     operator handles all pairs identically."""
     from kstream_spark.builder import StreamBuilder
     from kstream_spark.operators.sketches import kmv_source_overlap
-    from kstream_spark.util import collect_freeing
     docs = (StreamBuilder(spark)
             .table(f"{sf}/documents.parquet", name="documents").to_df()
             .filter(F.col("source").isin("src18", "src6", "src7", "src12")))
-    caches: list = []
-    out = kmv_source_overlap(docs, "doc_id", "text", "source",
-                             k=128, n=3, caches=caches)
-    return collect_freeing(out, *caches)
+    return kmv_source_overlap(docs, "doc_id", "text", "source", k=128, n=3)
 
 
 SQL_SKETCH_KMV_OVERLAP = rf"""

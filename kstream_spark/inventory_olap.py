@@ -383,15 +383,11 @@ def q_bloom_semi_join(spark: SparkSession, sf: str) -> DataFrame:
     rich = (b.table(f"{sf}/customer.parquet").to_df()
             .filter(F.col("c_acctbal") > 9000)
             .select(F.col("c_custkey").alias("ckey")))
-    from kstream_spark.util import collect_freeing
-    caches: list = []
-    kept = bloom_semi_join(orders, rich, "ckey", m_bits=1 << 16, k=3,
-                           caches=caches)
-    out = (kept.groupBy("o_orderpriority")
-           .agg(F.count("*").cast("long").alias("n_orders"),
-                F.round(F.sum("o_totalprice"), 2).alias("total_price"))
-           .orderBy("o_orderpriority"))
-    return collect_freeing(out, *caches)
+    kept = bloom_semi_join(orders, rich, "ckey", m_bits=1 << 16, k=3)
+    return (kept.groupBy("o_orderpriority")
+            .agg(F.count("*").cast("long").alias("n_orders"),
+                 F.round(F.sum("o_totalprice"), 2).alias("total_price"))
+            .orderBy("o_orderpriority"))
 
 
 SQL_BLOOM_SEMI_JOIN = """

@@ -22,7 +22,7 @@ from kstream_spark.operators import dedup as D
 from kstream_spark.operators import multimodal as M
 from kstream_spark.operators import similarity as S
 from kstream_spark.operators import text as TX
-from kstream_spark.util import collect_freeing, local_df
+from kstream_spark.util import local_df, owned
 
 # shared DuckDB CTE fragments: words + distinct 3-word shingles
 _W = (f"w AS (SELECT doc_id, string_split_regex(lower(text), '{RE2_WS}') AS words "
@@ -53,11 +53,6 @@ FROM documents GROUP BY 2
 
 
 def q_dedup_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
-    # lazy return, same contract as q_dedup_winnow: the pair list is
-    # large enough that collect_freeing's driver materialization costs
-    # more than it frees (r13 A/B at sf0.1: 0.78 s lazy vs 2.46 s
-    # collected); sweep/bench harnesses clearCache between queries,
-    # which releases the operator's sized-index persist
     return D.ngram_jaccard_pairs(_docs(StreamBuilder(spark), sf),
                                  "doc_id", "text", n=3, threshold=0.8)
 
@@ -70,13 +65,8 @@ def q_dedup_prefix_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     max_shingle_df for.  The oracle is DELIBERATELY the brute-force
     full-index SQL (same as dedup_ngram_jaccard) — hash equality proves
     the filter is lossless."""
-    # pair list is bounded (verified near-dups, not the corpus) —
-    # materialize it so the operator's per-doc cache frees with the query
-    caches: list = []
-    out = D.prefix_jaccard_pairs(_docs(StreamBuilder(spark), sf),
-                                 "doc_id", "text", n=3, threshold=0.8,
-                                 caches=caches)
-    return collect_freeing(out, *caches)
+    return D.prefix_jaccard_pairs(_docs(StreamBuilder(spark), sf),
+                                  "doc_id", "text", n=3, threshold=0.8)
 
 
 SQL_DEDUP_NGRAM_JACCARD = f"""
@@ -679,11 +669,8 @@ def q_mm_phash_dedup(spark: SparkSession, sf: str) -> DataFrame:
     # 72-expression decode branches re-entering dhash's 64 gradient
     # reads sends the optimizer into expression-tree blowup (measured
     # minutes); the barrier makes the whole query seconds
-    imgs = orig.unionByName(copy).persist()
-    # near-dup pair list is bounded (verified pairs, not the corpus) —
-    # materialize it so the decoded-thumbnail cache frees with the query
-    return collect_freeing(
-        M.phash_pairs(imgs, "img_id", "pixels", max_hamming=3), imgs)
+    imgs = owned(orig.unionByName(copy).persist())
+    return M.phash_pairs(imgs, "img_id", "pixels", max_hamming=3)
 
 
 def _mm_phash_sql(n_px: int = 72, w: int = 8, h: int = 8,
@@ -1220,10 +1207,6 @@ def q_dedup_winnow(spark: SparkSession, sf: str) -> DataFrame:
     10x data, SCALING.md r6-3b) and NOT the production posture; the
     operator's default (and the headline scale query) is the capped form,
     ``dedup_winnow_capped``."""
-    # lazy return, no collect_freeing: the uncapped pair list is ~111k
-    # rows at sf1 and the driver collect costs ~2 s (A/B r13); the
-    # sweep/bench harnesses clearCache between queries, which releases
-    # the operator's fingerprint persist (its documented contract)
     return D.winnow_pairs(_docs(StreamBuilder(spark), sf), "doc_id", "text",
                           k=4, window=4, min_shared=1, max_fp_df=None)
 
@@ -1860,8 +1843,9 @@ def q_sim_ann_retrain(spark: SparkSession, sf: str) -> DataFrame:
     # the brute-force ground truth feeds both recall audits (and the
     # decision action) — persist the 50-row relation so the exact scorer
     # scans the corpus once
-    exact = S.cosine_topk(emb, "vec_id", "embedding", queries=qdf,
-                          k=10).select("query_id", "neighbor_id").persist()
+    exact = owned(S.cosine_topk(emb, "vec_id", "embedding", queries=qdf,
+                                k=10).select("query_id", "neighbor_id")
+                  .persist())
 
     def recall(books):
         approx = S.pq_adc_topk(emb, "vec_id", "embedding", qids, books,
@@ -1877,7 +1861,7 @@ def q_sim_ann_retrain(spark: SparkSession, sf: str) -> DataFrame:
                                 id_col="vec_id")
     # consumed by the decision action AND the output union — persist the
     # |Q|-row audit so the boot-index ADC pass runs once
-    before = recall(boot_books).persist()
+    before = owned(recall(boot_books).persist())
     # the decision: one bounded (|Q|-row) driver action — the same
     # 1-action-per-round contract as the training loops
     total = before.agg(F.sum("n_hits")).collect()[0][0] or 0
@@ -1889,10 +1873,7 @@ def q_sim_ann_retrain(spark: SparkSession, sf: str) -> DataFrame:
         out = out.unionByName(
             recall(fresh).select(F.lit("after").alias("phase"),
                                  "query_id", "n_hits"))
-    # 2|Q| audit rows — materialize them and drop the session-lifetime
-    # caches (exact ground truth + boot audit) the sweep would otherwise
-    # carry across all remaining queries
-    return collect_freeing(out, exact, before)
+    return out
 
 
 def _ann_retrain_sql() -> str:
@@ -1963,17 +1944,12 @@ def q_select_dsir(spark: SparkSession, sf: str) -> DataFrame:
     """DSIR-style hashed importance resampling toward a target source.
     share_tokens: the corpus token relation persists once and feeds both
     the weight aggregation and the per-doc scoring (the query-scale arm;
-    dsir_scores' shape note) — the bounded 100-row result materializes
-    via collect_freeing so the cache frees with the query."""
+    dsir_scores' shape note)."""
     from kstream_spark.operators import selection as SEL
-    from kstream_spark.util import collect_freeing, local_df
     docs = _docs(StreamBuilder(spark), sf)
-    caches: list = []
-    out = SEL.select_dsir(docs, "doc_id", "text",
-                          F.col("source") == "src18",
-                          n_select=100, n_buckets=256,
-                          caches=caches, share_tokens=True)
-    return collect_freeing(out, *caches)
+    return SEL.select_dsir(docs, "doc_id", "text",
+                           F.col("source") == "src18",
+                           n_select=100, n_buckets=256, share_tokens=True)
 
 
 SQL_SELECT_DSIR = f"""
@@ -2417,14 +2393,13 @@ def q_mm_afp_dedup(spark: SparkSession, sf: str) -> DataFrame:
         (F.col("doc_id") * 2 + 1).alias("clip_id"),
         F.transform("energies",
                     lambda x, i: x + (i % F.lit(3) - 1)).alias("energies"))
-    clips = orig.unionByName(copy).persist()  # decode once, hash many
+    clips = owned(orig.unionByName(copy).persist())  # decode once, hash many
     # hot-bucket cap (winnow's max_fp_df dial): boilerplate envelopes
     # hash whole cohorts into one band value — 322-occupancy buckets
     # measured at sf0.1, a superlinear pair space; the cap is REPLAYED
     # by the oracle's HAVING, so the query stays hash-exact
-    return collect_freeing(
-        M.afp_pairs(clips, "clip_id", "energies", max_hamming=3,
-                    max_band_df=_AFP_BAND_DF), clips)
+    return M.afp_pairs(clips, "clip_id", "energies", max_hamming=3,
+                       max_band_df=_AFP_BAND_DF)
 
 
 _AFP_BAND_DF = 50  # hot-bucket cap — ONE knob for driver call and oracle
@@ -2552,9 +2527,8 @@ def q_dedup_cdc_chunks(spark: SparkSession, sf: str) -> DataFrame:
     # persist the chunk relation: it feeds BOTH the per-hash doc-count
     # aggregation and the join back, and the partial agg on one side
     # defeats exchange reuse, so without the persist the Arrow chunking
-    # pass (the expensive part) runs twice (the q_dedup_winnow pattern;
-    # bench/sweep harnesses clearCache between queries, releasing it)
-    ch = cdc_chunks(d0, "doc_id", "text").persist()
+    # pass (the expensive part) runs twice (the q_dedup_winnow pattern)
+    ch = owned(cdc_chunks(d0, "doc_id", "text").persist())
     per = (ch.groupBy("chunk_md5")
            .agg(F.count_distinct("doc_id").alias("_nd")))
     return (ch.join(per, "chunk_md5")

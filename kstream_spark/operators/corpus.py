@@ -397,7 +397,6 @@ def corpus_stats(df: DataFrame, text_col: str, lang_col: str,
 def bigram_logprob(df: DataFrame, id_col: str, text_col: str,
                    bigram_table: str = "auto",
                    broadcast_max_bigrams: int = 2_000_000,
-                   caches: list | None = None,
                    share_bigrams: bool = False) -> DataFrame:
     """Corpus-self BIGRAM LM quality score — the conditional upgrade of
     ``unigram_logprob``: each document is scored by the total
@@ -442,9 +441,7 @@ def bigram_logprob(df: DataFrame, id_col: str, text_col: str,
     curriculum A/B: 4.0s -> 3.1s warm).  Query-scale arm: the persist is
     bigram-stream-sized, right when the corpus slice fits executor
     storage, wrong at 100 TB where the stateless re-explode is cheaper
-    than the materialization.  ``caches`` receives the persisted
-    relation (callers free via collect_freeing); without the flag
-    nothing persists.
+    than the materialization.  Without the flag nothing persists.
 
     The input is used as given — the repartition floor is a per-consumer
     call, A/B'd at sf1: this operator alone runs FASTER without the
@@ -463,9 +460,8 @@ def bigram_logprob(df: DataFrame, id_col: str, text_col: str,
                        "i -> concat(element_at(_w, i - 1), ' ', "
                        "element_at(_w, i)))")).alias("bg")))
     if share_bigrams:
-        big = big.persist()
-        if caches is not None:
-            caches.append(big)
+        from kstream_spark.util import owned
+        big = owned(big.persist())
     mode = bigram_table
     if mode == "auto":
         n_bg = big.select("bg").distinct().count()

@@ -120,9 +120,7 @@ def _jaccard_on_pairs(cand: DataFrame, sets: DataFrame, id_col: str,
 
 
 def _shingle_intersections(df: DataFrame, id_col: str, text_col: str,
-                           n: int, max_shingle_df: int | None,
-                           persist: bool = False,
-                           caches: list | None = None) -> DataFrame:
+                           n: int, max_shingle_df: int | None) -> DataFrame:
     """(doc_a, doc_b, na, nb, i): every doc pair sharing a shingle, with
     both set sizes and the intersection size, straight off the shingle
     self-join aggregation.
@@ -130,15 +128,13 @@ def _shingle_intersections(df: DataFrame, id_col: str, text_col: str,
     The set size is a per-doc constant: it is windowed onto the inverted
     index once and CARRIED through the self-join (constant within each
     group, so it rides in the groupBy key) — no separate sizes
-    aggregation and no post-aggregation re-joins.  ``persist`` caches
-    the sized index and appends it to ``caches``."""
+    aggregation and no post-aggregation re-joins.  Both join sides read
+    the sized index, so it is persisted once."""
     from pyspark.sql import Window as W
+    from kstream_spark.util import owned
     sh = shingle_sets(df, id_col, text_col, n, max_shingle_df)
-    sized = sh.withColumn("n", F.count("*").over(W.partitionBy(id_col)))
-    if persist:
-        sized = sized.persist()
-        if caches is not None:
-            caches.append(sized)
+    sized = owned(sh.withColumn("n", F.count("*").over(W.partitionBy(id_col)))
+                  .persist())
     return (shared_key_pairs(sized, id_col, ["s"], carry=("n",))
             .groupBy("doc_a", "doc_b", "na", "nb")
             .agg(F.count("*").alias("i")))
@@ -146,16 +142,14 @@ def _shingle_intersections(df: DataFrame, id_col: str, text_col: str,
 
 def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str, n: int = 3,
                         threshold: float = 0.8,
-                        max_shingle_df: int | None = None,
-                        caches: list | None = None) -> DataFrame:
+                        max_shingle_df: int | None = None) -> DataFrame:
     """All pairs with shingle-set Jaccard >= threshold (exact, inverted index).
 
     Intersections come straight off the shingle self-join aggregation — no
     intermediate distinct-pairs relation (that would re-shuffle the largest
     relation twice for nothing; the LSH path needs the candidate step, the
-    exact path does not).  The sized index is persisted (``caches``)."""
-    inter = _shingle_intersections(df, id_col, text_col, n, max_shingle_df,
-                                   persist=True, caches=caches)
+    exact path does not)."""
+    inter = _shingle_intersections(df, id_col, text_col, n, max_shingle_df)
     j = F.col("i") / (F.col("na") + F.col("nb") - F.col("i"))
     return (
         inter.filter(j >= threshold)
@@ -165,8 +159,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str, n: int = 3,
 
 def winnow_pairs(df: DataFrame, id_col: str, text_col: str, k: int = 4,
                  window: int = 4, min_shared: int = 1,
-                 max_fp_df: int | None = 20,
-                 caches: list | None = None) -> DataFrame:
+                 max_fp_df: int | None = 20) -> DataFrame:
     """Winnowing-fingerprint shared-substring pairs (Schleimer et al. 2003,
     the MOSS algorithm — public paper).
 
@@ -194,7 +187,7 @@ def winnow_pairs(df: DataFrame, id_col: str, text_col: str, k: int = 4,
     Documents shorter than k tokens emit no fingerprints; shorter than
     window+k-1 tokens emit the global-min fingerprint of what they have.
     """
-    from kstream_spark.util import FANOUT_MIN_BYTES, ensure_parallelism
+    from kstream_spark.util import FANOUT_MIN_BYTES, ensure_parallelism, owned
     # MATERIALIZE the hash array before windowing: a lambda body that
     # references the hash EXPRESSION re-evaluates the whole
     # split -> shingle -> md5 chain per window position (O(n^2) md5 calls
@@ -221,11 +214,8 @@ def winnow_pairs(df: DataFrame, id_col: str, text_col: str, k: int = 4,
             .filter(F.col("_df") <= max_fp_df).drop("_df")
     # persist: the self-join references fp twice — uncached, the
     # split -> shingle -> md5 -> window-min chain (the expensive part)
-    # re-derived per side (sf1 A/B: 6.2s -> 4.3s).  Callers free via
-    # ``caches``; sweep-style callers clearCache between queries
-    fp = fp.persist()
-    if caches is not None:
-        caches.append(fp)
+    # re-derived per side (sf1 A/B: 6.2s -> 4.3s)
+    fp = owned(fp.persist())
     return (shared_key_pairs(fp, id_col, ["f"])
             .groupBy("doc_a", "doc_b")
             .agg(F.count("*").cast("long").alias("n_shared"))
@@ -247,11 +237,11 @@ def containment_pairs(df: DataFrame, id_col: str, text_col: str, n: int = 3,
     up to two directed rows (i/na and i/nb gates), so the join itself
     still runs once with doc_a < doc_b.
 
-    Shape notes (r13 A/B at sf1): the two-sided index is deliberately
-    NOT persisted — caching the exploded (doc, n, s) stream costs more
-    than the recompute the optimizer already avoids via exchange reuse
-    (persist: 7.6 s, plain: 7.0 s), and the slim no-window variants
-    (sizes joined post-aggregation) measured slower still (9.4–9.8 s).
+    Shape notes: the sized index is persisted, as for the Jaccard pairs.
+    An r13 A/B at sf1 read the persist slower (7.6 s vs 7.0 s plain); a
+    cold alternating A/B at sf0.1 on 4 cores reads it faster in 6 of 6
+    pairs (median 2.43 s vs 2.82 s).  The slim no-window variants (sizes
+    joined post-aggregation) measured slower still at sf1 (9.4–9.8 s).
     The threshold filter runs BEFORE the direction explode so only
     qualifying pairs double, not the full candidate-pair relation.
     """
@@ -429,10 +419,10 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str, n: int = 3,
     shuffle at all); candidates bucket-join on band hashes; verification
     intersects the per-doc sorted arrays.
     """
-    from kstream_spark.util import FANOUT_MIN_BYTES, ensure_parallelism
-    doc = _doc_local_minhash(
+    from kstream_spark.util import FANOUT_MIN_BYTES, ensure_parallelism, owned
+    doc = owned(_doc_local_minhash(
         ensure_parallelism(df, min_bytes=FANOUT_MIN_BYTES),
-        id_col, text_col, n, NUM_HASHES, bands=BANDS).persist()
+        id_col, text_col, n, NUM_HASHES, bands=BANDS).persist())
     cand = shared_key_pairs(_band_rows(doc, id_col), id_col,
                             ["band", "bh"]).select("doc_a", "doc_b").distinct()
     return _jaccard_on_pairs(cand, doc, id_col, threshold)
@@ -526,10 +516,11 @@ def simhash_pairs(df: DataFrame, id_col: str, text_col: str,
     and both verify sides read it).  Returns (doc_a, doc_b, hamming).
     """
     from kstream_spark.operators.multimodal import banded_hamming_pairs
-    sig = simhash_signatures(df, id_col, text_col).select(
+    from kstream_spark.util import owned
+    sig = owned(simhash_signatures(df, id_col, text_col).select(
         F.col(id_col),
-        F.array(*[f"c{c}" for c in range(SIMHASH_CHUNKS)]).alias("bands")) \
-        .persist()
+        F.array(*[f"c{c}" for c in range(SIMHASH_CHUNKS)]).alias("bands"))
+        .persist())
     return banded_hamming_pairs(sig, id_col, SIMHASH_CHUNKS, max_hamming,
                                 a_name="doc_a", b_name="doc_b")
 
@@ -588,7 +579,6 @@ def incremental_dedup(new_docs: DataFrame, corpus: DataFrame, id_col: str,
                       text_col: str, n: int = 3,
                       threshold: float = 0.8,
                       corpus_state: DataFrame | None = None,
-                      caches: list | None = None,
                       return_signatures: bool = False,
                       checkpoint_fresh: bool = False,
                       sig_impl: str = "pandas") -> DataFrame:
@@ -615,11 +605,6 @@ def incremental_dedup(new_docs: DataFrame, corpus: DataFrame, id_col: str,
     one scan of the signature store (the admit-time-write pattern of
     ``streaming/corpus.admit_stream``).
 
-    ``caches``: optional list the two internal persisted signature
-    relations are appended to, so a caller that runs this per micro-batch
-    (``admit_stream``) can unpersist them after its action — otherwise the
-    cached blocks outlive the batch and pile up for the life of the stream.
-
     ``sig_impl``: forwarded to ``_doc_local_minhash`` for both sides —
     "pandas" (default; repetition-amortized memo, the corpus-query
     regime) or "codegen" (unique-heavy short-doc streams; admit_stream
@@ -631,10 +616,14 @@ def incremental_dedup(new_docs: DataFrame, corpus: DataFrame, id_col: str,
     -heavy stream sheds most of the batch at the exact gate — so the
     per-batch caller pins the SURVIVORS (|batch|/8 on the bench mix)
     instead of the raw batch it used to checkpoint (r12: 9.2s -> ~2s of
-    the 2M-record admission trigger).  The handle is appended to
-    ``caches``; free it with ``util.free_local_checkpoint``.
+    the 2M-record admission trigger).
+
+    The checkpoint and both persisted signature relations are ``owned``:
+    a per-batch caller (``admit_stream``) runs each batch in a
+    ``cache_scope`` so they do not pile up for the life of the stream.
     """
     from pyspark.sql import Window as W
+    from kstream_spark.util import owned
 
     # gate 1: exact content hash vs corpus and batch-internal
     h = content_hash(F.col(text_col))
@@ -647,9 +636,7 @@ def incremental_dedup(new_docs: DataFrame, corpus: DataFrame, id_col: str,
         .filter(F.col(id_col) == F.col("__first")) \
         .drop("__ch", "__first")
     if checkpoint_fresh:
-        fresh = fresh.localCheckpoint(eager=True)
-        if caches is not None:
-            caches.append(fresh)
+        fresh = owned(fresh.localCheckpoint(eager=True))
 
     # gate 2: near-dup vs corpus (increment bands join corpus bands only).
     # ONE signature pass per relation — the batch-internal phase below
@@ -657,14 +644,12 @@ def incremental_dedup(new_docs: DataFrame, corpus: DataFrame, id_col: str,
     # persist both signature relations: each is referenced twice (band
     # bucketing + exact verify) and Spark does not reuse the mapInPandas
     # subtree; MEMORY_AND_DISK spills gracefully at corpus scale
-    inc = _doc_local_minhash(fresh, id_col, text_col, n, NUM_HASHES,
-                             bands=BANDS, impl=sig_impl).persist()
-    cor = (corpus_state.drop("__ch") if corpus_state is not None
-           else _doc_local_minhash(corpus, id_col, text_col, n,
-                                   NUM_HASHES, bands=BANDS,
-                                   impl=sig_impl)).persist()
-    if caches is not None:
-        caches += [inc, cor]
+    inc = owned(_doc_local_minhash(fresh, id_col, text_col, n, NUM_HASHES,
+                                   bands=BANDS, impl=sig_impl).persist())
+    cor = owned((corpus_state.drop("__ch") if corpus_state is not None
+                 else _doc_local_minhash(corpus, id_col, text_col, n,
+                                         NUM_HASHES, bands=BANDS,
+                                         impl=sig_impl)).persist())
 
     cand = shared_key_pairs(_band_rows(inc, id_col), id_col, ["band", "bh"],
                             a="new_id", b="old_id",
@@ -816,8 +801,7 @@ def cdc_chunks(df: DataFrame, id_col: str, text_col: str,
 
 
 def prefix_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
-                         n: int = 3, threshold: float = 0.8,
-                         caches: list | None = None) -> DataFrame:
+                         n: int = 3, threshold: float = 0.8) -> DataFrame:
     """EXACT Jaccard pairs via PREFIX FILTERING (AllPairs/PPJoin family —
     Bayardo et al. 2007, Xiao et al. 2008; Vernica et al. 2010 gives the
     MapReduce form): instead of self-joining the FULL inverted index
@@ -855,6 +839,7 @@ def prefix_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     universe (tests/test_corpus.test_prefix_filter_skips_boilerplate
     demonstrates the candidate-space gap).
     """
+    from kstream_spark.util import owned
     sh = shingle_sets(df, id_col, text_col, n)
     t_micro = int(round(threshold * 1e6))
     # ONE shuffle builds the inverted index WITH df attached — the r11
@@ -893,17 +878,9 @@ def prefix_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
                     F.expr("transform(slice(_ds, 1, _plen), x -> x.s)")
                     .alias("prefix"))
             # three consumers (prefix index + both verify sides): cache
-            # the per-doc relation so the df-join aggregation runs once.
-            # Not unpersisted HERE — the result returns lazily, so the
-            # cache must outlive this call.  Long-lived callers pass
-            # ``caches`` and release it once the result materializes
-            # (the registered query does, via util.collect_freeing —
-            # the pair list is bounded, the per-doc relation is not);
-            # sweep-style callers may instead clearCache between
-            # queries, as tools/check.py does.  (ADVICE r9.)
+            # the per-doc relation so the df-join aggregation runs once
             .persist())
-    if caches is not None:
-        caches.append(sets)
+    owned(sets)
     # the prefix index carries n so the PPJoin LENGTH filter prunes
     # candidates before the distinct: J >= t forces t*max(|A|,|B|) <=
     # min(|A|,|B|) (the intersection fits in the shorter set), checked

@@ -104,7 +104,7 @@ def connected_components(edges: DataFrame, src_col: str, dst_col: str,
     """
     from pyspark.sql import Window as W
 
-    from kstream_spark.util import free_local_checkpoint
+    from kstream_spark.util import free_local_checkpoint, owned
 
     # canonical undirected relation (v >= m), persisted because EVERY
     # consumer reads it — the arm-routing take, round 1 of the loop, and
@@ -148,9 +148,9 @@ def connected_components(edges: DataFrame, src_col: str, dst_col: str,
                         "node long, component long")
     # node set is consumed once, at the very end — checkpoint it so the
     # final join doesn't re-derive the input after canon is freed
-    nodes = (canon.select(F.col("v").alias("node"))
-             .unionByName(canon.select(F.col("m").alias("node")))
-             .distinct().localCheckpoint(eager=True))
+    nodes = owned(canon.select(F.col("v").alias("node"))
+                  .unionByName(canon.select(F.col("m").alias("node")))
+                  .distinct().localCheckpoint(eager=True))
     # localCheckpoint (eager) per round is load-bearing, not a tuning
     # knob: persist() caches DATA but the logical plan still nests — the
     # edge relation is referenced several times per round (two window
@@ -234,8 +234,8 @@ def connected_components(edges: DataFrame, src_col: str, dst_col: str,
             break
     # the result is star-forest-sized (one row per node) but stays lazy
     # so callers can compose; the blocks behind it (final round's edges +
-    # the node checkpoint) ARE the result relation — they free via
-    # ContextCleaner once the caller drops the frame
+    # the node checkpoint) ARE the result relation
+    owned(edges)
     return (nodes.join(edges.withColumnRenamed("v", "node"), "node", "left")
             .select("node", F.coalesce("m", "node").alias("component")))
 
@@ -334,8 +334,7 @@ _BSP_ROWS_PER_PART = 1 << 17
 
 
 def label_propagation(edges: DataFrame, src_col: str, dst_col: str,
-                      iters: int = 3,
-                      caches: list | None = None) -> DataFrame:
+                      iters: int = 3) -> DataFrame:
     """Synchronous label propagation (community detection) over an
     undirected edge list, made fully deterministic: every node starts
     labeled with its own id, and each round adopts the MOST FREQUENT
@@ -360,11 +359,8 @@ def label_propagation(edges: DataFrame, src_col: str, dst_col: str,
     HashPartitioning(node) (Spark's subset rule: partitioning on ``node``
     satisfies clustering on ``(node, label)``).  Driver traffic is one
     count per round; rounds are O(edges) each and ``iters`` caps them.
-
-    ``caches`` (the repo-wide contract) receives the final persisted
-    label relation — callers materialize via util.collect_freeing and
-    the per-call cache frees; without it the handle stays persisted for
-    the session (each round's INTERMEDIATE persists are released here).
+    Each round's intermediate persists are released here; the final
+    label relation is ``owned``.
     """
     integral = {"tinyint", "smallint", "int", "bigint"}
     bad = [c for c in (src_col, dst_col)
@@ -434,6 +430,5 @@ def label_propagation(edges: DataFrame, src_col: str, dst_col: str,
             break
     base.unpersist()   # no-op when round 0 already released it
     sym.unpersist()
-    if caches is not None:
-        caches.append(labels)
-    return labels.select("node", F.col("label").alias("community"))
+    from kstream_spark.util import owned
+    return owned(labels).select("node", F.col("label").alias("community"))

@@ -371,8 +371,7 @@ def interval_overlap_join(a: DataFrame, b: DataFrame, key: str,
 
 def bloom_semi_join(fact: DataFrame, dim: DataFrame, fact_key: str,
                     dim_key: str | None = None, m_bits: int = 1 << 20,
-                    k: int = 3, seed: str = "bloom",
-                    caches: list | None = None) -> DataFrame:
+                    k: int = 3, seed: str = "bloom") -> DataFrame:
     """Bloom-pruned EXACT semi join: keep fact rows whose key appears in
     ``dim``, pre-filtering the fact scan with a compact Bloom filter built
     from the dim keys before the exact join runs.
@@ -401,6 +400,7 @@ def bloom_semi_join(fact: DataFrame, dim: DataFrame, fact_key: str,
     scan-stage shedding a store-less engine needs at 100 TB.
     """
     from kstream_spark.functions.text import hash_str
+    from kstream_spark.util import owned
     if dim_key is None:
         dim_key = fact_key
     ft, dt = dict(fact.dtypes)[fact_key], dict(dim.dtypes)[dim_key]
@@ -425,11 +425,8 @@ def bloom_semi_join(fact: DataFrame, dim: DataFrame, fact_key: str,
     # an exchange.  The projected key column is PERSISTED: two consumers
     # read it (the bloom build's collect below, then the exact semi
     # join's broadcast/shuffle side), and without the cache the second
-    # re-runs the dim scan + filter from source (r12; ``caches`` receives
-    # the handle for collect_freeing callers, same contract as dedup).
-    dim_keys = dim.select(F.col(dim_key).alias("__k")).persist()
-    if caches is not None:
-        caches.append(dim_keys)
+    # re-runs the dim scan + filter from source (r12)
+    dim_keys = owned(dim.select(F.col(dim_key).alias("__k")).persist())
     bits = (dim_keys.select(F.explode(F.array(*positions(F.col("__k"))))
                             .alias("__p"))
             .select((F.col("__p") / 32).cast("long").alias("__w"),

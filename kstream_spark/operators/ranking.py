@@ -78,7 +78,8 @@ def with_global_rank(df: DataFrame, order_by: list[Column],
     # pin ONE materialization: counts/offsets/total must see the same
     # sampled range boundaries and the same nondeterministic ids as the
     # ranked rows (see module docstring — ReuseExchange is not guaranteed)
-    local = local.localCheckpoint(eager=False)
+    from kstream_spark.util import owned
+    local = owned(local.localCheckpoint(eager=False))
     # per-partition counts -> cumulative offsets: <= n_parts rows, so the
     # single-partition running sum is over a driver-sized relation, and the
     # join back is a broadcast (no second shuffle of the ranked data)

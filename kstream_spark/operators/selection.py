@@ -134,7 +134,6 @@ def dsir_apply(df: DataFrame, id_col: str, text_col: str,
 
 def dsir_scores(df: DataFrame, id_col: str, text_col: str,
                 target_pred, n_buckets: int = 256,
-                caches: list | None = None,
                 share_tokens: bool = False) -> DataFrame:
     """Per-document importance score for target-domain selection.
 
@@ -181,20 +180,16 @@ def dsir_scores(df: DataFrame, id_col: str, text_col: str,
     and both the weight aggregation and the per-doc scoring read the
     cache, so the corpus is exploded+md5-hashed once instead of twice
     (sf1 A/B: 3.1s -> 2.5s warm).  The persist is token-stream-sized:
-    right when the corpus slice fits executor storage, wrong at 100 TB.
-    ``caches`` receives the persisted relation (callers free it via
-    collect_freeing); with ``share_tokens=False`` nothing persists and
-    it never appends."""
+    right when the corpus slice fits executor storage, wrong at 100 TB."""
     if not share_tokens:
         return dsir_apply(df, id_col, text_col,
                           dsir_weights(df, text_col, target_pred, n_buckets),
                           n_buckets)
+    from kstream_spark.util import owned
     flagged = df.withColumn(
         "__t", F.lit(True) if target_pred is None else target_pred)
-    tok = _dsir_tokens(flagged, id_col, text_col, n_buckets,
-                       extra=F.col("__t")).persist()
-    if caches is not None:
-        caches.append(tok)
+    tok = owned(_dsir_tokens(flagged, id_col, text_col, n_buckets,
+                             extra=F.col("__t")).persist())
     counts = tok.groupBy("_b").agg(
         F.count("*").alias("_cs"),
         F.sum(F.col("__t").cast("long")).alias("_ct"))
@@ -215,7 +210,6 @@ def dsir_scores(df: DataFrame, id_col: str, text_col: str,
 
 def select_dsir(df: DataFrame, id_col: str, text_col: str, target_pred,
                 n_select: int = 100, n_buckets: int = 256,
-                caches: list | None = None,
                 share_tokens: bool = False) -> DataFrame:
     """Top-``n_select`` documents by DSIR importance weight (the selection
     step).  Rank is over the EXACT integer micro-score with id tie-break,
@@ -227,12 +221,10 @@ def select_dsir(df: DataFrame, id_col: str, text_col: str, target_pred,
     corpus's scores (the r11 shape routed the same prune through
     _per_query_topk's mapInPandas, paying an Arrow round-trip of every
     doc's score for a single query group).  (dsir_micro, id) is a total
-    order, so the kept set and ranks are bit-stable.  ``caches`` forwards
-    to dsir_scores (the result here is bounded, so callers can
-    collect_freeing it against these).
+    order, so the kept set and ranks are bit-stable.
     """
     scored = dsir_scores(df, id_col, text_col, target_pred, n_buckets,
-                         caches=caches, share_tokens=share_tokens)
+                         share_tokens=share_tokens)
     kept = scored.orderBy(F.desc("dsir_micro"), F.asc(id_col)) \
         .limit(n_select)
     # rank over the already-limited n_select rows — a single-partition
@@ -391,8 +383,7 @@ def mmr_rerank(emb: DataFrame, id_col: str, vec_col: str, query_ids: list,
 
 # -- curriculum difficulty binning -------------------------------------------
 def curriculum_bins(df: DataFrame, id_col: str, text_col: str,
-                    n_bins: int = 10, caches: list | None = None,
-                    share_bigrams: bool = False,
+                    n_bins: int = 10, share_bigrams: bool = False,
                     bigram_table: str = "auto") -> DataFrame:
     """Curriculum-learning difficulty bins: score every document with the
     corpus-self bigram LM (operators/corpus.bigram_logprob — higher
@@ -432,7 +423,7 @@ def curriculum_bins(df: DataFrame, id_col: str, text_col: str,
     # broadcast ceiling) pins the arm and drops that job entirely
     lm = bigram_logprob(
         ensure_parallelism(df, min_partitions=8, min_bytes=FANOUT_MIN_BYTES),
-        id_col, text_col, caches=caches, share_bigrams=share_bigrams,
+        id_col, text_col, share_bigrams=share_bigrams,
         bigram_table=bigram_table)
     scored = lm.withColumn(
         "_lpb", F.col("sum_logp_micro").cast("double") / F.col("n_bigrams"))

@@ -70,7 +70,7 @@ def hll_mergeable_distinct(df: DataFrame, keys: list[str], segment_col: str,
 
 def kmv_source_overlap(df: DataFrame, id_col: str, text_col: str,
                        source_col: str, k: int = 256,
-                       n: int = 3, caches: list | None = None) -> DataFrame:
+                       n: int = 3) -> DataFrame:
     """KMV (k-minimum-values) theta-sketch overlap between sources: per
     source, the ``k`` lexicographically-smallest md5 hashes of its
     distinct word shingles form the sketch; for every source pair the
@@ -97,7 +97,7 @@ def kmv_source_overlap(df: DataFrame, id_col: str, text_col: str,
     """
     from kstream_spark.functions.text import hash_str, word_shingles
     from kstream_spark.operators.similarity import _per_query_topk
-    from kstream_spark.util import FANOUT_MIN_BYTES, ensure_parallelism
+    from kstream_spark.util import FANOUT_MIN_BYTES, ensure_parallelism, owned
 
     # shingle+md5 fan-out is CPU-heavy per byte (shingle_sets floor)
     df = ensure_parallelism(df, min_bytes=FANOUT_MIN_BYTES)
@@ -109,16 +109,12 @@ def kmv_source_overlap(df: DataFrame, id_col: str, text_col: str,
     # persist the |sources|*k sketch BEFORE the source-list collect: the
     # collect is an action, and an unpersisted sk would run the corpus
     # shingle+md5 scan once for it and once more for the returned plan
-    # (the r11 double-scan — half the query's sf1 wall-clock).  ``caches``
-    # receives it (callers free via collect_freeing); without caches it
-    # stays until the session drops it, matching the other operators.
-    sk = _per_query_topk(
+    # (the r11 double-scan — half the query's sf1 wall-clock)
+    sk = owned(_per_query_topk(
         sh.select(F.col("src").alias("query_id"), F.col("h"),
                   F.lit(0.0).alias("_z")),
         k, score_col="_z", id_col="h").select(
-        F.col("query_id").alias("src"), "h").persist()
-    if caches is not None:
-        caches.append(sk)
+        F.col("query_id").alias("src"), "h").persist())
     srcs = [r["src"] for r in sk.select("src").distinct().collect()]
     spark = df.sparkSession
     from kstream_spark.util import local_df

@@ -110,7 +110,7 @@ def tf_idf_top_terms(df: DataFrame, id_col: str, text_col: str,
     broadcastable — and the heavy (doc, term) relation shuffles once.
     """
     from pyspark.sql import Window as W
-    from kstream_spark.util import ensure_parallelism
+    from kstream_spark.util import ensure_parallelism, owned
 
     toks = ensure_parallelism(df).select(
         F.col(id_col), F.explode(words(F.col(text_col))).alias("w"))
@@ -120,7 +120,8 @@ def tf_idf_top_terms(df: DataFrame, id_col: str, text_col: str,
     # token explode + hash agg is already cheap in codegen, and the Arrow
     # round-trip dominates — the mapInPandas fusion only pays off when it
     # removes expression-heavy aggregation like the minhash/simhash sigs.)
-    tf = toks.groupBy(id_col, "w").agg(F.count("*").alias("tf")).persist()
+    tf = owned(toks.groupBy(id_col, "w").agg(F.count("*").alias("tf"))
+               .persist())
     n_docs = df.count()
     doc_freq = tf.groupBy("w").agg(F.count("*").alias("df"))
     scored = (tf.join(F.broadcast(doc_freq), "w")

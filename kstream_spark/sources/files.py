@@ -131,7 +131,8 @@ def read_table_with_dlq(spark: SparkSession, path: str, fmt: str,
     # Spark refuses to filter on ONLY the corrupt column of a json scan
     # (SPARK-26108) unless the parsed columns are referenced too — cache
     # the split point so both relations come from one materialization
-    df = df.cache()
+    from kstream_spark.util import owned
+    df = owned(df.cache())
     good = (df.filter(F.col(corrupt_col).isNull())
             .drop(corrupt_col, "_source_file"))
     dlq = (df.filter(F.col(corrupt_col).isNotNull())

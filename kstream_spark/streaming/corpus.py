@@ -80,7 +80,7 @@ def admit_stream(df: DataFrame, corpus_path: str, signature_path: str,
     trigger_checked = []   # closure flag: first batch only
 
     def _admit(batch: DataFrame, epoch_id: int) -> None:
-        from kstream_spark.util import free_local_checkpoint
+        from kstream_spark.util import cache_scope, owned
         spark = batch.sparkSession
         if min_trigger is not None and not trigger_checked:
             trigger_checked.append(True)
@@ -98,7 +98,6 @@ def admit_stream(df: DataFrame, corpus_path: str, signature_path: str,
         if quality_gate is not None:
             batch = quality_gate(batch)
         state = SC.read_epochs(spark, signature_path, exclude_epoch=epoch_id)
-        handles: list = []  # dedup's internal caches, freed after the writes
         # return_signatures: the store write below reuses the increment's
         # persisted minhash relation instead of re-minhashing every
         # admitted doc — the second Python md5 pass was the largest
@@ -114,26 +113,19 @@ def admit_stream(df: DataFrame, corpus_path: str, signature_path: str,
         # regime (fresh crawls; exact re-crawls died at the hash gate
         # above), where the JVM projection minhash wins ~4x over the
         # memoized pandas arm — see _doc_local_minhash's A/B
-        admitted, sigs = incremental_dedup(batch, batch.limit(0), id_col,
-                                           text_col, n=n,
-                                           threshold=threshold,
-                                           corpus_state=state,
-                                           caches=handles,
-                                           return_signatures=True,
-                                           checkpoint_fresh=True,
-                                           sig_impl="codegen")
-        admitted = admitted.persist()
-        try:
+        # the scope frees the batch's pins (dedup's checkpoint and
+        # signature caches, the admitted rows) once both writes are done
+        with cache_scope():
+            admitted, sigs = incremental_dedup(batch, batch.limit(0), id_col,
+                                               text_col, n=n,
+                                               threshold=threshold,
+                                               corpus_state=state,
+                                               return_signatures=True,
+                                               checkpoint_fresh=True,
+                                               sig_impl="codegen")
+            admitted = owned(admitted.persist())
             SC.write_epoch(admitted, corpus_path, epoch_id)
             SC.write_epoch(sigs, signature_path, epoch_id)
-        finally:
-            # handles = [checkpointed fresh survivors, two persisted
-            # minhash relations]; only the checkpoint has a LogicalRDD
-            # root to free
-            fresh, *sig_caches = handles
-            for h in [admitted, *sig_caches]:
-                h.unpersist()
-            free_local_checkpoint(fresh)
 
     return (df.writeStream.foreachBatch(_admit)
             .option("checkpointLocation", checkpoint_dir).start())

@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import threading
+from contextlib import contextmanager
+from contextvars import ContextVar
+
 from pyspark.sql import DataFrame
 
 # The one size gate for every driver-local arm: an input whose Catalyst
@@ -135,6 +139,46 @@ def free_local_checkpoint(df: DataFrame) -> None:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception as exc:  # noqa: BLE001
         _warn_free_checkpoint_fallback(exc)
+
+
+# this thread's open cache scopes, innermost last: (thread id, [release])
+_scopes: ContextVar[tuple] = ContextVar("kstream_spark_cache_scopes",
+                                        default=())
+
+
+@contextmanager
+def cache_scope():
+    """Own every pin that ``owned`` registers inside the block.
+
+    On exit, error paths included, each registered frame is released the
+    way it was pinned: ``unpersist()`` for a ``persist()``/``cache()``,
+    ``free_local_checkpoint`` for a ``localCheckpoint``.  Scopes nest (a
+    pin belongs to the innermost one) and each thread keeps its own
+    stack, so a scope frees only what its own thread registered.  Open
+    one around everything that reads the frames: build the query, run
+    its action, then leave the scope."""
+    releases: list = []
+    token = _scopes.set(_scopes.get() + ((threading.get_ident(), releases),))
+    try:
+        yield
+    finally:
+        _scopes.reset(token)
+        for release in reversed(releases):
+            release()
+
+
+def owned(df: DataFrame) -> DataFrame:
+    """Hand ``df``, already pinned by ``persist()``/``cache()`` or by a
+    ``localCheckpoint``, to this thread's innermost ``cache_scope`` and
+    return it.  Outside any scope it is a no-op: the pin lives for the
+    session.  For pins a returned plan still reads after the function
+    that made them returns."""
+    scopes = _scopes.get()
+    if scopes and scopes[-1][0] == threading.get_ident():
+        scopes[-1][1].append(
+            df.unpersist if df.is_cached
+            else lambda: free_local_checkpoint(df))
+    return df
 
 
 _warned: set[str] = set()
@@ -275,29 +319,3 @@ def _warn_local_df_fallback(exc: Exception) -> None:
               f"local_df: Arrow local relation failed "
               f"({type(exc).__name__}: {exc}); falling back to the "
               f"Python-RDD createDataFrame path")
-
-
-def collect_freeing(out: DataFrame, *cached: DataFrame) -> DataFrame:
-    """Materialize a BOUNDED final relation, unpersist the cached inputs
-    it consumed, and return the result as a local relation with the same
-    schema.
-
-    Multi-consumer query bodies persist shared subtrees (scan once, feed
-    N consumers) — but a query function that returns lazily can't
-    unpersist them itself, and a long-lived session running the full
-    inventory sweep would accumulate every such cache for its lifetime
-    (ADVICE r8: inventory_corpus/inventory_pipeline leaks).  This helper
-    is the contract: the caller asserts `out` is final-result-sized
-    (audit rows, top-k, pair lists — never a corpus), so one bounded
-    collect lets the caches be dropped deterministically the moment the
-    result exists.  The distributed plan behind that collect stays
-    inspectable: it is a recorded SQL execution (tools/dump_plans.py)."""
-    rows = out.collect()
-    schema = out.schema
-    for df in cached:
-        df.unpersist()
-    # local_df (r14): the materialized result comes back as a JVM
-    # LocalTableScan, not a Python-RDD scan — the caller's downstream
-    # actions (the bench noop write, joins onto the audit rows) no
-    # longer pay defaultParallelism Python worker round-trips per action
-    return local_df(out.sparkSession, rows, schema)

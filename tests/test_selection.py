@@ -3,6 +3,7 @@ coresets, MMR re-ranking, SQ8 quantized search, cross-source dup matrix."""
 
 import pytest
 
+from kstream_spark import util
 from kstream_spark.operators import selection as SEL
 from kstream_spark.operators import similarity as S
 from kstream_spark.operators.dedup import cross_source_matrix
@@ -308,33 +309,47 @@ def test_cluster_balanced_select_equal_depth_and_window_parity(spark):
     emb.unpersist()
 
 
-def test_dsir_share_tokens_arm_matches_stateless(spark, sel_docs):
+def _scoped_caches(monkeypatch, run):
+    """Run ``run()`` in a cache scope; return its result and the
+    storage levels of the persisted frames it handed to ``util.owned``,
+    inside the scope and after it."""
+    seen = []
+    real = util.owned
+    monkeypatch.setattr(util, "owned",
+                        lambda df: real(seen.append(df) or df))
+    with util.cache_scope():
+        out = run()
+        inside = [d.storageLevel.useMemory for d in seen if d.is_cached]
+    return out, inside, [d.storageLevel.useMemory for d in seen]
+
+
+def test_dsir_share_tokens_arm_matches_stateless(spark, sel_docs,
+                                                 monkeypatch):
     """share_tokens=True (one persisted token relation feeding both the
     weight agg and the per-doc scoring) must produce EXACTLY the
     stateless two-pass composition's scores — same weights math, same
-    rounding — and must hand its cache back through `caches`."""
+    rounding — and its one cache must be freed with the scope."""
     kw = dict(n_select=5, n_buckets=64)
     base = sorted(map(tuple, SEL.select_dsir(
         sel_docs, "doc_id", "text", F.col("src") == "tgt",
         **kw).collect()))
-    caches: list = []
-    got = sorted(map(tuple, SEL.select_dsir(
-        sel_docs, "doc_id", "text", F.col("src") == "tgt",
-        caches=caches, share_tokens=True, **kw).collect()))
+    got, inside, after = _scoped_caches(monkeypatch, lambda: sorted(map(
+        tuple, SEL.select_dsir(sel_docs, "doc_id", "text",
+                               F.col("src") == "tgt", share_tokens=True,
+                               **kw).collect())))
     assert got == base
-    assert len(caches) == 1
-    for c in caches:
-        c.unpersist()
+    assert inside == [True]
+    assert after == [False]
 
 
-def test_curriculum_share_bigrams_arm_matches_stateless(spark, sel_docs):
+def test_curriculum_share_bigrams_arm_matches_stateless(spark, sel_docs,
+                                                        monkeypatch):
     base = sorted(map(tuple, SEL.curriculum_bins(
         sel_docs, "doc_id", "text", n_bins=2).collect()))
-    caches: list = []
-    got = sorted(map(tuple, SEL.curriculum_bins(
-        sel_docs, "doc_id", "text", n_bins=2,
-        caches=caches, share_bigrams=True).collect()))
+    got, inside, after = _scoped_caches(monkeypatch, lambda: sorted(map(
+        tuple, SEL.curriculum_bins(sel_docs, "doc_id", "text", n_bins=2,
+                                   share_bigrams=True).collect())))
     assert got == base
-    assert len(caches) == 1
-    for c in caches:
-        c.unpersist()
+    assert inside == [True]
+    # the ranking checkpoint is owned too; only the persist is cached
+    assert not any(after)

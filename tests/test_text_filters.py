@@ -164,3 +164,27 @@ def test_lit_strings_parity_with_elementwise(spark):
     # empty input keeps the typed empty-array contract
     empty = spark.range(1).select(lit_strings([]).alias("a")).collect()[0]
     assert empty["a"] == []
+
+
+def test_udtf_chunk_text_splits_like_its_oracle(spark, tmp_path):
+    """The chunking UDTF splits words as the JVM and its DuckDB oracle do:
+    a no-break space is not whitespace, and a NULL text has no chunks."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from kstream_spark.inventory_extra import (SQL_UDTF_CHUNK_TEXT,
+                                               q_udtf_chunk_text)
+    texts = ["a\u00a0b c", None, " lead  and\ttrail ",
+             " ".join(f"w{i}" for i in range(40))]
+    pq.write_table(pa.table({"doc_id": pa.array(range(len(texts)),
+                                                pa.int64()),
+                             "text": pa.array(texts, pa.string())}),
+                   tmp_path / "documents.parquet")
+    got = sorted(tuple(r) for r in q_udtf_chunk_text(
+        spark, str(tmp_path)).collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM "
+                f"'{tmp_path}/documents.parquet'")
+    want = sorted(con.execute(SQL_UDTF_CHUNK_TEXT).fetchall())
+    assert got == want
+    assert (0, 0, "a\u00a0b c", 2) in got

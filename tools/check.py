@@ -30,6 +30,12 @@ busy machine, and its single `seconds` conflated Spark and DuckDB time):
     drifting control means the machine was loaded and the sweep's
     deltas are not regression evidence.
 
+Cache ownership: each Spark run is one ``util.cache_scope``, so every pin
+a query ``owned`` is released when its run ends.  A query that still
+leaves a Dataset in the CacheManager or an RDD in the BlockManager fails
+its row as LEAK.  A store's base is the store's: its temp view keeps it
+for ``StoreRegistry.sql``.
+
 --orchestrate [N]: the r10 verdict showed the single-process sweep
 corrupts its own LATE-query timings (JVM accumulation a flat control is
 too light to expose: sim_ivf_topk read 14.1s in-sweep vs 3.9s
@@ -58,6 +64,7 @@ faulthandler.register(signal.SIGUSR1)
 
 import duckdb
 import pandas as pd
+from py4j.protocol import Py4JError
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -300,6 +307,7 @@ def main():
     sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entry
     from kstream_spark import get_spark
+    from kstream_spark.util import cache_scope
 
     spark = get_spark()
     slice_dir = make_slice_dir(sf_dir) if sample else None
@@ -321,15 +329,39 @@ def main():
     control_runs = []
 
     def run_spark(fn, q_dir):
-        """(pandas df, min-of-``minof`` spark seconds)."""
+        """(pandas df, min-of-``minof`` spark seconds), one scope a run."""
         best, sdf = None, None
         for _ in range(minof):
-            t0 = time.time()
-            out = fn(spark, q_dir).toPandas()
-            dt = time.time() - t0
+            with cache_scope():
+                t0 = time.time()
+                out = fn(spark, q_dir).toPandas()
+                dt = time.time() - t0
             if best is None or dt < best:
                 best, sdf = dt, out
         return sdf, best
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    jsc = spark.sparkContext._jsc.sc()
+
+    def view_rdds() -> set:
+        """Ids of the checkpoints that session temp views read (store
+        bases); a view over any other plan has no ``rdd()``."""
+        ids = set()
+        for t in spark.catalog.listTables():
+            if t.isTemporary:
+                try:
+                    ids.add(spark.table(t.name)._jdf.queryExecution()
+                            .optimizedPlan().rdd().id())
+                except Py4JError:   # not a checkpoint view
+                    pass
+        return ids
+
+    def pinned(before: set) -> tuple[bool, set]:
+        """(whether the CacheManager holds a Dataset, the ids of stored
+        RDDs neither in ``before`` nor read by a temp view)."""
+        return (not cache_manager.isEmpty(),
+                {i.id() for i in jsc.getRDDStorageInfo()} - before
+                - view_rdds())
 
     def run_control(at: int) -> None:
         if CONTROL_QUERY not in queries:
@@ -391,19 +423,25 @@ def main():
                              "oracle_seconds": round(oracle_s, 2),
                              "sampled": sampled}
 
+    was_cached, stored = pinned(set())
     for qi, (name, fn) in enumerate(todo, start=1):
         sampled = sample and name in SAMPLED_QUERIES
-        try:
-            check_one(name, fn,
-                      slice_dir if sampled else sf_dir,
-                      con_slice if sampled else con_full, sampled)
-        finally:
-            # operators persist corpus-sized shared subtrees (signatures,
-            # shingle sets, tf tables) that back lazily-returned results
-            # and so cannot unpersist in-function — dropping the cache
-            # BETWEEN queries bounds the sweep session's storage growth.
-            # In a finally so error/rows-only exits can't skip it.
-            spark.catalog.clearCache()
+        check_one(name, fn,
+                  slice_dir if sampled else sf_dir,
+                  con_slice if sampled else con_full, sampled)
+        cached, rdds = pinned(stored)
+        leak = [what for what, hit in (
+            ("a Dataset in the CacheManager", cached and not was_cached),
+            (f"stored RDDs {sorted(rdds)}", rdds)) if hit]
+        was_cached, stored = cached, stored | rdds
+        if leak:
+            err = "LEAK: left " + " and ".join(leak)
+            print(f"LEAK {name}: {err}", flush=True)
+            if name not in failures:
+                failures.append(name)
+            row = results[name]
+            row["err"] = "; ".join(filter(None, [row.get("err"), err]))
+            row["pass"] = False
         if json_out and qi % CONTROL_EVERY == 0:
             run_control(qi)
     if json_out:

@@ -5,9 +5,9 @@ Usage:
   python tools/dump_plans.py REPO_ROOT --sf SF_DIR --summary PLANS.md [query ...]
 
 Each query is built and run with a noop write.  Every SQL execution it
-started on the way — sizing counts, per-round training collects, the
-distributed plan behind a ``collect_freeing`` collect and the noop write
-itself — is read back from the session's SQL status store, which records
+started on the way — sizing counts, per-round training collects, any
+collect that materializes a bounded result and the noop write itself —
+is read back from the session's SQL status store, which records
 the final (post-AQE) plan of each execution.
 
 The first form writes ``DIR/<query>.txt`` with every execution's
