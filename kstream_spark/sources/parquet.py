@@ -6,43 +6,92 @@ vectorized parquet reader rejects ([PARQUET_TYPE_ILLEGAL]).  With
 detect nanos columns from the parquet footer (pyarrow) and restore proper
 TimestampType with integer division (no double round-trip — ns since epoch
 overflow double's 53-bit mantissa).
+
+Schema inference (``spark.read.parquet(path)`` without a schema) starts a
+Spark job, so ``parquet_schema`` keeps, per path, Spark's own inferred schema
+and the footer's nanos columns, and every read passes that schema.  The entry
+is keyed by the path's file listing — (file, size, mtime_ns, inode) for every
+file under it — and by the SQL confs that change inference; when either
+changes, the next read infers again.  A file rewritten in place with the same
+size, mtime_ns and inode is the one change the key cannot see.  A path the
+driver cannot stat (a glob, a remote URI) is inferred on every read.
 """
 
 from __future__ import annotations
 
 import glob
 import os
+import stat
 from collections.abc import Sequence
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from kstream_spark.util import warn_once
 
+# the SQL confs that change the schema Spark infers from a parquet footer
+_INFERENCE_CONFS = ("spark.sql.parquet.binaryAsString",
+                    "spark.sql.parquet.int96AsTimestamp",
+                    "spark.sql.parquet.inferTimestampNTZ.enabled",
+                    "spark.sql.parquet.mergeSchema",
+                    "spark.sql.caseSensitive")
+# path -> ((listing, confs), schema, nanos columns); two threads missing on
+# one path at once both infer, and either entry is right
+_schemas: dict[str, tuple] = {}
 
-def _nanos_timestamp_cols(path: str) -> list[str]:
-    f = path
-    if os.path.isdir(path):
-        files = glob.glob(os.path.join(path, "*.parquet")) or \
-            glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        if not files:
-            return []
-        f = files[0]
+
+def _listing(path: str) -> tuple[tuple, str | None] | None:
+    """The fingerprint of a local path's file listing and the parquet file
+    whose footer is read (None when it holds none); None for a path the
+    driver cannot stat."""
     try:
-        schema = pq.read_schema(f)
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return ((path, st.st_size, st.st_mtime_ns, st.st_ino),), path
+        files, footer = [], None
+        for root, dirs, names in os.walk(path):
+            dirs.sort()
+            for n in sorted(names):
+                f = os.path.join(root, n)
+                s = os.stat(f)
+                files.append((f, s.st_size, s.st_mtime_ns, s.st_ino))
+                if footer is None and n.endswith(".parquet"):
+                    footer = f
+    except OSError:
+        return None
+    return tuple(files), footer
+
+
+def _nanos_timestamp_cols(footer: str) -> tuple[str, ...]:
+    try:
+        schema = pq.read_schema(footer)
     except Exception as exc:  # noqa: BLE001
         warn_once("read_parquet footer",
-                  f"read_parquet: cannot read the footer of {f} "
+                  f"read_parquet: cannot read the footer of {footer} "
                   f"({type(exc).__name__}: {exc}); TIMESTAMP(NANOS) columns "
                   f"are not detected and stay int64 nanos")
-        return []
-    out = []
-    for field in schema:
-        t = field.type
-        if str(t).startswith("timestamp[ns"):
-            out.append(field.name)
-    return out
+        return ()
+    return tuple(field.name for field in schema
+                 if str(field.type).startswith("timestamp[ns"))
+
+
+def parquet_schema(spark: SparkSession,
+                   path: str) -> tuple[StructType, tuple[str, ...]]:
+    """Spark's inferred schema of ``path`` and its TIMESTAMP(NANOS) columns
+    (read as int64 under ``nanosAsLong``), inferred once per file listing."""
+    listing = _listing(path)
+    if listing is None:
+        return spark.read.parquet(path).schema, _nanos_timestamp_cols(path)
+    key = (listing[0], tuple(spark.conf.get(c) for c in _INFERENCE_CONFS))
+    hit = _schemas.get(path)
+    if hit is not None and hit[0] == key:
+        return hit[1], hit[2]
+    schema = spark.read.parquet(path).schema
+    nanos = _nanos_timestamp_cols(listing[1]) if listing[1] else ()
+    _schemas[path] = (key, schema, nanos)
+    return schema, nanos
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -51,8 +100,9 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     # renderings aligned with DuckDB's naive-UTC timestamps.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(path)
-    for c in _nanos_timestamp_cols(path):
+    schema, nanos = parquet_schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
+    for c in nanos:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
     return df
 

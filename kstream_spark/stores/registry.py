@@ -356,7 +356,7 @@ class PersistentStoreRegistry(StoreRegistry):
         self._epochs[name] = epoch
         path = f"{self.root}/{name}/epoch={epoch}"
         df.write.mode("overwrite").parquet(path)
-        return self.spark.read.parquet(path)
+        return self.spark.read.schema(df.schema).parquet(path)
 
     def materialize(self, name, df, key, version=None, tombstone=None,
                     ttl_col=None) -> Store:

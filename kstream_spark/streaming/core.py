@@ -30,6 +30,8 @@ from typing import Callable, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kstream_spark.sources.parquet import parquet_schema
+
 
 def read_stream_parquet(spark: SparkSession, path: str, schema=None,
                         nanos_ts_cols: Sequence[str] = ()) -> DataFrame:
@@ -38,7 +40,7 @@ def read_stream_parquet(spark: SparkSession, path: str, schema=None,
     TIMESTAMP(NANOS) parquet columns, mirroring sources/parquet.py."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if schema is None:
-        schema = spark.read.parquet(path).schema
+        schema = parquet_schema(spark, path)[0]
     df = spark.readStream.schema(schema).parquet(path)
     for c in nanos_ts_cols:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))

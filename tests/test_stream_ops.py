@@ -126,11 +126,12 @@ def test_nanos_detection_warns_once_on_unreadable_footer(tmp_path,
     d.mkdir()
     (d / "part-0.parquet").write_bytes(b"not a parquet file")
     monkeypatch.setattr(u, "_warned", set())
+    footer = P._listing(str(d))[1]
     with pytest.warns(RuntimeWarning, match="part-0.parquet .*Arrow"):
-        assert P._nanos_timestamp_cols(str(d)) == []
+        assert P._nanos_timestamp_cols(footer) == ()
     with warnings.catch_warnings():
         warnings.simplefilter("error")          # second failure: silent
-        assert P._nanos_timestamp_cols(str(d)) == []
+        assert P._nanos_timestamp_cols(footer) == ()
 
 
 def test_compact_parquet_reduces_file_count(spark, tmp_path):
