@@ -12,12 +12,21 @@ from __future__ import annotations
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kstream_spark.global_table import GlobalTable
+from kstream_spark.sources.kafka import decode_records
+from kstream_spark.sources.parquet import read_parquet
 from kstream_spark.stores.registry import StoreRegistry
 from kstream_spark.stream import Stream
+
+
+def _read(spark: SparkSession, path: str, fmt: str) -> DataFrame:
+    """A source path as a DataFrame: parquet through ``read_parquet``, any
+    other format through Spark's reader with its defaults."""
+    if fmt == "parquet":
+        return read_parquet(spark, path)
+    return spark.read.format(fmt).load(path)
 
 
 class StreamBuilder:
@@ -28,12 +37,7 @@ class StreamBuilder:
     # -- batch sources -----------------------------------------------------
     def table(self, path: str, fmt: str = "parquet", name: str | None = None,
               key: str | None = None) -> Stream:
-        if fmt == "parquet":
-            from kstream_spark.sources.parquet import read_parquet
-            df = read_parquet(self.spark, path)
-        else:
-            df = self.spark.read.format(fmt).load(path)
-        return Stream(df, key=key, name=name or path)
+        return Stream(_read(self.spark, path, fmt), key=key, name=name or path)
 
     def stream(self, path: str, fmt: str = "parquet", name: str | None = None,
                key: str | None = None) -> Stream:
@@ -57,13 +61,8 @@ class StreamBuilder:
         ``snapshot=True`` declares the source already latest-per-key (a table
         snapshot, not a changelog) — skips the compaction groupBy, so lookup
         joins against it are a zero-shuffle broadcast probe."""
-        if isinstance(source, DataFrame):
-            df = source
-        elif fmt == "parquet":
-            from kstream_spark.sources.parquet import read_parquet
-            df = read_parquet(self.spark, source)
-        else:
-            df = self.spark.read.format(fmt).load(source)
+        df = source if isinstance(source, DataFrame) \
+            else _read(self.spark, source, fmt)
         gt = GlobalTable(df, key=key, version=version, tombstone=tombstone,
                          broadcast=broadcast, pre_compacted=snapshot,
                          name=name or (source if isinstance(source, str) else "global_table"))
@@ -76,10 +75,5 @@ class StreamBuilder:
         exactly Spark's Kafka source schema) via "encoders":
         value -> from_json(value_schema), key -> cast.  Ref encoders:
         kstream/encoding/{int,string,json}_encoder.go."""
-        decoded = df.select(
-            F.col("key").cast("string").cast(key_type).alias("key"),
-            F.from_json(F.col("value").cast("string"), value_schema).alias("value"),
-            *[c for c in ("topic", "partition", "offset", "timestamp", "headers")
-              if c in df.columns],
-        )
-        return Stream(decoded, key="key", name=name)
+        return Stream(decode_records(df, value_schema, key_type), key="key",
+                      name=name)

@@ -546,12 +546,12 @@ INVENTORY.update(QUALITY_INVENTORY)
 # touched + the 27-query r6-stale band (group 3's current front).
 
 _TOUCHED_THIS_ROUND: list[str] = [
-    # every read_parquet passes the schema inferred once per file listing;
-    # the batch benchmark's DSL core queries re-read unchanged sources
-    "p1_filter_strict_dlq", "p6_branch_first_match", "j1_lookup_join_left",
-    "j1_lookup_join_dlq", "j4_star_join", "gt_versioned_upsert",
-    "gt_tombstone_compaction", "j2_stream_stream_join", "j_asof_join",
-    "agg_window_tumbling", "dedup_exact", "sessionize_events",
+    # join_table hints the broadcast only when the store fits the driver
+    "j3_stream_table_join",
+    # the cluster-balanced pick key has one definition
+    "select_cluster_balanced",
+    # branch shares Stream's column coercion
+    "p6_branch_first_match", "j4_star_join",
 ]
 
 

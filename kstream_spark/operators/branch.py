@@ -16,11 +16,8 @@ from __future__ import annotations
 from typing import Sequence
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 
-
-def _to_col(e) -> Column:
-    return e if isinstance(e, Column) else F.expr(e)
+from kstream_spark.stream import _to_col
 
 
 def branch(stream, branches: Sequence[tuple[str, Column | str]]) -> dict:

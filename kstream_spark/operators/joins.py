@@ -17,11 +17,13 @@ Scale notes (the part the reference cannot do):
     no second join, no second shuffle.
   * Stream-stream joins are equi-joins on the key plus an optional time-bound
     (interval join).  The reference buffers both sides forever
-    (join/window.go:5-29 — unbounded map, no eviction); unbounded state does
-    not survive at scale, so the engine requires/encourages ``within`` and, in
-    streaming mode, watermarks.  COMPAT DELTA: with ``within=None`` in batch
-    we reproduce the unbounded semantics exactly; in streaming a watermark is
-    mandatory (Spark requirement) and late rows beyond it are dropped.
+    (join/window.go:5-29 — unbounded map, no eviction).  With
+    ``within=None`` an inner join reproduces those semantics, in batch and in
+    streaming: Spark runs an inner stream-stream join without a watermark,
+    and its state then grows without bound.  Watermarks plus ``within`` let
+    Spark evict state, and outer streaming joins require them; rows later
+    than the watermark are then dropped (COMPAT DELTA).
+    streaming/join.py is the reference-parity streaming operator.
 """
 
 from __future__ import annotations
@@ -255,7 +257,8 @@ def join_stream(left, right, on, within=None, ts_col: str = "ts", how: str = "in
     """Stream-stream join on key, optional time bound.
 
     ``on``: key column name present on both sides, or a join Column.
-    ``within``: None (unbounded — reference parity, batch only) or a string
+    ``within``: None (unbounded — reference parity; a streaming inner join
+    then keeps all of both sides in state) or a string
     like "10 minutes" / a pair (lower, upper) bounding
     ``right.ts - left.ts``  ∈ [-lower, +upper].
     """

@@ -54,25 +54,6 @@ def cluster_by_zorder(df: DataFrame, col_a: str, col_b: str,
             .sortWithinPartitions("_zkey"))
 
 
-def write_partitioned(df: DataFrame, path: str, partition_cols: list[str],
-                      max_records_per_file: int | None = None) -> None:
-    """Hive-layout partitioned write — the directory-level complement to
-    Z-order's file-level skipping: a filter on a partition column prunes
-    whole DIRECTORIES at planning time (PartitionFilters in the scan, zero
-    IO for pruned partitions), where parquet min/max stats still cost a
-    footer read per file.
-
-    The 100 TB contract: partition by LOW-cardinality query-aligned
-    columns (date, source, lang — hundreds to thousands of values), never
-    by high-cardinality keys (a partition per user id = millions of tiny
-    files, the classic small-file death).  ``max_records_per_file`` bounds
-    file size within a partition without an extra repartition pass."""
-    w = df.write.mode("overwrite")
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", str(max_records_per_file))
-    w.partitionBy(*partition_cols).parquet(path)
-
-
 def _hilbert_chunk_table(chunk: int) -> list[int]:
     """4-state x 2^(2*chunk)-input Hilbert state-transition table, built
     by simulating the classic per-bit xy2d walk on one ``chunk``-bit

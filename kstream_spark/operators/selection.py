@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import pandas as pd  # module-level so pandas_udf string type hints resolve
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kstream_spark.functions.vectors import as_double, dot, norm
@@ -438,6 +438,16 @@ def curriculum_bins(df: DataFrame, id_col: str, text_col: str,
 
 
 # -- cluster-balanced selection ----------------------------------------------
+def cluster_balance_key(vec_id: Column) -> Column:
+    """The per-cell pick order of cluster-balanced selection, batch and
+    streamed: the first 12 hex chars of md5('cbal:' || id) as an integer,
+    exact in a double and in any engine."""
+    from kstream_spark.functions.text import hash_str
+    return (F.conv(F.substring(hash_str(vec_id.cast("string"), "cbal"),
+                               1, 12), 16, 10)
+            .cast("double"))
+
+
 def cluster_balanced_select(emb: DataFrame, id_col: str, vec_col: str,
                             centroids: list, per_cell: int = 10) -> DataFrame:
     """Cluster-balanced diversity selection: assign every vector to its
@@ -449,9 +459,8 @@ def cluster_balanced_select(emb: DataFrame, id_col: str, vec_col: str,
     applied to selection).
 
     Determinism/oracle parity: the per-cell pick orders by the portable
-    md5 key (first 12 hex chars of md5('cbal:' || id) as an integer —
-    exact in a double, exact in any engine) with an id tie-break, so the
-    kept set is a pure function of (ids, centroids).
+    md5 key (``cluster_balance_key``) with an id tie-break, so the kept
+    set is a pure function of (ids, centroids).
 
     Scale shape: assignment is the literal-projection argmax
     (functions/vectors.nearest_cell — zero corpus shuffle, the
@@ -461,19 +470,16 @@ def cluster_balanced_select(emb: DataFrame, id_col: str, vec_col: str,
     naive row_number-over-cell window would funnel the whole corpus
     through k tasks.  Returns (vec_id, cell_id, rk).
     """
-    from kstream_spark.functions.text import hash_str
     from kstream_spark.functions.vectors import nearest_cell, norm
     from kstream_spark.operators.similarity import _per_query_topk
     src = (emb.select(F.col(id_col).alias("vec_id"),
                       as_double(F.col(vec_col)).alias("v"))
            .withColumn("_n", norm(F.col("v"))))
-    key = (F.conv(F.substring(
-        hash_str(F.col("vec_id").cast("string"), "cbal"), 1, 12), 16, 10)
-        .cast("double"))
     assigned = src.select(
         "vec_id",
         nearest_cell(F.col("v"), F.col("_n"), centroids).alias("cell_id"),
-        key.alias("_sk")).withColumn("query_id", F.col("cell_id"))
+        cluster_balance_key(F.col("vec_id")).alias("_sk")) \
+        .withColumn("query_id", F.col("cell_id"))
     kept = _per_query_topk(assigned, per_cell, score_col="_sk",
                            id_col="vec_id", asc=True, rank_col="rk")
     return kept.select("vec_id", "cell_id",

@@ -16,6 +16,9 @@ defaults matter at 100 TB:
     parquet (``convert_to_parquet``) with a layout (partition dirs /
     Z-order, sources/parquet.py + operators/layout.py), then query the
     parquet.  The converter exists so pipelines do this in one hop.
+
+``write_table`` is the one batch file sink (``Stream.to`` writes through
+it); every path here defaults CSV to a header, out and back in.
 """
 
 from __future__ import annotations
@@ -24,6 +27,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 _BATCH_FORMATS = {"json", "csv", "orc", "parquet", "text"}
+
+
+def _with_options(rw, fmt: str, options: dict):
+    """``options`` set on a reader or writer; CSV gets ``header=true``
+    unless the caller says otherwise, so what is written reads back."""
+    if fmt == "csv":
+        options = {"header": "true", **options}
+    return rw.options(**options)
 
 
 def read_table(spark: SparkSession, path: str, fmt: str = "json",
@@ -38,15 +49,11 @@ def read_table(spark: SparkSession, path: str, fmt: str = "json",
             f"{fmt} without a schema requires infer=True (inference is a "
             "full extra scan — pass an explicit schema in production)")
     r = spark.read.format(fmt)
-    if fmt == "csv":
-        r = r.option("header", options.pop("header", "true"))
     if fmt == "csv" and schema is None and infer:
         r = r.option("inferSchema", "true")
     if schema is not None:
         r = r.schema(schema)
-    for k, v in options.items():
-        r = r.option(k, v)
-    return r.load(path)
+    return _with_options(r, fmt, options).load(path)
 
 
 def write_table(df: DataFrame, path: str, fmt: str = "parquet",
@@ -56,13 +63,9 @@ def write_table(df: DataFrame, path: str, fmt: str = "parquet",
     (the coarse pruning layer — see sources/parquet.write_partitioned for
     the full layout recipe with file sizing + clustering)."""
     w = df.write.format(fmt).mode(mode)
-    if fmt == "csv":
-        w = w.option("header", options.pop("header", "true"))
     if partition_by:
         w = w.partitionBy(*partition_by)
-    for k, v in options.items():
-        w = w.option(k, v)
-    w.save(path)
+    _with_options(w, fmt, options).save(path)
 
 
 def read_stream_files(spark: SparkSession, path: str, fmt: str,
@@ -72,11 +75,7 @@ def read_stream_files(spark: SparkSession, path: str, fmt: str,
     would race arriving data anyway.  ``maxFilesPerTrigger`` is the
     file-source analog of Kafka's maxOffsetsPerTrigger for backpressure."""
     r = spark.readStream.format(fmt).schema(schema)
-    if fmt == "csv":
-        r = r.option("header", options.pop("header", "true"))
-    for k, v in options.items():
-        r = r.option(k, v)
-    return r.load(path)
+    return _with_options(r, fmt, options).load(path)
 
 
 def convert_to_parquet(spark: SparkSession, src_path: str, fmt: str,
@@ -119,10 +118,7 @@ def read_table_with_dlq(spark: SparkSession, path: str, fmt: str,
     r = (spark.read.format(fmt).schema(full)
          .option("mode", "PERMISSIVE")
          .option("columnNameOfCorruptRecord", corrupt_col))
-    if fmt == "csv":
-        r = r.option("header", options.pop("header", "true"))
-    for k, v in options.items():
-        r = r.option(k, v)
+    r = _with_options(r, fmt, options)
     # input_file_name() only resolves while the scan is the file source —
     # once the cache below interposes an InMemoryRelation it returns ''.
     # Capture provenance in the initial projection, before caching.

@@ -8,7 +8,11 @@ The option surface maps 1:1 onto Spark's Kafka connector:
   topic + key/value encoders        -> subscribe + from_json/cast projection
   OffsetDefault(0) / OffsetLatest   -> startingOffsets earliest|latest
   changelog topics                  -> checkpointLocation (no broker round-trip)
-  sink tombstone filter / headers   -> pre-write projection (Stream.to)
+  sink tombstone filter / headers   -> pre-write projection (encode_records)
+  sink record transformer           -> apply_transformer (Stream.to's too)
+
+``decode_records`` is the one record decoder, for ``read_stream`` and
+``StreamBuilder.kafka_record_stream`` alike.
 
 The container has no Kafka broker or spark-sql-kafka jar, so ``available()``
 gates the live path; builders are pure and unit-testable without a broker.
@@ -22,22 +26,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-KAFKA_WIRE_SCHEMA = T.StructType([
-    T.StructField("key", T.BinaryType()),
-    T.StructField("value", T.BinaryType()),
-    T.StructField("topic", T.StringType()),
-    T.StructField("partition", T.IntegerType()),
-    T.StructField("offset", T.LongType()),
-    T.StructField("timestamp", T.TimestampType()),
-    T.StructField("timestampType", T.IntegerType()),
-    T.StructField(
-        "headers",
-        T.ArrayType(T.StructType([
-            T.StructField("key", T.StringType()),
-            T.StructField("value", T.BinaryType()),
-        ]))),
-])
 
 
 def available(spark: SparkSession) -> bool:
@@ -83,8 +71,10 @@ def read_stream(spark: SparkSession, topic: str, bootstrap_servers: str,
 
 def decode_records(df: DataFrame, value_schema: T.StructType | None,
                    key_type: str = "string") -> DataFrame:
-    """Kafka wire record -> typed columns; metadata kept alongside the payload
-    (the reference exposes it via Context, kstream/context/context.go:13-33)."""
+    """Kafka wire record -> typed columns; the metadata columns the frame
+    has are kept alongside the payload (the reference exposes them via
+    Context, kstream/context/context.go:13-33).  Spark's Kafka source has a
+    ``headers`` column only with ``includeHeaders=true``."""
     key = F.col("key").cast("string")
     if key_type != "string":
         key = key.cast(key_type)
@@ -92,7 +82,21 @@ def decode_records(df: DataFrame, value_schema: T.StructType | None,
     if value_schema is not None:
         value = F.from_json(value, value_schema)
     return df.select(key.alias("key"), value.alias("value"),
-                     "topic", "partition", "offset", "timestamp", "headers")
+                     *[c for c in ("topic", "partition", "offset", "timestamp",
+                                   "headers") if c in df.columns])
+
+
+def apply_transformer(df: DataFrame, transformer) -> DataFrame:
+    """A sink's per-record transformer hook (k_sink.go:195-248), the last
+    step before the write: a dict of column -> Column expression, or a
+    callable (DataFrame -> DataFrame); None leaves ``df`` as it is."""
+    if transformer is None:
+        return df
+    if callable(transformer):
+        return transformer(df)
+    for name, expr in transformer.items():
+        df = df.withColumn(name, expr)
+    return df
 
 
 def encode_records(df: DataFrame, key_col: str = "key", value_col: str = "value",
@@ -131,14 +135,7 @@ def encode_records(df: DataFrame, key_col: str = "key", value_col: str = "value"
         cols.append(F.col(timestamp_col).alias("timestamp"))
     elif include_timestamp:
         cols.append(F.current_timestamp().alias("timestamp"))
-    out = df.select(*cols)
-    if transformer is not None:
-        if callable(transformer):
-            out = transformer(out)
-        else:
-            for name, expr in transformer.items():
-                out = out.withColumn(name, expr)
-    return out
+    return apply_transformer(df.select(*cols), transformer)
 
 
 def write_stream(df: DataFrame, topic: str, bootstrap_servers: str,

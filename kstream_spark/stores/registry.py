@@ -202,14 +202,20 @@ class Store:
             base = self._fold()
             if col not in base.columns:
                 raise KeyError(f"store {self.name} has no column {col}")
-            if not self._measured:
-                self._bytes, self._measured = self._measure(base), True
-                self._log_arm(base)
-            if fits_driver(base, local, self._bytes) and self._local_ok(
-                    base, col):
+            if self.fits_driver(local) and self._local_ok(base, col):
                 return self._local_lookup(base, col, value)
         rows = self._unexpired(base).filter(F.col(col) == F.lit(value))
         return [r.asDict() for r in rows.collect()]
+
+    def fits_driver(self, local: bool | None = None) -> bool:
+        """Whether the folded base passes ``util.fits_driver`` fed the
+        bytes ``measure`` reports for it, measured once per fold."""
+        with self._lock:
+            base = self._fold()
+            if not self._measured:
+                self._bytes, self._measured = self._measure(base), True
+                self._log_arm(base)
+            return fits_driver(base, local, self._bytes)
 
     def _local_ok(self, base: DataFrame, col: str) -> bool:
         """Whether the local copy can answer a lookup on ``col``: its

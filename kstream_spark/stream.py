@@ -190,11 +190,13 @@ class Stream:
         """Stream–table join against a materialized registry Store — the
         KTable join the reference declares but never implements
         (kstream/k_stream.go:518-520 panics; k_table.go:10-31 commented out).
-        Free upgrade via Spark: the store is already a keyed relation."""
+        Free upgrade via Spark: the store is already a keyed relation.  The
+        store is broadcast-hinted only when its base fits the driver
+        (``Store.fits_driver``); a larger one is left to Spark's planner."""
         from kstream_spark.global_table import GlobalTable
         from kstream_spark.operators.joins import join_global_table
         gt = GlobalTable(store.df(), key=store.key, pre_compacted=True,
-                         name=store.name)
+                         broadcast=store.fits_driver(), name=store.name)
         return join_global_table(self, gt, on, how=how, dlq=dlq, select=select)
 
     # -- state (SURVEY §2.4 / §1.3) ---------------------------------------
@@ -217,27 +219,20 @@ class Stream:
            partition_by: Sequence[str] | None = None,
            tombstone_filter: Column | str | None = None,
            transformer=None) -> None:
-        """Write to a sink.  Ref: k_sink.go:195-253.  ``tombstone_filter``
-        mirrors the sink's nil-value filter (k_sink.go:230-240): rows matching
-        it are dropped before the write.  ``transformer`` is the sink's
-        per-record transformer hook (k_sink.go:195-248): a dict of
-        column -> Column expression or a callable (DataFrame -> DataFrame),
-        applied after the tombstone filter, immediately before the write —
-        the same hook point `sources/kafka.encode_records` exposes for the
-        Kafka sink."""
+        """Write to a file sink.  Ref: k_sink.go:195-253.
+        ``tombstone_filter`` mirrors the sink's nil-value filter
+        (k_sink.go:230-240): rows matching it are dropped before the write.
+        ``transformer`` is the sink's per-record transformer hook
+        (``sources/kafka.apply_transformer``, the Kafka sink's too), applied
+        after the tombstone filter.  The write is
+        ``sources/files.write_table``'s."""
+        from kstream_spark.sources.files import write_table
+        from kstream_spark.sources.kafka import apply_transformer
         df = self.df
         if tombstone_filter is not None:
             df = df.filter(~_to_col(tombstone_filter))
-        if transformer is not None:
-            if callable(transformer):
-                df = transformer(df)
-            else:
-                for name, expr in transformer.items():
-                    df = df.withColumn(name, expr)
-        w = df.write.mode(mode)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.format(fmt).save(path)
+        write_table(apply_transformer(df, transformer), path, fmt, mode=mode,
+                    partition_by=partition_by)
 
     def to_bucketed_table(self, table: str, buckets: int,
                           key: str | Sequence[str] | None = None,

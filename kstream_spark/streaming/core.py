@@ -30,21 +30,16 @@ from typing import Callable, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kstream_spark.sources.parquet import parquet_schema
+from kstream_spark.sources.parquet import parquet_schema, restore_nanos
 
 
-def read_stream_parquet(spark: SparkSession, path: str, schema=None,
-                        nanos_ts_cols: Sequence[str] = ()) -> DataFrame:
+def read_stream_parquet(spark: SparkSession, path: str) -> DataFrame:
     """File-based streaming source (test/dev path; Kafka source in
-    sources/kafka.py).  ``nanos_ts_cols`` restores TimestampType for
-    TIMESTAMP(NANOS) parquet columns, mirroring sources/parquet.py."""
+    sources/kafka.py): the schema and TIMESTAMP(NANOS) columns of the batch
+    read (``sources/parquet.read_parquet``), so both yield the same types."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if schema is None:
-        schema = parquet_schema(spark, path)[0]
-    df = spark.readStream.schema(schema).parquet(path)
-    for c in nanos_ts_cols:
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
-    return df
+    schema, nanos = parquet_schema(spark, path)
+    return restore_nanos(spark.readStream.schema(schema).parquet(path), nanos)
 
 
 def dedup_stream(df: DataFrame, uuid_cols: Sequence[str], ts_col: str,

@@ -5,12 +5,22 @@ each side buffers every record in an unbounded per-key map; an arriving left
 record joins against ALL buffered right records (and vice versa); entries
 are never evicted, not even on match.
 
-Spark's built-in stream-stream join requires watermarks and time bounds
-(operators/joins.py documents the delta).  This module closes that delta
-with a custom stateful operator: both streams are tagged and unioned,
-hashed into ``buckets`` state groups, and ``applyInPandasWithState`` hands
-each bucket's micro-batch rows to ``join_kernel``, which emits the
-cross-matches exactly as the reference's SideJoiner does.
+Spark's built-in stream-stream join runs an inner equi-join without a
+watermark too, keeping both sides in state with no eviction.  This custom
+operator stays because it is faster and uses less memory, and has the
+per-key TTL below.  One run each, perfbench's ``stream_join`` (seed 7001, 4 cores),
+``stateful_stream_join`` swapped for ``left.join(right, "k")``; the pair
+counts were right in every run:
+
+    variant                         records/s  batch_ms_p50  peak_rss_mb
+    this operator                   31.7k      676 ms        1691
+    native join, default provider   27.6k      785 ms        2330
+    native join, RocksDB provider   18.2k      1223 ms       2279
+
+Both streams are tagged and unioned, hashed into ``buckets`` state groups,
+and ``applyInPandasWithState`` hands each bucket's micro-batch rows to
+``join_kernel``, which emits the cross-matches exactly as the reference's
+SideJoiner does.
 
 State layout: one binary blob per bucket, a pickled dict of named numpy
 column arrays — per side the join keys plus the typed payload columns

@@ -71,13 +71,13 @@ def admit_cluster_balanced_stream(df: DataFrame, centroids_path: str,
     already admitted in other epochs are anti-joined away against the
     bounded (hence broadcastable) store.
 
-    Within a batch the per-cell pick orders by the batch-op's portable
-    md5 key with id tie-break — the window is bounded by the micro-batch
-    size, and the admitted set for a given (store, batch) pair is a pure
+    Within a batch the per-cell pick orders by the batch op's
+    ``cluster_balance_key`` with id tie-break — the window is bounded by
+    the micro-batch size, and the admitted set for a given (store, batch) pair is a pure
     function of ids and centroids.  Returns the StreamingQuery."""
     from pyspark.sql import Window as W
-    from kstream_spark.functions.text import hash_str
     from kstream_spark.functions.vectors import as_double, nearest_cell, norm
+    from kstream_spark.operators.selection import cluster_balance_key
     from kstream_spark.operators.similarity import load_centroids
 
     def _admit(batch: DataFrame, epoch_id: int) -> None:
@@ -91,13 +91,10 @@ def admit_cluster_balanced_stream(df: DataFrame, centroids_path: str,
         src = (batch.select(F.col(id_col).alias("vec_id"),
                             as_double(F.col(vec_col)).alias("v"))
                .withColumn("_n", norm(F.col("v"))))
-        key = (F.conv(F.substring(
-            hash_str(F.col("vec_id").cast("string"), "cbal"), 1, 12),
-            16, 10).cast("double"))
         assigned = src.select(
             "vec_id",
             nearest_cell(F.col("v"), F.col("_n"), cents).alias("cell_id"),
-            key.alias("_sk"))
+            cluster_balance_key(F.col("vec_id")).alias("_sk"))
         if store is not None:
             taken = F.broadcast(
                 store.groupBy("cell_id").agg(F.count("*").alias("_taken")))

@@ -18,6 +18,19 @@ def test_roundtrip_formats(spark, tmp_path, fmt):
     assert sorted(map(tuple, back.collect())) == sorted(ROWS)
 
 
+def test_stream_to_csv_reads_back_every_row(spark, tmp_path):
+    # Stream.to writes through write_table: a header in every file, which
+    # read_table's header=true default skips, and no row with it
+    from kstream_spark import StreamBuilder
+    df = spark.createDataFrame([(i, f"n{i}") for i in range(6)],
+                               "id int, name string").repartition(2)
+    out = str(tmp_path / "csv")
+    StreamBuilder(spark).from_df(df).to(out, fmt="csv", mode="overwrite")
+    back = FS.read_table(spark, out, "csv", schema="id int, name string")
+    assert sorted(tuple(r) for r in back.collect()) \
+        == [(i, f"n{i}") for i in range(6)]
+
+
 def test_schemaless_row_formats_require_opt_in(spark, tmp_path):
     df = spark.createDataFrame(ROWS, SCHEMA)
     p = str(tmp_path / "j")

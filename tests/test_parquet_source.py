@@ -5,6 +5,7 @@ snapshot back with the schema it wrote."""
 
 import datetime
 import itertools
+import warnings
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -118,6 +119,38 @@ def test_nanos_timestamps_are_restored_on_reuse(spark, tmp_path):
         assert df.schema["ts"].dataType == T.TimestampType()
         assert [r.ts.replace(tzinfo=None) for r in df.orderBy("ts").collect()] \
             == ts
+
+
+def test_a_glob_read_restores_nanos_timestamps(spark, tmp_path, monkeypatch):
+    # the footer comes from the glob's first sorted match, so the nanos
+    # column is detected with no "cannot read the footer" warning
+    monkeypatch.setattr(util, "_warned", set())
+    ts = [datetime.datetime(2024, 1, 1, 0, 0, 1, 123456),
+          datetime.datetime(2024, 6, 30, 23, 59, 59)]
+    for i, t in enumerate(ts):
+        pq.write_table(pa.table({"ts": pa.array([t], pa.timestamp("ns"))}),
+                       str(tmp_path / f"part-{i}.parquet"),
+                       coerce_timestamps=None)
+    (tmp_path / "other.txt").write_text("not parquet")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        df = read_parquet(spark, f"{tmp_path}/part-*.parquet")
+    assert df.schema["ts"].dataType == T.TimestampType()
+    assert [r.ts.replace(tzinfo=None) for r in df.orderBy("ts").collect()] \
+        == ts
+
+
+def test_int96_timestamps_are_not_taken_for_nanos(spark, tmp_path):
+    # Spark writes timestamps as INT96 by default; they read as
+    # TimestampType already and must not be restored a second time
+    ts = [datetime.datetime(2024, 1, 1, 0, 5), datetime.datetime(2024, 2, 1)]
+    path = str(tmp_path / "int96")
+    spark.createDataFrame([(t,) for t in ts], "ts timestamp") \
+        .coalesce(1).write.option("compression", "none").parquet(path)
+    df = read_parquet(spark, path)
+    assert df.schema["ts"].dataType == T.TimestampType()
+    assert [r.ts.replace(tzinfo=None) for r in df.orderBy("ts").collect()] \
+        == ts
 
 
 def test_snapshot_reads_back_its_schema_with_one_job_fewer(spark, tmp_path):

@@ -451,7 +451,7 @@ def test_partition_pruning_on_hive_layout(spark, tmp_path):
     PartitionFilters carries the predicate, and the scan touches only the
     matching partition's files (directory-level skipping — the
     first-order 100 TB technique, ahead of row-group stats)."""
-    from kstream_spark.operators.layout import write_partitioned
+    from kstream_spark.sources.parquet import write_partitioned
     ev = StreamBuilder(spark).stream(f"{SF}/events.parquet").to_df()
     path = str(tmp_path / "events_by_type")
     write_partitioned(ev, path, ["event_type"])

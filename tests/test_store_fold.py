@@ -446,6 +446,32 @@ def test_lookup_gate_measures_the_stored_base(spark, tmp_path, monkeypatch,
             if "filter with Spark" in m]
 
 
+def test_join_table_broadcasts_only_a_store_that_fits_the_driver(
+        spark, monkeypatch):
+    # Spark's own size-based broadcast is off, so a BroadcastHashJoin is
+    # the store's hint, given only while its measured base passes the gate
+    facts = StreamBuilder(spark).from_df(
+        spark.range(20).selectExpr("id AS e", "id % 5 AS k"))
+    dim = spark.range(4).selectExpr("id AS k", "id AS ver",
+                                    "concat('d', id) AS d")
+    was = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    rows = []
+    try:
+        for gate in (util.DRIVER_LOCAL_BYTES, 0):
+            monkeypatch.setattr(util, "DRIVER_LOCAL_BYTES", gate)
+            store = registry.StoreRegistry(spark).materialize(
+                "t", dim, key="k", version="ver")
+            out = facts.join_table(store, on="k", how="left").to_df()
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert ("BroadcastHashJoin" in plan) == (gate > 0), plan
+            rows.append(sorted(tuple(r) for r in out.collect()))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", was)
+    assert rows[0] == rows[1] and len(rows[0]) == 20
+    assert {r[3] for r in rows[0]} == {"d0", "d1", "d2", "d3", None}
+
+
 def test_concurrent_lookups_never_read_a_stale_copy(spark):
     # more threads than cores: two writers raise one key's version while
     # readers look it up on the local copy, each lookup folding what was

@@ -159,6 +159,50 @@ def test_kafka_wire_roundtrip_batch(spark):
     assert rows == {"7": "x", "8": None}    # tombstone -> null value
 
 
+def test_kafka_decode_without_headers(spark):
+    # Spark's Kafka source has no headers column unless includeHeaders=true
+    import pyspark.sql.types as T
+    wire = spark.createDataFrame(
+        [(b"7", b'{"a": 1}', "t", 0, 100, None, 0)],
+        "key binary, value binary, topic string, partition int, offset long,"
+        " timestamp timestamp, timestampType int")
+    schema = T.StructType([T.StructField("a", T.LongType())])
+    decoded = decode_records(wire, schema, key_type="long")
+    via_builder = StreamBuilder(spark).kafka_record_stream(
+        wire, schema, key_type="long").to_df()
+    for df in (decoded, via_builder):
+        assert df.columns == ["key", "value", "topic", "partition", "offset",
+                              "timestamp"]
+        row = df.collect()[0]
+        assert row.key == 7 and row.value.a == 1 and row.offset == 100
+
+
+def test_stream_parquet_restores_nanos_like_the_batch_read(spark, tmp_path):
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pyspark.sql.types as T
+    from kstream_spark.sources.parquet import read_parquet
+    ts = [datetime.datetime(2024, 1, 1, 0, 0, 1, 123456),
+          datetime.datetime(2024, 6, 30, 23, 59, 59)]
+    d = tmp_path / "ns"
+    d.mkdir()
+    pq.write_table(pa.table({"k": [1, 2], "ts": pa.array(ts, pa.timestamp("ns"))}),
+                   str(d / "part-0.parquet"), coerce_timestamps=None)
+    src = SC.read_stream_parquet(spark, str(d))
+    assert src.schema == read_parquet(spark, str(d)).schema
+    assert src.schema["ts"].dataType == T.TimestampType()
+    q = (src.writeStream.format("memory").queryName("nanos_stream_out")
+         .option("checkpointLocation", str(tmp_path / "ck")).start())
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    got = spark.sql("SELECT ts FROM nanos_stream_out ORDER BY k").collect()
+    assert [r.ts.replace(tzinfo=None) for r in got] == ts
+
+
 def test_kafka_source_options():
     opts = source_options("topic-a", "broker:9092", starting="latest",
                           max_offsets_per_trigger=50000)
