@@ -28,6 +28,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kstream_spark.functions import to_col
+
 
 def compact_latest(df: DataFrame, key: str | Sequence[str],
                    version: str | Column | None = None,
@@ -58,10 +60,9 @@ def compact_latest(df: DataFrame, key: str | Sequence[str],
         .select(*keys, "__row.*")
     )
     if tombstone is not None:
-        t = tombstone if isinstance(tombstone, Column) else F.expr(tombstone)
         # re-evaluate tombstone on the surviving latest row: a key whose
         # latest record is a delete disappears from the table
-        compacted = compacted.filter(~t)
+        compacted = compacted.filter(~to_col(tombstone))
     return compacted
 
 

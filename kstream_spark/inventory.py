@@ -546,12 +546,11 @@ INVENTORY.update(QUALITY_INVENTORY)
 # touched + the 27-query r6-stale band (group 3's current front).
 
 _TOUCHED_THIS_ROUND: list[str] = [
-    # join_table hints the broadcast only when the store fits the driver
-    "j3_stream_table_join",
-    # the cluster-balanced pick key has one definition
-    "select_cluster_balanced",
-    # branch shares Stream's column coercion
-    "p6_branch_first_match", "j4_star_join",
+    # triangle_count hints the adjacency broadcast only when it fits the
+    # driver
+    "graph_triangles",
+    # a store fold no longer publishes a temp view
+    "gt_versioned_upsert", "j3_stream_table_join",
 ]
 
 

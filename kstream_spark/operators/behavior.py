@@ -70,10 +70,12 @@ def sessionize(events: DataFrame, user_col: str, ts_col: str,
                gap: str = "30 minutes", id_col: str | None = None
                ) -> DataFrame:
     """Row-level gap sessionization: every event gets (session_n,
-    is_session_start) where a new session begins after ``gap`` of
-    inactivity.  Complements streaming/core.session_agg (which emits only
-    per-session aggregates via session_window) by labeling the raw rows —
-    what a training pipeline needs to group clickstreams into examples.
+    is_session_start) where a new session begins after MORE than ``gap``
+    of inactivity (``ts > prev + gap``).  Complements
+    streaming/core.session_agg, Spark's session window on batch and
+    streaming frames, which splits by the same rule but emits only
+    per-session aggregates; this labels the raw rows — what a training
+    pipeline needs to group clickstreams into examples.
 
     One hash exchange on user_col; the lag + running-sum pair shares the
     same window ordering (single sort).  ``id_col`` breaks timestamp ties

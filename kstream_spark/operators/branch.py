@@ -17,14 +17,14 @@ from typing import Sequence
 
 from pyspark.sql import Column
 
-from kstream_spark.stream import _to_col
+from kstream_spark.functions import to_col
 
 
 def branch(stream, branches: Sequence[tuple[str, Column | str]]) -> dict:
     out = {}
     prior = None
     for name, pred in branches:
-        p = _to_col(pred)
+        p = to_col(pred)
         excl = p if prior is None else (p & ~prior)
         out[name] = stream._derive(stream.df.filter(excl), name=name)
         prior = p if prior is None else (prior | p)

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kstream_spark.util import fits_driver
+
 
 def pagerank(edges: DataFrame, src_col: str, dst_col: str,
              iters: int = 3, damping_pct: int = 85) -> DataFrame:
@@ -262,11 +264,11 @@ def triangle_count(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
     one in-memory ``array_intersect`` — the O(#wedges) intermediate never
     exists as ROWS and never shuffles; only (node, count) contributions
     leave the stage.  On dense graphs this removes the dominant exchange
-    (sf0.1 supplier graph: 46s -> ~8s).  NOTE the adjacency RELATION
-    totals O(m) and is force-broadcast, which the driver must collect and
-    Spark hard-caps at 8 GB per broadcast relation — at ~16-24 bytes per
-    oriented edge that is roughly m in the low HUNDREDS OF MILLIONS of
-    edges, not billions.
+    (sf0.1 supplier graph: 46s -> ~8s).  The adjacency RELATION totals
+    O(m); it is hinted to broadcast only when it fits the driver
+    (``util.fits_driver``), since a broadcast is collected by the driver
+    and hard-capped by Spark at 8 GB.  A larger graph leaves the join to
+    the planner.
     """
     both = edges.select(F.col(src_col).alias("a"),
                         F.col(dst_col).alias("b")) \
@@ -296,9 +298,12 @@ def triangle_count(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
     # count survives AQE coalescing; round-robin balances perfectly
     # and the adj sides broadcast, so no co-partitioning is lost.
     par = oriented.sparkSession.sparkContext.defaultParallelism
-    au = F.broadcast(adj.select("u", F.col("_n").alias("_nu")))
-    av = F.broadcast(adj.select(F.col("u").alias("v"),
-                                F.col("_n").alias("_nv")))
+    # the adjacency holds each undirected edge once, so it is about the
+    # size of ``und``, which Catalyst sizes from the input's scan (its own
+    # estimate multiplies the sizes of the joins above and reads unknown)
+    hint = F.broadcast if fits_driver(und) else (lambda df: df)
+    au = hint(adj.select("u", F.col("_n").alias("_nu")))
+    av = hint(adj.select(F.col("u").alias("v"), F.col("_n").alias("_nv")))
     e = oriented.repartition(par).join(au, "u").join(av, "v")
     e = (e.withColumn("_ws", F.array_intersect("_nu", "_nv"))
          .withColumn("_c", F.size("_ws").cast("long"))

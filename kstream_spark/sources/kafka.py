@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kstream_spark.functions import to_col
+
 
 def available(spark: SparkSession) -> bool:
     """True when the spark-sql-kafka connector jar is on the classpath."""
@@ -125,8 +127,7 @@ def encode_records(df: DataFrame, key_col: str = "key", value_col: str = "value"
     value = F.to_json(F.col(value_col)) if \
         dict(df.dtypes)[value_col].startswith("struct") else F.col(value_col).cast("string")
     if tombstone is not None:
-        t = tombstone if isinstance(tombstone, F.Column) else F.expr(tombstone)
-        value = F.when(t, F.lit(None).cast("string")).otherwise(value)
+        value = F.when(to_col(tombstone), F.lit(None).cast("string")).otherwise(value)
     cols = [F.col(key_col).cast("string").alias("key"), value.alias("value")]
     if headers_col is not None:
         h = headers_col if isinstance(headers_col, F.Column) else F.col(headers_col)

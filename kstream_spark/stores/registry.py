@@ -11,8 +11,8 @@ Ref:
   Backend          backend/backend.go:16-28, backend/memory/memory.go:52-100
 
 Spark-first: a "store" is a named latest-by-key relation (compacted with the
-GlobalTable machinery) registered as a temp view — every store is queryable
-with full Spark SQL.  Secondary indexes need no maintenance: a filter on
+GlobalTable machinery), queryable by name with full Spark SQL through
+``StoreRegistry.sql``.  Secondary indexes need no maintenance: a filter on
 any column IS the index lookup (Catalyst prunes/pushes down), and the
 driver-local copy below hashes a column on its first lookup.
 
@@ -32,8 +32,11 @@ registry's base is a ``localCheckpoint``; ``PersistentStoreRegistry``'s is the
 parquet snapshot the fold just wrote.  A fold frees the parts it folded (no
 reader ever saw them) and only drops its reference to the base it replaced:
 a frame a reader still holds keeps that base's blocks alive, and Spark's
-ContextCleaner frees them once no frame does.  A store's temp view points at
-its last fold; ``StoreRegistry.sql`` folds every store first.
+ContextCleaner frees them once no frame does.  A registry made inside a
+``util.cache_scope`` is the scope's: the scope's exit frees the checkpoints
+its stores hold.  No store publishes a temp view: ``StoreRegistry.sql``
+binds each store's live rows under its name only while Spark analyzes
+that one query.
 
 Point and index lookups (``Store.lookup``, behind the HTTP routes) read a
 driver-local copy of the base when it fits the driver: the one size gate
@@ -74,6 +77,9 @@ log = logging.getLogger(__name__)
 # Structured Streaming's own delta-to-snapshot threshold
 # (spark.sql.streaming.stateStore.minDeltasForSnapshot)
 _FOLD_AT = 10
+
+# serializes ``StoreRegistry.sql``'s session-wide temp views
+_SQL_LOCK = threading.Lock()
 
 
 def _checkpoint(df: DataFrame) -> DataFrame:
@@ -131,8 +137,7 @@ class Store:
 
     def _fold(self) -> DataFrame:
         """The store as one compacted relation: fold the pending parts into
-        the base, execute it once into a new base and point the temp view
-        at it.
+        the base and execute it once into a new base.
 
         The folded parts are freed: they are checkpoints the store made, and
         no reader ever saw them.  The replaced base is only dropped, never
@@ -152,7 +157,6 @@ class Store:
                     free_local_checkpoint(df)
                 self._base, self._pending = base, []
                 self._drop_copy()
-                base.createOrReplaceTempView(self.name)
             return self._base
 
     def _unexpired(self, df: DataFrame) -> DataFrame:
@@ -279,6 +283,16 @@ class StoreRegistry:
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self._stores: dict[str, Store] = {}
+        util.on_scope_exit(self._free)
+
+    def _free(self) -> None:
+        """Free the checkpoints every store holds: its base and its pending
+        parts."""
+        for store in self._stores.values():
+            with store._lock:
+                for df in [store._base, *store._pending]:
+                    if df is not None:
+                        free_local_checkpoint(df)
 
     def _new_store(self, name: str, key, ttl_col: str | None = None,
                    base: DataFrame | None = None) -> Store:
@@ -316,11 +330,25 @@ class StoreRegistry:
                 for name in sorted(self._stores)}
 
     def sql(self, query: str) -> DataFrame:
-        """Interactive query surface (supersedes ref store/http.go REST API).
-        Folds every store first, so each temp view is current."""
-        for store in list(self._stores.values()):
-            store._fold()
-        return self.spark.sql(query)
+        """Interactive query surface (supersedes ref store/http.go REST API):
+        ``query`` reads each store by its name, as its live rows: the
+        freshly folded base less the rows whose TTL expired.
+
+        The names are bound as temp views only while Spark analyzes the
+        query, which resolves them into the returned frame, and are dropped
+        before it returns, so no view outlives the call or keeps a replaced
+        base stored.  One lock serializes the calls: temp views are
+        session-wide, and one call must not drop another's."""
+        with _SQL_LOCK:
+            bound = []
+            try:
+                for name, store in list(self._stores.items()):
+                    store._live().createOrReplaceTempView(name)
+                    bound.append(name)
+                return self.spark.sql(query)
+            finally:
+                for name in bound:
+                    self.spark.catalog.dropTempView(name)
 
 
 class PersistentStoreRegistry(StoreRegistry):
@@ -348,6 +376,11 @@ class PersistentStoreRegistry(StoreRegistry):
         if not dirs:
             return None
         return max(int(os.path.basename(d).split("=")[1]) for d in dirs)
+
+    def _free(self) -> None:
+        # a base is a snapshot's files, and every write folds its part at
+        # once: no store holds a checkpoint
+        pass
 
     def _new_store(self, name, key, ttl_col=None, base=None) -> Store:
         return Store(name, key, ttl_col=ttl_col, base=base,
@@ -381,5 +414,4 @@ class PersistentStoreRegistry(StoreRegistry):
         df = self.spark.read.parquet(f"{self.root}/{name}/epoch={epoch}")
         store = self._new_store(name, key, ttl_col=ttl_col, base=df)
         self._stores[name] = store
-        df.createOrReplaceTempView(name)
         return store

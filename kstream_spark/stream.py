@@ -33,9 +33,7 @@ from typing import Callable, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _to_col(expr: Column | str) -> Column:
-    return expr if isinstance(expr, Column) else F.expr(expr)
+from kstream_spark.functions import to_col
 
 
 class Stream:
@@ -67,7 +65,7 @@ class Stream:
         Predicate errors in the reference abort the record; in Spark a failing
         expression fails the task — same strictness, coarser granularity.
         """
-        return self._derive(self.df.filter(_to_col(predicate)))
+        return self._derive(self.df.filter(to_col(predicate)))
 
     def filter_strict(self, predicate: Column | str, dlq) -> "Stream":
         """Filter with the reference's error path made explicit: rows where
@@ -76,7 +74,7 @@ class Stream:
         routed to the DLQ instead of silently dropped.
         Ref: processors/filter.go:72-89 — predicate error aborts the record
         into retry/DLQ, never a silent drop."""
-        p = _to_col(predicate)
+        p = to_col(predicate)
         errored = self.df.filter(p.isNull())
         dlq.add(errored, reason="filter predicate evaluated to NULL")
         return self._derive(self.df.filter(p.isNotNull() & p))
@@ -86,14 +84,14 @@ class Stream:
 
         Downstream keyed ops shuffle on the new key (implicit in Spark).
         """
-        df = self.df.withColumn(key_col, _to_col(expr))
+        df = self.df.withColumn(key_col, to_col(expr))
         return self._derive(df, key=key_col)
 
     def transform_values(self, **exprs: Column | str) -> "Stream":
         """Map value columns, key unchanged.  Ref: value_transformer.go:54-68."""
         df = self.df
         for name, expr in exprs.items():
-            df = df.withColumn(name, _to_col(expr))
+            df = df.withColumn(name, to_col(expr))
         return self._derive(df)
 
     def transform(self, key_expr: Column | str, key_col: str = "key",
@@ -230,7 +228,7 @@ class Stream:
         from kstream_spark.sources.kafka import apply_transformer
         df = self.df
         if tombstone_filter is not None:
-            df = df.filter(~_to_col(tombstone_filter))
+            df = df.filter(~to_col(tombstone_filter))
         write_table(apply_transformer(df, transformer), path, fmt, mode=mode,
                     partition_by=partition_by)
 

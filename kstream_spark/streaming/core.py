@@ -30,6 +30,7 @@ from typing import Callable, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kstream_spark.functions import to_col
 from kstream_spark.sources.parquet import parquet_schema, restore_nanos
 
 
@@ -123,8 +124,7 @@ def route_errors(df: DataFrame, error_predicate: Column | str,
     Rows matching ``error_predicate`` go to the DLQ sink, the rest to the
     main sink — both from ONE pass over each micro-batch (batch is persisted
     before the split so the source is read once)."""
-    pred = error_predicate if isinstance(error_predicate, Column) \
-        else F.expr(error_predicate)
+    pred = to_col(error_predicate)
 
     def apply_batch(bdf: DataFrame, epoch_id: int) -> None:
         bdf.persist()
@@ -159,7 +159,21 @@ def windowed_agg(df: DataFrame, ts_col: str, window: str, slide: str | None = No
 
 def session_agg(df: DataFrame, ts_col: str, gap: str, keys: Sequence[str] = (),
                 aggs: dict | None = None, watermark: str | None = None) -> DataFrame:
-    """Session-window aggregation (gap-merged; batch and streaming)."""
+    """Session-window aggregation with Spark's ``session_window``, on
+    batch and streaming DataFrames alike.
+
+    Per key, an event at most ``gap`` after the session's last event
+    joins the session, and a later one starts a new session: Spark merges
+    windows that touch, so one exactly ``gap`` after the last event still
+    joins.  The row labeler ``operators/behavior.sessionize`` splits by
+    the same rule (``ts > prev + gap``).  ``session_end`` is the window
+    end: the last event plus ``gap``.  NULL keys form one group, as in
+    any ``groupBy``.
+
+    On a stream in append mode a session is emitted once the watermark
+    reaches its end, by the batch that moves the watermark or by the
+    no-data batch that follows it.  A late event the watermark still
+    admits merges every session it bridges."""
     if watermark:
         df = df.withWatermark(ts_col, watermark)
     agg_cols = [expr.alias(name) for name, expr in (aggs or {}).items()]

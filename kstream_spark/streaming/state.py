@@ -1,145 +1,23 @@
-"""Custom stateful streaming operator: per-key latest value with TTL.
+"""The one per-key streaming state operator: ``funnel_stream``.
 
-Ref: Store.Set(k, v, ttl) + the memory backend's expiry sweep
-(kstream/store/store.go:119-149, backend/memory/memory.go:88-100) and the
-version-gated writability check (global_table_stream_instance.go:236-268).
-
-Spark mapping: ``applyInPandasWithState`` — keyed state holds (version,
-payload-json); a processing-time timeout implements TTL eviction.  This is
-the (b)-tier implementation from the custom-operator preference order
-(composition of built-ins can't express per-key timers); the state payload
-is deliberately tiny (one row per key) so state size is O(live keys), which
-scales linearly with executors at 100 TB stream volume.
+Spark has no built-in for a strict-order stage cascade, so the streaming
+funnel keeps its own per-user state through ``applyInPandasWithState``,
+the PySpark form of Structured Streaming's ``mapGroupsWithState``.  The
+other keyed state of a stream is the engine's: sessions are
+``streaming/core.session_agg`` (Spark's session window), latest-by-key
+state is the registry's ``Store`` fed by ``streaming/core.materialize_stream``
+(per-record TTL as a ``ttl_col`` expired at read time, the contract of
+the reference's cleaner, kstream/store/store.go:119-149), and the
+stream-stream join keeps its kernel for the reasons ``streaming/join.py``
+gives.
 """
 
 from __future__ import annotations
-
-import json
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-
-def latest_with_ttl(df: DataFrame, key_col: str, version_col: str,
-                    payload_cols: list[str], ttl_ms: int | None = None
-                    ) -> DataFrame:
-    """Streaming latest-by-key with optional per-key TTL.
-
-    Emits (key, version, payload_json, expired) rows on every update; when a
-    key's TTL elapses with no updates, a tombstone row (expired=true) is
-    emitted and state is dropped — the streaming analog of the reference's
-    background cleaner deleting expired entries."""
-    out_schema = T.StructType([
-        T.StructField(key_col, df.schema[key_col].dataType),
-        T.StructField("version", T.LongType()),
-        T.StructField("payload", T.StringType()),
-        T.StructField("expired", T.BooleanType()),
-    ])
-    state_schema = T.StructType([
-        T.StructField("version", T.LongType()),
-        T.StructField("payload", T.StringType()),
-    ])
-
-    def update(key, pdfs, state: GroupState):
-        (k,) = key
-        if state.hasTimedOut:
-            ver, payload = state.get
-            state.remove()
-            yield pd.DataFrame([{key_col: k, "version": ver, "payload": payload,
-                                 "expired": True}])
-            return
-        best_ver, best_payload = state.get if state.exists else (None, None)
-        for pdf in pdfs:
-            for _, row in pdf.iterrows():
-                v = int(row[version_col])
-                # ref writability rule: new version must exceed current
-                if best_ver is None or v > best_ver:
-                    best_ver = v
-                    best_payload = json.dumps(
-                        {c: (None if pd.isna(row[c]) else
-                             (row[c].item() if hasattr(row[c], "item") else row[c]))
-                         for c in payload_cols}, sort_keys=True, default=str)
-        state.update((best_ver, best_payload))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
-        yield pd.DataFrame([{key_col: k, "version": best_ver,
-                             "payload": best_payload, "expired": False}])
-
-    timeout = GroupStateTimeout.ProcessingTimeTimeout if ttl_ms is not None \
-        else GroupStateTimeout.NoTimeout
-    return df.groupBy(key_col).applyInPandasWithState(
-        update, out_schema, state_schema, "append", timeout)
-
-
-def session_stream(df: DataFrame, user_col: str, ts_col: str,
-                   gap: str = "30 minutes") -> DataFrame:
-    """Streaming gap sessionization with event-time timeouts: per user,
-    events closer than ``gap`` belong to one session; a session closes
-    (and emits one row) either when a later event arrives past the gap
-    (in-batch close) or when the WATERMARK passes last_ts + gap with no
-    new events (timeout close — the open session can't be re-opened by
-    anything the watermark still admits).
-
-    The streaming counterpart of operators/behavior.sessionize: batch
-    labels rows, this emits (user, session_start, session_end, n_events)
-    per closed session.  Caller must set ``withWatermark(ts_col, ...)``
-    upstream (EventTimeTimeout requires it).
-
-    State is three numbers per live user (start_ms, last_ms, n) —
-    O(active users), safe at any stream volume; the shuffle key is
-    user_col, the same key every downstream per-user consumer needs.
-    """
-    gap_ms = int(pd.Timedelta(gap).total_seconds() * 1000)
-    out_schema = T.StructType([
-        T.StructField(user_col, df.schema[user_col].dataType),
-        T.StructField("session_start", T.TimestampType()),
-        T.StructField("session_end", T.TimestampType()),
-        T.StructField("n_events", T.LongType()),
-    ])
-    state_schema = T.StructType([
-        T.StructField("start_ms", T.LongType()),
-        T.StructField("last_ms", T.LongType()),
-        T.StructField("n", T.LongType()),
-    ])
-
-    def row(k, s, l, n):
-        return {user_col: k,
-                "session_start": pd.Timestamp(s, unit="ms"),
-                "session_end": pd.Timestamp(l, unit="ms"),
-                "n_events": n}
-
-    def update(key, pdfs, state: GroupState):
-        (k,) = key
-        if state.hasTimedOut:
-            s, l, n = state.get
-            state.remove()
-            yield pd.DataFrame([row(k, s, l, n)])
-            return
-        ts = sorted(int(t) for pdf in pdfs
-                    for t in pdf[ts_col].astype("int64") // 1_000_000)
-        open_sess = state.get if state.exists else None
-        closed = []
-        for t in ts:
-            if open_sess is None:
-                open_sess = (t, t, 1)
-            elif t > open_sess[1] + gap_ms:
-                closed.append(open_sess)
-                open_sess = (t, t, 1)
-            else:
-                open_sess = (open_sess[0], max(open_sess[1], t),
-                             open_sess[2] + 1)
-        state.update(open_sess)
-        # timeout must sit strictly above the current watermark
-        state.setTimeoutTimestamp(max(
-            open_sess[1] + gap_ms, state.getCurrentWatermarkMs() + 1))
-        if closed:
-            yield pd.DataFrame([row(k, s, l, n) for s, l, n in closed])
-
-    return df.groupBy(user_col).applyInPandasWithState(
-        update, out_schema, state_schema, "append",
-        GroupStateTimeout.EventTimeTimeout)
 
 
 def funnel_stream(df: DataFrame, user_col: str, type_col: str, ts_col: str,

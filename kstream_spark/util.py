@@ -5,6 +5,7 @@ from __future__ import annotations
 import threading
 from contextlib import contextmanager
 from contextvars import ContextVar
+from typing import Callable
 
 from pyspark.sql import DataFrame
 
@@ -167,17 +168,22 @@ def cache_scope():
             release()
 
 
+def on_scope_exit(release: Callable[[], None]) -> None:
+    """Call ``release`` when this thread's innermost ``cache_scope``
+    exits; outside any scope, never."""
+    scopes = _scopes.get()
+    if scopes and scopes[-1][0] == threading.get_ident():
+        scopes[-1][1].append(release)
+
+
 def owned(df: DataFrame) -> DataFrame:
     """Hand ``df``, already pinned by ``persist()``/``cache()`` or by a
     ``localCheckpoint``, to this thread's innermost ``cache_scope`` and
     return it.  Outside any scope it is a no-op: the pin lives for the
     session.  For pins a returned plan still reads after the function
     that made them returns."""
-    scopes = _scopes.get()
-    if scopes and scopes[-1][0] == threading.get_ident():
-        scopes[-1][1].append(
-            df.unpersist if df.is_cached
-            else lambda: free_local_checkpoint(df))
+    on_scope_exit(df.unpersist if df.is_cached
+                  else lambda: free_local_checkpoint(df))
     return df
 
 

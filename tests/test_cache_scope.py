@@ -86,6 +86,8 @@ LEAKED = [
     "text_tfidf", "dedup_survivors", "dedup_clusters",
     "dedup_best_of_cluster", "select_curriculum", "wf_ntile_dist",
     "graph_components",
+    # store bases, once kept by a session temp view
+    "gt_versioned_upsert", "j3_stream_table_join",
 ]
 
 

@@ -235,3 +235,30 @@ def test_triangle_count_methods_agree(spark):
     assert got == _reference_triangles(edges) and sum(got.values()) > 0
     with _pytest.raises(TypeError):
         triangle_count(df, "s", "d", method="nope")
+
+
+def test_triangle_count_broadcasts_adjacency_only_when_it_fits(
+        spark, tmp_path, monkeypatch):
+    """Both adjacency sides are hinted to broadcast while the edge list
+    fits the driver gate; below the gate neither is, and the counts are
+    unchanged."""
+    from kstream_spark import util
+    from kstream_spark.operators.graph import triangle_count
+    edges = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 3), (2, 4)] + \
+        [(9, k) for k in range(1, 8)]
+    path = str(tmp_path / "edges")
+    spark.createDataFrame(edges, "s long, d long").write.parquet(path)
+    df = spark.read.parquet(path)   # a scan, so Catalyst knows its size
+
+    def broadcasts(out):
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        return plan.count("strategy=broadcast")
+
+    want = _reference_triangles(edges)
+    out = triangle_count(df, "s", "d")
+    assert broadcasts(out) == 2
+    assert {r.node: r.n_triangles for r in out.collect()} == want
+    monkeypatch.setattr(util, "DRIVER_LOCAL_BYTES", 1)
+    out = triangle_count(df, "s", "d")
+    assert broadcasts(out) == 0
+    assert {r.node: r.n_triangles for r in out.collect()} == want

@@ -63,8 +63,13 @@ def test_store_registry_crud(spark, changes):
     assert store.get_all().count() == 2
     # secondary-index lookup (ref indexed_store.go) — a filter IS the index
     assert store.get_indexed("payload", "z").collect()[0].key == "k3"
-    # SQL surface over the registered view
+    # SQL surface: reads the store by name, current after every write
     assert b.stores.sql("SELECT count(*) AS n FROM s1").collect()[0].n == 2
+    b.stores.materialize("s1", spark.createDataFrame(
+        [("k4", 1, "w", False)],
+        "key string, version long, payload string, deleted boolean"),
+        key="key", version="version", tombstone=F.col("deleted"))
+    assert b.stores.sql("SELECT count(*) AS n FROM s1").collect()[0].n == 3
 
 
 def test_store_rematerialize_merges(spark):
@@ -102,6 +107,8 @@ def test_ttl_expiry(spark):
     store = b.stores.materialize("ttl", df, key="key", version="version",
                                  ttl_col="expiry")
     assert {r.key for r in store.get_all().collect()} == {"live", "forever"}
+    assert {r.key for r in b.stores.sql("SELECT key FROM ttl").collect()} \
+        == {"live", "forever"}
 
 
 def test_global_table_point_lookup(spark, changes):
@@ -135,6 +142,58 @@ def test_persistent_registry_survives_restart(spark, tmp_path):
     import pytest as _p
     with _p.raises(KeyError):
         reg2.load("missing", key="key")
+
+
+@pytest.mark.parametrize("persistent", [False, True],
+                         ids=["memory", "persistent"])
+def test_fold_publishes_no_temp_view(spark, tmp_path, persistent):
+    """A fold binds no session temp view, so nothing keeps a store's base
+    stored once its registry and frames are gone; ``StoreRegistry.sql``
+    binds the name only for its own query, whose frame outlives it."""
+    from kstream_spark.stores.registry import (PersistentStoreRegistry,
+                                               StoreRegistry)
+    root = str(tmp_path / "stores")
+    reg = PersistentStoreRegistry(spark, root) if persistent \
+        else StoreRegistry(spark)
+    reg.materialize("viewless", spark.createDataFrame(
+        [("a", 1, "v1")], "key string, version long, p string"),
+        key="key", version="version").get_all().collect()
+    assert not spark.catalog.tableExists("viewless")
+    got = reg.sql("SELECT p FROM viewless")
+    assert not spark.catalog.tableExists("viewless")
+    assert [r.p for r in got.collect()] == ["v1"]
+    if persistent:
+        PersistentStoreRegistry(spark, root).load("viewless", key="key")
+        assert not spark.catalog.tableExists("viewless")
+
+
+def test_concurrent_sql_calls_read_their_own_stores(spark):
+    """Two registries with a store of the same name, queried from two
+    threads at once: each query reads its own registry's store."""
+    import threading
+
+    from kstream_spark.stores.registry import StoreRegistry
+    regs = [StoreRegistry(spark) for _ in range(2)]
+    for i, reg in enumerate(regs):
+        reg.materialize("same_name", spark.createDataFrame(
+            [(i, 1)], "key long, version long"), key="key", version="version")
+    seen, errors = [[], []], []
+
+    def query(i):
+        try:
+            for _ in range(10):
+                seen[i] += [r.key for r in regs[i].sql(
+                    "SELECT key FROM same_name").collect()]
+        except Exception as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+
+    threads = [threading.Thread(target=query, args=(i,)) for i in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errors
+    assert seen == [[0] * 10, [1] * 10]
 
 
 def test_composite_version_column(spark):

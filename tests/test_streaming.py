@@ -1,5 +1,6 @@
 """Structured Streaming layer: file-source micro-batches driving the
-materializer, dedup, DLQ routing, windowed aggs, and the stateful TTL store.
+materializer, dedup, DLQ routing, windowed and session aggs, and the
+keyed funnel state.
 Mirrors the reference's mock-cluster integration tests
 (kstream/global_table_stream_test.go:22-160): produce N records -> run the
 sync loop -> assert store contents.
@@ -14,7 +15,6 @@ import pytest
 from kstream_spark import StreamBuilder
 from kstream_spark.sources.kafka import decode_records, encode_records, source_options
 from kstream_spark.streaming import core as SC
-from kstream_spark.streaming.state import latest_with_ttl
 
 
 @pytest.fixture()
@@ -49,6 +49,18 @@ def test_materialize_stream_builds_store(spark, stream_dir, tmp_path):
     store = b.stores.store("stream_store")
     rows = {r.k: (r.uuid, r.t) for r in store.get_all().collect()}
     assert rows == {10: (2, "b"), 20: (3, "a")}
+
+    # the key column keeps its input type
+    src = SC.read_stream_parquet(spark, stream_dir) \
+        .withColumn("k", F.concat(F.lit("k"), F.col("k")))
+    q = SC.materialize_stream(src, b.stores, "stream_store_str", key="k",
+                              version="uuid",
+                              checkpoint_dir=str(tmp_path / "ckpt_str"))
+    _run(q)
+    store = b.stores.store("stream_store_str")
+    assert dict(store.get_all().dtypes)["k"] == "string"
+    rows = {r.k: r.uuid for r in store.get_all().collect()}
+    assert rows == {"k10": 2, "k20": 3}
 
 
 def test_materialize_stream_idempotent_replay(spark, stream_dir, tmp_path):
@@ -111,30 +123,6 @@ def test_session_agg_batch_parity(spark):
                          aggs={"n": F.count("*")}).collect()
     sessions = {(r.k, r.n) for r in out}
     assert sessions == {(1, 2), (1, 1), (2, 1)}
-
-
-def test_latest_with_ttl_stateful(spark, stream_dir, tmp_path):
-    src = SC.read_stream_parquet(spark, stream_dir)
-    latest = latest_with_ttl(src, "k", "uuid", ["t", "v"])
-    q = (latest.writeStream.format("memory").queryName("state_out")
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ck")).start())
-    _run(q)
-    out = {r.k: (r.version, r.expired) for r in
-           spark.sql("SELECT * FROM state_out").collect()}
-    assert out[10] == (2, False) and out[20] == (3, False)
-
-    # the output key column takes the input key's type
-    src = SC.read_stream_parquet(spark, stream_dir) \
-        .withColumn("k", F.concat(F.lit("k"), F.col("k")))
-    latest = latest_with_ttl(src, "k", "uuid", ["t", "v"])
-    q = (latest.writeStream.format("memory").queryName("state_out_str")
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ck_str")).start())
-    _run(q)
-    out = {r.k: (r.version, r.expired) for r in
-           spark.sql("SELECT * FROM state_out_str").collect()}
-    assert out == {"k10": (2, False), "k20": (3, False)}
 
 
 def test_kafka_wire_roundtrip_batch(spark):
@@ -669,11 +657,9 @@ def test_streaming_metrics_reporter(spark, stream_dir, tmp_path):
 
 
 def test_session_stream_in_batch_and_timeout_close(spark, tmp_path):
-    """Gap sessionization: an in-batch gap closes a session immediately;
-    a quiet user's open session closes when the watermark passes
-    last_ts + gap (event-time timeout)."""
-    from kstream_spark.streaming.state import session_stream
-
+    """Streamed gap sessionization (``session_agg``): a session closed by
+    an in-batch gap and a quiet user's open session are both emitted once
+    the watermark passes their end, last event + gap."""
     d = tmp_path / "sess_in"
     d.mkdir()
     spark.createDataFrame(
@@ -686,7 +672,8 @@ def test_session_stream_in_batch_and_timeout_close(spark, tmp_path):
 
     src = SC.read_stream_parquet(spark, str(d)) \
         .withWatermark("ts", "10 seconds")
-    sess = session_stream(src, "user_id", "ts", gap="30 minutes")
+    sess = SC.session_agg(src, "ts", "30 minutes", keys=["user_id"],
+                          aggs={"n_events": F.count("*")})
     q = (sess.writeStream.format("memory").queryName("sess_out")
          .outputMode("append")
          .option("checkpointLocation", str(tmp_path / "ck_sess")).start())
@@ -723,7 +710,8 @@ def test_session_stream_in_batch_and_timeout_close(spark, tmp_path):
     src = SC.read_stream_parquet(spark, str(d)) \
         .withColumn("user_id", F.concat(F.lit("u"), F.col("user_id"))) \
         .withWatermark("ts", "10 seconds")
-    sess = session_stream(src, "user_id", "ts", gap="30 minutes")
+    sess = SC.session_agg(src, "ts", "30 minutes", keys=["user_id"],
+                          aggs={"n_events": F.count("*")})
     q = (sess.writeStream.format("memory").queryName("sess_out_str")
          .outputMode("append")
          .option("checkpointLocation", str(tmp_path / "ck_sess_str")).start())
@@ -731,6 +719,56 @@ def test_session_stream_in_batch_and_timeout_close(spark, tmp_path):
     got = {(r.user_id, str(r.session_start), r.n_events)
            for r in spark.sql("SELECT * FROM sess_out_str").collect()}
     assert ("u10", "2024-01-01 10:00:00", 2) in got
+
+
+def _feed(spark, d, rows, schema):
+    """Append ``rows`` to the parquet stream source ``d`` as one file."""
+    spark.createDataFrame(rows, schema) \
+        .withColumn("ts", F.col("ts").cast("timestamp")) \
+        .coalesce(1).write.mode("append").parquet(str(d))
+
+
+def test_session_agg_stream_gap_rule_matches_batch(spark, tmp_path):
+    """An event exactly ``gap`` after the last one joins its session and a
+    later one starts a new session, also across micro-batches; NULL user
+    ids are one user; and the streamed sessions are the batch
+    ``session_agg`` of the same rows less those the final watermark has
+    not closed."""
+    d = tmp_path / "gap_in"
+    schema = "user_id long, ts string"
+    _feed(spark, d, [(1, "2024-01-01 10:00:00"),
+                     (2, "2024-01-01 10:00:00"),
+                     (None, "2024-01-01 10:00:00")], schema)
+
+    def sessions(df):
+        return SC.session_agg(df, "ts", "30 minutes", keys=["user_id"],
+                              aggs={"n_events": F.count("*")}).select(
+            "user_id", "session_start", "session_end", "n_events")
+
+    src = SC.read_stream_parquet(spark, str(d)) \
+        .withWatermark("ts", "10 seconds")
+    q = (sessions(src).writeStream.format("memory").queryName("gap_out")
+         .outputMode("append")
+         .option("checkpointLocation", str(tmp_path / "ck")).start())
+    q.processAllAvailable()
+    _feed(spark, d, [(1, "2024-01-01 10:30:00"),      # exactly the gap
+                     (1, "2024-01-01 11:00:01"),      # one second past it
+                     (2, "2024-01-01 10:30:01"),
+                     (None, "2024-01-01 10:10:00"),
+                     (3, "2024-01-01 20:00:00")], schema)
+    _run(q)
+    got = {tuple(r) for r in spark.table("gap_out").collect()}
+    assert {(u, str(s), str(e), n) for u, s, e, n in got} == {
+        (1, "2024-01-01 10:00:00", "2024-01-01 11:00:00", 2),
+        (1, "2024-01-01 11:00:01", "2024-01-01 11:30:01", 1),
+        (2, "2024-01-01 10:00:00", "2024-01-01 10:30:00", 1),
+        (2, "2024-01-01 10:30:01", "2024-01-01 11:00:01", 1),
+        (None, "2024-01-01 10:00:00", "2024-01-01 10:40:00", 2)}
+    # user 3's session ends past the final watermark, 19:59:50
+    batch = sessions(spark.read.parquet(str(d)))
+    assert got == {tuple(r) for r in batch.filter(
+        F.col("session_end") <= F.lit("2024-01-01 19:59:50")
+        .cast("timestamp")).collect()}
 
 
 def test_funnel_stream_stage_advances_across_batches(spark, tmp_path):
@@ -788,6 +826,35 @@ def test_funnel_stream_stage_advances_across_batches(spark, tmp_path):
            for r in spark.sql("SELECT * FROM funnel_out_str").collect()}
     assert got == {("u1", 1, "view"), ("u1", 2, "click"),
                    ("u1", 3, "purchase"), ("u2", 1, "view")}
+
+
+def test_funnel_stream_null_user_is_one_user(spark, tmp_path):
+    """NULL user ids advance as one user across micro-batches, the stage
+    batch ``behavior.funnel`` gives them."""
+    from kstream_spark.operators.behavior import funnel
+    from kstream_spark.streaming.state import funnel_stream
+
+    d = tmp_path / "null_fun_in"
+    schema = "user_id long, event_type string, ts string"
+    steps = ["view", "click", "purchase"]
+    _feed(spark, d, [(None, "view", "2024-01-01 10:00:00"),
+                     (5, "view", "2024-01-01 10:00:00")], schema)
+    out = funnel_stream(SC.read_stream_parquet(spark, str(d)),
+                        "user_id", "event_type", "ts", steps)
+    q = (out.writeStream.format("memory").queryName("null_fun_out")
+         .outputMode("append")
+         .option("checkpointLocation", str(tmp_path / "ck")).start())
+    q.processAllAvailable()
+    _feed(spark, d, [(None, "click", "2024-01-01 10:05:00"),
+                     (None, "click", "2024-01-01 10:06:00")], schema)
+    _run(q)
+    got = {(r.user_id, r.stage) for r in spark.sql(
+        "SELECT user_id, max(stage) AS stage FROM null_fun_out "
+        "GROUP BY user_id").collect()}
+    assert got == {(None, 2), (5, 1)}
+    batch = funnel(spark.read.parquet(str(d)), "user_id", "event_type",
+                   "ts", steps)
+    assert got == {(r.user_id, r.stage) for r in batch.collect()}
 
 
 def test_encode_records_transformer_hook(spark):

@@ -33,8 +33,8 @@ busy machine, and its single `seconds` conflated Spark and DuckDB time):
 Cache ownership: each Spark run is one ``util.cache_scope``, so every pin
 a query ``owned`` is released when its run ends.  A query that still
 leaves a Dataset in the CacheManager or an RDD in the BlockManager fails
-its row as LEAK.  A store's base is the store's: its temp view keeps it
-for ``StoreRegistry.sql``.
+its row as LEAK.  A store registry made inside the scope is the scope's,
+so its stores' checkpoints count too.
 
 --orchestrate [N]: the r10 verdict showed the single-process sweep
 corrupts its own LATE-query timings (JVM accumulation a flat control is
@@ -64,7 +64,6 @@ faulthandler.register(signal.SIGUSR1)
 
 import duckdb
 import pandas as pd
-from py4j.protocol import Py4JError
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -343,25 +342,11 @@ def main():
     cache_manager = spark._jsparkSession.sharedState().cacheManager()
     jsc = spark.sparkContext._jsc.sc()
 
-    def view_rdds() -> set:
-        """Ids of the checkpoints that session temp views read (store
-        bases); a view over any other plan has no ``rdd()``."""
-        ids = set()
-        for t in spark.catalog.listTables():
-            if t.isTemporary:
-                try:
-                    ids.add(spark.table(t.name)._jdf.queryExecution()
-                            .optimizedPlan().rdd().id())
-                except Py4JError:   # not a checkpoint view
-                    pass
-        return ids
-
     def pinned(before: set) -> tuple[bool, set]:
         """(whether the CacheManager holds a Dataset, the ids of stored
-        RDDs neither in ``before`` nor read by a temp view)."""
+        RDDs not in ``before``)."""
         return (not cache_manager.isEmpty(),
-                {i.id() for i in jsc.getRDDStorageInfo()} - before
-                - view_rdds())
+                {i.id() for i in jsc.getRDDStorageInfo()} - before)
 
     def run_control(at: int) -> None:
         if CONTROL_QUERY not in queries:

@@ -3,8 +3,8 @@ reference's headline claim (50,000 msg/s at 2-5 ms latency with
 micro-batching, /root/reference/README.md:13-15).
 
 Drives these streaming pipeline shapes end-to-end and reports
-records/second for each; all but windowed_agg and sessionize check the
-work they timed and raise on a mismatch:
+records/second for each; all but windowed_agg check the work they timed
+and raise on a mismatch:
 
   materialize — file-stream source -> filter/transform -> version-gated
       store materialization (each micro-batch checkpointed into the
@@ -19,9 +19,11 @@ work they timed and raise on a mismatch:
       (applyInPandasWithState; reference side_joiner.go semantics,
       default buckets), the heaviest keyed-state shape; its emitted pair
       count is checked against the closed form.
-  sessionize  — event-time gap sessionization with timeouts
-      (applyInPandasWithState, EventTimeTimeout), the
-      watermark-driven state shape.
+  sessionize  — event-time gap sessionization with Spark's session
+      window (streaming/core.session_agg), the watermark-driven state
+      shape; its emitted session count is checked against the batch
+      session_agg of the same files, less the sessions the final
+      watermark has not closed.
   ann_admit / tokenize / corpus_admit — the epoch-store sinks
       (streaming/ann, text, corpus): one code per distinct id, tokens
       for every doc, no two admitted docs sharing a text;
@@ -173,23 +175,35 @@ def bench_windowed_agg(spark, tmp: str, n: int) -> dict:
 
 def bench_sessionize(spark, tmp: str, n: int) -> dict:
     import pyspark.sql.functions as F
-    from kstream_spark.streaming.core import read_stream_parquet
-    from kstream_spark.streaming.state import session_stream
+    from kstream_spark.streaming.core import read_stream_parquet, session_agg
     src = f"{tmp}/sin"
     _seed(spark, src, n)
-    ev = (read_stream_parquet(spark, src)
-          .select((F.col("uuid") % 10_000).alias("user_id"), F.col("ts"))
-          .withWatermark("ts", "1 hour"))
-    sess = session_stream(ev, "user_id", "ts", gap="30 minutes")
+
+    def sessions(df):
+        return session_agg(
+            df.select((F.col("uuid") % 10_000).alias("user_id"), "ts"),
+            "ts", "30 minutes", keys=["user_id"],
+            aggs={"n_events": F.count("*")})
+
+    sess = sessions(read_stream_parquet(spark, src)
+                    .withWatermark("ts", "1 hour"))
     t0 = time.time()
     q = (sess.writeStream.format("noop").outputMode("append")
          .option("checkpointLocation", f"{tmp}/sck").start())
     q.processAllAvailable()
+    emitted = sum(p["sink"]["numOutputRows"] for p in q.recentProgress)
+    watermark = q.lastProgress["eventTime"]["watermark"]
     q.stop()
     q.awaitTermination(30)
     dt = time.time() - t0
+    # append mode emits a session once the watermark passes its end
+    want = sessions(spark.read.parquet(src)).filter(
+        F.col("session_end") <= F.to_timestamp(F.lit(watermark))).count()
+    if emitted != want:
+        raise RuntimeError(f"sessionize: emitted {emitted} sessions, the "
+                           f"batch session_agg closes {want} by {watermark}")
     return {"records_per_sec": round(n / dt), "records": n,
-            "seconds": round(dt, 2)}
+            "seconds": round(dt, 2), "sessions": emitted}
 
 
 def bench_ann_admit(spark, tmp: str, n: int) -> dict:
